@@ -9,15 +9,21 @@ d = ⌈ln(1/δ)⌉ rows; never undercounts.
 
 Vectorized update: the batch is pre-aggregated with ``np.unique`` and each of
 the d rows is updated via a weighted ``np.bincount`` add (C-speed, no
-scatter-with-duplicates problem). Merge = element-wise add, hence commutative
-and associative; conservative update is deliberately NOT offered because it
-breaks mergeability accounting (SURVEY.md B3 note).
+scatter-with-duplicates problem). The counter table merges by element-wise
+add, hence commutatively and associatively; conservative update is
+deliberately NOT offered because it breaks mergeability accounting
+(SURVEY.md B3 note).
 
 Heavy hitters (B4): each state carries a candidate id set (union-merged,
 capped by CM-estimated count at merge time); ``topk()`` re-estimates
 candidates on the merged table and returns the k largest. Because merges keep
 the ``cand_cap`` ids with the largest estimated counts and estimates never
-undercount, true heavy hitters survive the cap w.h.p.
+undercount, true heavy hitters survive the cap w.h.p. The candidate set is
+NOT order-free: each truncation ranks ids by the estimates of the partial
+table merged so far, so once more than ``cand_cap`` distinct ids compete,
+which tail ids survive depends on the merge order (a refresh that folds a
+delta into persisted states can keep a different tail than a fresh build;
+the table, total and top-k over true heavy hitters agree).
 """
 
 from __future__ import annotations

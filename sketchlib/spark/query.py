@@ -5,7 +5,7 @@ corpus size — because the inputs here are the merged state rows (KBs per
 group), never the base table. Every answer carries an explicit error bound
 (Verdict's ``± err`` companion columns, SURVEY.md A15).
 
-Two execution paths, selected by group cardinality:
+Two execution paths, selected by group cardinality, plus a shortcut:
 
 - **driver** (≤ _DISTRIBUTED_THRESHOLD groups, the Verdict-typical case of
   source-level grouping): states are collected — exactly one row per
@@ -17,6 +17,9 @@ Two execution paths, selected by group cardinality:
   estimation is embarrassingly parallel (strictly cheaper than a
   groupBy+applyInPandas, which would pay an Exchange for nothing) and the
   driver never materializes the state set.
+- **caller-held rows** (``rows=``, e.g. ``SketchCatalog.state_rows`` read
+  with pyarrow on the driver): the driver path without the routing probe,
+  so no Spark job runs at all.
 
 ``distributed=None`` (default) auto-selects in ONE job for the common
 driver case: a ``limit(threshold+1).collect()`` probe both decides the
@@ -31,16 +34,70 @@ cached state sets accumulate across repeated calls.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from sketchlib.hashing import hash_any
 from sketchlib.sketches import deserialize
 
 _DISTRIBUTED_THRESHOLD = 1000
+
+# DDL type name → (arrow type, Spark type) for the result schemas built below
+_DDL_TYPES = {
+    "string": (pa.string(), T.StringType()),
+    "double": (pa.float64(), T.DoubleType()),
+    "long": (pa.int64(), T.LongType()),
+    "bigint": (pa.int64(), T.LongType()),
+    "int": (pa.int32(), T.IntegerType()),
+    "boolean": (pa.bool_(), T.BooleanType()),
+    "binary": (pa.binary(), T.BinaryType()),
+}
+
+
+@functools.lru_cache(maxsize=256)
+def _ddl_schemas(ddl: str):
+    """(pyarrow schema, StructType) of a flat DDL schema string such as
+    ``"group string, estimate double"`` — parsed driver-side, no JVM
+    round trip. Every field is nullable, as Spark's DDL parser makes it."""
+    arrow, spark_fields = [], []
+    for part in ddl.split(","):
+        name, typ = part.split()
+        a, s = _DDL_TYPES[typ.lower()]
+        arrow.append(pa.field(name, a))
+        spark_fields.append(T.StructField(name, s, True))
+    return pa.schema(arrow), T.StructType(spark_fields)
+
+
+def ddl_arrow_schema(ddl: str):
+    """pyarrow twin of a flat DDL schema string."""
+    return _ddl_schemas(ddl)[0]
+
+
+def local_frame(spark: SparkSession, rows, schema, nan_as_null: bool = False) -> DataFrame:
+    """A DataFrame over driver-built ``rows`` (tuples in field order) with
+    exactly the declared ``schema`` (a flat DDL string or a StructType),
+    launching no Spark job: a pyarrow Table becomes a local relation, where
+    ``createDataFrame(list, ddl)`` runs a job to parallelize the rows and a
+    pandas frame infers its types (a DDL ``int`` column came back
+    ``bigint``). ``nan_as_null`` maps float NaN to NULL, the conversion
+    pandas-built frames (the executor-side answer path) apply."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        arrow, struct = _ddl_schemas(schema)
+    else:
+        arrow, struct = to_arrow_schema(schema), schema
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type, from_pandas=nan_as_null) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def _pull_rows(df: DataFrame, limit: int | None = None) -> list[dict]:
@@ -207,22 +264,31 @@ def _answer(
     schema: str,
     cols: list[str],
     partial_specs=None,
+    rows=None,
 ) -> DataFrame:
     """Shared driver/distributed execution for the per-state answer
     functions: ONE ``rows_fn(group, sketch_obj) -> [tuples]`` drives both
-    paths, so the estimator logic exists exactly once per answer shape."""
-    probe, sub, persisted = _route(states, sketch, distributed, partial_specs)
-    if probe is None:
-        return _finish_dist(_map_states(sub, rows_fn, schema, cols), sub, persisted)
+    paths, so the estimator logic exists exactly once per answer shape.
+
+    ``rows``: state rows (``group``, ``sketch``, ``state`` [, ``part_id``])
+    the caller already holds — e.g. ``SketchCatalog.state_rows`` — answered
+    on the driver path without routing, so ``states`` is not read and no
+    Spark job runs. Rows of other sketches are ignored."""
+    if rows is None:
+        probe, sub, persisted = _route(states, sketch, distributed, partial_specs)
+        if probe is None:
+            return _finish_dist(_map_states(sub, rows_fn, schema, cols), sub, persisted)
+    else:
+        probe = [r for r in rows if r["sketch"] == sketch]
     out = []
     for (g, _name), sk in sorted(_rows_to_states(probe).items()):
         out.extend(rows_fn(g, sk))
-    return spark.createDataFrame(pd.DataFrame(out, columns=cols))
+    return local_frame(spark, out, schema, nan_as_null=True)
 
 
 def estimates_df(
     spark: SparkSession, states: DataFrame, sketch: str,
-    distributed: bool | None = None, partial_specs=None,
+    distributed: bool | None = None, partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, estimate, rse_bound) for a cardinality sketch (HLL/KMV)."""
     return _answer(
@@ -230,13 +296,13 @@ def estimates_df(
         lambda g, sk: [(g, *map(float, sk.estimate()))],
         "group string, estimate double, rse_bound double",
         ["group", "estimate", "rse_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
 def topk_df(
     spark: SparkSession, states: DataFrame, sketch: str, k: int,
-    distributed: bool | None = None, partial_specs=None,
+    distributed: bool | None = None, partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, token, est_count, err_bound) top-k heavy hitters per group (CM).
 
@@ -245,7 +311,7 @@ def topk_df(
     so serving it under CM's ``err_bound`` name would silently flip the
     interval. Use :func:`mg_topk_df` for MG states."""
 
-    def rows(g, sk):
+    def per_state(g, sk):
         if getattr(sk, "kind", None) == "mg":
             raise ValueError(
                 f"sketch {sketch!r} holds Misra-Gries states; their bound is an "
@@ -256,16 +322,16 @@ def topk_df(
         return [(g, int(i), int(e), bound) for i, e in zip(ids.tolist(), est.tolist())]
 
     return _answer(
-        spark, states, sketch, distributed, rows,
+        spark, states, sketch, distributed, per_state,
         "group string, token long, est_count long, err_bound double",
         ["group", "token", "est_count", "err_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
 def mg_topk_df(
     spark: SparkSession, states: DataFrame, sketch: str, k: int,
-    distributed: bool | None = None, partial_specs=None,
+    distributed: bool | None = None, partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, token, est_count, undercount_bound) top-k per group from
     Misra-Gries states — the DETERMINISTIC complement of ``topk_df``'s CM
@@ -278,43 +344,43 @@ def mg_topk_df(
     bound refuses to let an undercount certificate be read as CM's
     overcount one (the rel_quantiles_df/quantiles_df convention)."""
 
-    def rows(g, sk):
+    def per_state(g, sk):
         ids, est = sk.topk(k)
         bound = float(sk.error_bound())
         return [(g, int(i), int(e), bound) for i, e in zip(ids.tolist(), est.tolist())]
 
     return _answer(
-        spark, states, sketch, distributed, rows,
+        spark, states, sketch, distributed, per_state,
         "group string, token long, est_count long, undercount_bound double",
         ["group", "token", "est_count", "undercount_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
 def quantiles_df(
     spark: SparkSession, states: DataFrame, sketch: str, qs,
-    distributed: bool | None = None, partial_specs=None,
+    distributed: bool | None = None, partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, q, value, rank_err_bound) per group for KLL/t-digest states."""
     qs = list(qs)
     qarr = np.array(qs)
 
-    def rows(g, sk):
+    def per_state(g, sk):
         vals = sk.quantiles(qarr)
         bound = float(sk.error_bound())
         return [(g, float(q), float(v), bound) for q, v in zip(qs, vals.tolist())]
 
     return _answer(
-        spark, states, sketch, distributed, rows,
+        spark, states, sketch, distributed, per_state,
         "group string, q double, value double, rank_err_bound double",
         ["group", "q", "value", "rank_err_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
 def rel_quantiles_df(
     spark: SparkSession, states: DataFrame, sketch: str, qs,
-    distributed: bool | None = None, partial_specs=None,
+    distributed: bool | None = None, partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, q, value, rel_err_bound) per group for DDSketch states.
 
@@ -327,16 +393,16 @@ def rel_quantiles_df(
     qs = list(qs)
     qarr = np.array(qs)
 
-    def rows(g, sk):
+    def per_state(g, sk):
         vals = sk.quantiles(qarr)
         bound = float(sk.error_bound())
         return [(g, float(q), float(v), bound) for q, v in zip(qs, vals.tolist())]
 
     return _answer(
-        spark, states, sketch, distributed, rows,
+        spark, states, sketch, distributed, per_state,
         "group string, q double, value double, rel_err_bound double",
         ["group", "q", "value", "rel_err_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
@@ -397,7 +463,7 @@ def _mass_inverse(mass_fn, center: float, target: float, t_max: float) -> float:
 
 def mad_df(
     spark: SparkSession, states: DataFrame, sketch: str,
-    distributed: bool | None = None, partial_specs=None,
+    distributed: bool | None = None, partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, median_est, mad_est, mad_lo, mad_hi, rank_err_bound) —
     approximate MEDIAN ABSOLUTE DEVIATION per group from a SINGLE quantile
@@ -425,7 +491,7 @@ def mad_df(
     valid, just wide on one side.
     """
 
-    def rows(g, sk):
+    def per_state(g, sk):
         eps = float(sk.error_bound())
         m, v_lo, v_hi = (float(x) for x in sk.quantiles(np.array([0.5, 0.0, 1.0])))
         if not np.isfinite(m):
@@ -438,17 +504,17 @@ def mad_df(
         return [(g, m, float(est), float(t_lo), float(t_hi), eps)]
 
     return _answer(
-        spark, states, sketch, distributed, rows,
+        spark, states, sketch, distributed, per_state,
         "group string, median_est double, mad_est double, mad_lo double, "
         "mad_hi double, rank_err_bound double",
         ["group", "median_est", "mad_est", "mad_lo", "mad_hi", "rank_err_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
 def equidepth_histogram_df(
     spark: SparkSession, states: DataFrame, sketch: str, n_bins: int,
-    distributed: bool | None = None, partial_specs=None,
+    distributed: bool | None = None, partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, bin, lo, hi, target_frac, rank_err_bound) — EQUI-DEPTH bin
     edges per group from a KLL/t-digest state: edges at quantiles i/n_bins,
@@ -466,7 +532,7 @@ def equidepth_histogram_df(
         raise ValueError(f"n_bins must be >= 1, got {n_bins}")
     edges_q = np.linspace(0.0, 1.0, n_bins + 1)
 
-    def rows(g, sk):
+    def per_state(g, sk):
         eps = float(sk.error_bound())
         edges = sk.quantiles(edges_q)
         return [
@@ -475,11 +541,11 @@ def equidepth_histogram_df(
         ]
 
     return _answer(
-        spark, states, sketch, distributed, rows,
+        spark, states, sketch, distributed, per_state,
         "group string, bin int, lo double, hi double, target_frac double, "
         "rank_err_bound double",
         ["group", "bin", "lo", "hi", "target_frac", "rank_err_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
@@ -514,7 +580,7 @@ def _window_mean(v: np.ndarray, cum: np.ndarray, total: float, a: float, b: floa
 def trimmed_mean_df(
     spark: SparkSession, states: DataFrame, sketch: str,
     lo: float = 0.05, hi: float = 0.95, distributed: bool | None = None,
-    partial_specs=None,
+    partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, trimmed_mean, tm_lo, tm_hi, rank_err_bound) — approximate
     TRIMMED MEAN per group from a single quantile state (KLL or t-digest):
@@ -543,7 +609,7 @@ def trimmed_mean_df(
     if not (0.0 <= lo < hi <= 1.0):
         raise ValueError(f"need 0 <= lo < hi <= 1, got lo={lo}, hi={hi}")
 
-    def rows(g, sk):
+    def per_state(g, sk):
         # kind check first: a frequency sketch's error_bound() is a count,
         # not a rank fraction — the window check below would misdiagnose it
         v, w = _items_weights(sk)
@@ -563,17 +629,17 @@ def trimmed_mean_df(
         return [(g, est, b_lo, b_hi, eps)]
 
     return _answer(
-        spark, states, sketch, distributed, rows,
+        spark, states, sketch, distributed, per_state,
         "group string, trimmed_mean double, tm_lo double, tm_hi double, "
         "rank_err_bound double",
         ["group", "trimmed_mean", "tm_lo", "tm_hi", "rank_err_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
 def spectrum_df(
     spark: SparkSession, states: DataFrame, sketch: str, r: int,
-    distributed: bool | None = None, partial_specs=None,
+    distributed: bool | None = None, partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, component, sq_singular_value, cov_err_bound) — the top-r Gram
     spectrum per group from FrequentDirections states.
@@ -586,15 +652,15 @@ def spectrum_df(
     """
     r = int(r)
 
-    def rows(g, sk):
+    def per_state(g, sk):
         sq, delta = sk.spectrum(r)
         return [(g, int(i), float(v), float(delta)) for i, v in enumerate(sq)]
 
     return _answer(
-        spark, states, sketch, distributed, rows,
+        spark, states, sketch, distributed, per_state,
         "group string, component int, sq_singular_value double, cov_err_bound double",
         ["group", "component", "sq_singular_value", "cov_err_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
@@ -840,7 +906,7 @@ def corpus_drift_df(
 
 def membership_df(
     spark: SparkSession, states: DataFrame, sketch: str, keys,
-    distributed: bool | None = None, partial_specs=None,
+    distributed: bool | None = None, partial_specs=None, rows=None,
 ) -> DataFrame:
     """(group, key, may_contain, fpr_bound) Bloom membership per group (Q5).
 
@@ -854,7 +920,7 @@ def membership_df(
     hashed = keys if integral else hash_any(keys).astype(np.int64)
     keys_list = keys.tolist()
 
-    def rows(g, sk):
+    def per_state(g, sk):
         hits = sk.contains(hashed)
         fpr = float(sk.fpr_bound())
         return [
@@ -865,10 +931,10 @@ def membership_df(
 
     ktype = "long" if integral else "string"
     return _answer(
-        spark, states, sketch, distributed, rows,
+        spark, states, sketch, distributed, per_state,
         f"group string, key {ktype}, may_contain boolean, fpr_bound double",
         ["group", "key", "may_contain", "fpr_bound"],
-        partial_specs=partial_specs,
+        partial_specs=partial_specs, rows=rows,
     )
 
 
@@ -1145,7 +1211,7 @@ def grouped_setop_df(
             row = _setop_group_row(op, per_g[g], tags, hll_sketch, minhash_sketch)
             if row is not None:
                 out.append((g, *row))
-        return spark.createDataFrame(pd.DataFrame(out, columns=cols) if out else [], schema)
+        return local_frame(spark, out, schema, nan_as_null=True)
 
     rows = None
     if distributed is False:
@@ -1200,8 +1266,8 @@ def jaccard_df(spark: SparkSession, states: DataFrame, sketch: str) -> DataFrame
             out.append((a, b, float(j), float(se)))
     # explicit schema: a single-group state table must yield an EMPTY
     # frame, not a CANNOT_INFER_EMPTY_SCHEMA crash
-    return spark.createDataFrame(
-        out, "group_a string, group_b string, jaccard_est double, se_bound double"
+    return local_frame(
+        spark, out, "group_a string, group_b string, jaccard_est double, se_bound double"
     )
 
 
@@ -1230,8 +1296,18 @@ def join_size_estimate(
     ``group_a``/``group_b`` select grouped registrations ("" = ungrouped
     build); pass the same DataFrame twice for a self-join estimate.
     """
+    return _join_size_from_loaded(
+        load_states(states_a), load_states(states_b), sketch_a, sketch_b, group_a, group_b
+    )
+
+
+def _join_size_from_loaded(
+    sa: dict, sb: dict, sketch_a: str, sketch_b: str | None = None,
+    group_a: str = "", group_b: str = "",
+) -> tuple[float, float]:
+    """join_size_estimate over already-loaded {(group, sketch): state}
+    dicts — e.g. from ``SketchCatalog.state_rows``, without a Spark job."""
     sketch_b = sketch_b or sketch_a
-    sa = load_states(states_a)
     try:
         cm_a = sa[(group_a, sketch_a)]
     except KeyError:
@@ -1239,7 +1315,6 @@ def join_size_estimate(
             f"no state for sketch {sketch_a!r} group {group_a!r} on side A "
             f"(have {sorted(sa)})"
         )
-    sb = load_states(states_b)
     try:
         cm_b = sb[(group_b, sketch_b)]
     except KeyError:
@@ -1306,6 +1381,6 @@ def join_size_df(
         out.append((g, float(est), float(err)))
     # explicit schema: disjoint group sets must yield an EMPTY frame, not a
     # CANNOT_INFER_EMPTY_SCHEMA crash
-    return spark.createDataFrame(
-        out, "group string, join_rows_est double, join_rows_err double"
+    return local_frame(
+        spark, out, "group string, join_rows_est double, join_rows_err double"
     )

@@ -78,7 +78,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sketchlib.planner import hll_params
 from sketchlib.spark.build import SketchSpec, build_sketches
-from sketchlib.spark.query import estimates_df, quantiles_df, rel_quantiles_df, topk_df
+from sketchlib.spark.query import (
+    estimates_df,
+    local_frame,
+    quantiles_df,
+    rel_quantiles_df,
+    topk_df,
+)
 
 _ARGS = r"(?:[^()]|\([^()]*\))*"  # one nesting level: APPROX_SUM(round(x, 2), 0.1)
 
@@ -534,7 +540,7 @@ def _approx_join_rows(spark, m, tables, catalog, catalog_key) -> DataFrame:
     bound); AS alias renames to (alias, alias_err)."""
     from pyspark.sql import functions as F
 
-    from sketchlib.spark.query import join_size_estimate
+    from sketchlib.spark.query import _join_size_from_loaded, _rows_to_states, join_size_estimate
 
     if catalog_key is not None:
         raise ValueError(
@@ -553,9 +559,15 @@ def _approx_join_rows(spark, m, tables, catalog, catalog_key) -> DataFrame:
     picks = _resolve_join_rows_regs(sides, tables, catalog, req_eps)
     if picks is not None:
         (na, sa), (nb, sb) = picks
-        est, err = join_size_estimate(
-            catalog.states(na), catalog.states(nb), sa, sketch_b=sb
-        )
+        rows_a, rows_b = catalog.state_rows(na, sa), catalog.state_rows(nb, sb)
+        if rows_a is not None and rows_b is not None:
+            est, err = _join_size_from_loaded(
+                _rows_to_states(rows_a), _rows_to_states(rows_b), sa, sketch_b=sb
+            )
+        else:
+            est, err = join_size_estimate(
+                catalog.states(na), catalog.states(nb), sa, sketch_b=sb
+            )
     else:
         eps = req_eps if req_eps is not None else 1e-4
         params = {"eps": eps, "delta": 0.01, "seed": 7}
@@ -568,7 +580,7 @@ def _approx_join_rows(spark, m, tables, catalog, catalog_key) -> DataFrame:
         est, err = join_size_estimate(states[0], states[1], "cm_jk")
     name = m.group("alias") or "join_rows_est"
     err_name = f"{m.group('alias')}_err" if m.group("alias") else "join_rows_err"
-    return spark.createDataFrame([(float(est), float(err))], f"{name} double, {err_name} double")
+    return local_frame(spark, [(float(est), float(err))], f"{name} double, {err_name} double")
 
 
 def _resolve_join3_key(toks, tables, catalog, req_ratio) -> str | None:
@@ -1057,7 +1069,8 @@ def _ddl(spark: SparkSession, sql: str, tables: dict | None, catalog) -> DataFra
     m = _REFRESH_SKETCHES.match(sql)
     if m:
         stats = catalog.refresh(m.group("name"))
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(m.group("name"), stats["new_files"], stats["rows_added"], stats["tokens_added"])],
             "name string, new_files int, rows_added long, tokens_added long",
         )
@@ -1065,7 +1078,8 @@ def _ddl(spark: SparkSession, sql: str, tables: dict | None, catalog) -> DataFra
     m = _REFRESH_SAMPLE.match(sql)
     if m:
         stats = catalog.refresh_sample(m.group("name"))
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(m.group("name"), stats["new_files"], stats["rows_added"])],
             "name string, new_files int, rows_added long",
         )
@@ -1081,7 +1095,8 @@ def _ddl(spark: SparkSession, sql: str, tables: dict | None, catalog) -> DataFra
     m = _REFRESH_SIGS.match(sql)
     if m:
         stats = catalog.refresh_signatures(m.group("name"))
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(m.group("name"), stats["new_files"], stats["rows_added"])],
             "name string, new_files int, rows_added long",
         )
@@ -1103,7 +1118,8 @@ def _ddl(spark: SparkSession, sql: str, tables: dict | None, catalog) -> DataFra
     m = _REFRESH_ANN.match(sql)
     if m:
         stats = catalog.refresh_ann_index(m.group("name"))
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(m.group("name"), stats["new_files"], stats["rows_added"])],
             "name string, new_files int, rows_added long",
         )
@@ -1138,7 +1154,7 @@ def _ddl(spark: SparkSession, sql: str, tables: dict | None, catalog) -> DataFra
             name = m.group("name")
             existed = exists_fn(name)
             drop_fn(name)
-            return spark.createDataFrame([(name, existed)], "name string, dropped boolean")
+            return local_frame(spark, [(name, existed)], "name string, dropped boolean")
 
     m = _CREATE_SKETCHES.match(sql)
     if m:
@@ -1785,7 +1801,7 @@ def explain_sql(
         rows.append((k, str(v)))
 
     def done() -> DataFrame:
-        return spark.createDataFrame(rows, _EXPLAIN_SCHEMA)
+        return local_frame(spark, rows, _EXPLAIN_SCHEMA)
 
     stmt = sql.strip()
     if _DDL_HEAD.match(stmt):
@@ -2178,8 +2194,10 @@ def explain_sql(
             emit("plan", "ONE build at the finest grain (persisted states "
                  "when catalog_key names a set registered at exactly that "
                  "grain, else one on-the-fly build); every coarser grouping "
-                 "set is a KB-sized state MERGE (regroup_states) — zero "
-                 "base rescans, per-set cost independent of corpus size")
+                 "set is a KB-sized state MERGE (on the driver for "
+                 "persisted states within the driver budgets, else "
+                 "regroup_states) — zero base rescans, per-set cost "
+                 "independent of corpus size")
         else:
             emit("plan", "one statement per grouping set over the same "
                  "seed-fixed sample (registered scramble reused level to "
@@ -2698,11 +2716,9 @@ def _setop_from_states(spark, op, picks, catalog, out_name) -> DataFrame:
     _resolve_setop_states): per side, merge the set's per-group states into
     one whole-table sketch, then the same estimate math as the scan route.
     Reads KBs of state rows; no base-table scan, no build, no shuffle."""
-    from sketchlib.spark.query import load_states
-
     merged = []
     for p in picks:
-        st = load_states(catalog.states(p["reg"]))
+        st = _pick_states(catalog, p)
         hs = [sk for (g, n), sk in sorted(st.items()) if n == p["hll"]["name"]]
         if not hs:
             raise ValueError(
@@ -2736,9 +2752,22 @@ def _setop_from_states(spark, op, picks, catalog, out_name) -> DataFrame:
             est, err = inter, inter_err
         else:
             est, err = max(0.0, a_est - inter), a_rse * a_est + inter_err
-    return spark.createDataFrame(
-        [(float(est), float(err))], f"{out_name} double, {out_name}_err double"
+    return local_frame(
+        spark, [(float(est), float(err))], f"{out_name} double, {out_name}_err double"
     )
+
+
+def _pick_states(catalog, pick) -> dict:
+    """{(group, sketch): sketch object} of one set-operation side's HLL
+    (and MinHash) states — read on the driver without a Spark job, or via
+    the state table when the set is over the driver budgets."""
+    from sketchlib.spark.query import _rows_to_states, load_states
+
+    names = [pick["hll"]["name"]] + ([pick["mh"]["name"]] if pick.get("mh") else [])
+    rows = catalog.state_rows(pick["reg"], names)
+    if rows is None:
+        return load_states(catalog.states(pick["reg"]))
+    return _rows_to_states(rows)
 
 
 def _widen_dtypes(dtypes) -> str | None:
@@ -2768,13 +2797,13 @@ def _grouped_setop_from_states(spark, op, picks, catalog, gname, out_name) -> Da
     registrations' recorded (widened) key type, so the result schema
     matches the scan route's for the same statement; driver-side merge —
     source-level group counts, the regime registered sketch sets serve."""
-    from sketchlib.spark.query import _setop_group_row, load_states
+    from sketchlib.spark.query import _setop_group_row
 
     tags = [f"s{i}" for i in range(len(picks))]
     mh = None if op == "union" else "mh_v"
     per_g: dict[str, dict] = {}
     for tag, p in zip(tags, picks):
-        st = load_states(catalog.states(p["reg"]))
+        st = _pick_states(catalog, p)
         found = False
         for (g, n), sk in st.items():
             if n == p["hll"]["name"]:
@@ -2794,9 +2823,7 @@ def _grouped_setop_from_states(spark, op, picks, catalog, gname, out_name) -> Da
             # '__null__' is the build kernel's NULL placeholder — emit a real
             # NULL, as the scan route does (only the native TYPE is lost here)
             rows.append((None if g == "__null__" else g, float(row[0]), float(row[1])))
-    out = spark.createDataFrame(
-        rows or [], f"{gname} string, {out_name} double, {out_name}_err double"
-    )
+    out = local_frame(spark, rows, f"{gname} string, {out_name} double, {out_name}_err double")
     gtype = _widen_dtypes(p["hll"].get("group_dtype") for p in picks)
     if gtype is not None and gtype != "string":
         from pyspark.sql import functions as F
@@ -3124,34 +3151,49 @@ def _unionall_from_states(spark, fn, args, alias, picks, catalog, grouped) -> Da
 
     from sketchlib.spark.build import STATE_FIELDS, _merge_pdf
 
-    frames = []
+    # driver route: every side's rows, relabelled to one sketch (and the
+    # ungrouped key) — the answerer merges each key's rows in _merge_pdf's
+    # canonical order, so no Spark job runs
+    rows, states = [], None
     for p in picks:
-        st = catalog.states(p["reg"]).where(F.col("sketch") == p["spec"]["name"])
-        st = st.withColumn("sketch", F.lit("_q"))
-        if grouped is None:
-            st = st.withColumn("group", F.lit(""))  # the ungrouped build's key
-        frames.append(st)
-    allf = frames[0]
-    for f in frames[1:]:
-        allf = allf.unionByName(f)
-    states = allf.groupBy("group", "sketch").applyInPandas(_merge_pdf, STATE_FIELDS)
+        side = catalog.state_rows(p["reg"], p["spec"]["name"])
+        if side is None:
+            rows = None
+            break
+        for r in side:
+            r["sketch"] = "_q"
+            if grouped is None:
+                r["group"] = ""
+        rows.extend(side)
+    if rows is None:
+        frames = []
+        for p in picks:
+            st = catalog.states(p["reg"]).where(F.col("sketch") == p["spec"]["name"])
+            st = st.withColumn("sketch", F.lit("_q"))
+            if grouped is None:
+                st = st.withColumn("group", F.lit(""))  # the ungrouped build's key
+            frames.append(st)
+        allf = frames[0]
+        for f in frames[1:]:
+            allf = allf.unionByName(f)
+        states = allf.groupBy("group", "sketch").applyInPandas(_merge_pdf, STATE_FIELDS)
     if fn == "APPROX_TOPK":
-        out = topk_df(spark, states, "_q", int(args[1]))
+        out = topk_df(spark, states, "_q", int(args[1]), rows=rows)
         est_col, err_col, err_sfx = "est_count", "err_bound", "_err"
     elif fn == "APPROX_FREQUENT":
         from sketchlib.spark.query import mg_topk_df
 
-        out = mg_topk_df(spark, states, "_q", _frequent_args(args)[0])
+        out = mg_topk_df(spark, states, "_q", _frequent_args(args)[0], rows=rows)
         est_col, err_col, err_sfx = "est_count", "undercount_bound", "_undercount"
     elif fn == "APPROX_MAD":
         from sketchlib.spark.query import mad_df
 
-        out = mad_df(spark, states, "_q")
+        out = mad_df(spark, states, "_q", rows=rows)
         est_col, err_col, err_sfx = "mad_est", "rank_err_bound", "_rank_err"
     elif fn == "APPROX_TRIMMED_MEAN":
         from sketchlib.spark.query import trimmed_mean_df
 
-        out = trimmed_mean_df(spark, states, "_q", *_trim_args(args))
+        out = trimmed_mean_df(spark, states, "_q", *_trim_args(args), rows=rows)
         est_col, err_col, err_sfx = "trimmed_mean", "rank_err_bound", "_rank_err"
     elif fn == "APPROX_HISTOGRAM":
         from sketchlib.spark.query import equidepth_histogram_df
@@ -3162,7 +3204,7 @@ def _unionall_from_states(spark, fn, args, alias, picks, catalog, grouped) -> Da
                 "(bin, lo, hi, target_frac) — an AS alias is ambiguous; "
                 "drop the alias"
             )
-        out = equidepth_histogram_df(spark, states, "_q", _hist_args(args))
+        out = equidepth_histogram_df(spark, states, "_q", _hist_args(args), rows=rows)
         est_col, err_col, err_sfx = "hi", "rank_err_bound", "_rank_err"
     else:
         qs, _mrank, _mrel = _percentile_args(args)
@@ -3175,7 +3217,7 @@ def _unionall_from_states(spark, fn, args, alias, picks, catalog, grouped) -> Da
                 "when the sides were built; drop the contract or rebuild "
                 "the sides' sketch sets at the target accuracy"
             )
-        out = quantiles_df(spark, states, "_q", qs)
+        out = quantiles_df(spark, states, "_q", qs, rows=rows)
         est_col, err_col, err_sfx = "value", "rank_err_bound", "_rank_err"
     out = _finish_grouped(out, None, grouped[0] if grouped else None)
     if alias:
@@ -3470,8 +3512,8 @@ def _approx_setop(
         est, err = intersection_abs_estimate(states, "hll_v", "mh_v", tags[0], tags[1])
     else:  # except: |A| − |A ∩ B|, absolute composed bound
         est, err = difference_estimate(states, "hll_v", "mh_v", tags[0], tags[1])
-    return spark.createDataFrame(
-        [(float(est), float(err))], f"{out_name} double, {out_name}_err double"
+    return local_frame(
+        spark, [(float(est), float(err))], f"{out_name} double, {out_name}_err double"
     )
 
 
@@ -4356,9 +4398,9 @@ def _shape_rollup_level(out, keep: tuple[int, ...], cols: list[str],
     return out.select(*cols, "grouping_lvl", *est)
 
 
-def _rollup_states_from_catalog(catalog, catalog_key: str, fn: str, args,
-                                cols: list[str], where):
-    """(states, spec) for a catalog-served rollup — the headline route:
+def _rollup_spec_from_catalog(catalog, catalog_key: str, fn: str, args,
+                              cols: list[str], where):
+    """The registered spec serving a catalog-served rollup — the headline route:
     states registered ONCE at the finest grain answer every grouping set
     base-free, because coarser sets are merges of the same states."""
     reg = [r for r in catalog.list_rows() if r["name"] == catalog_key]
@@ -4410,7 +4452,7 @@ def _rollup_states_from_catalog(catalog, catalog_key: str, fn: str, args,
                        f"(ε≈{3.31 / kk:.4f})" if kk else "its sketch carries no k")
                     + "; rebuild with a larger k or drop catalog_key"
                 )
-    return catalog.states(catalog_key), spec
+    return spec
 
 
 def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
@@ -4544,10 +4586,14 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
                 # to serve this fn from the sample (empirical quantiles /
                 # universe distinct) — recurse rather than refuse
                 return _recurse()
-            states, spec = _rollup_states_from_catalog(
+            spec_name = _rollup_spec_from_catalog(
                 catalog, catalog_key, fn, args, cols, m.group("where")
-            )
-            spec_name = spec["name"]
+            )["name"]
+            # finest-grain rows read on the driver: every grouping set is
+            # then a re-keying of these rows (the answerer merges each
+            # coarser key in regroup_states' canonical order), no Spark job
+            rows = catalog.state_rows(catalog_key, spec_name)
+            states = catalog.states(catalog_key) if rows is None else None
         else:
             df = _resolve_table(spark, m.group("table"), tables)
             if m.group("where"):
@@ -4614,48 +4660,64 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
             states = build_sketches(df, [sp], group_by=list(cols)).persist()
             native = dict(df.dtypes)
             spec_name = "_q"
+            rows = None
+
+        from sketchlib.spark.build import GROUP_SEP
 
         frames = []
         for keep in sets_:
-            st = states if len(keep) == k else regroup_states(states, list(keep))
+            st, lvl = states, rows
+            if len(keep) != k:
+                if rows is None:
+                    st = regroup_states(states, list(keep))
+                else:
+                    lvl = []
+                    for r in rows:
+                        parts = r["group"].split(GROUP_SEP)
+                        key = GROUP_SEP.join(parts[i] for i in keep if i < len(parts))
+                        lvl.append({**r, "group": key})
             if fn == "APPROX_COUNT_DISTINCT":
-                out = estimates_df(spark, st, spec_name)
+                out = estimates_df(spark, st, spec_name, rows=lvl)
             elif fn == "APPROX_TOPK":
-                out = topk_df(spark, st, spec_name, int(args[1]))
+                out = topk_df(spark, st, spec_name, int(args[1]), rows=lvl)
             elif fn == "APPROX_TOP_SUM":
-                out = topk_df(spark, st, spec_name, _top_sum_k(args)).withColumnRenamed(
-                    "est_count", "est_sum"
-                )
+                out = topk_df(
+                    spark, st, spec_name, _top_sum_k(args), rows=lvl
+                ).withColumnRenamed("est_count", "est_sum")
             elif fn == "APPROX_SPECTRUM":
                 from sketchlib.spark.query import spectrum_df
 
-                out = spectrum_df(spark, st, spec_name, _spectrum_args(args)[0])
+                out = spectrum_df(spark, st, spec_name, _spectrum_args(args)[0], rows=lvl)
             elif fn == "APPROX_MAD":
                 from sketchlib.spark.query import mad_df
 
-                out = mad_df(spark, st, spec_name)
+                out = mad_df(spark, st, spec_name, rows=lvl)
             elif fn == "APPROX_TRIMMED_MEAN":
                 from sketchlib.spark.query import trimmed_mean_df
 
-                out = trimmed_mean_df(spark, st, spec_name, *_trim_args(args))
+                out = trimmed_mean_df(spark, st, spec_name, *_trim_args(args), rows=lvl)
             elif fn == "APPROX_HISTOGRAM":
                 from sketchlib.spark.query import equidepth_histogram_df
 
-                out = equidepth_histogram_df(spark, st, spec_name, _hist_args(args))
+                out = equidepth_histogram_df(spark, st, spec_name, _hist_args(args), rows=lvl)
             elif fn == "APPROX_FREQUENT":
                 from sketchlib.spark.query import mg_topk_df
 
-                out = mg_topk_df(spark, st, spec_name, _frequent_args(args)[0])
+                out = mg_topk_df(spark, st, spec_name, _frequent_args(args)[0], rows=lvl)
             elif req_rel is not None:
-                out = rel_quantiles_df(spark, st, spec_name, qs)
+                out = rel_quantiles_df(spark, st, spec_name, qs, rows=lvl)
             else:
-                out = quantiles_df(spark, st, spec_name, qs)
+                out = quantiles_df(spark, st, spec_name, qs, rows=lvl)
             frames.append(
                 _shape_rollup_level(out, keep, cols, native, _grouping_mask(keep, k))
             )
         res = frames[0]
         for f_ in frames[1:]:
             res = res.unionByName(f_)
+        if rows is not None:
+            # collecting a union of local relations runs a Spark job; the
+            # levels' rows (each collected without one) make one relation
+            res = local_frame(spark, [r for f_ in frames for r in f_.collect()], res.schema)
         return res
 
     # sampling aggregates: per-grouping-set recursion
@@ -5429,36 +5491,41 @@ def approx_sql(
                    "routes only to states achieving it)"
                    if fn in ("APPROX_TOPK", "APPROX_TOP_SUM") else "")
             )
-        states = catalog.states(catalog_key)
+        # the set's state rows, read on the driver (no Spark job) unless
+        # they are over the driver budgets — then the Spark route
+        rows = catalog.state_rows(catalog_key, spec["name"])
+        states = catalog.states(catalog_key) if rows is None else None
         if fn == "APPROX_COUNT_DISTINCT":
-            out = estimates_df(spark, states, spec["name"])
+            out = estimates_df(spark, states, spec["name"], rows=rows)
         elif fn == "APPROX_SPECTRUM":
             from sketchlib.spark.query import spectrum_df
 
-            out = spectrum_df(spark, states, spec["name"], _spectrum_args(args)[0])
+            out = spectrum_df(spark, states, spec["name"], _spectrum_args(args)[0], rows=rows)
         elif fn == "APPROX_TOPK":
-            out = topk_df(spark, states, spec["name"], int(args[1]))
+            out = topk_df(spark, states, spec["name"], int(args[1]), rows=rows)
         elif fn == "APPROX_TOP_SUM":
-            out = topk_df(spark, states, spec["name"], _top_sum_k(args)).withColumnRenamed(
-                "est_count", "est_sum"
-            )
+            out = topk_df(
+                spark, states, spec["name"], _top_sum_k(args), rows=rows
+            ).withColumnRenamed("est_count", "est_sum")
         elif fn == "APPROX_MAD":
             from sketchlib.spark.query import mad_df
 
             _mad_args(args)
-            out = mad_df(spark, states, spec["name"])
+            out = mad_df(spark, states, spec["name"], rows=rows)
         elif fn == "APPROX_TRIMMED_MEAN":
             from sketchlib.spark.query import trimmed_mean_df
 
-            out = trimmed_mean_df(spark, states, spec["name"], *_trim_args(args))
+            out = trimmed_mean_df(spark, states, spec["name"], *_trim_args(args), rows=rows)
         elif fn == "APPROX_HISTOGRAM":
             from sketchlib.spark.query import equidepth_histogram_df
 
-            out = equidepth_histogram_df(spark, states, spec["name"], _hist_args(args))
+            out = equidepth_histogram_df(
+                spark, states, spec["name"], _hist_args(args), rows=rows
+            )
         elif fn == "APPROX_FREQUENT":
             from sketchlib.spark.query import mg_topk_df
 
-            out = mg_topk_df(spark, states, spec["name"], _frequent_args(args)[0])
+            out = mg_topk_df(spark, states, spec["name"], _frequent_args(args)[0], rows=rows)
         else:  # APPROX_PERCENTILE
             qs, req_rank, req_rel = _percentile_args(args)
             if req_rank is not None:
@@ -5473,9 +5540,9 @@ def approx_sql(
             if req_rel is not None:
                 # _pct_spec_serves guaranteed a dd with achieving alpha;
                 # the answer frame carries the bound in its own units
-                out = rel_quantiles_df(spark, states, spec["name"], qs)
+                out = rel_quantiles_df(spark, states, spec["name"], qs, rows=rows)
             else:
-                out = quantiles_df(spark, states, spec["name"], qs)
+                out = quantiles_df(spark, states, spec["name"], qs, rows=rows)
         return _finish_grouped(out, None, group)
 
     if estimator == "subsample" and fn in ("APPROX_PERCENTILE", "APPROX_COUNT_DISTINCT"):

@@ -593,3 +593,255 @@ def test_refresh_local_merge_matches_pipeline(spark, tmp_path, monkeypatch):
     s_pipe, pipe = build_and_refresh(str(tmp_path / "c2"), 0)  # force fallback
     assert s_local == s_pipe
     assert local == pipe  # byte-identical states, both routes
+
+
+# --- driver-served statements (SketchCatalog.state_rows) -------------------
+
+_ALL_SPECS = [
+    SketchSpec("h", "hll", "k", {"p": 12}),
+    SketchSpec("kv", "kmv", "k2", {"k": 256}),
+    SketchSpec("c", "cm", "k", {"eps": 1e-3, "delta": 0.01}),
+    SketchSpec("cw", "cm", "k", {"eps": 1e-3, "delta": 0.01}, weight="w"),
+    SketchSpec("q", "kll", "x", {"k": 200}),
+    SketchSpec("td", "tdigest", "x2", {"compression": 100}),
+    SketchSpec("dd", "dd", "x", {"alpha": 0.01}),
+    SketchSpec("f", "fd", "emb", {"d": 4, "ell": 4}),
+    SketchSpec("mg", "mg", "k", {"eps": 0.01}),
+    SketchSpec("mh", "minhash", "k", {"r": 128}),
+]
+_SIDE_SPECS = [
+    SketchSpec("h", "hll", "k", {"p": 12}),
+    SketchSpec("mh", "minhash", "k", {"r": 128}),
+    SketchSpec("c", "cm", "k", {"eps": 1e-3, "delta": 0.01}),
+    SketchSpec("q", "kll", "x", {"k": 200}),
+]
+
+# (function, statement): one statement per catalog-served function, plus the
+# set operations and UNION ALL merges answered from two sets' states, the
+# join-size estimate and grouping sets merged from the finest states
+_SERVED = [
+    ("APPROX_COUNT_DISTINCT", "SELECT APPROX_COUNT_DISTINCT(k) FROM t GROUP BY g"),
+    ("APPROX_COUNT_DISTINCT", "SELECT APPROX_COUNT_DISTINCT(k2) FROM t GROUP BY g"),
+    ("APPROX_TOPK", "SELECT APPROX_TOPK(k, 5) FROM t GROUP BY g"),
+    ("APPROX_TOP_SUM", "SELECT APPROX_TOP_SUM(k, w, 5) FROM t GROUP BY g"),
+    ("APPROX_PERCENTILE", "SELECT APPROX_PERCENTILE(x, 0.5, 0.9) FROM t GROUP BY g"),
+    ("APPROX_PERCENTILE", "SELECT APPROX_PERCENTILE(x2, 0.25, 0.75) FROM t GROUP BY g"),
+    ("APPROX_PERCENTILE", "SELECT APPROX_PERCENTILE(x, 0.5, rel_err=0.02) FROM t GROUP BY g"),
+    ("APPROX_SPECTRUM", "SELECT APPROX_SPECTRUM(emb, 2) FROM t GROUP BY g"),
+    ("APPROX_MAD", "SELECT APPROX_MAD(x) FROM t GROUP BY g"),
+    ("APPROX_TRIMMED_MEAN", "SELECT APPROX_TRIMMED_MEAN(x, 0.1, 0.9) FROM t GROUP BY g"),
+    ("APPROX_HISTOGRAM", "SELECT APPROX_HISTOGRAM(x, 4) FROM t GROUP BY g"),
+    ("APPROX_FREQUENT", "SELECT APPROX_FREQUENT(k, 5) FROM t GROUP BY g"),
+    ("setop", "SELECT APPROX_COUNT_DISTINCT(k) AS d FROM "
+              "(SELECT k FROM t UNION SELECT k FROM t2)"),
+    ("setop", "SELECT APPROX_COUNT_DISTINCT(k) AS d FROM "
+              "(SELECT k FROM t INTERSECT SELECT k FROM t2)"),
+    ("setop", "SELECT APPROX_COUNT_DISTINCT(k) AS d FROM "
+              "(SELECT k, g FROM t EXCEPT SELECT k, g FROM t2) GROUP BY g"),
+    ("unionall", "SELECT APPROX_TOPK(k, 5) FROM (SELECT k FROM t UNION ALL SELECT k FROM t2)"),
+    ("unionall", "SELECT APPROX_PERCENTILE(x, 0.5, 0.9) AS p FROM "
+                 "(SELECT x FROM t UNION ALL SELECT x FROM t2)"),
+    ("join_rows", "SELECT APPROX_JOIN_ROWS(a.k, b.k) FROM t a, t2 b"),
+    ("rollup", "SELECT APPROX_COUNT_DISTINCT(k) FROM t GROUP BY ROLLUP (g)"),
+    ("rollup", "SELECT APPROX_PERCENTILE(x, 0.5, 0.9) FROM t GROUP BY ROLLUP (g)"),
+    ("rollup", "SELECT APPROX_TOPK(k, 5) FROM t GROUP BY CUBE (g)"),
+]
+# ROLLUP/CUBE serve from states only under an explicit catalog key
+_KEYS = {q: "all" for f, q in _SERVED if f == "rollup"}
+
+
+@pytest.fixture(scope="module")
+def served_catalog(spark, tmp_path_factory):
+    """Two registered sets: ``all`` over t (every catalog-served kind) and
+    ``side`` over t2 (overlapping keys, for set operations and merges),
+    plus an ungrouped Count-Min set over each table for APPROX_JOIN_ROWS."""
+    import pandas as pd
+
+    root = tmp_path_factory.mktemp("served")
+    rng = np.random.default_rng(11)
+    n = 3000
+    pdf = pd.DataFrame({
+        "g": rng.choice(["a", "b", "c"], n),
+        "k": np.minimum(rng.zipf(1.3, n), 5000).astype("int64"),
+        "k2": rng.integers(0, 2000, n).astype("int64"),
+        "w": rng.integers(1, 5, n).astype("int64"),
+        "x": rng.lognormal(3.0, 0.7, n),
+        "x2": rng.normal(0.0, 1.0, n),
+        "emb": [r.astype(np.float32) for r in rng.normal(size=(n, 4))],
+    })
+    side = pd.DataFrame({
+        "g": rng.choice(["a", "b", "d"], 1000),
+        "k": rng.integers(0, 400, 1000).astype("int64"),
+        "x": rng.lognormal(3.2, 0.5, 1000),
+    })
+    t, t2 = str(root / "t"), str(root / "t2")
+    spark.createDataFrame(pdf).repartition(3).write.parquet(t)
+    spark.createDataFrame(side).write.parquet(t2)
+    cat = SketchCatalog(spark, str(root / "cat"))
+    cat.create("all", t, _ALL_SPECS, group_by="g")
+    cat.create("side", t2, _SIDE_SPECS, group_by="g")
+    join_cm = [SketchSpec("jc", "cm", "k", {"eps": 1e-3, "delta": 0.01})]
+    cat.create("join_t", t, join_cm, group_by=None)
+    cat.create("join_t2", t2, join_cm, group_by=None)
+    return cat, {"t": t, "t2": t2}
+
+
+def _jobs_of(spark, fn):
+    """(result, Spark job ids launched while running fn)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_catalog_statements_answer_without_spark_jobs(spark, served_catalog):
+    """Every catalog-served statement — each function of _CATALOG_KINDS,
+    the set operations, the UNION ALL merges, APPROX_JOIN_ROWS and the
+    grouping sets — answers
+    from state rows read on the driver: the statement plus collecting its
+    answer launches no Spark job."""
+    from sketchlib.sql import _CATALOG_KINDS, approx_sql, explain_sql
+
+    cat, tables = served_catalog
+    assert {f for f, _ in _SERVED} >= set(_CATALOG_KINDS)
+    for _, q in _SERVED:
+        route = {r["property"]: r["value"] for r in explain_sql(
+            spark, q, tables, catalog=cat, catalog_key=_KEYS.get(q)).collect()}
+        assert "states" in route.get("route", route.get("plan", "")).lower(), (q, route)
+        rows, jobs = _jobs_of(spark, lambda: approx_sql(
+            spark, q, tables, catalog=cat, catalog_key=_KEYS.get(q)).collect())
+        assert rows, q
+        assert jobs == [], (q, jobs)
+
+
+def test_catalog_driver_route_matches_spark_route(spark, served_catalog, monkeypatch):
+    """Over the driver byte budget state_rows declines and the Spark route
+    answers (the group budget declines the same way, see
+    test_state_rows_filter_and_budgets); both routes give equal rows and
+    schemas."""
+    import sketchlib.spark.query as query
+    from sketchlib.sql import approx_sql
+
+    cat, tables = served_catalog
+
+    def answer(q):
+        df = approx_sql(spark, q, tables, catalog=cat, catalog_key=_KEYS.get(q))
+        return df.schema, df.collect()
+
+    fast = {q: answer(q) for _, q in _SERVED}
+    monkeypatch.setattr(query, "_PARTIAL_PROBE_BYTES", 0)
+    assert cat.state_rows("all", "h") is None
+    for _, q in _SERVED:
+        slow, jobs = _jobs_of(spark, lambda: answer(q))
+        assert jobs, q  # the Spark route really ran
+        assert slow == fast[q], q
+
+
+def test_state_rows_filter_and_budgets(spark, served_catalog, monkeypatch):
+    """state_rows returns the persisted bytes, keeps only the named
+    sketches, and declines one group over the group budget."""
+    import sketchlib.spark.query as query
+
+    cat, _ = served_catalog
+    every = cat.state_rows("all")
+    assert len(every) == 3 * len(_ALL_SPECS)
+    assert {r["sketch"] for r in cat.state_rows("all", "h")} == {"h"}
+    two = cat.state_rows("all", ["h", "mh"])
+    assert sorted((r["group"], r["sketch"]) for r in two) == sorted(
+        (g, s) for g in "abc" for s in ("h", "mh")
+    )
+    assert {(r["group"], r["sketch"]): r["state"] for r in every} == {
+        (r["group"], r["sketch"]): bytes(r["state"]) for r in cat.states("all").collect()
+    }
+    # exactly at the group budget still serves; one group over declines
+    monkeypatch.setattr(query, "_DISTRIBUTED_THRESHOLD", 3)
+    assert cat.state_rows("all", "h") is not None
+    monkeypatch.setattr(query, "_DISTRIBUTED_THRESHOLD", 2)
+    assert cat.state_rows("all", "h") is None
+    with pytest.raises(ValueError, match="unknown sketch set"):
+        cat.state_rows("nope")
+
+
+def test_statement_after_refresh_sees_refreshed_states(spark, tmp_path):
+    """A catalog-served statement issued right after refresh() answers from
+    the refreshed states: its estimates equal a fresh build's over the
+    grown directory (HLL states are merge-order free)."""
+    import glob
+    import os
+    import shutil as sh
+
+    from sketchlib.data.gen import write_sequences
+    from sketchlib.spark.scan import build_sketches_from_parquet
+    from sketchlib.sql import approx_sql
+
+    d, d2 = str(tmp_path / "seq"), str(tmp_path / "delta")
+    write_sequences(d, 1500, seed=3)
+    write_sequences(d2, 700, seed=4)
+    cat = SketchCatalog(spark, str(tmp_path / "cat"))
+    cat.create("s", d, SPECS, group_by="source")
+    q = "SELECT APPROX_COUNT_DISTINCT(doc_id) FROM seq GROUP BY source"
+    before = approx_sql(spark, q, {"seq": d}, catalog=cat, catalog_key="s").collect()
+    for f in glob.glob(d2 + "/source=*/part-*.parquet"):
+        rel = os.path.relpath(f, d2)
+        sh.copy(f, os.path.join(d, os.path.dirname(rel), "ap-" + os.path.basename(f)))
+    assert cat.refresh("s")["new_files"] > 0
+    after, jobs = _jobs_of(spark, lambda: approx_sql(
+        spark, q, {"seq": d}, catalog=cat, catalog_key="s").collect())
+    assert jobs == []
+    want = estimates_df(
+        spark, build_sketches_from_parquet(spark, d, SPECS, group_by="source"), "hll_doc"
+    ).collect()
+    assert after == want
+    assert after != before
+
+
+def test_refresh_matches_fresh_build_where_merges_are_order_free(spark, tmp_path):
+    """What refresh() does and does not promise against a fresh build:
+    HLL and Bloom states are byte-identical, and the Count-Min counter
+    table, total and top-10 answers match. The Count-Min candidate list is
+    truncated to cand_cap in merge order, so its bytes may differ — a
+    small cand_cap forces that truncation here."""
+    import glob
+    import os
+    import shutil as sh
+
+    from sketchlib.data.gen import write_sequences
+    from sketchlib.sketches import deserialize
+    from sketchlib.spark.scan import build_sketches_from_parquet
+
+    specs = [
+        SketchSpec("h", "hll", "doc_id", {"p": 12}),
+        SketchSpec("b", "bloom", "tokens", {"m_bits": 1 << 16, "h": 5}),
+        SketchSpec("c", "cm", "tokens", {"eps": 1e-3, "delta": 0.01, "cand_cap": 64}),
+    ]
+    d, d2 = str(tmp_path / "seq"), str(tmp_path / "delta")
+    write_sequences(d, 1500, seed=8)
+    write_sequences(d2, 700, seed=9)
+    cat = SketchCatalog(spark, str(tmp_path / "cat"))
+    cat.create("s", d, specs, group_by="source")
+    for f in glob.glob(d2 + "/source=*/part-*.parquet"):
+        rel = os.path.relpath(f, d2)
+        sh.copy(f, os.path.join(d, os.path.dirname(rel), "ap-" + os.path.basename(f)))
+    cat.refresh("s")
+    got = {(r["group"], r["sketch"]): r["state"] for r in cat.state_rows("s")}
+    fresh = {
+        (r["group"], r["sketch"]): bytes(r["state"])
+        for r in build_sketches_from_parquet(spark, d, specs, group_by="source").collect()
+    }
+    assert set(got) == set(fresh)
+    for key, blob in fresh.items():
+        if key[1] in ("h", "b"):
+            assert got[key] == blob, key
+        else:
+            a, b = deserialize(got[key]), deserialize(blob)
+            assert len(a.cands) == len(b.cands) == 64  # the cap truncated
+            assert np.array_equal(a.table, b.table) and a.total == b.total, key
+            for x, y in zip(a.topk(10), b.topk(10)):
+                assert np.array_equal(x, y), key

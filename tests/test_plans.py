@@ -284,3 +284,19 @@ def test_cap_per_group_under_cap_rows_never_shuffle(spark, tmp_path):
     # eager checkpoint; the under-cap branch must not sit under one)
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("FileScan") == 2, plan
+
+
+def test_merge_states_single_repartition_exchange(spark):
+    """merge_states hash-repartitions its input on (group, sketch) to a fixed
+    partition count and the groupBy reuses that exchange: exactly one
+    Exchange hashpartitioning in the plan, and it is the user-specified
+    REPARTITION_BY_NUM one (so AQE cannot coalesce the merge into one
+    task)."""
+    from sketchlib.spark.build import merge_states
+
+    df = spark.read.parquet(f"{SF}/documents.parquet")
+    states = partial_states(df, [SketchSpec("h", "hll", "doc_id", {"p": 12})], group_by="source")
+    plan = _plan(merge_states(states))
+    exchanges = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
+    assert len(exchanges) == 1, plan
+    assert "REPARTITION_BY_NUM" in exchanges[0], plan
