@@ -62,6 +62,16 @@ def committed_parts(ckpt_dir: str) -> set[str]:
     return {f[:-8] for f in os.listdir(sdir) if f.endswith(".parquet")}
 
 
+def _await_any_commit(ckpt_dir: str, timeout_s: float = 30.0) -> None:
+    """Test hook: hold an injected chunk failure until some chunk of the
+    run has committed (bounded wait), so the crash lands MID-build. Raised
+    at once, it races the other tasks' start-up: a failing task that starts
+    first aborts the job before anything commits."""
+    deadline = time.monotonic() + timeout_s
+    while not committed_parts(ckpt_dir) and time.monotonic() < deadline:
+        time.sleep(0.05)
+
+
 def _ckpt_reader(specs: list[SketchSpec], group_by, ckpt_dir: str, fail: frozenset[int]):
     from sketchlib.spark.build import group_cols, spec_cols
 
@@ -72,6 +82,7 @@ def _ckpt_reader(specs: list[SketchSpec], group_by, ckpt_dir: str, fail: frozens
             for row in b.to_pylist():
                 cid = row["chunk_id"]
                 if cid in fail:
+                    _await_any_commit(ckpt_dir)
                     raise RuntimeError(f"injected failure in chunk {cid}")
                 t0 = time.perf_counter()
                 pvals = dict(row["part_vals"] or {})

@@ -527,15 +527,23 @@ def with_token_ngrams(
     hash-normalize int32 corpora against int64 ones). Never cast the array
     column itself before calling this: Catalyst inlines the array cast into
     every ``tokens[i+j]`` access inside the lambda — n array copies per
-    position (measured 150+ s on a 2k-doc table) versus a per-scalar cast."""
+    position (measured 150+ s on a 2k-doc table) versus a per-scalar cast.
+
+    The array is bound ONCE as a lambda variable (``_ng_t``) rather than
+    named inside the per-position lambda: Catalyst substitutes a computed
+    column's whole definition wherever the column is referenced when it
+    collapses projections or pushes a filter down (e.g. the ``size(arr) >
+    0`` filter it infers for an ``explode`` of a derived column), so a
+    ``tokens`` built by ``with_tokens`` would otherwise be re-split and
+    re-hashed at every position — quadratic per row."""
     if element_cast:
-        args = ", ".join(f"CAST({tokens_col}[i + {j}] AS {element_cast})" for j in range(n))
+        args = ", ".join(f"CAST(_ng_t[i + {j}] AS {element_cast})" for j in range(n))
     else:
-        args = ", ".join(f"{tokens_col}[i + {j}]" for j in range(n))
+        args = ", ".join(f"_ng_t[i + {j}]" for j in range(n))
     expr = (
-        f"CASE WHEN size({tokens_col}) >= {n} THEN "
-        f"transform(sequence(0, size({tokens_col}) - {n}), i -> xxhash64({args})) "
-        f"ELSE array() END"
+        f"transform(array({tokens_col}), _ng_t -> CASE WHEN size(_ng_t) >= {n} THEN "
+        f"transform(sequence(0, size(_ng_t) - {n}), i -> xxhash64({args})) "
+        f"ELSE array() END)[0]"
     )
     return df.withColumn(out, F.expr(expr))
 

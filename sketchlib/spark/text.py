@@ -119,15 +119,18 @@ def with_winnow_fingerprint(
     from sketchlib.spark.dedup import with_token_ngrams
 
     df = with_token_ngrams(df, tokens_col, n=k, out="_shingles")
-    nsh = F.size(F.col("_shingles"))
-    win_min = (
-        f"transform(sequence(0, size(_shingles) - {w}), "
-        f"i -> array_min(slice(_shingles, i + 1, {w})))"
-    )
-    fp = (
-        F.when(nsh >= w, F.array_distinct(F.expr(win_min)))
-        .when(nsh > 0, F.array(F.array_min(F.col("_shingles"))))  # short doc: one fp
-        .otherwise(F.array().cast("array<bigint>"))
+    # _shingles is bound once as a lambda variable, never named inside the
+    # window lambda: Catalyst inlines a derived column's definition into
+    # pushed-down filters (the explode filter downstream joins infer), and a
+    # per-window reference would rebuild every shingle per window (a
+    # containment join over 1k short docs: 183-348 s -> ~1 s at local[8] on
+    # 4 vCPUs; see with_token_ngrams)
+    fp = F.expr(
+        f"transform(array(_shingles), s -> CASE "
+        f"WHEN size(s) >= {w} THEN array_distinct(transform("
+        f"sequence(0, size(s) - {w}), i -> array_min(slice(s, i + 1, {w})))) "
+        f"WHEN size(s) > 0 THEN array(array_min(s)) "  # short doc: one fp
+        f"ELSE CAST(array() AS array<bigint>) END)[0]"
     )
     return df.withColumn(out, fp).drop("_shingles")
 

@@ -404,6 +404,50 @@ def test_winnow_fingerprint_guarantee_and_jvm_side(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """Text inside every ``lambdafunction(...)`` of a plan string."""
+    out, start = [], 0
+    while (i := plan.find("lambdafunction(", start)) >= 0:
+        j, depth = i + len("lambdafunction("), 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        out.append(plan[i:j])
+        start = i + 1
+    return out
+
+
+def test_ngram_lambdas_never_recompute_derived_tokens(spark):
+    """A derived tokens column (``with_tokens``) shingled or winnowed, then
+    exploded and joined: Catalyst inlines a column's definition into the
+    filters it infers for the explode and pushes down, so an array named
+    inside a per-position lambda would be re-tokenized at every position
+    (a 1k-doc winnow containment join took minutes). No lambda body of the
+    optimized plan may hold the tokenizer's ``split``; answers are unchanged
+    (fingerprints still match the base-column build)."""
+    from sketchlib.spark.text import with_winnow_fingerprint
+    from sketchlib.spark.tokenize import with_tokens
+
+    docs = with_tokens(spark.createDataFrame(
+        [(1, "a b c d e f g h i j k l m n o"), (2, "u v w x y z")], "doc_id long, text string"
+    ))
+    for col, df in (
+        ("fingerprints", with_winnow_fingerprint(docs, k=5, w=8)),
+        ("shingles", with_token_ngrams(docs, "tokens", n=3)),
+    ):
+        ex = df.select("doc_id", F.explode(col).alias("h"))
+        joined = ex.join(ex.withColumnRenamed("doc_id", "d2"), "h", "leftsemi")
+        plan = joined._jdf.queryExecution().optimizedPlan().toString()
+        assert "split(" in plan
+        assert not [b for b in _lambda_bodies(plan) if "split(" in b], col
+        assert sorted(r["doc_id"] for r in joined.select("doc_id").distinct().collect()) == [1, 2]
+    base = docs.select("doc_id", "tokens").localCheckpoint()
+    assert {r["doc_id"]: r["fingerprints"] for r in
+            with_winnow_fingerprint(docs, k=5, w=8).collect()} == {
+        r["doc_id"]: r["fingerprints"] for r in
+        with_winnow_fingerprint(base, k=5, w=8).collect()}
+
+
 def test_bpe_regex_pretokenizer(spark):
     """GPT-2-style regex pre-tokenization, JVM-side: contractions split off,
     the leading space rides with the word, digit and punctuation runs are
