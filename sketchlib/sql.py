@@ -42,6 +42,10 @@ Supported aggregates:
                                                    the (lo, hi] quantile window)
     APPROX_HISTOGRAM(col, n_bins)                → KLL/t-digest (equi-depth bin
                                                    edges, ≈1/n_bins mass per bin)
+    APPROX_SPECTRUM(col, r [, d=<dim>, ell=<rows>])
+                                                 → Frequent Directions (top-r
+                                                   Gram eigenvalues of an array
+                                                   column, covariance-error bound)
     APPROX_SUM(col, ratio) / APPROX_COUNT(ratio) → uniform sample + CLT CI
     APPROX_VARIANCE(col, ratio) / APPROX_STDDEV(col, ratio)
                                                  → uniform sample + delta-method CI
@@ -79,11 +83,16 @@ from pyspark.sql import DataFrame, SparkSession
 from sketchlib.planner import hll_params
 from sketchlib.spark.build import SketchSpec, build_sketches
 from sketchlib.spark.query import (
+    equidepth_histogram_df,
     estimates_df,
     local_frame,
+    mad_df,
+    mg_topk_df,
     quantiles_df,
     rel_quantiles_df,
+    spectrum_df,
     topk_df,
+    trimmed_mean_df,
 )
 
 _ARGS = r"(?:[^()]|\([^()]*\))*"  # one nesting level: APPROX_SUM(round(x, 2), 0.1)
@@ -1433,11 +1442,7 @@ def _frequent_args(args: list) -> tuple[int, float | None]:
             "APPROX_FREQUENT takes (col, k [, eps]) — deterministic top-k "
             "heavy hitters from a Misra-Gries summary"
         )
-    kv = _num(args[1])
-    if kv is None or int(kv) != kv or kv < 1:
-        raise ValueError(
-            f"APPROX_FREQUENT k argument {args[1]!r} must be a positive integer"
-        )
+    k = _positive_int("APPROX_FREQUENT", args[1])
     eps = None
     if len(args) == 3:
         eps = _num(args[2])
@@ -1446,7 +1451,7 @@ def _frequent_args(args: list) -> tuple[int, float | None]:
                 f"APPROX_FREQUENT eps argument {args[2]!r} must be a number "
                 "in (0, 1) — the undercount bound is ≤ ε·N"
             )
-    return int(kv), eps
+    return k, eps
 
 
 def _mg_spec_serves(fn, args, s: dict) -> bool:
@@ -1527,19 +1532,296 @@ def _pct_spec_serves(fn, args, s: dict) -> bool:
     return s["kind"] != "dd"
 
 
-def _top_sum_k(args) -> int:
-    """Validated k for APPROX_TOP_SUM(key, weight, k [, eps])."""
-    if len(args) < 3:
+def _positive_int(fn: str, a: str) -> int:
+    """The k argument of a top-k sketch aggregate, validated."""
+    v = _num(a)
+    if v is None or not v.is_integer() or v < 1:
+        raise ValueError(f"{fn} k argument {a!r} must be a positive integer")
+    return int(v)
+
+
+def _rse_args(args: list) -> float | None:
+    """rse (None when not given) from APPROX_COUNT_DISTINCT(col [, rse])."""
+    if len(args) not in (1, 2):
+        raise ValueError(
+            "APPROX_COUNT_DISTINCT takes (col [, rse]) — rse is the target "
+            "relative standard error, e.g. APPROX_COUNT_DISTINCT(doc_id, 0.01)"
+        )
+    if len(args) == 1:
+        return None
+    r = _num(args[1])
+    if r is None or not (0 < r < 1):
+        raise ValueError(
+            f"APPROX_COUNT_DISTINCT second argument {args[1]!r} must be "
+            "a target relative standard error in (0, 1)"
+        )
+    return r
+
+
+def _topk_args(args: list) -> tuple[int, float | None]:
+    """(k, eps or None) from APPROX_TOPK(col, k [, eps])."""
+    if len(args) not in (2, 3):
+        raise ValueError(
+            "APPROX_TOPK takes (col, k [, eps]) — top-k heavy hitters from a "
+            "Count-Min sketch, e.g. APPROX_TOPK(tokens, 10)"
+        )
+    k = _positive_int("APPROX_TOPK", args[1])
+    eps = None
+    if len(args) == 3:
+        eps = _num(args[2])
+        if eps is None:
+            raise ValueError(f"APPROX_TOPK eps argument {args[2]!r} must be numeric")
+    return k, eps
+
+
+def _top_sum_args(args: list) -> tuple[int, float | None]:
+    """(k, eps or None) from APPROX_TOP_SUM(key, weight, k [, eps])."""
+    if len(args) not in (3, 4):
         raise ValueError(
             "APPROX_TOP_SUM takes (key, weight, k [, eps]) — e.g. "
             "APPROX_TOP_SUM(l_orderkey, l_quantity, 10)"
         )
-    kv = _num(args[2])
-    if kv is None or kv <= 0 or kv != int(kv):
+    k = _positive_int("APPROX_TOP_SUM", args[2])
+    eps = None
+    if len(args) == 4:
+        eps = _num(args[3])
+        if eps is None:
+            raise ValueError(
+                f"APPROX_TOP_SUM eps argument {args[3]!r} must be numeric"
+            )
+    return k, eps
+
+
+# each sketch aggregate's argument parser: validates and returns the parsed
+# arguments. With _CATALOG_KINDS this is the one declaration every route
+# reads — on-the-fly (_sketch_spec), registered states (_serving_spec),
+# ROLLUP/CUBE, the UNION ALL merge and EXPLAIN.
+_SKETCH_ARGS = {
+    "APPROX_COUNT_DISTINCT": _rse_args,
+    "APPROX_TOPK": _topk_args,
+    "APPROX_TOP_SUM": _top_sum_args,
+    "APPROX_PERCENTILE": _percentile_args,
+    "APPROX_SPECTRUM": _spectrum_args,
+    "APPROX_MAD": _mad_args,
+    "APPROX_TRIMMED_MEAN": _trim_args,
+    "APPROX_HISTOGRAM": _hist_args,
+    "APPROX_FREQUENT": _frequent_args,
+}
+
+
+def _sketch_args(fn: str, args: list):
+    """Validated, parsed arguments of sketch aggregate ``fn``."""
+    if not args:
+        raise ValueError(f"{fn} takes the column to sketch as its first argument")
+    return _SKETCH_ARGS[fn](args)
+
+
+def _spec_serves(fn: str, args: list, s: dict) -> bool:
+    """Whether registered spec ``s`` can answer ``fn(args)``: a serving
+    kind on the statement's column, and the per-family rules (weights,
+    eps, alpha, d/ell) of the ``_*_spec_serves`` predicates."""
+    return (
+        s["kind"] in _CATALOG_KINDS[fn] and args[:1] == [s["column"]]
+        and _cm_spec_serves(fn, args, s) and _mg_spec_serves(fn, args, s)
+        and _pct_spec_serves(fn, args, s) and _fd_spec_serves(fn, args, s)
+    )
+
+
+def _accuracy_gap(fn: str, args: list, s: dict) -> str | None:
+    """None when serving spec ``s`` achieves the statement's explicit
+    accuracy argument (COUNT_DISTINCT's rse — HLL 1.04/√2ᵖ, KMV 1/√(k−2),
+    the bound the sketch itself reports; PERCENTILE's rank_err — only a
+    KLL with ε(k) ≈ 3.31/k promises it statically, t-digest has no closed
+    bound), else what ``s`` achieves instead. Registered states never
+    answer below the accuracy a statement asks for."""
+    p = s.get("params", {})
+    if fn == "APPROX_COUNT_DISTINCT":
+        req = _rse_args(args)
+        if req is None:
+            return None
+        knob = "p" if s["kind"] == "hll" else "k"
+        v = float(p.get(knob, 14 if knob == "p" else 1024))
+        if s["kind"] == "hll":
+            got = 1.04 / (2.0 ** v) ** 0.5
+        else:
+            got = 1.0 / (v - 2) ** 0.5 if v > 2 else float("inf")
+        if got <= req * (1 + 1e-9):
+            return None
+        return (f"rse={req} — its {s['kind']} sketch on {s['column']!r} has "
+                f"{knob}={int(v)} (rse≈{got:.4f}); rebuild with a larger {knob}")
+    if fn == "APPROX_PERCENTILE":
+        req = _percentile_args(args)[1]
+        if req is None:
+            return None
+        k = float(p.get("k", 0))
+        if s["kind"] == "kll" and k > 0 and 3.31 / k <= req * (1 + 1e-9):
+            return None
+        return (f"rank_err={req} — its {s['kind']} sketch on {s['column']!r} "
+                + (f"has k={int(k)} (ε≈{3.31 / k:.4f})" if k else "carries no k")
+                + "; rebuild with a larger k")
+    return None
+
+
+# states are pre-reduced: a statement's predicate cannot reach their rows
+_STATES_WHERE_MSG = (
+    "sketch states were built over the unfiltered table — WHERE cannot be "
+    "applied post-hoc to pre-reduced states; use a persisted SAMPLE "
+    "(create_sample) for filterable approx scans, rebuild states with the "
+    "filter, or drop catalog_key"
+)
+
+
+_MULTI_KEY_MSG = (
+    "multi-aggregate statements can't take catalog_key — issue one "
+    "statement per aggregate to answer from persisted states, or pass "
+    "catalog alone for per-aggregate auto-selection"
+)
+
+
+def _registration(catalog, key: str):
+    """The registry row of sketch set ``key``."""
+    reg = next((r for r in catalog.list_rows() if r["name"] == key), None)
+    if reg is None:
+        raise ValueError(f"catalog has no sketch set or sample {key!r}")
+    return reg
+
+
+def _serving_spec(reg, fn: str, args: list, key: str) -> dict:
+    """The spec of registered sketch set ``reg`` (a registry row) that
+    answers ``fn(args)`` — the one selection the catalog, ROLLUP/CUBE and
+    EXPLAIN routes share: arguments validated, a spec that serves the
+    statement (``_spec_serves``) and achieves its explicit accuracy
+    (``_accuracy_gap``), else ValueError naming what is missing."""
+    import json
+
+    kinds = _CATALOG_KINDS.get(fn)
+    if kinds is None:
+        raise ValueError(f"{fn} cannot be answered from persisted sketch states")
+    _sketch_args(fn, args)
+    serving = [s for s in json.loads(reg["specs_json"]) if _spec_serves(fn, args, s)]
+    if not serving:
         raise ValueError(
-            f"APPROX_TOP_SUM k argument {args[2]!r} must be a positive integer"
+            f"sketch set {key!r} holds no {'/'.join(kinds)} sketch on "
+            f"{args[0]!r} serving {fn}"
+            + (" (weighted CMs serve APPROX_TOP_SUM with a matching weight "
+               "column; unweighted CMs serve APPROX_TOPK; an explicit eps "
+               "routes only to states achieving it)"
+               if fn in ("APPROX_TOPK", "APPROX_TOP_SUM") else "")
         )
-    return int(kv)
+    for s in serving:
+        if _accuracy_gap(fn, args, s) is None:
+            return s
+    raise ValueError(
+        f"sketch set {key!r} cannot achieve "
+        f"{_accuracy_gap(fn, args, serving[0])} or drop catalog_key"
+    )
+
+
+def _keyed_states_spec(reg, key, fn, args, group, where, estimator) -> dict:
+    """The serving spec of sketch set ``reg`` named by an explicit
+    ``catalog_key`` for a plain (non-ROLLUP) statement, after the refusals
+    such a key can meet — shared by execution and EXPLAIN. Auto-resolution
+    never picks states under WHERE or ERROR BY SUBSAMPLING; an explicit key
+    can name them anyway."""
+    if estimator == "subsample":
+        # states hold no rows to subsample, and answering with the sketch's
+        # own bound would be the silent closed-form fallback the modifier
+        # forbids
+        raise ValueError(
+            f"{key!r} is a sketch-states set — ERROR BY SUBSAMPLING needs "
+            "Bernoulli(p) ROWS (a uniform scramble); name a sample or drop "
+            "catalog_key for auto-selection"
+        )
+    if where:
+        raise ValueError(_STATES_WHERE_MSG)
+    if _canon_group(group) != reg["group_by"]:
+        raise ValueError(
+            f"statement GROUP BY {group!r} != registered group_by "
+            f"{reg['group_by']!r} for {key!r}"
+        )
+    return _serving_spec(reg, fn, args, key)
+
+
+def _sketch_spec(df: DataFrame, fn: str, args: list) -> tuple[DataFrame, SketchSpec]:
+    """The on-the-fly build of sketch aggregate ``fn(args)`` (plain and
+    ROLLUP/CUBE routes): ``df`` with the aggregate's expression columns
+    materialized, and the one SketchSpec ``_q`` to build, sized from the
+    statement's own accuracy arguments."""
+    from sketchlib.planner import kll_params
+
+    parsed = _sketch_args(fn, args)
+    df, col = _materialize_expr(df, args[0])
+    if fn == "APPROX_COUNT_DISTINCT":
+        return df, SketchSpec("_q", "hll", col, {"p": hll_params(parsed or 0.01)["p"]})
+    if fn in ("APPROX_TOPK", "APPROX_TOP_SUM"):
+        # TOP_SUM: heavy hitters BY SUM — one weighted-CM build, top-k
+        # re-estimated from the merged state without a key-wide groupBy
+        wcol = None
+        if fn == "APPROX_TOP_SUM":
+            df, wcol = _materialize_expr(df, args[1])
+        eps = 1e-4 if parsed[1] is None else parsed[1]
+        return df, SketchSpec("_q", "cm", col, {"eps": eps, "delta": 0.01}, weight=wcol)
+    if fn == "APPROX_FREQUENT":
+        # deterministic heavy hitters: the answer's undercount_bound is the
+        # summary's exactly tracked decrement (no δ to carve out)
+        return df, SketchSpec("_q", "mg", col, {"eps": parsed[1] or 1e-4})
+    if fn == "APPROX_SPECTRUM":
+        _, d, ell = parsed
+        if d is None:
+            # infer the dimension from the data (one-row probe); an
+            # explicitly-given d is trusted — the sketch's whole-rows guard
+            # catches a ragged column either way
+            from pyspark.sql import functions as F
+
+            probe = df.select(F.size(F.col(col)).alias("_d")).first()
+            if probe is None or probe["_d"] is None or probe["_d"] < 1:
+                raise ValueError(
+                    f"APPROX_SPECTRUM could not infer the vector dimension "
+                    f"from {col!r} — pass d=<dim> explicitly"
+                )
+            d = int(probe["_d"])
+        return df, SketchSpec("_q", "fd", col, {"d": d, "ell": ell})
+    if fn != "APPROX_PERCENTILE":  # MAD / TRIMMED_MEAN / HISTOGRAM
+        return df, SketchSpec("_q", "kll", col, {"k": _robust_kll_k(fn, args)})
+    _, rank, rel = parsed
+    wcol = _pct_weight(args)
+    if wcol is not None:
+        # weight-mass quantiles: fractional centroid weights are native to
+        # the t-digest, which filters NaN pairs jointly
+        return df, SketchSpec("_q", "tdigest", col, {"compression": 200}, weight=wcol)
+    if rel is not None:
+        # relative-VALUE contract: α IS the bound (Masson et al. 2019)
+        return df, SketchSpec("_q", "dd", col, {"alpha": rel})
+    # rank-error contract: invert the calibrated KLL bound ε(k) ≈ 3.31/k
+    k = 200 if rank is None else max(200, kll_params(rank)["k"])
+    return df, SketchSpec("_q", "kll", col, {"k": k})
+
+
+def _sketch_answer(spark, fn: str, args: list, states, name: str, kind: str,
+                   rows=None) -> DataFrame:
+    """The answer frame of sketch aggregate ``fn(args)`` from sketch
+    ``name`` (of state ``kind``) in ``states``, or from driver-read state
+    ``rows`` — one dispatch for the on-the-fly, catalog, ROLLUP/CUBE and
+    UNION ALL merge routes. A ``dd`` state answers percentiles with its
+    relative-value bound; TOP_SUM's estimate is a weight sum."""
+    if fn == "APPROX_COUNT_DISTINCT":
+        return estimates_df(spark, states, name, rows=rows)
+    if fn in ("APPROX_TOPK", "APPROX_TOP_SUM"):
+        out = topk_df(spark, states, name, _SKETCH_ARGS[fn](args)[0], rows=rows)
+        # a weighted CM's counts are weight sums
+        return out.withColumnRenamed("est_count", "est_sum") if fn == "APPROX_TOP_SUM" else out
+    if fn == "APPROX_FREQUENT":
+        return mg_topk_df(spark, states, name, _frequent_args(args)[0], rows=rows)
+    if fn == "APPROX_SPECTRUM":
+        return spectrum_df(spark, states, name, _spectrum_args(args)[0], rows=rows)
+    if fn == "APPROX_MAD":
+        return mad_df(spark, states, name, rows=rows)
+    if fn == "APPROX_TRIMMED_MEAN":
+        return trimmed_mean_df(spark, states, name, *_trim_args(args), rows=rows)
+    if fn == "APPROX_HISTOGRAM":
+        return equidepth_histogram_df(spark, states, name, _hist_args(args), rows=rows)
+    answer = rel_quantiles_df if kind == "dd" else quantiles_df
+    return answer(spark, states, name, _percentile_args(args)[0], rows=rows)
 
 
 def _table_dir(table_token: str, tables: dict | None) -> str | None:
@@ -1578,7 +1860,7 @@ def _resolve_key(
 
     An EXPLICIT accuracy argument in the statement is honored, not silently
     dropped: APPROX_COUNT_DISTINCT(col, rse) only routes to sketch states
-    whose parameters achieve that rse (HLL: 1.04/√2ᵖ; KMV: 1/√(k−1)) and
+    whose parameters achieve that rse (HLL: 1.04/√2ᵖ; KMV: 1/√(k−2)) and
     skips universe scrambles (their achieved rse depends on the unknown
     distinct count, so a static guarantee is impossible); the sampling
     aggregates' ratio argument only routes to uniform samples of ≥ that
@@ -1612,38 +1894,7 @@ def _resolve_key(
     else:
         req_ratio = None
 
-    def _achieves_rse(s: dict) -> bool:
-        if fn == "APPROX_PERCENTILE":
-            if req_rel is not None:
-                # relative-VALUE contract: only DDSketch bounds it, and only
-                # one whose alpha achieves the target
-                a = float(s.get("params", {}).get("alpha", 1.0))
-                return s["kind"] == "dd" and a <= req_rel * (1 + 1e-9)
-            if s["kind"] == "dd":
-                # a dd state's bound is relative VALUE error — it must never
-                # serve a plain/rank-bounded percentile implicitly (the same
-                # no-cross-serving rule the weighted/unweighted CMs follow)
-                return False
-        if req_rank is not None:
-            # rank-error contract: only a KLL with ε(k) ≈ 3.31/k ≤ target
-            # can promise it statically (t-digest has no closed bound)
-            k = float(s.get("params", {}).get("k", 0))
-            return s["kind"] == "kll" and k > 0 and 3.31 / k <= req_rank * (1 + 1e-9)
-        if req_rse is None:
-            return True
-        params = s.get("params", {})
-        if s["kind"] == "hll":
-            return 1.04 / (2.0 ** float(params.get("p", 14))) ** 0.5 <= req_rse * (1 + 1e-9)
-        if s["kind"] == "kmv":
-            # same bound the sketch itself reports (sketches/kmv.py): a
-            # looser gate formula would admit states whose answer frame
-            # then carries rse_bound > the requested rse
-            k = float(params.get("k", 1024))
-            return k > 2 and 1.0 / (k - 2) ** 0.5 <= req_rse * (1 + 1e-9)
-        return False
-
-    kinds = _CATALOG_KINDS.get(fn)
-    if kinds and not has_where and not uniform_samples_only:
+    if fn in _CATALOG_KINDS and not has_where and not uniform_samples_only:
         want_group = _canon_group(group)
         # newest registration first, name as tie-break — deterministic when
         # several sets hold the same sketch
@@ -1653,13 +1904,9 @@ def _resolve_key(
         for reg in regs:
             if os.path.normpath(reg["input_dir"]) != base_n or reg["group_by"] != want_group:
                 continue
-            specs = json.loads(reg["specs_json"])
             if any(
-                s["kind"] in kinds and s["column"] == col and _achieves_rse(s)
-                and _cm_spec_serves(fn, args, s) and _mg_spec_serves(fn, args, s)
-         and _pct_spec_serves(fn, args, s)
-                and _fd_spec_serves(fn, args, s)
-                for s in specs
+                _spec_serves(fn, args, s) and _accuracy_gap(fn, args, s) is None
+                for s in json.loads(reg["specs_json"])
             ):
                 return reg["name"]
 
@@ -2190,7 +2437,7 @@ def explain_sql(
             return done()
         fn0 = aggs[0][0]
         emit("aggregate", f"{fn0}({', '.join(aggs[0][1])})")
-        if fn0 in _SKETCH_ROLLUP_FNS:
+        if fn0 in _CATALOG_KINDS:
             emit("plan", "ONE build at the finest grain (persisted states "
                  "when catalog_key names a set registered at exactly that "
                  "grain, else one on-the-fly build); every coarser grouping "
@@ -2227,6 +2474,9 @@ def explain_sql(
             emit("error", "explicit rse + ERROR BY SUBSAMPLING is a double "
                  "accuracy spec — approx_sql would raise")
             return done()
+    if len(aggs) > 1 and catalog is not None and catalog_key is not None:
+        emit("error", _MULTI_KEY_MSG + " — approx_sql would raise")
+        return done()
     emit("table", m.group("table"))
     if m.group("where"):
         has_sub = bool(re.search(r"\(\s*SELECT\b", _mask_literals(m.group("where")), re.IGNORECASE))
@@ -2278,18 +2528,14 @@ def explain_sql(
                 emit(f"{prefix}route", f"persisted_sample ({meta['kind']}, ratio={meta['ratio']})")
                 emit(f"{prefix}artifact", key)
         elif any(r["name"] == key for r in reg_rows):
-            if estimator == "subsample":
+            try:  # the same gates execution applies
+                _keyed_states_spec(
+                    next(r for r in reg_rows if r["name"] == key), key, fn,
+                    args, group, m.group("where"), estimator,
+                )
+            except ValueError as e:
                 emit(f"{prefix}route", "error — approx_sql would raise")
-                emit(f"{prefix}error", f"{key!r} is a sketch-states set — "
-                     "ERROR BY SUBSAMPLING needs a uniform scramble")
-            elif m.group("where"):
-                # execution refuses WHERE on pre-reduced states (explicit
-                # key only — auto-resolution never picks states under
-                # WHERE); EXPLAIN must report the same raise
-                emit(f"{prefix}route", "error — approx_sql would raise")
-                emit(f"{prefix}error", "sketch states were built over the "
-                     "unfiltered table — WHERE cannot be applied post-hoc "
-                     "to pre-reduced states")
+                emit(f"{prefix}error", str(e))
             else:
                 emit(f"{prefix}route", "persisted_sketch_states (base table never read, A5)")
                 emit(f"{prefix}artifact", key)
@@ -2556,16 +2802,10 @@ def _setop_route(head: str, inner: str, tail: str):
     args = _split_args(hm.group("args"))
     if not args or not _IDENT.match(args[0]):
         return None  # outer must reference the union's column by name
-    if len(args) > 1:
-        # validate the rse argument HERE, the decision point both doors
-        # share — were this left to execution, EXPLAIN would report a route
-        # for a statement whose execution raises
-        r = _num(args[1])
-        if r is None or not (0 < r < 1):
-            raise ValueError(
-                f"APPROX_COUNT_DISTINCT second argument {args[1]!r} must be "
-                "a target relative standard error in (0, 1)"
-            )
+    # validate the rse argument HERE, the decision point both doors share —
+    # were this left to execution, EXPLAIN would report a route for a
+    # statement whose execution raises
+    _rse_args(args)
     n_items = 2 if group else 1
     parsed = []
     for s in sides:
@@ -2903,13 +3143,6 @@ def _setop_scan_frames(spark, sides, grouped, tables, apply_where=True):
     return frames
 
 
-_MERGE_HEAD = re.compile(
-    r"^\s*SELECT\s+(?P<fn>APPROX_PERCENTILE|APPROX_TOPK|APPROX_MAD|"
-    r"APPROX_TRIMMED_MEAN|APPROX_HISTOGRAM|APPROX_FREQUENT)"
-    r"\s*\((?P<args>" + _ARGS + r")\)\s*"
-    r"(?:AS\s+(?P<alias>\w+)\s*)?$",
-    re.IGNORECASE,
-)
 _MERGE_KINDS = {
     "APPROX_PERCENTILE": ("kll", "tdigest"),
     "APPROX_TOPK": ("cm",),
@@ -2920,6 +3153,12 @@ _MERGE_KINDS = {
     # MG summaries merge (Agarwal et al.) — the certificate adds
     "APPROX_FREQUENT": ("mg",),
 }
+_MERGE_HEAD = re.compile(
+    rf"^\s*SELECT\s+(?P<fn>{'|'.join(_MERGE_KINDS)})"
+    r"\s*\((?P<args>" + _ARGS + r")\)\s*"
+    r"(?:AS\s+(?P<alias>\w+)\s*)?$",
+    re.IGNORECASE,
+)
 
 
 # SQL aggregate/window markers inside a side's projection: such a side is
@@ -3001,35 +3240,26 @@ def _unionall_merge_route(head: str, inner: str, tail: str):
         if gm is None:
             return None
         group = gm.group(1)
+    fn = hm.group("fn").upper()
     args = _split_args(hm.group("args"))
     if not args or not _IDENT.match(args[0]):
         return None
-    try:  # malformed k/quantile/window arguments: the generic path owns the error
-        fnu = hm.group("fn").upper()
-        if fnu == "APPROX_TOPK":
-            int(args[1])
-        elif fnu == "APPROX_MAD":
-            _mad_args(args)
-        elif fnu == "APPROX_TRIMMED_MEAN":
-            _trim_args(args)
-        elif fnu == "APPROX_HISTOGRAM":
-            _hist_args(args)
-        elif fnu == "APPROX_FREQUENT":
-            if _frequent_args(args)[1] is not None:
-                # an explicit eps is an accuracy floor the merged sides'
-                # registrations were not checked against — the generic
-                # path builds at exactly that eps instead
-                return None
-        else:
-            [float(a) for a in args[1:]]
-    except (ValueError, IndexError):
+    try:
+        pa = _sketch_args(fn, args)
+    except ValueError:
+        return None  # malformed arguments: the generic path owns the error
+    if (fn in ("APPROX_TOPK", "APPROX_FREQUENT") and pa[1] is not None) or (
+        fn == "APPROX_PERCENTILE" and (pa[1:] != (None, None) or _pct_weight(args))
+    ):
+        # an explicit accuracy argument (eps, rank_err/rel_err, weight=) is
+        # a floor the merged sides' registrations were not checked against
+        # — the generic path builds at exactly that accuracy instead
         return None
     parsed = _unionall_sides(inner, 2 if group else 1)
     if parsed is None:
         return None
     first_items = _split_args(parsed[0].group("col"))
     first_names = [(_side_out_name(it)[1] or "").lower() for it in first_items]
-    fn = hm.group("fn").upper()
     if group is None:
         if first_names[0] != args[0].lower():
             return None
@@ -3177,53 +3407,9 @@ def _unionall_from_states(spark, fn, args, alias, picks, catalog, grouped) -> Da
         for f in frames[1:]:
             allf = allf.unionByName(f)
         states = allf.groupBy("group", "sketch").applyInPandas(_merge_pdf, STATE_FIELDS)
-    if fn == "APPROX_TOPK":
-        out = topk_df(spark, states, "_q", int(args[1]), rows=rows)
-        est_col, err_col, err_sfx = "est_count", "err_bound", "_err"
-    elif fn == "APPROX_FREQUENT":
-        from sketchlib.spark.query import mg_topk_df
-
-        out = mg_topk_df(spark, states, "_q", _frequent_args(args)[0], rows=rows)
-        est_col, err_col, err_sfx = "est_count", "undercount_bound", "_undercount"
-    elif fn == "APPROX_MAD":
-        from sketchlib.spark.query import mad_df
-
-        out = mad_df(spark, states, "_q", rows=rows)
-        est_col, err_col, err_sfx = "mad_est", "rank_err_bound", "_rank_err"
-    elif fn == "APPROX_TRIMMED_MEAN":
-        from sketchlib.spark.query import trimmed_mean_df
-
-        out = trimmed_mean_df(spark, states, "_q", *_trim_args(args), rows=rows)
-        est_col, err_col, err_sfx = "trimmed_mean", "rank_err_bound", "_rank_err"
-    elif fn == "APPROX_HISTOGRAM":
-        from sketchlib.spark.query import equidepth_histogram_df
-
-        if alias:
-            raise ValueError(
-                "APPROX_HISTOGRAM returns a multi-column bin frame "
-                "(bin, lo, hi, target_frac) — an AS alias is ambiguous; "
-                "drop the alias"
-            )
-        out = equidepth_histogram_df(spark, states, "_q", _hist_args(args), rows=rows)
-        est_col, err_col, err_sfx = "hi", "rank_err_bound", "_rank_err"
-    else:
-        qs, _mrank, _mrel = _percentile_args(args)
-        if _mrank is not None or _mrel is not None:
-            # the merged bag's bound is the merged sketches' own, fixed at
-            # build time — a statement-level contract cannot re-bound it
-            raise ValueError(
-                "rank_err/rel_err contracts do not apply to the UNION ALL "
-                "state-merge route — the merged states' accuracy was fixed "
-                "when the sides were built; drop the contract or rebuild "
-                "the sides' sketch sets at the target accuracy"
-            )
-        out = quantiles_df(spark, states, "_q", qs, rows=rows)
-        est_col, err_col, err_sfx = "value", "rank_err_bound", "_rank_err"
+    out = _sketch_answer(spark, fn, args, states, "_q", picks[0]["spec"]["kind"], rows)
     out = _finish_grouped(out, None, grouped[0] if grouped else None)
-    if alias:
-        out = (out.withColumnRenamed(est_col, alias)
-                  .withColumnRenamed(err_col, f"{alias}{err_sfx}"))
-    return out
+    return _alias_estimate(out, fn, alias) if alias else out
 
 
 _SAMPLE_UA_HEAD = re.compile(
@@ -3733,9 +3919,9 @@ def _multi_agg(spark: SparkSession, df: DataFrame, aggs: list, group: str | None
         if fn == "APPROX_COUNT_DISTINCT":
             df, col = _materialize_expr(df, args[0])
             disp = args[0] if _IDENT.match(args[0]) else _expr_slug(args[0])
-            rse = float(args[1]) if len(args) > 1 else 0.01
             name = f"_q{i}"
-            specs.append(SketchSpec(name, "hll", col, {"p": hll_params(rse)["p"]}))
+            p = hll_params(_rse_args(args) or 0.01)["p"]
+            specs.append(SketchSpec(name, "hll", col, {"p": p}))
             spec_slots.append((f"approx_count_distinct_{disp}", name))
         elif fn in ("APPROX_COVAR", "APPROX_CORR"):
             df, xcol = _materialize_expr(df, args[0])
@@ -3944,6 +4130,76 @@ def _default_out_names(aggs: list) -> list[str]:
     return final
 
 
+def _alias_estimate(out: DataFrame, fn: str, alias: str,
+                    estimator: str = "clt") -> DataFrame:
+    """A single aggregate's answer frame with its estimate column renamed
+    to ``alias`` and the companion bound to ``alias`` + a suffix naming
+    the bound's units (``_rank_err``, ``_rel_err``, ``_undercount``,
+    ``_err``) — shared by aliased statements and the UNION ALL merge."""
+    from pyspark.sql import functions as F
+
+    cols = set(out.columns)
+    if fn == "APPROX_COUNT_DISTINCT" and "estimate" in cols:
+        others = [c for c in out.columns if c not in ("estimate", "rse_bound")]
+        return out.select(
+            *others,
+            F.col("estimate").alias(alias),
+            (F.col("rse_bound") * F.col("estimate")).alias(f"{alias}_err"),
+        )
+    pairs = {
+        "APPROX_COUNT_DISTINCT": ("est_distinct", "distinct_err"),
+        "APPROX_COUNT": ("est_count", "count_err"),
+        "APPROX_SUM": ("est_sum", "sum_err"),
+        "APPROX_AVG": ("est_avg", "avg_err"),
+        "APPROX_VARIANCE": ("est_variance", "variance_err"),
+        "APPROX_STDDEV": ("est_stddev", "stddev_err"),
+        "APPROX_COVAR": ("est_covar", "covar_err"),
+        "APPROX_CORR": ("est_corr", "corr_err"),
+        "APPROX_TOPK": ("est_count", "err_bound"),
+        "APPROX_TOP_SUM": ("est_sum", "err_bound"),
+        "APPROX_PERCENTILE": ("value", "rank_err_bound"),
+        "APPROX_SPECTRUM": ("sq_singular_value", "cov_err_bound"),
+        "APPROX_MAD": ("mad_est", "rank_err_bound"),
+        "APPROX_TRIMMED_MEAN": ("trimmed_mean", "rank_err_bound"),
+        "APPROX_FREQUENT": ("est_count", "undercount_bound"),
+    }.get(fn)
+    if fn == "APPROX_HISTOGRAM":
+        raise ValueError(
+            "APPROX_HISTOGRAM returns a multi-column bin frame "
+            "(bin, lo, hi, target_frac) — an AS alias is ambiguous; "
+            "drop the alias"
+        )
+    if fn == "APPROX_PERCENTILE" and estimator == "subsample":
+        # the subsample percentile's bound is in VALUE units, not rank
+        pairs = ("value", "value_err")
+    elif fn == "APPROX_PERCENTILE" and "rel_err_bound" in cols:
+        # the rel_err= (DDSketch) route: bound relative to the value
+        pairs = ("value", "rel_err_bound")
+    if pairs is None or pairs[0] not in cols:
+        raise ValueError(
+            f"cannot alias {fn} here — the result frame has no "
+            f"{pairs[0] if pairs else 'estimate'!r} column "
+            f"(columns: {out.columns})"
+        )
+    if fn == "APPROX_PERCENTILE" and estimator != "subsample":
+        # suffix carries the bound's UNITS: rank for KLL/t-digest,
+        # value-relative for the rel_err= DDSketch route
+        err_name = (f"{alias}_rel_err" if pairs[1] == "rel_err_bound"
+                    else f"{alias}_rank_err")
+    elif fn in ("APPROX_MAD", "APPROX_TRIMMED_MEAN"):
+        # same rank-unit suffix convention as the percentile route;
+        # the bracket columns (mad_lo/mad_hi, tm_lo/tm_hi) keep their
+        # own names — they are the actual certificate
+        err_name = f"{alias}_rank_err"
+    elif fn == "APPROX_FREQUENT":
+        # the suffix names the contract: mg undershoots, never over
+        err_name = f"{alias}_undercount"
+    else:
+        err_name = f"{alias}_err"
+    return (out.withColumnRenamed(pairs[0], alias)
+               .withColumnRenamed(pairs[1], err_name))
+
+
 def _run_aliased(spark, m, aliased, tables, catalog, catalog_key,
                  estimator: str = "clt") -> DataFrame:
     """Named estimate columns — ``SELECT APPROX_X(args) AS name`` (Verdict
@@ -3970,67 +4226,7 @@ def _run_aliased(spark, m, aliased, tables, catalog, catalog_key,
     out = approx_sql(spark, stmt, tables, catalog, catalog_key, estimator=estimator)
     aggs = [(fn.upper(), _split_args(args)) for fn, args, _ in aliased]
     if len(aggs) == 1:
-        fn, alias = aggs[0][0], names[0]
-        cols = set(out.columns)
-        if fn == "APPROX_COUNT_DISTINCT" and "estimate" in cols:
-            others = [c for c in out.columns if c not in ("estimate", "rse_bound")]
-            return out.select(
-                *others,
-                F.col("estimate").alias(alias),
-                (F.col("rse_bound") * F.col("estimate")).alias(f"{alias}_err"),
-            )
-        pairs = {
-            "APPROX_COUNT_DISTINCT": ("est_distinct", "distinct_err"),
-            "APPROX_COUNT": ("est_count", "count_err"),
-            "APPROX_SUM": ("est_sum", "sum_err"),
-            "APPROX_AVG": ("est_avg", "avg_err"),
-            "APPROX_VARIANCE": ("est_variance", "variance_err"),
-            "APPROX_STDDEV": ("est_stddev", "stddev_err"),
-            "APPROX_COVAR": ("est_covar", "covar_err"),
-            "APPROX_CORR": ("est_corr", "corr_err"),
-            "APPROX_TOPK": ("est_count", "err_bound"),
-            "APPROX_TOP_SUM": ("est_sum", "err_bound"),
-            "APPROX_PERCENTILE": ("value", "rank_err_bound"),
-            "APPROX_SPECTRUM": ("sq_singular_value", "cov_err_bound"),
-            "APPROX_MAD": ("mad_est", "rank_err_bound"),
-            "APPROX_TRIMMED_MEAN": ("trimmed_mean", "rank_err_bound"),
-            "APPROX_FREQUENT": ("est_count", "undercount_bound"),
-        }.get(fn)
-        if fn == "APPROX_HISTOGRAM":
-            raise ValueError(
-                "APPROX_HISTOGRAM returns a multi-column bin frame "
-                "(bin, lo, hi, target_frac) — an AS alias is ambiguous; "
-                "drop the alias"
-            )
-        if fn == "APPROX_PERCENTILE" and estimator == "subsample":
-            # the subsample percentile's bound is in VALUE units, not rank
-            pairs = ("value", "value_err")
-        elif fn == "APPROX_PERCENTILE" and "rel_err_bound" in cols:
-            # the rel_err= (DDSketch) route: bound relative to the value
-            pairs = ("value", "rel_err_bound")
-        if pairs is None or pairs[0] not in cols:
-            raise ValueError(
-                f"cannot alias {fn} here — the result frame has no "
-                f"{pairs[0] if pairs else 'estimate'!r} column "
-                f"(columns: {out.columns})"
-            )
-        if fn == "APPROX_PERCENTILE" and estimator != "subsample":
-            # suffix carries the bound's UNITS: rank for KLL/t-digest,
-            # value-relative for the rel_err= DDSketch route
-            err_name = (f"{alias}_rel_err" if pairs[1] == "rel_err_bound"
-                        else f"{alias}_rank_err")
-        elif fn in ("APPROX_MAD", "APPROX_TRIMMED_MEAN"):
-            # same rank-unit suffix convention as the percentile route;
-            # the bracket columns (mad_lo/mad_hi, tm_lo/tm_hi) keep their
-            # own names — they are the actual certificate
-            err_name = f"{alias}_rank_err"
-        elif fn == "APPROX_FREQUENT":
-            # the suffix names the contract: mg undershoots, never over
-            err_name = f"{alias}_undercount"
-        else:
-            err_name = f"{alias}_err"
-        return (out.withColumnRenamed(pairs[0], alias)
-                   .withColumnRenamed(pairs[1], err_name))
+        return _alias_estimate(out, aggs[0][0], names[0], estimator)
     defaults = _default_out_names(aggs)
     mapping = {}
     for default, alias in zip(defaults, names):
@@ -4351,13 +4547,6 @@ def _within_error(spark, wm, tables, catalog, catalog_key) -> DataFrame:
 # GROUP BY ROLLUP / CUBE — grouping sets from ONE finest-grain build
 # ---------------------------------------------------------------------------
 
-_SKETCH_ROLLUP_FNS = frozenset(
-    ("APPROX_COUNT_DISTINCT", "APPROX_PERCENTILE", "APPROX_TOPK",
-     "APPROX_TOP_SUM", "APPROX_SPECTRUM", "APPROX_MAD",
-     "APPROX_TRIMMED_MEAN", "APPROX_HISTOGRAM", "APPROX_FREQUENT")
-)
-
-
 def _rollup_grouping_sets(k: int, mode: str) -> list[tuple[int, ...]]:
     """Grouping sets as kept-index tuples, finest first. ROLLUP = the k+1
     prefixes; CUBE = all 2^k subsets (original column order preserved)."""
@@ -4396,63 +4585,6 @@ def _shape_rollup_level(out, keep: tuple[int, ...], cols: list[str],
     out = out.withColumn("grouping_lvl", F.lit(mask).cast("int"))
     est = [c for c in out.columns if c not in cols and c != "grouping_lvl"]
     return out.select(*cols, "grouping_lvl", *est)
-
-
-def _rollup_spec_from_catalog(catalog, catalog_key: str, fn: str, args,
-                              cols: list[str], where):
-    """The registered spec serving a catalog-served rollup — the headline route:
-    states registered ONCE at the finest grain answer every grouping set
-    base-free, because coarser sets are merges of the same states."""
-    reg = [r for r in catalog.list_rows() if r["name"] == catalog_key]
-    if not reg:
-        raise ValueError(f"catalog has no sketch set {catalog_key!r}")
-    reg = reg[0]
-    if where:
-        raise ValueError(
-            "sketch states were built over the unfiltered table — WHERE "
-            "cannot be applied post-hoc to pre-reduced states; rebuild "
-            "states with the filter or drop catalog_key"
-        )
-    want = ",".join(cols)
-    if reg["group_by"] != want:
-        raise ValueError(
-            f"ROLLUP/CUBE needs states at the FINEST grain: statement "
-            f"grouping ({want}) != registered group_by "
-            f"{reg['group_by']!r} for {catalog_key!r} — coarser sets are "
-            "merged down from the finest, never rebuilt"
-        )
-    kinds = _CATALOG_KINDS.get(fn)
-    if kinds is None:
-        raise ValueError(f"{fn} cannot be answered from persisted sketch states")
-    import json
-
-    col = args[0]
-    spec = next(
-        (s for s in json.loads(reg["specs_json"])
-         if s["kind"] in kinds and s["column"] == col
-         and _cm_spec_serves(fn, args, s) and _mg_spec_serves(fn, args, s)
-         and _pct_spec_serves(fn, args, s)
-         and _fd_spec_serves(fn, args, s)),
-        None,
-    )
-    if spec is None:
-        raise ValueError(
-            f"sketch set {catalog_key!r} holds no {'/'.join(kinds)} sketch "
-            f"on {col!r} serving {fn}"
-        )
-    if fn == "APPROX_PERCENTILE":
-        req_rank = _percentile_args(args)[1]
-        if req_rank is not None:
-            kk = float(spec.get("params", {}).get("k", 0))
-            if spec["kind"] != "kll" or not kk or 3.31 / kk > req_rank * (1 + 1e-9):
-                raise ValueError(
-                    f"sketch set {catalog_key!r} cannot achieve rank_err="
-                    f"{req_rank} — "
-                    + (f"its {spec['kind']} sketch has k={int(kk)} "
-                       f"(ε≈{3.31 / kk:.4f})" if kk else "its sketch carries no k")
-                    + "; rebuild with a larger k or drop catalog_key"
-                )
-    return spec
 
 
 def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
@@ -4558,7 +4690,7 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
             res = res.unionByName(f_)
         return res
 
-    if fn in _SKETCH_ROLLUP_FNS:
+    if fn in _CATALOG_KINDS:
         if estimator == "subsample":
             raise ValueError(
                 f"{fn} is sketch-served — its bound is not a sampling CI; "
@@ -4566,18 +4698,9 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
             )
         from sketchlib.spark.build import regroup_states
 
-        qs = req_rank = req_rel = None
-        if fn == "APPROX_PERCENTILE":
-            qs, req_rank, req_rel = _percentile_args(args)
-        # argument validation BEFORE routing, so the catalog-served path
-        # raises on bogus arguments exactly like the on-the-fly and
-        # non-rollup paths (extra args must never be silently dropped)
-        elif fn == "APPROX_MAD":
-            _mad_args(args)
-        elif fn == "APPROX_TRIMMED_MEAN":
-            _trim_args(args)
-        elif fn == "APPROX_HISTOGRAM":
-            _hist_args(args)
+        # argument validation BEFORE routing, so every route (states,
+        # on-the-fly, a scramble key's per-level statements) raises alike
+        _sketch_args(fn, args)
         native: dict[str, str] = {}
         if catalog is not None and catalog_key is not None:
             if any(r["name"] == catalog_key
@@ -4586,81 +4709,35 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
                 # to serve this fn from the sample (empirical quantiles /
                 # universe distinct) — recurse rather than refuse
                 return _recurse()
-            spec_name = _rollup_spec_from_catalog(
-                catalog, catalog_key, fn, args, cols, m.group("where")
-            )["name"]
+            reg = _registration(catalog, catalog_key)
+            if m.group("where"):
+                raise ValueError(_STATES_WHERE_MSG)
+            if reg["group_by"] != ",".join(cols):
+                raise ValueError(
+                    f"ROLLUP/CUBE needs states at the FINEST grain: statement "
+                    f"grouping ({','.join(cols)}) != registered group_by "
+                    f"{reg['group_by']!r} for {catalog_key!r} — coarser sets "
+                    "are merged down from the finest, never rebuilt"
+                )
+            spec = _serving_spec(reg, fn, args, catalog_key)
             # finest-grain rows read on the driver: every grouping set is
             # then a re-keying of these rows (the answerer merges each
             # coarser key in regroup_states' canonical order), no Spark job
-            rows = catalog.state_rows(catalog_key, spec_name)
+            rows = catalog.state_rows(catalog_key, spec["name"])
             states = catalog.states(catalog_key) if rows is None else None
+            name, kind = spec["name"], spec["kind"]
         else:
             df = _resolve_table(spark, m.group("table"), tables)
             if m.group("where"):
                 df = _apply_where(spark, df, m.group("where"), tables, m.group("table"))
-            if fn == "APPROX_COUNT_DISTINCT":
-                df, col = _materialize_expr(df, args[0])
-                rse = float(args[1]) if len(args) > 1 else 0.01
-                sp = SketchSpec("_q", "hll", col, {"p": hll_params(rse)["p"]})
-            elif fn == "APPROX_TOPK":
-                df, col = _materialize_expr(df, args[0])
-                eps = float(args[2]) if len(args) > 2 else 1e-4
-                sp = SketchSpec("_q", "cm", col, {"eps": eps, "delta": 0.01})
-            elif fn == "APPROX_TOP_SUM":
-                _top_sum_k(args)
-                eps = _num(args[3]) if len(args) > 3 else 1e-4
-                if eps is None:
-                    raise ValueError(
-                        f"APPROX_TOP_SUM eps argument {args[3]!r} must be numeric"
-                    )
-                df, col = _materialize_expr(df, args[0])
-                df, wcol = _materialize_expr(df, args[1])
-                sp = SketchSpec(
-                    "_q", "cm", col, {"eps": eps, "delta": 0.01}, weight=wcol
-                )
-            elif fn == "APPROX_SPECTRUM":
-                _, fd_d, fd_ell = _spectrum_args(args)
-                df, col = _materialize_expr(df, args[0])
-                if fd_d is None:
-                    probe = df.select(F.size(F.col(col)).alias("_d")).first()
-                    if probe is None or probe["_d"] is None or probe["_d"] < 1:
-                        raise ValueError(
-                            f"APPROX_SPECTRUM could not infer the vector "
-                            f"dimension from {col!r} — pass d=<dim> explicitly"
-                        )
-                    fd_d = int(probe["_d"])
-                sp = SketchSpec("_q", "fd", col, {"d": fd_d, "ell": fd_ell})
-            elif fn in ("APPROX_MAD", "APPROX_TRIMMED_MEAN", "APPROX_HISTOGRAM"):
-                df, col = _materialize_expr(df, args[0])
-                sp = SketchSpec("_q", "kll", col, {"k": _robust_kll_k(fn, args)})
-            elif fn == "APPROX_FREQUENT":
-                _, f_eps = _frequent_args(args)
-                df, col = _materialize_expr(df, args[0])
-                sp = SketchSpec("_q", "mg", col, {"eps": f_eps or 1e-4})
-            else:  # APPROX_PERCENTILE
-                df, col = _materialize_expr(df, args[0])
-                wcol = _pct_weight(args)
-                if wcol is not None:
-                    sp = SketchSpec(
-                        "_q", "tdigest", col, {"compression": 200}, weight=wcol
-                    )
-                elif req_rel is not None:
-                    sp = SketchSpec("_q", "dd", col, {"alpha": req_rel})
-                else:
-                    kk = 200
-                    if req_rank is not None:
-                        from sketchlib.planner import kll_params
-
-                        kk = max(200, kll_params(req_rank)["k"])
-                    sp = SketchSpec("_q", "kll", col, {"k": kk})
+            df, sp = _sketch_spec(df, fn, args)
             # persist the finest-grain states: every grouping set derives
             # from this ONE frame — without it each level's action would
             # re-run the base scan, which is exactly what rollup-by-merge
             # exists to avoid
             states = build_sketches(df, [sp], group_by=list(cols)).persist()
             native = dict(df.dtypes)
-            spec_name = "_q"
-            rows = None
+            name, kind, rows = sp.name, sp.kind, None
 
         from sketchlib.spark.build import GROUP_SEP
 
@@ -4676,38 +4753,7 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
                         parts = r["group"].split(GROUP_SEP)
                         key = GROUP_SEP.join(parts[i] for i in keep if i < len(parts))
                         lvl.append({**r, "group": key})
-            if fn == "APPROX_COUNT_DISTINCT":
-                out = estimates_df(spark, st, spec_name, rows=lvl)
-            elif fn == "APPROX_TOPK":
-                out = topk_df(spark, st, spec_name, int(args[1]), rows=lvl)
-            elif fn == "APPROX_TOP_SUM":
-                out = topk_df(
-                    spark, st, spec_name, _top_sum_k(args), rows=lvl
-                ).withColumnRenamed("est_count", "est_sum")
-            elif fn == "APPROX_SPECTRUM":
-                from sketchlib.spark.query import spectrum_df
-
-                out = spectrum_df(spark, st, spec_name, _spectrum_args(args)[0], rows=lvl)
-            elif fn == "APPROX_MAD":
-                from sketchlib.spark.query import mad_df
-
-                out = mad_df(spark, st, spec_name, rows=lvl)
-            elif fn == "APPROX_TRIMMED_MEAN":
-                from sketchlib.spark.query import trimmed_mean_df
-
-                out = trimmed_mean_df(spark, st, spec_name, *_trim_args(args), rows=lvl)
-            elif fn == "APPROX_HISTOGRAM":
-                from sketchlib.spark.query import equidepth_histogram_df
-
-                out = equidepth_histogram_df(spark, st, spec_name, _hist_args(args), rows=lvl)
-            elif fn == "APPROX_FREQUENT":
-                from sketchlib.spark.query import mg_topk_df
-
-                out = mg_topk_df(spark, st, spec_name, _frequent_args(args)[0], rows=lvl)
-            elif req_rel is not None:
-                out = rel_quantiles_df(spark, st, spec_name, qs, rows=lvl)
-            else:
-                out = quantiles_df(spark, st, spec_name, qs, rows=lvl)
+            out = _sketch_answer(spark, fn, args, st, name, kind, rows=lvl)
             frames.append(
                 _shape_rollup_level(out, keep, cols, native, _grouping_mask(keep, k))
             )
@@ -5160,11 +5206,7 @@ def approx_sql(
 
     if len(aggs) > 1:
         if catalog is not None and catalog_key is not None:
-            raise ValueError(
-                "multi-aggregate statements can't take catalog_key — issue one "
-                "statement per aggregate to answer from persisted states, or "
-                "pass catalog alone for per-aggregate auto-selection"
-            )
+            raise ValueError(_MULTI_KEY_MSG)
         if catalog is not None:
             routed = _multi_agg_routed(
                 spark, aggs, group, m.group("where"), m.group("table"), tables, catalog
@@ -5441,108 +5483,17 @@ def approx_sql(
                 return out
             raise ValueError(f"{fn} cannot be answered from a persisted sample table")
 
-        reg = [r for r in catalog.list_rows() if r["name"] == catalog_key]
-        if not reg:
-            # checked BEFORE the estimator gate: a typo'd key must get the
-            # no-such-artifact message, not "is a sketch-states set"
-            raise ValueError(f"catalog has no sketch set or sample {catalog_key!r}")
-        if estimator == "subsample":
-            # reachable only via an EXPLICIT catalog_key naming a sketch
-            # set (auto-resolution is uniform-scrambles-only): states hold
-            # no rows to subsample, and answering with the sketch's own
-            # bound would be exactly the silent closed-form fallback the
-            # modifier forbids
-            raise ValueError(
-                f"{catalog_key!r} is a sketch-states set — ERROR BY "
-                "SUBSAMPLING needs Bernoulli(p) ROWS (a uniform scramble); "
-                "name a sample or drop catalog_key for auto-selection"
-            )
-        if m.group("where"):
-            raise ValueError(
-                "sketch states were built over the unfiltered table — WHERE "
-                "cannot be applied post-hoc to pre-reduced states; use a "
-                "persisted SAMPLE (create_sample) for filterable approx scans, "
-                "rebuild states with the filter, or drop catalog_key"
-            )
-        reg = reg[0]
-        if _canon_group(group) != reg["group_by"]:
-            raise ValueError(
-                f"statement GROUP BY {group!r} != registered group_by "
-                f"{reg['group_by']!r} for {catalog_key!r}"
-            )
-        kinds = _CATALOG_KINDS.get(fn)
-        if kinds is None:
-            raise ValueError(f"{fn} cannot be answered from persisted sketch states")
-        col = args[0]
-        spec = next(
-            (s for s in json.loads(reg["specs_json"])
-             if s["kind"] in kinds and s["column"] == col
-             and _cm_spec_serves(fn, args, s) and _mg_spec_serves(fn, args, s)
-         and _pct_spec_serves(fn, args, s)
-             and _fd_spec_serves(fn, args, s)),
-            None,
+        # checked BEFORE the estimator gate: a typo'd key must get the
+        # no-such-artifact message, not "is a sketch-states set"
+        spec = _keyed_states_spec(
+            _registration(catalog, catalog_key), catalog_key, fn, args, group,
+            m.group("where"), estimator,
         )
-        if spec is None:
-            raise ValueError(
-                f"sketch set {catalog_key!r} holds no {'/'.join(kinds)} sketch on "
-                f"{col!r} serving {fn}"
-                + (" (weighted CMs serve APPROX_TOP_SUM with a matching weight "
-                   "column; unweighted CMs serve APPROX_TOPK; an explicit eps "
-                   "routes only to states achieving it)"
-                   if fn in ("APPROX_TOPK", "APPROX_TOP_SUM") else "")
-            )
         # the set's state rows, read on the driver (no Spark job) unless
         # they are over the driver budgets — then the Spark route
         rows = catalog.state_rows(catalog_key, spec["name"])
         states = catalog.states(catalog_key) if rows is None else None
-        if fn == "APPROX_COUNT_DISTINCT":
-            out = estimates_df(spark, states, spec["name"], rows=rows)
-        elif fn == "APPROX_SPECTRUM":
-            from sketchlib.spark.query import spectrum_df
-
-            out = spectrum_df(spark, states, spec["name"], _spectrum_args(args)[0], rows=rows)
-        elif fn == "APPROX_TOPK":
-            out = topk_df(spark, states, spec["name"], int(args[1]), rows=rows)
-        elif fn == "APPROX_TOP_SUM":
-            out = topk_df(
-                spark, states, spec["name"], _top_sum_k(args), rows=rows
-            ).withColumnRenamed("est_count", "est_sum")
-        elif fn == "APPROX_MAD":
-            from sketchlib.spark.query import mad_df
-
-            _mad_args(args)
-            out = mad_df(spark, states, spec["name"], rows=rows)
-        elif fn == "APPROX_TRIMMED_MEAN":
-            from sketchlib.spark.query import trimmed_mean_df
-
-            out = trimmed_mean_df(spark, states, spec["name"], *_trim_args(args), rows=rows)
-        elif fn == "APPROX_HISTOGRAM":
-            from sketchlib.spark.query import equidepth_histogram_df
-
-            out = equidepth_histogram_df(
-                spark, states, spec["name"], _hist_args(args), rows=rows
-            )
-        elif fn == "APPROX_FREQUENT":
-            from sketchlib.spark.query import mg_topk_df
-
-            out = mg_topk_df(spark, states, spec["name"], _frequent_args(args)[0], rows=rows)
-        else:  # APPROX_PERCENTILE
-            qs, req_rank, req_rel = _percentile_args(args)
-            if req_rank is not None:
-                k = float(spec.get("params", {}).get("k", 0))
-                if spec["kind"] != "kll" or not k or 3.31 / k > req_rank * (1 + 1e-9):
-                    raise ValueError(
-                        f"sketch set {catalog_key!r} cannot achieve rank_err="
-                        f"{req_rank} — its {spec['kind']} sketch on {col!r} "
-                        + (f"has k={int(k)} (ε≈{3.31 / k:.4f})" if k else "carries no k")
-                        + "; rebuild with a larger k or drop catalog_key"
-                    )
-            if req_rel is not None:
-                # _pct_spec_serves guaranteed a dd with achieving alpha;
-                # the answer frame carries the bound in its own units
-                out = rel_quantiles_df(spark, states, spec["name"], qs, rows=rows)
-            else:
-                out = quantiles_df(spark, states, spec["name"], qs, rows=rows)
+        out = _sketch_answer(spark, fn, args, states, spec["name"], spec["kind"], rows)
         return _finish_grouped(out, None, group)
 
     if estimator == "subsample" and fn in ("APPROX_PERCENTILE", "APPROX_COUNT_DISTINCT"):
@@ -5565,137 +5516,10 @@ def approx_sql(
     if m.group("where"):
         df = _apply_where(spark, df, m.group("where"), tables, m.group("table"))
 
-    if fn == "APPROX_COUNT_DISTINCT":
-        df, col = _materialize_expr(df, args[0])
-        rse = float(args[1]) if len(args) > 1 else 0.01
-        p = hll_params(rse)["p"]
-        states = build_sketches(df, [SketchSpec("_q", "hll", col, {"p": p})], group_by=group)
-        out = estimates_df(spark, states, "_q")
-        return _finish_grouped(out, df, group)
-
-    if fn == "APPROX_SPECTRUM":
-        from pyspark.sql import functions as F
-
-        from sketchlib.spark.query import spectrum_df
-
-        r, fd_d, fd_ell = _spectrum_args(args)
-        df, col = _materialize_expr(df, args[0])
-        if fd_d is None:
-            # infer the dimension from the data (one-row probe); an
-            # explicitly-given d is trusted — the sketch's whole-rows guard
-            # catches a ragged column either way
-            probe = df.select(F.size(F.col(col)).alias("_d")).first()
-            if probe is None or probe["_d"] is None or probe["_d"] < 1:
-                raise ValueError(
-                    f"APPROX_SPECTRUM could not infer the vector dimension "
-                    f"from {col!r} — pass d=<dim> explicitly"
-                )
-            fd_d = int(probe["_d"])
-        states = build_sketches(
-            df, [SketchSpec("_q", "fd", col, {"d": fd_d, "ell": fd_ell})],
-            group_by=group,
-        )
-        out = spectrum_df(spark, states, "_q", r)
-        return _finish_grouped(out, df, group)
-
-    if fn == "APPROX_TOPK":
-        df, col = _materialize_expr(df, args[0])
-        k = int(args[1])
-        eps = float(args[2]) if len(args) > 2 else 1e-4
-        states = build_sketches(
-            df, [SketchSpec("_q", "cm", col, {"eps": eps, "delta": 0.01})], group_by=group
-        )
-        out = topk_df(spark, states, "_q", k)
-        return _finish_grouped(out, df, group)
-
-    if fn == "APPROX_TOP_SUM":
-        # heavy hitters BY SUM: one weighted-CM build (same zero-shuffle map
-        # kernel), top-k re-estimated from the merged state — the Verdict-
-        # style "top keys by SUM(w)" answered without a key-wide groupBy
-        k = _top_sum_k(args)
-        eps = _num(args[3]) if len(args) > 3 else 1e-4
-        if eps is None:
-            raise ValueError(
-                f"APPROX_TOP_SUM eps argument {args[3]!r} must be numeric"
-            )
-        df, col = _materialize_expr(df, args[0])
-        df, wcol = _materialize_expr(df, args[1])
-        states = build_sketches(
-            df,
-            [SketchSpec("_q", "cm", col, {"eps": eps, "delta": 0.01}, weight=wcol)],
-            group_by=group,
-        )
-        out = topk_df(spark, states, "_q", k).withColumnRenamed("est_count", "est_sum")
-        return _finish_grouped(out, df, group)
-
-    if fn == "APPROX_PERCENTILE":
-        df, col = _materialize_expr(df, args[0])
-        qs, req_rank, req_rel = _percentile_args(args)
-        wcol = _pct_weight(args)
-        if wcol is not None:
-            # weight-mass quantiles: one weighted t-digest build (fractional
-            # centroid weights native; the digest filters NaN pairs jointly)
-            states = build_sketches(
-                df,
-                [SketchSpec("_q", "tdigest", col, {"compression": 200}, weight=wcol)],
-                group_by=group,
-            )
-            out = quantiles_df(spark, states, "_q", qs)
-            return _finish_grouped(out, df, group)
-        if req_rel is not None:
-            # relative-VALUE contract: α IS the bound (Masson et al. 2019),
-            # so the on-the-fly DDSketch just builds at the requested alpha
-            states = build_sketches(
-                df, [SketchSpec("_q", "dd", col, {"alpha": req_rel})], group_by=group
-            )
-            out = rel_quantiles_df(spark, states, "_q", qs)
-            return _finish_grouped(out, df, group)
-        k = 200
-        if req_rank is not None:
-            # rank-error contract: invert the calibrated KLL bound ε(k)≈3.31/k
-            from sketchlib.planner import kll_params
-
-            k = max(200, kll_params(req_rank)["k"])
-        states = build_sketches(df, [SketchSpec("_q", "kll", col, {"k": k})], group_by=group)
-        out = quantiles_df(spark, states, "_q", qs)
-        return _finish_grouped(out, df, group)
-
-    if fn == "APPROX_FREQUENT":
-        # deterministic heavy hitters: one MG build through the same
-        # zero-shuffle kernel; the answer frame's undercount_bound is the
-        # summary's EXACTLY tracked decrement (no δ to carve out)
-        from sketchlib.spark.query import mg_topk_df
-
-        f_k, f_eps = _frequent_args(args)
-        df, col = _materialize_expr(df, args[0])
-        states = build_sketches(
-            df, [SketchSpec("_q", "mg", col, {"eps": f_eps or 1e-4})], group_by=group
-        )
-        out = mg_topk_df(spark, states, "_q", f_k)
-        return _finish_grouped(out, df, group)
-
-    if fn in ("APPROX_MAD", "APPROX_TRIMMED_MEAN", "APPROX_HISTOGRAM"):
-        # on-the-fly: one KLL build (same zero-shuffle kernel as the
-        # percentile route), SIZED from the statement's own requirement
-        # (_robust_kll_k — the states route keeps the "register a larger
-        # sketch" refusal; there the sketch was the user's registration)
-        kk = _robust_kll_k(fn, args)
-        df, col = _materialize_expr(df, args[0])
-        states = build_sketches(
-            df, [SketchSpec("_q", "kll", col, {"k": kk})], group_by=group
-        )
-        if fn == "APPROX_MAD":
-            from sketchlib.spark.query import mad_df
-
-            out = mad_df(spark, states, "_q")
-        elif fn == "APPROX_TRIMMED_MEAN":
-            from sketchlib.spark.query import trimmed_mean_df
-
-            out = trimmed_mean_df(spark, states, "_q", *_trim_args(args))
-        else:
-            from sketchlib.spark.query import equidepth_histogram_df
-
-            out = equidepth_histogram_df(spark, states, "_q", _hist_args(args))
+    if fn in _CATALOG_KINDS:
+        df, sp = _sketch_spec(df, fn, args)
+        states = build_sketches(df, [sp], group_by=group)
+        out = _sketch_answer(spark, fn, args, states, sp.name, sp.kind)
         return _finish_grouped(out, df, group)
 
     if fn in ("APPROX_COVAR", "APPROX_CORR"):

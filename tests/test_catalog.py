@@ -769,6 +769,127 @@ def test_state_rows_filter_and_budgets(spark, served_catalog, monkeypatch):
         cat.state_rows("nope")
 
 
+# one statement per sketch aggregate, over the columns the ``all`` set
+# registers (the rel_err= percentile serves from its dd state)
+_PARITY_ARGS = {
+    "APPROX_COUNT_DISTINCT": "k",
+    "APPROX_TOPK": "k, 5",
+    "APPROX_TOP_SUM": "k, w, 5",
+    "APPROX_PERCENTILE": "x, 0.5, 0.9",
+    "APPROX_SPECTRUM": "emb, 2, ell=4",
+    "APPROX_MAD": "x",
+    "APPROX_TRIMMED_MEAN": "x, 0.1, 0.9",
+    "APPROX_HISTOGRAM": "x, 4",
+    "APPROX_FREQUENT": "k, 5",
+}
+_KEY_COLS = ("g", "group", "grouping_lvl")
+
+
+def _answer_types(df):
+    return [(c, t) for c, t in df.dtypes if c not in _KEY_COLS]
+
+
+def test_sketch_routes_share_answer_schema(spark, served_catalog):
+    """Each sketch aggregate answers with the same estimate/bound column
+    names and Spark types on every route: the on-the-fly build, an
+    explicit catalog key, the finest ROLLUP level from that key's states,
+    and (for the mergeable heads) the UNION ALL state merge."""
+    from sketchlib.sql import _CATALOG_KINDS, _MERGE_KINDS, approx_sql, explain_sql
+
+    cat, tables = served_catalog
+    assert set(_PARITY_ARGS) == set(_CATALOG_KINDS)
+    for fn, a in _PARITY_ARGS.items():
+        q = f"SELECT {fn}({a}) FROM t"
+        fly = approx_sql(spark, q + " GROUP BY g", tables)
+        keyed = approx_sql(spark, q + " GROUP BY g", tables, catalog=cat, catalog_key="all")
+        rolled = approx_sql(spark, q + " GROUP BY ROLLUP (g)", tables,
+                            catalog=cat, catalog_key="all")
+        want = _answer_types(fly)
+        assert _answer_types(keyed) == want, fn
+        assert _answer_types(rolled) == want, fn
+        assert rolled.where("grouping_lvl = 0").count() == keyed.count(), fn
+        if fn in _MERGE_KINDS:
+            col = a.split(",")[0]
+            u = f"SELECT {fn}({a}) FROM (SELECT {col} FROM t UNION ALL SELECT {col} FROM t)"
+            route = dict(explain_sql(spark, u, tables, catalog=cat).collect())
+            assert route["statement_kind"] == "approx_unionall_merge", (fn, route)
+            assert _answer_types(approx_sql(spark, u, tables, catalog=cat)) == want, fn
+    rel = "SELECT APPROX_PERCENTILE(x, 0.5, rel_err=0.02) FROM t GROUP BY g"
+    assert _answer_types(approx_sql(spark, rel, tables)) == _answer_types(
+        approx_sql(spark, rel, tables, catalog=cat, catalog_key="all"))
+
+
+@pytest.mark.parametrize("grouping", ["GROUP BY g", "GROUP BY ROLLUP (g)"])
+def test_explicit_key_honours_count_distinct_rse(spark, served_catalog, grouping):
+    """An explicit catalog key serves COUNT_DISTINCT only from a sketch
+    achieving the statement's rse — stated as an argument or planned from
+    a WITHIN contract — on the plain and the ROLLUP route alike; EXPLAIN
+    reports the same refusal. The ``all`` set's HLL has p=12
+    (rse = 1.04/64 ≈ 0.016)."""
+    from sketchlib.sql import approx_sql
+
+    cat, tables = served_catalog
+    refused = [f"SELECT APPROX_COUNT_DISTINCT(k, 0.001) FROM t {grouping}"]
+    if grouping == "GROUP BY g":  # ROLLUP takes no WITHIN tail
+        refused.append("SELECT APPROX_COUNT_DISTINCT(k) FROM t GROUP BY g WITHIN 1% ERROR")
+    for q in refused:
+        with pytest.raises(ValueError, match="cannot achieve rse="):
+            approx_sql(spark, q, tables, catalog=cat, catalog_key="all").collect()
+    q = f"SELECT APPROX_COUNT_DISTINCT(k, 0.05) FROM t {grouping}"
+    out = approx_sql(spark, q, tables, catalog=cat, catalog_key="all").collect()
+    assert out and all(r["rse_bound"] == pytest.approx(1.04 / 64) for r in out)
+    if grouping == "GROUP BY g":
+        props = dict(approx_sql(
+            spark, "EXPLAIN SELECT APPROX_COUNT_DISTINCT(k, 0.001) FROM t GROUP BY g",
+            tables, catalog=cat, catalog_key="all").collect())
+        assert props["route"].startswith("error") and "cannot achieve rse=" in props["error"]
+
+
+@pytest.mark.parametrize("k", ["", ", 2.5", ", 0", ", -1"])
+@pytest.mark.parametrize("route", ["on_the_fly", "catalog_key", "rollup"])
+def test_topk_k_is_validated_on_every_route(spark, served_catalog, route, k):
+    """APPROX_TOPK's k must be a positive integer on every route: a
+    missing k, a fraction, zero and a negative k all raise a ValueError
+    naming the argument (a negative k used to drop the last candidate)."""
+    from sketchlib.sql import approx_sql
+
+    cat, tables = served_catalog
+    grouping = "GROUP BY ROLLUP (g)" if route == "rollup" else "GROUP BY g"
+    q = f"SELECT APPROX_TOPK(k{k}) FROM t {grouping}"
+    kw = {} if route == "on_the_fly" else {"catalog": cat, "catalog_key": "all"}
+    with pytest.raises(ValueError, match=r"APPROX_TOPK (takes \(col, k|k argument)"):
+        approx_sql(spark, q, tables, **kw).collect()
+
+
+def test_explain_with_sketch_set_key_reports_execution_refusals(spark, served_catalog):
+    """EXPLAIN with an explicit sketch-set key reports the error execution
+    raises instead of a states route: no CM on the column, a rank_err no
+    registered KLL achieves (the ``all`` set's KLL has k=200), and a
+    multi-aggregate statement."""
+    from sketchlib.sql import approx_sql
+
+    cat, tables = served_catalog
+    for q, msg in (
+        ("SELECT APPROX_TOPK(x, 5) FROM t GROUP BY g", "holds no cm sketch"),
+        ("SELECT APPROX_PERCENTILE(x, 0.5, rank_err=0.001) FROM t GROUP BY g",
+         "cannot achieve rank_err="),
+    ):
+        props = dict(approx_sql(spark, "EXPLAIN " + q, tables, catalog=cat,
+                                catalog_key="all").collect())
+        assert props["route"] == "error — approx_sql would raise", (q, props)
+        assert msg in props["error"], (q, props)
+        with pytest.raises(ValueError, match=msg):
+            approx_sql(spark, q, tables, catalog=cat, catalog_key="all")
+    # a multi-aggregate statement takes no catalog_key at all
+    q = "SELECT APPROX_COUNT_DISTINCT(k), APPROX_COUNT_DISTINCT(k2) FROM t GROUP BY g"
+    props = dict(approx_sql(spark, "EXPLAIN " + q, tables, catalog=cat,
+                            catalog_key="all").collect())
+    assert "can't take catalog_key" in props["error"], props
+    assert not any(k.endswith("route") for k in props), props
+    with pytest.raises(ValueError, match="can't take catalog_key"):
+        approx_sql(spark, q, tables, catalog=cat, catalog_key="all")
+
+
 def test_statement_after_refresh_sees_refreshed_states(spark, tmp_path):
     """A catalog-served statement issued right after refresh() answers from
     the refreshed states: its estimates equal a fresh build's over the
