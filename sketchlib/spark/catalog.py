@@ -141,10 +141,12 @@ class SketchCatalog:
         states = build_sketches_from_parquet(
             self.spark, input_dir, specs, group_by=group_by, files=files
         )
-        # record the sketched columns' INPUT types (a footer read, no job):
-        # set-operation answers merge sketches ACROSS registrations, and the
-        # kernel hashes int/float/string values differently — the resolver
-        # must be able to refuse a cross-type merge (silently wrong counts)
+        # record the sketched columns' INPUT types (schema inference runs
+        # one Spark job — measured ≈0.1 s warm, ≈2 s as a session's first
+        # job): set-operation answers merge sketches ACROSS registrations,
+        # and the kernel hashes int/float/string values differently — the
+        # resolver must be able to refuse a cross-type merge (silently
+        # wrong counts)
         try:
             schema = self.spark.read.parquet(input_dir).schema
             dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
@@ -225,7 +227,8 @@ class SketchCatalog:
         # files_json None: no lineage for externally built states —
         # refresh() refuses and points back at re-registration. When a real
         # input_dir is given, record the sketched columns' types like
-        # create() does (cross-registration merges refuse unknown dtypes);
+        # create() does, with the same one-job schema inference
+        # (cross-registration merges refuse unknown dtypes);
         # stream registrations without one stay typeless and simply never
         # serve cross-table merge routes.
         dtypes = None
@@ -238,8 +241,12 @@ class SketchCatalog:
         return self._persist_set(name, states, specs, group_by, input_dir, None, dtypes)
 
     _LOCAL_REFRESH_BYTES = 256 << 20
+    # a delta whose chunks total at most one scan chunk (plan_chunks'
+    # target_bytes) is sketched on the driver: at that size a Spark job's
+    # fixed cost is many times the sketching inside it
+    _DRIVER_DELTA_BYTES = 8 << 20
 
-    def _local_refresh_merge(self, sdir: str, newpart: DataFrame, specs, reg, new_files):
+    def _local_refresh_merge(self, sdir: str, delta, specs, group_by, reg, n_tasks: int):
         """Driver-local refresh merge, or None to use the Spark pipeline.
 
         A refresh moves KB/MB-scale state rows through a full Exchange +
@@ -247,16 +254,21 @@ class SketchCatalog:
         partials into the persisted table — ~4 fixed job costs for work the
         driver does in milliseconds. When the ESTIMATED volume (persisted
         table size + delta-task count × groups × per-spec state size, all
-        known driver-side) fits the byte budget, collect the delta partials
-        (one job: the kernel), read the old table with pyarrow, and merge
-        in exactly ``_merge_pdf``'s canonical (part_id, state bytes) order
-        — byte-identical states to the pipeline path (old rows carry
+        known driver-side) fits the byte budget, get the delta partials —
+        sketched on the driver (no job) when the ``delta`` chunks total at
+        most ``_DRIVER_DELTA_BYTES``, else collected from the kernel job —
+        read the old table with pyarrow, and merge in exactly
+        ``_merge_pdf``'s canonical (part_id, state bytes) order.
+        Both ways of getting the partials emit the same rows, so the
+        states are byte-identical to the pipeline path (old rows carry
         part_id=-1, so they sort first either way). Cluster-scale state
         tables overflow the estimate and keep the distributed merge."""
         import pyarrow as pa
+        import pyarrow.parquet as pq
 
         from sketchlib.sketches import deserialize
         from sketchlib.spark.build import _ARROW_STATE_SCHEMA
+        from sketchlib.spark.scan import _chunk_partials, _driver_partials
 
         try:
             old_bytes = sum(
@@ -267,30 +279,25 @@ class SketchCatalog:
             n_specs = max(len(specs), 1)
             n_groups = max(int(reg["n_states"]) // n_specs, 1)
             per_set = sum(s.make().max_state_bytes() for s in specs)
-            delta_chunks = sum(
-                max(1, os.path.getsize(f) // (8 << 20)) for f in new_files
-            )
-            n_tasks = min(delta_chunks, self.spark.sparkContext.defaultParallelism)
             est = old_bytes + n_tasks * n_groups * per_set
         except Exception:
             return None
         if est > self._LOCAL_REFRESH_BYTES:
             return None
 
-        delta_rows = newpart.collect()  # ONE job: the delta sketch kernel
-        import pyarrow.parquet as pq
-
-        old = pq.read_table(sdir).to_pylist()
+        if sum(c.n_bytes for c in delta) <= self._DRIVER_DELTA_BYTES:
+            delta_rows = _driver_partials(delta, specs, group_by, n_tasks)
+        else:
+            delta_rows = [
+                {**r.asDict(), "state": bytes(r["state"])}
+                for r in _chunk_partials(self.spark, delta, specs, group_by, n_tasks).collect()
+            ]
         by_key: dict = {}
-        for r in old:
+        for r in pq.read_table(sdir).to_pylist() + delta_rows:
             by_key.setdefault((r["group"], r["sketch"]), []).append(r)
-        for r in delta_rows:
-            d = r.asDict()
-            d["state"] = bytes(d["state"])
-            by_key.setdefault((d["group"], d["sketch"]), []).append(d)
         out = []
         for (g, name_), rs in sorted(by_key.items()):
-            rs.sort(key=lambda r: (r["part_id"], bytes(r["state"])))
+            rs.sort(key=lambda r: (r["part_id"], r["state"]))
             acc = deserialize(rs[0]["state"])
             for r in rs[1:]:
                 acc.merge(deserialize(r["state"]))
@@ -317,6 +324,12 @@ class SketchCatalog:
         persisted state table. At 100 TB this is the difference between
         touching the day's append and re-scanning the corpus.
 
+        Routes, by size (``_local_refresh_merge``): a delta of at most one
+        scan chunk is sketched on the driver and merged there — no Spark
+        job at all; a larger delta is sketched by the kernel job and merged
+        on the driver; a state table over the driver budget keeps the
+        distributed merge. Every route gives byte-identical states.
+
         What equals a fresh build: order-free merges give the same state —
         HLL registers and Bloom bits byte for byte, the Count-Min counter
         table and total exactly. Order-sensitive parts differ in bytes
@@ -331,7 +344,7 @@ class SketchCatalog:
         the input dir raises; rebuild with ``create(overwrite=True)``.
         Returns {new_files, rows_added, tokens_added}."""
         from sketchlib.spark.build import merge_states
-        from sketchlib.spark.scan import partial_states_from_parquet, plan_chunks
+        from sketchlib.spark.scan import _chunk_partials, _select_files, plan_chunks
 
         reg = self._registry_meta("_sketch_catalog", _CATALOG_SCHEMA, name, "sketch set")
         if reg["files_json"] is None:
@@ -341,8 +354,11 @@ class SketchCatalog:
                 "snapshot (that IS its refresh); a file-backed set built "
                 "before lineage existed needs one create(overwrite=True)"
             )
+        # the grown directory is planned ONCE: the lineage check and the
+        # delta scan share the footer reads
+        chunks = plan_chunks(reg["input_dir"])
         new, current = self._lineage_new_files(
-            reg, "sketch state", "rebuild with create(overwrite=True)"
+            reg, "sketch state", "rebuild with create(overwrite=True)", chunks
         )
         if not new:
             return {"new_files": 0, "rows_added": 0, "tokens_added": 0}
@@ -355,16 +371,15 @@ class SketchCatalog:
         gb = reg["group_by"] or None
         if gb and "," in gb:
             gb = gb.split(",")
-        newpart = partial_states_from_parquet(
-            self.spark, reg["input_dir"], specs, group_by=gb, files=new
-        )
+        delta = _select_files(chunks, new, reg["input_dir"])
+        n_tasks = min(len(delta), self.spark.sparkContext.defaultParallelism)
         # prior totals come from the registration row — no extra Spark job
         before_rows, before_tokens = int(reg["rows"]), int(reg["tokens"])
         sdir = os.path.join(self.root, "states", name)
         tmp, bak = sdir + "._refresh_tmp", sdir + "._refresh_old"
         # a stale backup from a crashed refresh would wedge the rename
         shutil.rmtree(bak, ignore_errors=True)
-        local = self._local_refresh_merge(sdir, newpart, specs, reg, new)
+        local = self._local_refresh_merge(sdir, delta, specs, gb, reg, n_tasks)
         if local is not None:
             import pyarrow.parquet as pq
 
@@ -372,6 +387,7 @@ class SketchCatalog:
             os.makedirs(tmp)
             pq.write_table(local, os.path.join(tmp, "part-00000.parquet"))
         else:
+            newpart = _chunk_partials(self.spark, delta, specs, gb, n_tasks)
             refreshed = merge_states(self.states(name).unionByName(newpart))
             refreshed.write.mode("overwrite").parquet(tmp)
         os.rename(sdir, bak)
@@ -421,12 +437,13 @@ class SketchCatalog:
 
     # --- shared registry machinery (append-only parquet log per registry) ---
 
-    def _lineage_new_files(self, reg, kind_label: str, rebuild_hint: str):
+    def _lineage_new_files(self, reg, kind_label: str, rebuild_hint: str, chunks=None):
         """(new_files_sorted, current_set) from a registration row's file
         lineage — the refresh preamble all four registries share: rows
         registered without lineage refuse refresh, and every covered file
         must still exist (sketch states / samples / indexes / signatures
-        cannot subtract). Raises with the registry's own rebuild hint."""
+        cannot subtract). Raises with the registry's own rebuild hint.
+        ``chunks``: the input dir's plan, when the caller already has it."""
         from sketchlib.spark.scan import plan_chunks
 
         if reg["files_json"] is None:
@@ -434,7 +451,9 @@ class SketchCatalog:
                 f"{kind_label} {reg['name']!r} has no file lineage — {rebuild_hint}"
             )
         covered = set(json.loads(reg["files_json"]))
-        current = {c.file for c in plan_chunks(reg["input_dir"])}
+        if chunks is None:
+            chunks = plan_chunks(reg["input_dir"])
+        current = {c.file for c in chunks}
         gone = sorted(covered - current)
         if gone:
             raise ValueError(

@@ -46,6 +46,11 @@ from sketchlib.spark.build import (
 )
 
 CHUNK_FIELDS = "chunk_id int, file string, rg_lo int, rg_hi int, part_vals map<string,string>"
+# CHUNK_FIELDS as Arrow hands them to a chunk reader
+_CHUNK_ARROW = pa.schema([
+    ("chunk_id", pa.int32()), ("file", pa.string()), ("rg_lo", pa.int32()),
+    ("rg_hi", pa.int32()), ("part_vals", pa.map_(pa.string(), pa.string())),
+])
 
 
 def chunk_key(file: str, rg_lo: int, rg_hi: int) -> str:
@@ -133,12 +138,20 @@ def chunks_df(spark: SparkSession, chunks: list[Chunk], n_tasks: int) -> DataFra
     wall at the 1.23 B-token scale (group quantization makespan 90 vs 84 MB
     per task) while the merge saving did not show above it — plain LPT kept
     (OPTIMIZATION_r06.md, "binning experiment")."""
-    bins = [b for b in _lpt_bins(chunks, n_tasks) if b]
-    rows_by_bin = [
-        [(c.chunk_id, c.file, c.rg_lo, c.rg_hi, c.part_vals) for c in b] for b in bins
-    ]
-    rdd = spark.sparkContext.parallelize(rows_by_bin, len(bins)).flatMap(lambda b: b)
+    rows_by_bin = _bin_rows(chunks, n_tasks)
+    rdd = spark.sparkContext.parallelize(rows_by_bin, len(rows_by_bin)).flatMap(lambda b: b)
     return spark.createDataFrame(rdd, CHUNK_FIELDS)
+
+
+def _bin_rows(chunks: list[Chunk], n_tasks: int) -> list[list[tuple]]:
+    """Chunk-spec rows (CHUNK_FIELDS) of each non-empty ``_lpt_bins`` bin,
+    in the order its task reads them — the one layout chunks_df
+    distributes and ``_driver_partials`` replays."""
+    return [
+        [(c.chunk_id, c.file, c.rg_lo, c.rg_hi, c.part_vals) for c in b]
+        for b in _lpt_bins(chunks, n_tasks)
+        if b
+    ]
 
 
 def _read_chunk_batches(
@@ -198,6 +211,50 @@ def _make_chunk_reader(specs: list[SketchSpec], group_by: str | None, per_chunk:
     return reader
 
 
+def _select_files(chunks: list[Chunk], files: list[str], input_dir: str) -> list[Chunk]:
+    """The chunks of ``files`` out of ``input_dir``'s plan, renumbered from
+    0 in plan order — the chunk ids a scan of exactly those files gets."""
+    from dataclasses import replace
+
+    fset = set(files)
+    out = [replace(c, chunk_id=i) for i, c in enumerate(c for c in chunks if c.file in fset)]
+    if not out:
+        raise ValueError(f"none of the {len(fset)} requested files found under {input_dir}")
+    return out
+
+
+def _chunk_partials(
+    spark: SparkSession,
+    chunks: list[Chunk],
+    specs: list[SketchSpec],
+    group_by: str | None,
+    n_tasks: int,
+    per_chunk: bool = False,
+) -> DataFrame:
+    """Partial states of planned ``chunks``: one Spark task per chunks_df bin."""
+    cdf = chunks_df(spark, chunks, n_tasks)
+    return cdf.mapInArrow(_make_chunk_reader(specs, group_by, per_chunk), STATE_FIELDS)
+
+
+def _driver_partials(
+    chunks: list[Chunk], specs: list[SketchSpec], group_by: str | None, n_tasks: int
+) -> list[dict]:
+    """The state rows ``_chunk_partials`` emits, sketched in THIS process
+    without a Spark job: each bin goes through the same chunk reader, fed
+    its rows in the same order, with the same part_id (the bin's least
+    chunk_id) — so the state bytes are identical. For deltas small enough
+    that a job's fixed cost dwarfs the sketching (catalog refresh)."""
+    reader = _make_chunk_reader(specs, group_by)
+    out: list[dict] = []
+    for rows in _bin_rows(chunks, n_tasks):
+        batch = pa.RecordBatch.from_pylist(
+            [dict(zip(_CHUNK_ARROW.names, r)) for r in rows], schema=_CHUNK_ARROW
+        )
+        for states in reader(iter([batch])):
+            out.extend(states.to_pylist())
+    return out
+
+
 def partial_states_from_parquet(
     spark: SparkSession,
     input_dir: str,
@@ -209,26 +266,17 @@ def partial_states_from_parquet(
     files: list[str] | None = None,
 ) -> DataFrame:
     """``files``: restrict the scan to these parquet files (must live under
-    ``input_dir``) — the incremental-refresh path sketches only the files
-    APPENDED since the last build (catalog.refresh)."""
+    ``input_dir``) — sketches only the files named, e.g. those appended
+    since a registered set's last build."""
     chunks = plan_chunks(input_dir, target_bytes=target_bytes)
     if files is not None:
-        from dataclasses import replace
-
-        fset = set(files)
-        chunks = [
-            replace(c, chunk_id=i)
-            for i, c in enumerate(c for c in chunks if c.file in fset)
-        ]
-        if not chunks:
-            raise ValueError(f"none of the {len(fset)} requested files found under {input_dir}")
+        chunks = _select_files(chunks, files, input_dir)
     cores = spark.sparkContext.defaultParallelism
     # one wave of tasks: more waves only multiply per-task state emission
     # (CM states are ~1 MB each) without improving balance — chunks are
     # modulo-spread across tasks, which evens out size variance
     n_tasks = n_tasks or min(len(chunks), cores)
-    cdf = chunks_df(spark, chunks, n_tasks)
-    return cdf.mapInArrow(_make_chunk_reader(specs, group_by, per_chunk), STATE_FIELDS)
+    return _chunk_partials(spark, chunks, specs, group_by, n_tasks, per_chunk)
 
 
 def build_sketches_from_parquet(

@@ -2435,8 +2435,26 @@ def explain_sql(
             emit("error", "ROLLUP/CUBE takes exactly one un-aliased approx "
                  "aggregate — approx_sql would raise")
             return done()
-        fn0 = aggs[0][0]
-        emit("aggregate", f"{fn0}({', '.join(aggs[0][1])})")
+        fn0, args0 = aggs[0]
+        emit("aggregate", f"{fn0}({', '.join(args0)})")
+        keyed = (
+            fn0 in _CATALOG_KINDS and catalog is not None and catalog_key is not None
+            and not any(r["name"] == catalog_key for r in catalog.list_sample_rows())
+        )
+        try:  # the same gates execution applies
+            cols, _ = _rollup_sets(rmu)
+            if keyed:
+                _rollup_states_spec(
+                    _registration(catalog, catalog_key), catalog_key, fn0, args0,
+                    cols, m.group("where"),
+                )
+        except ValueError as e:
+            emit("route", "error — approx_sql would raise")
+            emit("error", str(e))
+            return done()
+        if keyed:
+            emit("route", "persisted_sketch_states (finest grain; base table never read, A5)")
+            emit("artifact", catalog_key)
         if fn0 in _CATALOG_KINDS:
             emit("plan", "ONE build at the finest grain (persisted states "
                  "when catalog_key names a set registered at exactly that "
@@ -4587,36 +4605,11 @@ def _shape_rollup_level(out, keep: tuple[int, ...], cols: list[str],
     return out.select(*cols, "grouping_lvl", *est)
 
 
-def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
-    """One approx aggregate ``GROUP BY ROLLUP(a, b)`` / ``CUBE(a, b)``.
-
-    Sketch-served aggregates (COUNT_DISTINCT / PERCENTILE / TOPK / TOP_SUM)
-    answer EVERY grouping set from one build at the finest grain: coarser
-    sets are state merges (``regroup_states``) — KB-sized frames, zero
-    rescans of the base data, which is the mergeable-sketch property made
-    user-visible (and what makes the rollup corpus-size-independent when
-    served from registered states). Sampling aggregates recurse one
-    statement per grouping set over the same seed-fixed sample.
-
-    Output schema: the GROUP BY columns (rolled-up ones NULL), then
-    ``grouping_lvl`` = the SQL GROUPING() bitmask (leftmost column = most
-    significant bit; 0 = finest), then the aggregate's usual
-    estimate/bound columns — matching ``GROUP BY ROLLUP`` + ``GROUPING()``
-    in ANSI SQL engines row for row.
-    """
-    from pyspark.sql import functions as F
-
-    select = m.group("select")
-    aggs = [(f.upper(), _split_args(a)) for f, a in _AGG.findall(select)]
-    aliased = _AGG_ALIASED.findall(select)
-    if len(aggs) != 1 or (aliased and aliased[0][2]):
-        raise ValueError(
-            "GROUP BY ROLLUP/CUBE takes exactly one un-aliased approx "
-            "aggregate — grouping sets multiply the result rows, so a "
-            "multi-aggregate or aliased head is ambiguous; issue one "
-            "statement per aggregate"
-        )
-    fn, args = aggs[0]
+def _rollup_sets(rmu) -> tuple[list[str], list[tuple[int, ...]]]:
+    """(key columns, grouping sets as kept-index tuples, finest first) of a
+    matched ROLLUP / CUBE / GROUPING SETS clause — shared by execution and
+    EXPLAIN; ValueError on a duplicate column, an empty GROUPING SETS or a
+    CUBE over more than 4 columns."""
     if rmu.group("gsets"):
         # explicit GROUPING SETS ((a, b), (a), ()): the key-column list is
         # the first-appearance UNION of the sets (GROUPING() bitmask order,
@@ -4651,8 +4644,60 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
                 "CUBE takes at most 4 columns (2^k grouping sets) — use "
                 "ROLLUP or explicit GROUPING SETS for wider keys"
             )
-        k = len(cols)
-        sets_ = _rollup_grouping_sets(k, mode)
+        sets_ = _rollup_grouping_sets(len(cols), mode)
+    return cols, sets_
+
+
+def _rollup_states_spec(reg, key: str, fn: str, args: list, cols: list[str], where) -> dict:
+    """The serving spec of sketch set ``reg`` named by an explicit
+    ``catalog_key`` for a ROLLUP/CUBE statement over ``cols`` — the
+    refusals such a key can meet, shared by execution and EXPLAIN: states
+    take no WHERE, and they must be registered at exactly the finest grain
+    (coarser sets are merged down from it)."""
+    if where:
+        raise ValueError(_STATES_WHERE_MSG)
+    if reg["group_by"] != ",".join(cols):
+        raise ValueError(
+            f"ROLLUP/CUBE needs states at the FINEST grain: statement "
+            f"grouping ({','.join(cols)}) != registered group_by "
+            f"{reg['group_by']!r} for {key!r} — coarser sets "
+            "are merged down from the finest, never rebuilt"
+        )
+    return _serving_spec(reg, fn, args, key)
+
+
+def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
+    """One approx aggregate ``GROUP BY ROLLUP(a, b)`` / ``CUBE(a, b)``.
+
+    Sketch-served aggregates (COUNT_DISTINCT / PERCENTILE / TOPK / TOP_SUM)
+    answer EVERY grouping set from one build at the finest grain: coarser
+    sets are state merges (``regroup_states``) — KB-sized frames, zero
+    rescans of the base data, which is the mergeable-sketch property made
+    user-visible (and what makes the rollup corpus-size-independent when
+    served from registered states). Sampling aggregates recurse one
+    statement per grouping set over the same seed-fixed sample.
+
+    Output schema: the GROUP BY columns (rolled-up ones NULL), then
+    ``grouping_lvl`` = the SQL GROUPING() bitmask (leftmost column = most
+    significant bit; 0 = finest), then the aggregate's usual
+    estimate/bound columns — matching ``GROUP BY ROLLUP`` + ``GROUPING()``
+    in ANSI SQL engines row for row.
+    """
+    from pyspark.sql import functions as F
+
+    select = m.group("select")
+    aggs = [(f.upper(), _split_args(a)) for f, a in _AGG.findall(select)]
+    aliased = _AGG_ALIASED.findall(select)
+    if len(aggs) != 1 or (aliased and aliased[0][2]):
+        raise ValueError(
+            "GROUP BY ROLLUP/CUBE takes exactly one un-aliased approx "
+            "aggregate — grouping sets multiply the result rows, so a "
+            "multi-aggregate or aliased head is ambiguous; issue one "
+            "statement per aggregate"
+        )
+    fn, args = aggs[0]
+    cols, sets_ = _rollup_sets(rmu)
+    k = len(cols)
 
     def _recurse() -> DataFrame:
         # one statement per grouping set over the same seed-fixed sample
@@ -4709,17 +4754,10 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
                 # to serve this fn from the sample (empirical quantiles /
                 # universe distinct) — recurse rather than refuse
                 return _recurse()
-            reg = _registration(catalog, catalog_key)
-            if m.group("where"):
-                raise ValueError(_STATES_WHERE_MSG)
-            if reg["group_by"] != ",".join(cols):
-                raise ValueError(
-                    f"ROLLUP/CUBE needs states at the FINEST grain: statement "
-                    f"grouping ({','.join(cols)}) != registered group_by "
-                    f"{reg['group_by']!r} for {catalog_key!r} — coarser sets "
-                    "are merged down from the finest, never rebuilt"
-                )
-            spec = _serving_spec(reg, fn, args, catalog_key)
+            spec = _rollup_states_spec(
+                _registration(catalog, catalog_key), catalog_key, fn, args,
+                cols, m.group("where"),
+            )
             # finest-grain rows read on the driver: every grouping set is
             # then a re-keying of these rows (the answerer merges each
             # coarser key in regroup_states' canonical order), no Spark job

@@ -890,6 +890,32 @@ def test_explain_with_sketch_set_key_reports_execution_refusals(spark, served_ca
         approx_sql(spark, q, tables, catalog=cat, catalog_key="all")
 
 
+def test_explain_rollup_with_sketch_set_key_reports_execution_refusals(spark, served_catalog):
+    """EXPLAIN of a ROLLUP/CUBE statement with an explicit sketch-set key
+    applies execution's gates: states registered at another grain (the
+    ungrouped ``join_t`` set), no serving sketch on the column, and a
+    WHERE over pre-reduced states each report the error execution raises;
+    a key that serves reports the states route."""
+    from sketchlib.sql import approx_sql
+
+    cat, tables = served_catalog
+    for key, q, msg in (
+        ("join_t", "SELECT APPROX_TOPK(x, 3) FROM t GROUP BY ROLLUP (g)", "FINEST grain"),
+        ("all", "SELECT APPROX_TOPK(x, 3) FROM t GROUP BY CUBE (g)", "holds no cm sketch"),
+        ("all", "SELECT APPROX_COUNT_DISTINCT(k) FROM t WHERE x > 1 GROUP BY ROLLUP (g)",
+         "WHERE cannot be applied"),
+    ):
+        props = dict(approx_sql(spark, "EXPLAIN " + q, tables, catalog=cat,
+                                catalog_key=key).collect())
+        assert props["route"] == "error — approx_sql would raise", (q, props)
+        assert msg in props["error"], (q, props)
+        with pytest.raises(ValueError, match=msg):
+            approx_sql(spark, q, tables, catalog=cat, catalog_key=key).collect()
+    props = dict(approx_sql(spark, "EXPLAIN SELECT APPROX_TOPK(k, 3) FROM t GROUP BY ROLLUP (g)",
+                            tables, catalog=cat, catalog_key="all").collect())
+    assert props["route"].startswith("persisted_sketch_states") and props["artifact"] == "all"
+
+
 def test_statement_after_refresh_sees_refreshed_states(spark, tmp_path):
     """A catalog-served statement issued right after refresh() answers from
     the refreshed states: its estimates equal a fresh build's over the
@@ -966,3 +992,113 @@ def test_refresh_matches_fresh_build_where_merges_are_order_free(spark, tmp_path
             assert np.array_equal(a.table, b.table) and a.total == b.total, key
             for x, y in zip(a.topk(10), b.topk(10)):
                 assert np.array_equal(x, y), key
+
+
+# --- refresh routes: delta sketched on the driver vs by the kernel job ------
+
+_REFRESH_SPECS = [
+    SketchSpec("h", "hll", "doc_id", {"p": 12}),
+    SketchSpec("c", "cm", "tokens", {"eps": 1e-3, "delta": 0.01, "cand_cap": 64}),
+    SketchSpec("k", "kll", "n_tok", {"k": 64}),
+    SketchSpec("td", "tdigest", "n_tok", {"compression": 50}),
+]
+
+
+@pytest.fixture(scope="module")
+def refresh_tables(tmp_path_factory):
+    """A base table and a delta of many small files: 100-row chunks give
+    one file per source per chunk, so the delta plans to more chunks than
+    the session's 8 tasks and bins hold several files of one source."""
+    from sketchlib.data.gen import write_sequences
+
+    root = tmp_path_factory.mktemp("refresh_routes")
+    base, delta = str(root / "base"), str(root / "delta")
+    write_sequences(base, 1200, seed=21)
+    write_sequences(delta, 900, seed=22, chunk=100)
+    return base, delta
+
+
+def _refreshed(spark, root, tables, monkeypatch, driver_bytes=None):
+    """(refresh stats, {(group, sketch): state row}, Spark jobs the refresh
+    launched) for a set created over a copy of the base table, then
+    refreshed after the delta's files are appended to that copy."""
+    import glob
+    import os
+    import shutil as sh
+
+    base, delta = tables
+    if driver_bytes is not None:
+        monkeypatch.setattr(SketchCatalog, "_DRIVER_DELTA_BYTES", driver_bytes)
+    data = root + "_data"
+    sh.copytree(base, data)
+    cat = SketchCatalog(spark, root)
+    cat.create("s", data, _REFRESH_SPECS, group_by="source")
+    for f in glob.glob(delta + "/source=*/part-*.parquet"):
+        rel = os.path.relpath(f, delta)
+        sh.copy(f, os.path.join(data, os.path.dirname(rel), "ap-" + os.path.basename(f)))
+    stats, jobs = _jobs_of(spark, lambda: cat.refresh("s"))
+    rows = {
+        (r["group"], r["sketch"]): (bytes(r["state"]), r["n_items"], r["rows"], r["tokens"])
+        for r in cat.states("s").collect()
+    }
+    return stats, rows, jobs
+
+
+def _delta_chunks(tables):
+    import glob
+
+    from sketchlib.spark.scan import plan_chunks
+
+    return plan_chunks(tables[1]), sorted(glob.glob(tables[1] + "/source=*/part-*.parquet"))
+
+
+def test_refresh_driver_route_matches_kernel_job(spark, tmp_path, monkeypatch, refresh_tables):
+    """A delta of at most one scan chunk is sketched on the driver, and its
+    states are byte-identical to the kernel job's (the driver route forced
+    off): the same LPT bins, each bin's files fed in chunks_df's order —
+    KLL, t-digest and the capped Count-Min candidate list depend on it —
+    under the same part_id."""
+    from sketchlib.spark.scan import _bin_rows
+
+    chunks, files = _delta_chunks(refresh_tables)
+    n_tasks = spark.sparkContext.defaultParallelism
+    assert len(chunks) > n_tasks
+    assert sum(c.n_bytes for c in chunks) <= SketchCatalog._DRIVER_DELTA_BYTES
+    # some bin reads two files of one source, in an order other than its
+    # chunk ids' — so a changed feed order would change that bin's states
+    bins = _bin_rows(chunks, n_tasks)
+    assert any(
+        len(b) != len({str(r[4]) for r in b}) and [r[0] for r in b] != sorted(r[0] for r in b)
+        for b in bins
+    )
+    s_drv, drv, _ = _refreshed(spark, str(tmp_path / "drv"), refresh_tables, monkeypatch)
+    s_job, job, jobs = _refreshed(
+        spark, str(tmp_path / "job"), refresh_tables, monkeypatch, driver_bytes=-1
+    )
+    assert len(jobs) == 1  # the kernel; the merge stays on the driver
+    assert s_drv == s_job and s_drv["new_files"] == len(files)
+    assert drv == job
+
+
+def test_small_delta_refresh_launches_no_spark_job(spark, tmp_path, monkeypatch, refresh_tables):
+    """Refreshing a small append plans, sketches, merges and commits on
+    the driver: no Spark job at all."""
+    stats, rows, jobs = _refreshed(spark, str(tmp_path / "c"), refresh_tables, monkeypatch)
+    assert stats["rows_added"] == 900 and rows
+    assert jobs == []
+
+
+def test_refresh_over_driver_budget_keeps_kernel_job(spark, tmp_path, monkeypatch, refresh_tables):
+    """The driver budget is inclusive: a delta exactly at it is sketched on
+    the driver, one byte over it launches the kernel job — and both give
+    the same states."""
+    chunks, _ = _delta_chunks(refresh_tables)
+    total = sum(c.n_bytes for c in chunks)
+    s_at, at, jobs_at = _refreshed(
+        spark, str(tmp_path / "at"), refresh_tables, monkeypatch, driver_bytes=total
+    )
+    s_over, over, jobs_over = _refreshed(
+        spark, str(tmp_path / "over"), refresh_tables, monkeypatch, driver_bytes=total - 1
+    )
+    assert jobs_at == [] and len(jobs_over) == 1
+    assert s_at == s_over and at == over
