@@ -18,7 +18,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
+from collections import Counter, OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,15 +67,17 @@ class SketchCatalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        # collected-rows cache for the (KB-sized) registry logs, keyed by
-        # the log dir's file LISTING fingerprint: the logs are append-only
-        # (every register/drop/refresh writes a new parquet file), so any
-        # mutation — by this instance, another instance, or another
-        # process — changes the listing and invalidates the entry. Repeat
-        # routing/meta lookups then cost a scandir instead of a Spark job
-        # (~0.5 s of per-statement constant, measured in
-        # BENCH/contract_bench.json).
-        self._rows_cache: dict = {}
+        # driver-side cache of what the catalog reads back from disk — the
+        # registry logs' rows, each state set's rows, each persisted
+        # sample/index/signature table's schema — keyed by the dir's file
+        # LISTING fingerprint (_listing_cached): every register, drop,
+        # refresh or append changes a listing — by this instance, another
+        # instance, or another process — and so invalidates the entry.
+        # Repeat routing/meta lookups and catalog-served statements then
+        # cost a scandir instead of a Spark job or a parquet read.
+        # rel_dir -> (fingerprint, value, held state bytes), LRU order.
+        self._cache: OrderedDict = OrderedDict()
+        self._cache_lock = threading.Lock()
         os.makedirs(os.path.join(root, "_sketch_catalog"), exist_ok=True)
         os.makedirs(os.path.join(root, "states"), exist_ok=True)
         os.makedirs(os.path.join(root, "_sample_catalog"), exist_ok=True)
@@ -88,7 +92,7 @@ class SketchCatalog:
         (pyarrow write — no Spark job for a ≤12-field row; measured ~0.2 s
         of per-registration fixed cost). Unique filename keyed on
         (time_ns, pid) keeps concurrent appenders from colliding; the
-        append changes the dir listing, which invalidates _rows_cache."""
+        append changes the dir listing, which invalidates the cached rows."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -510,17 +514,53 @@ class SketchCatalog:
         )
 
     def _dir_fingerprint(self, rel_dir: str):
-        """(name, size, mtime_ns) of every direct entry of ``rel_dir`` —
-        the cache key: any registry append/drop/refresh creates or removes
-        files here, whoever performs it."""
+        """(name, size, mtime_ns, inode) of every direct entry of
+        ``rel_dir``, or None when it is gone — the cache key: any registry
+        append/drop/refresh creates or removes files here, whoever performs
+        it. The inode tells apart a same-named, same-sized file in a
+        swapped-in directory (a driver-route refresh always writes
+        ``part-00000.parquet``)."""
         p = os.path.join(self.root, rel_dir)
+        entries = []
         try:
             with os.scandir(p) as it:
-                return tuple(
-                    sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in it)
-                )
+                for e in it:
+                    st = e.stat()
+                    entries.append((e.name, st.st_size, st.st_mtime_ns, st.st_ino))
         except FileNotFoundError:
             return None
+        return tuple(sorted(entries))
+
+    def _listing_cached(self, rel_dir: str, load, weigh=None):
+        """``load(fingerprint)`` for ``rel_dir``, served from the cache
+        while the dir's listing fingerprint is unchanged. The fingerprint
+        is taken again after a miss's load and the value is stored only if
+        it still matches, so a refresh or swap landing mid-load is never
+        cached under the stale key; a None value is not stored either.
+        ``weigh(value)``: the state bytes the entry holds — the total held
+        is kept within ``query._PARTIAL_PROBE_BYTES`` (read per call) by
+        evicting the least recently used entries. The load runs outside
+        the lock; two threads missing at once both load."""
+        from sketchlib.spark.query import _PARTIAL_PROBE_BYTES
+
+        fp = self._dir_fingerprint(rel_dir)
+        with self._cache_lock:
+            hit = self._cache.get(rel_dir)
+            if hit is not None and hit[0] == fp:
+                self._cache.move_to_end(rel_dir)
+                return hit[1]
+        value = load(fp)
+        keep = value is not None and fp is not None and self._dir_fingerprint(rel_dir) == fp
+        with self._cache_lock:
+            self._cache.pop(rel_dir, None)
+            if keep:
+                self._cache[rel_dir] = (fp, value, weigh(value) if weigh else 0)
+                held = sum(e[2] for e in self._cache.values())
+                for key in [k for k, e in self._cache.items() if e[2]]:
+                    if held <= _PARTIAL_PROBE_BYTES:
+                        break
+                    held -= self._cache.pop(key)[2]
+        return value
 
     def _log_rows(self, cat_dir: str, schema: str) -> list:
         """ALL registration rows of one registry log, served from the
@@ -534,18 +574,15 @@ class SketchCatalog:
         import pyarrow.dataset as ds
         from pyspark.sql import Row
 
-        fp = self._dir_fingerprint(cat_dir)
-        hit = self._rows_cache.get(cat_dir)
-        if hit is not None and hit[0] == fp:
-            return hit[1]
-        pa_schema = ddl_arrow_schema(schema)
-        table = ds.dataset(
-            os.path.join(self.root, cat_dir), schema=pa_schema, format="parquet"
-        ).to_table()
-        make = Row(*pa_schema.names)
-        rows = [make(*r.values()) for r in table.to_pylist()]
-        self._rows_cache[cat_dir] = (fp, rows)
-        return rows
+        def load(_fp):
+            pa_schema = ddl_arrow_schema(schema)
+            table = ds.dataset(
+                os.path.join(self.root, cat_dir), schema=pa_schema, format="parquet"
+            ).to_table()
+            make = Row(*pa_schema.names)
+            return [make(*r.values()) for r in table.to_pylist()]
+
+        return self._listing_cached(cat_dir, load)
 
     def _live_rows(self, cat_dir: str, schema: str, live_dir: str) -> list:
         """Collected _registry_live result (newest registration row per
@@ -601,51 +638,64 @@ class SketchCatalog:
         for the answerers' ``rows=`` argument. ``sketch`` (a name or a
         collection of names) keeps only those sketches' rows.
 
+        The set's rows are cached (``_listing_cached``, keyed by the
+        ``states/<name>`` listing, so a refresh, drop or re-create by any
+        instance or process invalidates them): a repeat call opens no
+        state file. The cache holds immutable ``(group, sketch, state
+        bytes)`` tuples and every call hands out fresh dicts, which callers
+        may relabel in place.
+
         Returns None when the set is over the query layer's driver budgets,
         so the caller answers from ``states(name)`` on the Spark route
         instead: more than ``_DISTRIBUTED_THRESHOLD`` groups of a wanted
         sketch, or more than ``_PARTIAL_PROBE_BYTES`` of state files on
-        disk. Both are decided from file sizes and parquet footers (plus the
-        ``sketch`` column when the footers alone cannot clear the group
-        budget) before any state bytes are read."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+        disk. Both are checked on every call, a cached one too: the byte
+        budget from the listing before any state bytes are read, the group
+        budget from the per-sketch row counts kept with the rows."""
         import pyarrow.parquet as pq
 
-        from sketchlib.spark.query import _DISTRIBUTED_THRESHOLD, _PARTIAL_PROBE_BYTES
+        from sketchlib.spark import query
 
         if not self.exists(name):
             raise ValueError(f"unknown sketch set {name!r}")
-        sdir = os.path.join(self.root, "states", name)
-        try:
-            paths = sorted(
-                os.path.join(sdir, f) for f in os.listdir(sdir)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-            if sum(os.path.getsize(p) for p in paths) > _PARTIAL_PROBE_BYTES:
+        rel = os.path.join("states", name)
+
+        def load(fp):
+            if fp is None:
                 return None
-            files = [pq.ParquetFile(p) for p in paths]
+            parts = [e for e in fp if e[0].endswith(".parquet")
+                     and not e[0].startswith((".", "_"))]
+            disk_bytes = sum(e[1] for e in parts)
+            if disk_bytes > query._PARTIAL_PROBE_BYTES:
+                return None
+            rows = []
+            for e in parts:
+                t = pq.ParquetFile(os.path.join(self.root, rel, e[0])).read(
+                    columns=["group", "sketch", "state"]
+                )
+                rows.extend(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+            return disk_bytes, Counter(r[1] for r in rows), tuple(rows)
+
+        try:
+            entry = self._listing_cached(
+                rel, load, weigh=lambda v: sum(len(r[2]) for r in v[2])
+            )
         except FileNotFoundError:
             return None  # a refresh swapped the directory under this read
+        if entry is None or entry[0] > query._PARTIAL_PROBE_BYTES:
+            return None
+        _, counts, rows = entry
         want = None
         if sketch is not None:
-            want = pa.array([sketch] if isinstance(sketch, str) else list(sketch), pa.string())
-        if sum(f.metadata.num_rows for f in files) > _DISTRIBUTED_THRESHOLD:
-            names = pa.concat_arrays(
-                [f.read(columns=["sketch"]).column(0).combine_chunks() for f in files]
-            )
-            if want is not None:
-                names = names.filter(pc.is_in(names, value_set=want))
-            counts = pc.value_counts(names).field("counts")
-            if len(counts) and pc.max(counts).as_py() > _DISTRIBUTED_THRESHOLD:
-                return None
-        out = []
-        for f in files:
-            t = f.read(columns=["group", "sketch", "state"])
-            if want is not None:
-                t = t.filter(pc.is_in(t["sketch"], value_set=want))
-            out.extend(t.to_pylist())
-        return out
+            want = {sketch} if isinstance(sketch, str) else set(sketch)
+        groups = [n for s, n in counts.items() if want is None or s in want]
+        if max(groups, default=0) > query._DISTRIBUTED_THRESHOLD:
+            return None
+        return [
+            {"group": g, "sketch": s, "state": b}
+            for g, s, b in rows
+            if want is None or s in want
+        ]
 
     def states(self, name: str) -> DataFrame:
         if not self.exists(name):
@@ -704,7 +754,7 @@ class SketchCatalog:
         s = self._sample_of(df, kind, ratio, on, fractions, seed)
         sdir = os.path.join(self.root, "samples", name)
         s.write.mode("overwrite").parquet(sdir)
-        persisted = self.spark.read.parquet(sdir)
+        persisted = self._read_artifact("samples", name)
         self._append_registry_row(
             "_sample_catalog", _SAMPLE_SCHEMA,
             (
@@ -714,6 +764,18 @@ class SketchCatalog:
             ),
         )
         return persisted
+
+    def _read_artifact(self, live_dir: str, name: str) -> DataFrame:
+        """A persisted sample/index/signature table as a DataFrame. Spark's
+        parquet schema inference launches one job per plain read, so the
+        inferred schema is cached under the table dir's listing and a
+        repeat read passes it to ``spark.read.schema`` (no job; the same
+        schema, partition columns included). Every read lists the files
+        afresh, so rows appended since are read."""
+        rel = os.path.join(live_dir, name)
+        path = os.path.join(self.root, rel)
+        schema = self._listing_cached(rel, lambda _fp: self.spark.read.parquet(path).schema)
+        return self.spark.read.schema(schema).parquet(path)
 
     def _read_files(self, input_dir: str, files: list[str]) -> DataFrame:
         """Read an explicit file list; basePath (directories only) keeps
@@ -789,7 +851,7 @@ class SketchCatalog:
     def sample(self, name: str) -> DataFrame:
         if not self.sample_exists(name):
             raise ValueError(f"unknown sample {name!r}")
-        return self.spark.read.parquet(os.path.join(self.root, "samples", name))
+        return self._read_artifact("samples", name)
 
     def sample_meta(self, name: str):
         """Newest registration row for a persisted sample."""
@@ -856,7 +918,7 @@ class SketchCatalog:
                 "_list"
             ).parquet(adir)
             centroids_json = _json.dumps(np.asarray(centroids).tolist())
-        persisted = self.spark.read.parquet(adir)
+        persisted = self._read_artifact("ann", name)
         row = [
             (
                 name, input_dir, kind, vec_col, id_col, int(n_bits), int(seed),
@@ -928,7 +990,7 @@ class SketchCatalog:
     def ann_index(self, name: str) -> DataFrame:
         if not self.ann_exists(name):
             raise ValueError(f"unknown ANN index {name!r}")
-        return self.spark.read.parquet(os.path.join(self.root, "ann", name))
+        return self._read_artifact("ann", name)
 
     def ann_meta(self, name: str):
         """Newest registration row for a persisted ANN index."""
@@ -981,7 +1043,7 @@ class SketchCatalog:
         sigs = minhash_signatures(df, tokens_col, id_col, r=r, n_bands=n_bands, seed=seed)
         sdir = os.path.join(self.root, "signatures", name)
         sigs.write.mode("overwrite").parquet(sdir)
-        persisted = self.spark.read.parquet(sdir)
+        persisted = self._read_artifact("signatures", name)
         self._register_sigs(
             name, input_dir, tokens_col, id_col, r, n_bands, seed,
             persisted.count(), json.dumps(files),
@@ -1076,7 +1138,7 @@ class SketchCatalog:
     def signatures(self, name: str) -> DataFrame:
         if not self.sig_exists(name):
             raise ValueError(f"unknown signature table {name!r}")
-        return self.spark.read.parquet(os.path.join(self.root, "signatures", name))
+        return self._read_artifact("signatures", name)
 
     def sig_meta(self, name: str):
         """Newest registration row for a persisted signature table."""

@@ -17,9 +17,12 @@ Two execution paths, selected by group cardinality, plus a shortcut:
   estimation is embarrassingly parallel (strictly cheaper than a
   groupBy+applyInPandas, which would pay an Exchange for nothing) and the
   driver never materializes the state set.
-- **caller-held rows** (``rows=``, e.g. ``SketchCatalog.state_rows`` read
-  with pyarrow on the driver): the driver path without the routing probe,
-  so no Spark job runs at all.
+- **caller-held rows** (``rows=``, e.g. ``SketchCatalog.state_rows``, read
+  with pyarrow on the driver and cached per set version, so a repeat
+  statement opens no state file): the driver path without the routing
+  probe, so no Spark job runs at all. The rows carry state ``bytes``; each
+  answer deserializes its own sketch objects, so merging never touches
+  the cached rows.
 
 ``distributed=None`` (default) auto-selects in ONE job for the common
 driver case: a ``limit(threshold+1).collect()`` probe both decides the

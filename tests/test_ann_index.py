@@ -72,6 +72,29 @@ def test_ivf_index_partition_pruning_and_recovery(spark, emb_base, tmp_path):
     assert {(r["query_id"], r["vec_id"]) for r in got} == {(q, q) for q in qids}
 
 
+def test_repeat_ivf_index_read_launches_no_job(spark, emb_base, tmp_path):
+    """An index read after the first uses the cached inferred schema: no
+    schema-inference Spark job, the same schema (the ``_list`` partition
+    column included) and the same rows."""
+    import uuid
+
+    cat = SketchCatalog(spark, str(tmp_path / "cat"))
+    cat.create_ann_index("e_ivf", emb_base, kind="ivf", n_lists=4)
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        again = cat.ann_index("e_ivf")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+    inferred = spark.read.parquet(os.path.join(cat.root, "ann", "e_ivf"))
+    assert again.schema == inferred.schema and "_list" in again.columns
+    key = lambda r: (r["vec_id"], r["_list"])  # noqa: E731
+    assert sorted(map(key, again.collect())) == sorted(map(key, inferred.collect()))
+
+
 def test_srp_topk_many_accepts_precomputed_signatures(spark, emb_base):
     df = spark.read.parquet(emb_base)
     probes = df.orderBy("vec_id").limit(3).collect()

@@ -769,6 +769,105 @@ def test_state_rows_filter_and_budgets(spark, served_catalog, monkeypatch):
         cat.state_rows("nope")
 
 
+def test_unionall_merge_leaves_cached_state_rows_intact(spark, served_catalog):
+    """The UNION ALL merge relabels the state rows it is handed; the
+    cached rows stay as persisted: merge and plain statements on the same
+    sets, in turn, answer as a cold catalog does."""
+    from sketchlib.sql import approx_sql
+
+    cat, tables = served_catalog
+    merge = "SELECT APPROX_TOPK(k, 5) FROM (SELECT k FROM t UNION ALL SELECT k FROM t2)"
+    for q, key in (
+        (merge, None),
+        ("SELECT APPROX_TOPK(k, 5) FROM t GROUP BY g", "all"),
+        (merge, None),
+        ("SELECT APPROX_TOPK(k, 5) FROM t2 GROUP BY g", "side"),
+        (merge, None),
+    ):
+        warm = approx_sql(spark, q, tables, catalog=cat, catalog_key=key).collect()
+        cold = approx_sql(spark, q, tables, catalog=SketchCatalog(spark, cat.root),
+                          catalog_key=key).collect()
+        assert warm and warm == cold, q
+
+
+def test_repeated_statement_opens_no_state_file(spark, served_catalog, monkeypatch):
+    """A repeated catalog-served statement is answered from the cached
+    state rows: it opens no parquet file and launches no Spark job."""
+    import pyarrow.parquet as pq
+
+    from sketchlib.sql import approx_sql
+
+    cat, tables = served_catalog
+
+    def run(q):
+        return approx_sql(spark, q, tables, catalog=cat, catalog_key=_KEYS.get(q)).collect()
+
+    for _, q in _SERVED:
+        run(q)
+    opened, real = [], pq.ParquetFile
+    monkeypatch.setattr(pq, "ParquetFile", lambda *a, **kw: opened.append(a) or real(*a, **kw))
+    for _, q in _SERVED:
+        rows, jobs = _jobs_of(spark, lambda: run(q))
+        assert rows and jobs == [] and opened == [], (q, jobs, opened)
+
+
+def test_state_row_cache_under_concurrent_readers(spark, served_catalog, monkeypatch):
+    """Threads sharing one catalog read four sets' rows while the byte
+    bound (just over the largest set) keeps evicting: every read returns
+    the persisted rows, and the rows held stay within the bound."""
+    import os
+    import sys
+    import threading
+
+    import pyarrow.parquet as pq
+
+    import sketchlib.spark.query as query
+
+    cat = SketchCatalog(spark, served_catalog[0].root)
+    names = ["all", "side", "join_t", "join_t2"]
+    want = {
+        n: sorted(tuple(r.values()) for r in pq.read_table(
+            os.path.join(cat.root, "states", n), columns=["group", "sketch", "state"]
+        ).to_pylist())
+        for n in names
+    }
+    sizes = [
+        max(sum(len(r[2]) for r in want[n]),
+            sum(os.path.getsize(os.path.join(cat.root, "states", n, f))
+                for f in os.listdir(os.path.join(cat.root, "states", n))
+                if f.endswith(".parquet") and not f.startswith((".", "_"))))
+        for n in names
+    ]
+    bound = max(sizes)
+    assert sum(sizes) > bound
+    monkeypatch.setattr(query, "_PARTIAL_PROBE_BYTES", bound)
+    errors = []
+
+    def reader(i):
+        try:
+            for j in range(40):
+                n = names[(i + j) % len(names)]
+                got = cat.state_rows(n)
+                if sorted((r["group"], r["sketch"], r["state"]) for r in got) != want[n]:
+                    errors.append((n, "rows differ"))
+        except Exception as e:  # reported through the assertion below
+            errors.append(repr(e))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert sum(e[2] for e in cat._cache.values()) <= bound
+
+
 # one statement per sketch aggregate, over the columns the ``all`` set
 # registers (the rel_err= percentile serves from its dd state)
 _PARITY_ARGS = {
@@ -1102,3 +1201,92 @@ def test_refresh_over_driver_budget_keeps_kernel_job(spark, tmp_path, monkeypatc
     )
     assert jobs_at == [] and len(jobs_over) == 1
     assert s_at == s_over and at == over
+
+
+# --- cached state rows: every change of a set reaches the next statement ---
+
+_HLL_Q = "SELECT APPROX_COUNT_DISTINCT(doc_id) FROM seq GROUP BY source"
+
+
+@pytest.mark.parametrize("change", ["driver_refresh_twice", "pipeline_refresh",
+                                    "drop_and_recreate", "refresh_by_other_catalog"])
+def test_served_statement_after_set_change_equals_fresh_build(
+    spark, tmp_path, monkeypatch, refresh_tables, change
+):
+    """A catalog whose cache holds a set's rows answers the next statement
+    after the set changes from the changed states: its HLL answers equal a
+    fresh build's over the grown directory. The changes: two driver-route
+    refreshes in a row (each writes a same-named part file into a swapped
+    directory), a refresh through the Spark pipeline, a drop and re-create
+    under the same name, and a refresh made through a second catalog on
+    the same root (as another process would)."""
+    import glob
+    import os
+    import shutil as sh
+
+    from sketchlib.spark.scan import build_sketches_from_parquet
+    from sketchlib.sql import approx_sql
+
+    base, delta = refresh_tables
+    data, root = str(tmp_path / "data"), str(tmp_path / "cat")
+    sh.copytree(base, data)
+    cat = SketchCatalog(spark, root)
+    cat.create("s", data, _REFRESH_SPECS, group_by="source")
+    if change == "pipeline_refresh":
+        monkeypatch.setattr(SketchCatalog, "_LOCAL_REFRESH_BYTES", 0)
+    writer = SketchCatalog(spark, root) if change == "refresh_by_other_catalog" else cat
+
+    def served():
+        return approx_sql(spark, _HLL_Q, {"seq": data}, catalog=cat, catalog_key="s").collect()
+
+    files = sorted(glob.glob(delta + "/source=*/part-*.parquet"))
+    rounds = [files[::2], files[1::2]] if change == "driver_refresh_twice" else [files]
+    before = served()
+    for part in rounds:
+        for f in part:
+            rel = os.path.relpath(f, delta)
+            sh.copy(f, os.path.join(data, os.path.dirname(rel), "ap-" + os.path.basename(f)))
+        if change == "drop_and_recreate":
+            cat.drop("s")
+            cat.create("s", data, _REFRESH_SPECS, group_by="source")
+        else:
+            assert writer.refresh("s")["new_files"] == len(part)
+        if change == "driver_refresh_twice":
+            sdir = os.path.join(root, "states", "s")
+            assert [f for f in os.listdir(sdir) if f.endswith(".parquet")] == ["part-00000.parquet"]
+        after = served()
+        fresh = build_sketches_from_parquet(spark, data, _REFRESH_SPECS[:1], group_by="source")
+        assert after == estimates_df(spark, fresh, "h").collect()
+        assert after != before
+        before = after
+
+
+def test_repeat_sample_and_signature_reads_launch_no_job(spark, tmp_path, seq_tiny_dir):
+    """A persisted sample or signature table is read with its cached
+    schema: a repeat read launches no Spark job (a plain parquet read
+    infers the schema with one), gives the inferred schema, and rows a
+    refresh appends are read."""
+    import glob
+    import os
+    import shutil as sh
+
+    from sketchlib.data.gen import write_sequences
+
+    data = str(tmp_path / "data")
+    sh.copytree(seq_tiny_dir, data)
+    cat = SketchCatalog(spark, str(tmp_path / "cat"))
+    cat.create_sample("u", data, kind="uniform", ratio=0.5, seed=7)
+    cat.create_signatures("g", data, r=32, n_bands=8, seed=3)
+    for read, sub in ((lambda: cat.sample("u"), "samples/u"),
+                      (lambda: cat.signatures("g"), "signatures/g")):
+        df, jobs = _jobs_of(spark, read)
+        assert jobs == [], sub
+        assert df.schema == spark.read.parquet(os.path.join(cat.root, sub)).schema
+    n_before = cat.sample("u").count()
+    extra = str(tmp_path / "extra")
+    write_sequences(extra, 600, seed=12)
+    for f in glob.glob(extra + "/source=*/part-*.parquet"):
+        rel = os.path.relpath(f, extra)
+        sh.copy(f, os.path.join(data, os.path.dirname(rel), "ap-" + os.path.basename(f)))
+    assert cat.refresh_sample("u")["rows_added"] > 0
+    assert cat.sample("u").count() == cat.sample_meta("u")["rows_sampled"] > n_before
