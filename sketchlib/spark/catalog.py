@@ -1046,7 +1046,7 @@ class SketchCatalog:
         persisted = self._read_artifact("signatures", name)
         self._register_sigs(
             name, input_dir, tokens_col, id_col, r, n_bands, seed,
-            persisted.count(), json.dumps(files),
+            _dir_num_rows(sdir), json.dumps(files),
         )
         return persisted
 
@@ -1080,7 +1080,7 @@ class SketchCatalog:
         )
         sdir = os.path.join(self.root, "signatures", name)
         sigs.write.mode("append").parquet(sdir)
-        n_total = self.spark.read.parquet(sdir).count()
+        n_total = _dir_num_rows(sdir)  # footer read, no Spark job
         self._register_sigs(
             name, reg["input_dir"], reg["tokens_col"], reg["id_col"],
             reg["r"], reg["n_bands"], reg["seed"], n_total, json.dumps(sorted(current)),
@@ -1109,7 +1109,7 @@ class SketchCatalog:
                 )
         sdir = os.path.join(self.root, "signatures", name)
         sig_df.write.mode("append").parquet(sdir)
-        n_total = self.spark.read.parquet(sdir).count()
+        n_total = _dir_num_rows(sdir)  # footer read, no Spark job
         self._register_sigs(
             name, reg["input_dir"], reg["tokens_col"], reg["id_col"],
             reg["r"], reg["n_bands"], reg["seed"], n_total, reg["files_json"],

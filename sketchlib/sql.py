@@ -77,10 +77,11 @@ erred likewise.)
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sketchlib.planner import hll_params
+from sketchlib.planner import hll_params, kll_params
 from sketchlib.spark.build import SketchSpec, build_sketches
 from sketchlib.spark.query import (
     equidepth_histogram_df,
@@ -173,11 +174,9 @@ _SUBSAMPLE_TAIL = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
-# the aggregates the subsample estimator serves — ONE constant shared by
-# execution and EXPLAIN so the two can never drift on what refuses.
-# COUNT_DISTINCT serves from UNIVERSE scrambles (the sample's distinct
-# values are a Bernoulli(p) sample of the value domain); the rest from
-# uniform scrambles.
+# the aggregates the subsample estimator serves. COUNT_DISTINCT serves from
+# UNIVERSE scrambles (the sample's distinct values are a Bernoulli(p) sample
+# of the value domain); the rest from uniform scrambles.
 _SUBSAMPLE_FNS = ("APPROX_COUNT", "APPROX_SUM", "APPROX_AVG",
                   "APPROX_VARIANCE", "APPROX_STDDEV",
                   "APPROX_COVAR", "APPROX_CORR", "APPROX_PERCENTILE",
@@ -494,7 +493,7 @@ def _resolve_join_rows_regs(sides, tables, catalog, req_eps):
     different columns, so a mismatched pair is not an estimate at all.
     An explicit eps argument is a precision request: only CMs achieving it
     serve. Returns ((reg_name, spec_name), (reg_name, spec_name)) or None
-    (→ on-the-fly build). Shared by execution and EXPLAIN."""
+    (→ on-the-fly build)."""
     import json as _json
     import math as _math
     import os as _os
@@ -541,31 +540,17 @@ def _resolve_join_rows_regs(sides, tables, catalog, req_eps):
     return None
 
 
-def _approx_join_rows(spark, m, tables, catalog, catalog_key) -> DataFrame:
-    """Execute APPROX_JOIN_ROWS: states-served when both sides have
+def _approx_join_rows(spark, m, tables, catalog, sides, picks, req_eps) -> DataFrame:
+    """Execute APPROX_JOIN_ROWS over the plan's ``sides`` ((table, key)
+    each): states-served from ``picks`` when both sides have
     geometry-compatible registered CMs (ZERO base-table scans — A5 extended
-    to the join-size question), else an on-the-fly build (one scan per
-    side, the join itself never runs). Output row: (estimate, abs error
-    bound); AS alias renames to (alias, alias_err)."""
+    to the join-size question), else an on-the-fly build at ``req_eps``
+    (one scan per side, the join itself never runs). Output row:
+    (estimate, abs error bound); AS alias renames to (alias, alias_err)."""
     from pyspark.sql import functions as F
 
     from sketchlib.spark.query import _join_size_from_loaded, _rows_to_states, join_size_estimate
 
-    if catalog_key is not None:
-        raise ValueError(
-            "APPROX_JOIN_ROWS resolves ONE registration PER SIDE — "
-            "catalog_key names a single artifact; drop it and let "
-            "auto-selection pick a geometry-compatible CM pair"
-        )
-    eps_arg = m.group("eps")
-    req_eps = _num(eps_arg)
-    if eps_arg is not None and req_eps is None:
-        raise ValueError(
-            f"APPROX_JOIN_ROWS third argument {eps_arg!r} must be a numeric "
-            "eps (the CM overcount fraction, e.g. 1e-4)"
-        )
-    sides = _join_rows_sides(m)
-    picks = _resolve_join_rows_regs(sides, tables, catalog, req_eps)
     if picks is not None:
         (na, sa), (nb, sb) = picks
         rows_a, rows_b = catalog.state_rows(na, sa), catalog.state_rows(nb, sb)
@@ -594,10 +579,8 @@ def _approx_join_rows(spark, m, tables, catalog, catalog_key) -> DataFrame:
 
 def _resolve_join3_key(toks, tables, catalog, req_ratio) -> str | None:
     """Auto-selected UNIFORM fact scramble for a three-table chain (None →
-    on-the-fly Bernoulli draw of the first FROM table) — shared by
-    _approx_join3 and EXPLAIN so the which-sample-served answer can never
-    diverge from execution. An explicit ratio argument is a precision
-    request: only samples meeting it may serve."""
+    on-the-fly Bernoulli draw of the first FROM table). An explicit ratio
+    argument is a precision request: only samples meeting it may serve."""
     import os as _os
 
     dirs = [_table_dir(t, tables) for t, _ in toks]
@@ -615,7 +598,7 @@ def _resolve_join3_key(toks, tables, catalog, req_ratio) -> str | None:
     return max(cands, key=lambda r: (float(r["ratio"] or 0.0), r["name"]))["name"]
 
 
-def _approx_join3(spark, m, tables, catalog, catalog_key) -> DataFrame:
+def _approx_join3(spark, m, tables, catalog, key) -> DataFrame:
     """fact ⋈ dim ⋈ dim with a Bernoulli-sampled fact side: the sampled
     row is the independent inclusion unit and brings every row the chained
     joins attach to it, so the estimator clusters joined rows per sampled
@@ -625,9 +608,9 @@ def _approx_join3(spark, m, tables, catalog, catalog_key) -> DataFrame:
     scramble (catalog path) or the FIRST FROM table (on-the-fly path);
     universe scrambles are refused here — per-key survival does not
     compose across two chained keys (use the two-table pair path for
-    universe⋈universe). An explicit ratio argument is honored: only
-    samples of ≥ that ratio are auto-selected, else the on-the-fly draw
-    runs at the requested ratio.
+    universe⋈universe). ``key`` is the sample the plan named or
+    auto-selected (only samples of ≥ an explicit ratio argument), None →
+    the on-the-fly draw at the requested ratio.
     """
     from pyspark.sql import functions as F
 
@@ -652,39 +635,32 @@ def _approx_join3(spark, m, tables, catalog, catalog_key) -> DataFrame:
         ((_which(m.group("q3")), m.group("k3")), (_which(m.group("q4")), m.group("k4"))),
     ]
     qnames = {n for t, a in toks for n in (t, a, _base(t)) if n}
-    _refuse_join_subquery_where(m.group("where"))
     where = _strip_qualifiers(m.group("where"), qnames) if m.group("where") else None
     group = _parse_group(m.group("group"))
 
-    req_ratio = _num(ratio_arg)
-
     fact_i, ratio, fact_df = 0, None, None
-    if catalog is not None:
+    if key is not None:
         import os as _os
 
-        key = catalog_key
-        if key is None:
-            key = _resolve_join3_key(toks, tables, catalog, req_ratio)
-        if key is not None:
-            meta = catalog.sample_meta(key)
-            if meta["kind"] != "uniform":
-                raise ValueError(
-                    "three-table approx joins take a UNIFORM fact scramble — "
-                    f"{key!r} is {meta['kind']} (universe survival does not "
-                    "compose across two chained join keys)"
-                )
-            sdir = _os.path.normpath(meta["input_dir"])
-            fact_i = next(
-                (i for i, (t, _) in enumerate(toks)
-                 if (d := _table_dir(t, tables)) is not None and _os.path.normpath(d) == sdir),
-                None,
+        meta = catalog.sample_meta(key)
+        if meta["kind"] != "uniform":
+            raise ValueError(
+                "three-table approx joins take a UNIFORM fact scramble — "
+                f"{key!r} is {meta['kind']} (universe survival does not "
+                "compose across two chained join keys)"
             )
-            if fact_i is None:
-                raise ValueError(
-                    f"sample {key!r} was built over {meta['input_dir']!r}, which is "
-                    f"none of the FROM tables {[t for t, _ in toks]}"
-                )
-            fact_df, ratio = catalog.sample(key), float(meta["ratio"])
+        sdir = _os.path.normpath(meta["input_dir"])
+        fact_i = next(
+            (i for i, (t, _) in enumerate(toks)
+             if (d := _table_dir(t, tables)) is not None and _os.path.normpath(d) == sdir),
+            None,
+        )
+        if fact_i is None:
+            raise ValueError(
+                f"sample {key!r} was built over {meta['input_dir']!r}, which is "
+                f"none of the FROM tables {[t for t, _ in toks]}"
+            )
+        fact_df, ratio = catalog.sample(key), float(meta["ratio"])
     if fact_df is None:
         # on-the-fly: the FIRST FROM table is the fact (the conventional
         # statement order), Bernoulli-sampled at the aggregate's ratio arg
@@ -781,9 +757,8 @@ def _strip_qualifiers(expr: str, names: set[str]) -> str:
 
 
 def _join_agg(select: str) -> tuple[str, str | None, str | None]:
-    """(fn, value_col, ratio_arg) for a join statement's single aggregate —
-    the ONE parse both execution and EXPLAIN use, so the two can never
-    disagree about supported functions or the explicit ratio argument."""
+    """(fn, value_col, ratio_arg) for a join statement's single aggregate;
+    ValueError for an aggregate joins do not answer."""
     fn, args = [(f.upper(), _split_args(a)) for f, a in _AGG.findall(select)][0]
     if fn == "APPROX_COUNT":
         return fn, None, (args[0] if args else None)
@@ -796,9 +771,8 @@ def _join_agg(select: str) -> tuple[str, str | None, str | None]:
 
 
 def _join_keys(m) -> tuple[str, str]:
-    """(left_key, right_key) from a two-table join match — shared by
-    execution and EXPLAIN (a weaker re-implementation in EXPLAIN once
-    silently swapped keys where execution raises)."""
+    """(left_key, right_key) from a two-table join match; ValueError when
+    the ON qualifiers name neither FROM table."""
     ta, tb = m.group("ta"), m.group("tb")
     aa, ab = m.group("aa"), m.group("ab")
     qa, qb, ka, kb = m.group("qa"), m.group("qb"), m.group("ka"), m.group("kb")
@@ -820,6 +794,10 @@ def _join_keys(m) -> tuple[str, str]:
 
 
 def _approx_join(spark, m, tables, catalog, catalog_key) -> DataFrame:
+    """A two-table approx join from the sample(s) ``catalog_key`` names (the
+    plan's explicit or auto-selected key: a universe scramble pair, or one
+    fact-side sample joined to the exact other side), else both sides
+    sampled on the fly."""
     fn, value_col, ratio_arg = _join_agg(m.group("select"))
     ta, tb = m.group("ta"), m.group("tb")
     aa, ab = m.group("aa"), m.group("ab")
@@ -830,23 +808,9 @@ def _approx_join(spark, m, tables, catalog, catalog_key) -> DataFrame:
 
     group = _parse_group(m.group("group"))
     qnames = {n for n in (ta, tb, aa, ab, _base(ta), _base(tb)) if n}
-    _refuse_join_subquery_where(m.group("where"))
     where = _strip_qualifiers(m.group("where"), qnames) if m.group("where") else None
 
-    req_ratio = _num(ratio_arg)
-
-    if catalog is not None and catalog_key is None:
-        # auto-selection for joins: best = a PAIR of universe scrambles on
-        # the two join keys sharing (ratio, seed) — p-composition needs the
-        # shared hash; else ONE fact-side scramble (uniform, or universe on
-        # that side's join key) broadcast-joined to the exact other side.
-        # An explicit ratio argument is a precision request: only samples
-        # meeting it may serve (None → on-the-fly at the requested ratio).
-        catalog_key = _resolve_join_key(
-            ta, tb, left_key, right_key, tables, catalog, req_ratio=req_ratio
-        )
-
-    if catalog is not None and catalog_key is not None:
+    if catalog_key is not None:
         names = [s.strip() for s in str(catalog_key).split(",")]
         if len(names) == 1:
             # fact×dimension (A8's common shape): the single named scramble
@@ -1059,15 +1023,9 @@ _DDL_HEAD = re.compile(
 )
 
 
-def _ddl(spark: SparkSession, sql: str, tables: dict | None, catalog) -> DataFrame | None:
-    """Route sample-lifecycle DDL to the SketchCatalog; None if ``sql`` is
-    not a DDL statement."""
-    # only claim statements whose HEAD is registry DDL (CREATE SAMPLE …,
-    # SHOW SKETCHES, DROP ANN INDEX …) — SHOW TABLES / CREATE VIEW /
-    # REFRESH TABLE / DROP TABLE samples etc. are Spark's own DDL and fall
-    # through to the exact pass-through (A4)
-    if not _DDL_HEAD.match(sql):
-        return None
+def _ddl(spark: SparkSession, sql: str, tables: dict | None, catalog) -> DataFrame:
+    """Route registry DDL (a statement ``_DDL_HEAD`` claims) to the
+    SketchCatalog."""
     if catalog is None:
         raise ValueError("sample DDL needs a SketchCatalog — pass catalog=...")
 
@@ -1595,7 +1553,7 @@ def _top_sum_args(args: list) -> tuple[int, float | None]:
 # each sketch aggregate's argument parser: validates and returns the parsed
 # arguments. With _CATALOG_KINDS this is the one declaration every route
 # reads — on-the-fly (_sketch_spec), registered states (_serving_spec),
-# ROLLUP/CUBE, the UNION ALL merge and EXPLAIN.
+# ROLLUP/CUBE and the UNION ALL merge.
 _SKETCH_ARGS = {
     "APPROX_COUNT_DISTINCT": _rse_args,
     "APPROX_TOPK": _topk_args,
@@ -1678,9 +1636,9 @@ _MULTI_KEY_MSG = (
 )
 
 
-def _registration(catalog, key: str):
-    """The registry row of sketch set ``key``."""
-    reg = next((r for r in catalog.list_rows() if r["name"] == key), None)
+def _registration(reg_rows, key: str):
+    """The registry row of sketch set ``key`` among ``reg_rows``."""
+    reg = next((r for r in reg_rows if r["name"] == key), None)
     if reg is None:
         raise ValueError(f"catalog has no sketch set or sample {key!r}")
     return reg
@@ -1688,10 +1646,10 @@ def _registration(catalog, key: str):
 
 def _serving_spec(reg, fn: str, args: list, key: str) -> dict:
     """The spec of registered sketch set ``reg`` (a registry row) that
-    answers ``fn(args)`` — the one selection the catalog, ROLLUP/CUBE and
-    EXPLAIN routes share: arguments validated, a spec that serves the
-    statement (``_spec_serves``) and achieves its explicit accuracy
-    (``_accuracy_gap``), else ValueError naming what is missing."""
+    answers ``fn(args)`` — the one selection the catalog and ROLLUP/CUBE
+    routes share: arguments validated, a spec that serves the statement
+    (``_spec_serves``) and achieves its explicit accuracy (``_accuracy_gap``),
+    else ValueError naming what is missing."""
     import json
 
     kinds = _CATALOG_KINDS.get(fn)
@@ -1720,9 +1678,8 @@ def _serving_spec(reg, fn: str, args: list, key: str) -> dict:
 def _keyed_states_spec(reg, key, fn, args, group, where, estimator) -> dict:
     """The serving spec of sketch set ``reg`` named by an explicit
     ``catalog_key`` for a plain (non-ROLLUP) statement, after the refusals
-    such a key can meet — shared by execution and EXPLAIN. Auto-resolution
-    never picks states under WHERE or ERROR BY SUBSAMPLING; an explicit key
-    can name them anyway."""
+    such a key can meet. Auto-resolution never picks states under WHERE or
+    ERROR BY SUBSAMPLING; an explicit key can name them anyway."""
     if estimator == "subsample":
         # states hold no rows to subsample, and answering with the sketch's
         # own bound would be the silent closed-form fallback the modifier
@@ -1747,8 +1704,6 @@ def _sketch_spec(df: DataFrame, fn: str, args: list) -> tuple[DataFrame, SketchS
     ROLLUP/CUBE routes): ``df`` with the aggregate's expression columns
     materialized, and the one SketchSpec ``_q`` to build, sized from the
     statement's own accuracy arguments."""
-    from sketchlib.planner import kll_params
-
     parsed = _sketch_args(fn, args)
     df, col = _materialize_expr(df, args[0])
     if fn == "APPROX_COUNT_DISTINCT":
@@ -1835,8 +1790,7 @@ def _table_dir(table_token: str, tables: dict | None) -> str | None:
 
 
 def _resolve_key(
-    fn, args, group, has_where, table_token, tables, catalog,
-    reg_rows=None, sample_rows=None, uniform_samples_only=False,
+    fn, args, group, has_where, table_token, tables, regs, uniform_samples_only=False,
 ) -> str | None:
     """Verdict's sample-selection step (SampleManager choosing the best
     registered sample for a query — the user never names one): pick the
@@ -1898,10 +1852,7 @@ def _resolve_key(
         want_group = _canon_group(group)
         # newest registration first, name as tie-break — deterministic when
         # several sets hold the same sketch
-        if reg_rows is None:
-            reg_rows = catalog.list_rows()
-        regs = sorted(reg_rows, key=lambda r: (-r["built_unix"], r["name"]))
-        for reg in regs:
+        for reg in sorted(regs.regs(), key=lambda r: (-r["built_unix"], r["name"])):
             if os.path.normpath(reg["input_dir"]) != base_n or reg["group_by"] != want_group:
                 continue
             if any(
@@ -1942,9 +1893,8 @@ def _resolve_key(
             return k == "uniform" or (k == "stratified" and group == r["on_col"])
         return False
 
-    if sample_rows is None:
-        sample_rows = catalog.list_sample_rows()
-    ok = [r for r in sample_rows if os.path.normpath(r["input_dir"]) == base_n and eligible(r)]
+    ok = [r for r in regs.samples()
+          if os.path.normpath(r["input_dir"]) == base_n and eligible(r)]
     if not ok:
         return None
 
@@ -1960,70 +1910,719 @@ def resolve_catalog_key(
 ) -> str | None:
     """Which catalog artifact would ``approx_sql`` auto-select for this
     statement? None = no registered artifact fits (the statement would run
-    as an on-the-fly build over the base table). Single-aggregate
-    statements only; ORDER BY/LIMIT tails are ignored for routing."""
+    as an on-the-fly build over the base table, or is refused).
+    Single-aggregate statements only; ORDER BY/LIMIT/HAVING tails are
+    ignored for routing."""
     if catalog is None:
         return None
-    body = sql
-    ssm = _SUBSAMPLE_TAIL.match(_mask_literals(body)) and _SUBSAMPLE_TAIL.match(body)
-    subsample = bool(ssm)
-    if ssm:
-        body = ssm.group("body")
-    while True:  # peel ORDER BY / LIMIT / HAVING tails, innermost last
-        tm = _ORDER_TAIL.match(body) or _LIMIT_TAIL.match(body) or _HAVING_TAIL.match(body)
-        if not tm:
-            break
-        body = tm.group("body")
-    m = _SKELETON.match(body)
-    if not m:
-        return None
-    aggs = [(f.upper(), _split_args(argstr)) for f, argstr in _AGG.findall(m.group("select"))]
-    if len(aggs) != 1:
-        return None
-    fn, args = aggs[0]
-    group = _parse_group(m.group("group"))
-    return _resolve_key(fn, args, group, bool(m.group("where")), m.group("table"),
-                        tables, catalog, uniform_samples_only=subsample)
+    p = _plan(spark, sql, tables, catalog, None, "clt")
+    while p.refusal is None and p.route in ("ORDER BY", "LIMIT", "HAVING", "aliased"):
+        p = p.nested
+    return p.key if p.kind == "approx_single" and p.refusal is None else None
 
 
 _EXPLAIN_SCHEMA = "property string, value string"
 
 
-# ONE copy of the weighted-percentile-over-row-sample refusal, shared by
-# execution and EXPLAIN (_sample_serving_mismatch) so the two cannot drift
 _PCT_WEIGHT_SAMPLE_MSG = (
     "weighted percentile (weight=) serves from a weighted tdigest's states, "
     "not a row sample — register tdigest(col, weight=w) or drop catalog_key"
 )
 
+# the sampling aggregates: a Bernoulli sample at a ratio argument, or a scramble
+_SAMPLING_FNS = ("APPROX_COUNT", "APPROX_SUM", "APPROX_AVG", "APPROX_VARIANCE",
+                 "APPROX_STDDEV", "APPROX_COVAR", "APPROX_CORR")
+# aggregates that compose in one multi-aggregate statement (one output
+# column pair each); the rest return several rows per group
+_SCALAR_AGGS = ("APPROX_COUNT_DISTINCT",) + _SAMPLING_FNS
+_TAIL_ROUTES = (("ORDER BY", _ORDER_TAIL), ("LIMIT", _LIMIT_TAIL), ("HAVING", _HAVING_TAIL))
 
-def _sample_serving_mismatch(fn, args, meta, estimator, key) -> str | None:
-    """The serving branch's kind/column compatibility gates, replicated for
-    EXPLAIN (an EXPLICIT catalog_key can name an incompatible sample —
-    auto-resolution never does): None = the sample serves; a message = the
-    same raise execution makes. Kept NEXT to the schema both share so a new
-    serving gate is added here in the same diff."""
-    k = meta["kind"]
+
+def _tail_match(sql: str):
+    """(route, match) of the statement's outermost ORDER BY / LIMIT /
+    HAVING tail, or None."""
+    for route, tail_re in _TAIL_ROUTES:
+        tm = tail_re.match(sql)
+        if tm:
+            return route, tm
+    return None
+
+
+def _sample_refusal(fn, args, meta, group, estimator, key) -> str | None:
+    """Why persisted sample ``key`` (registry row ``meta``) cannot serve
+    ``fn(args)`` under ``group`` and ``estimator`` — the message
+    ``approx_sql`` raises — or None when it serves. Auto-selection only
+    picks samples that serve; an explicit catalog_key can name any."""
+    k, on = meta["kind"], meta["on_col"]
     if fn == "APPROX_COUNT_DISTINCT":
-        col = args[0] if args else None
-        if k != "universe" or meta["on_col"] != col:
-            return (f"APPROX_COUNT_DISTINCT({col}) needs a universe sample "
-                    f"on {col!r}; {key!r} is {k} on {meta['on_col']!r}")
+        if k != "universe" or on != args[0]:
+            return (f"APPROX_COUNT_DISTINCT({args[0]}) needs a universe sample on "
+                    f"{args[0]!r}; {key!r} is {k} on {on!r}")
         return None
     if fn in ("APPROX_VARIANCE", "APPROX_STDDEV", "APPROX_COVAR", "APPROX_CORR"):
         if k != "uniform":
-            return f"{fn} needs a UNIFORM sample; {key!r} is {k}"
+            return (f"{fn} needs a UNIFORM sample (one shared inclusion "
+                    "probability — mixed stratified fractions would bias the "
+                    f"pooled moments); {key!r} is {k}")
         return None
-    if fn in ("APPROX_COUNT", "APPROX_SUM", "APPROX_AVG", "APPROX_PERCENTILE"):
-        if fn == "APPROX_PERCENTILE" and _pct_weight(args) is not None:
-            return _PCT_WEIGHT_SAMPLE_MSG
+    if fn not in ("APPROX_COUNT", "APPROX_SUM", "APPROX_AVG", "APPROX_PERCENTILE"):
+        return f"{fn} cannot be answered from a persisted sample table"
+    if fn == "APPROX_PERCENTILE" and _pct_weight(args) is not None:
+        return _PCT_WEIGHT_SAMPLE_MSG
+    if k not in ("uniform", "stratified"):
+        return f"{fn} needs a uniform or stratified sample; {key!r} is {k}"
+    if fn == "APPROX_PERCENTILE":
+        if k == "stratified" and group != on:
+            return (f"stratified sample {key!r} is keyed by {on!r}; GROUP BY "
+                    "must match (per-group quantiles across mixed-fraction "
+                    "strata would be biased)")
+        if _percentile_args(args)[1:] != (None, None):
+            return ("a rank_err/rel_err contract cannot be served from a "
+                    "scramble — the empirical quantile's error depends on the "
+                    "sample's row count, so no static guarantee exists; route "
+                    "to KLL/DDSketch states (drop catalog_key for "
+                    "auto-selection) or drop the contract")
         if estimator == "subsample" and k != "uniform":
-            return ("ERROR BY SUBSAMPLING needs a UNIFORM scramble here; "
-                    f"{key!r} is {k}")
-        if k not in ("uniform", "stratified"):
-            return f"{fn} needs a uniform or stratified sample; {key!r} is {k}"
+            return ("ERROR BY SUBSAMPLING needs a UNIFORM scramble for "
+                    f"APPROX_PERCENTILE; {key!r} is {k}")
         return None
-    return f"{fn} cannot be answered from a persisted sample table"
+    if estimator == "subsample" and k != "uniform":
+        return ("ERROR BY SUBSAMPLING needs a UNIFORM scramble (one shared "
+                "Bernoulli inclusion probability — a stratified sample's mixed "
+                f"fractions break the subsample geometry); {key!r} is {k}")
+    if k == "stratified" and group is not None and group != on:
+        return f"stratified sample {key!r} is keyed by {on!r}; GROUP BY must match"
+    return None
+
+
+@dataclass(frozen=True)
+class Plan:
+    """One approx statement, classified once by ``_plan``: ``approx_sql``
+    executes the route it names and ``explain_sql`` renders it, so the two
+    cannot disagree. A plan holds no data — building one scans nothing,
+    builds nothing and registers no temp view."""
+
+    kind: str                       # EXPLAIN's statement_kind
+    route: str = ""                 # what execution runs; "" = refused before routing
+    estimator: str = "clt"
+    key: str | None = None          # the artifact named or auto-selected
+    sql: str = ""                   # the statement text this node answers
+    aggs: tuple = ()                # ((fn, args), ...) of the select list
+    group: object = None            # the parsed GROUP BY
+    m: object = None                # the route's parse: skeleton/join/tail match, route tuple
+    detail: object = None           # what the route resolved: spec, picks, keys, ...
+    nested: Plan | None = None      # CTE final, derived outer, WITHIN rewrite, tail or alias body
+    notes: tuple = ()               # EXPLAIN's (property, value) description rows
+    refusal: str | None = None      # the ValueError message execution raises
+
+
+class _Registries:
+    """The catalog registry rows one statement's plan consults, each list
+    read at most once however many aggregates or nested statements ask."""
+
+    def __init__(self, catalog):
+        self.catalog, self._rows = catalog, {}
+
+    def _read(self, which: str) -> list:
+        if which not in self._rows:
+            self._rows[which] = [] if self.catalog is None else getattr(self.catalog, which)()
+        return self._rows[which]
+
+    def regs(self) -> list:
+        return self._read("list_rows")
+
+    def samples(self) -> list:
+        return self._read("list_sample_rows")
+
+
+def _side_states(resolve, head_fn, sides, args, grouped, tables, catalog, regs):
+    """``resolve``'s per-side registrations (set operation or UNION ALL
+    merge); a grouped statement needs the sides' (value, key) identifiers
+    first. None → no registered states serve."""
+    if catalog is None:
+        return None
+    idents = (None, None) if grouped is None else _setop_side_idents(sides, grouped)
+    return None if idents is None else resolve(
+        head_fn, sides, args, tables, catalog, reg_rows=regs.regs(),
+        cols=idents[0], group_cols=idents[1],
+    )
+
+
+def _multi_agg_keys(aggs, group, where, table_token, tables, regs) -> list | None:
+    """The artifact serving each aggregate of a multi-aggregate statement,
+    or None → the single-scan on-the-fly build. Routes only when EVERY
+    aggregate resolves: partial routing would still scan the base table.
+
+    Mixed sources join state-derived group keys (kernel Python str()) with
+    sample-derived keys (Catalyst cast); the two agree for string/integer
+    group columns but NOT for booleans, big doubles or timestamps ('True'
+    vs 'true', '1e+20' vs '1.0E20'), so a mix over any other group dtype
+    (read from a sample table's cached schema) builds on the fly instead."""
+    keys = []
+    for fn, args in aggs:
+        k = _resolve_key(fn, args, group, bool(where), table_token, tables, regs)
+        if k is None:
+            return None
+        keys.append(k)
+    state_names = {r["name"] for r in regs.regs()} if group else set()
+    if {k in state_names for k in keys} == {True, False}:
+        sample_key = next(k for k in keys if k not in state_names)
+        dtypes = dict(regs.catalog.sample(sample_key).dtypes)
+        gcols = list(group) if isinstance(group, (list, tuple)) else [group]
+        if any(dtypes.get(c) not in ("string", "int", "bigint", "smallint", "tinyint")
+               for c in gcols):
+            return None
+    return keys
+
+
+def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Plan:
+    """Classify one statement into the Plan ``approx_sql`` executes and
+    ``explain_sql`` renders — the statement's only classifier. Checks run
+    in execution's order. A statement execution refuses gets a plan whose
+    ``refusal`` is the message raised; its ``route`` is set when the route
+    chosen refused (an artifact that cannot serve), empty when the
+    statement's shape or arguments did. Sub-statements — CTE final,
+    derived-table outer, WITHIN rewrite, tail and alias bodies — are
+    nested plans sharing one registry read. ``spark`` only resolves
+    schemas for the set-operation type gates; nothing runs."""
+    from statistics import NormalDist
+
+    regs = regs or _Registries(catalog)
+    notes: list[tuple[str, str]] = []
+
+    def note(k, v) -> None:
+        notes.append((k, str(v)))
+
+    def mk(kind, route="", refusal=None, **kw) -> Plan:
+        return Plan(kind, route, estimator, notes=tuple(notes), refusal=refusal, **kw)
+
+    def sub(stmt, key=catalog_key) -> Plan:
+        return _plan(spark, stmt, tables, catalog, key, estimator, regs)
+
+    # EXPLAIN over OUR statements (any APPROX_ aggregate, registry DDL, or
+    # an ERROR BY SUBSAMPLING tail, whose refusal EXPLAIN must report);
+    # an exact EXPLAIN is Spark's own statement and passes through (A4)
+    em = re.match(r"^\s*EXPLAIN\s+(?P<stmt>.*)$", sql, re.IGNORECASE | re.DOTALL)
+    if em and (_AGG.search(_mask_literals(em.group("stmt")))
+               or _DDL_HEAD.match(em.group("stmt"))
+               or _SUBSAMPLE_TAIL.match(_mask_literals(em.group("stmt")))):
+        return mk("explain", "explain", nested=sub(em.group("stmt").strip()))
+    if catalog is None and catalog_key is not None:
+        return mk("invalid_arguments", refusal=(
+            "catalog_key without catalog does nothing — pass catalog=SketchCatalog(...)"))
+    if _DDL_HEAD.match(sql):
+        note("backend", "SketchCatalog registry")
+        return mk("ddl", "ddl", sql=sql)
+    if estimator not in ("clt", "subsample"):
+        return mk("invalid_arguments", refusal=(
+            f"estimator must be 'clt' or 'subsample', got {estimator!r}"))
+    ssm = _SUBSAMPLE_TAIL.match(_mask_literals(sql)) and _SUBSAMPLE_TAIL.match(sql)
+    if ssm:
+        sql, estimator = ssm.group("body"), "subsample"
+        if _WITHIN_STUB.search(_mask_literals(sql)):
+            # 'WITHIN 1% ERROR BY SUBSAMPLING' — the tail ate the
+            # contract's ERROR keyword; refuse by name
+            return mk("accuracy_contract", refusal=_WITHIN_SUBSAMPLE_MSG)
+    # classification ignores string literals: 'APPROX_X(1)' inside quotes
+    # must not drag an exact statement into the approx skeleton
+    if not _AGG.search(_mask_literals(sql)):
+        if estimator == "subsample":
+            return mk("exact_passthrough", refusal=(
+                "ERROR BY SUBSAMPLING selects the error estimator of an approx "
+                "statement — this statement has no APPROX_ aggregate (exact "
+                "pass-through carries no error columns)"))
+        # Verdict's pass-through: exact SQL goes to the backend untouched
+        # (A4) — including plain WITH statements, which Spark parses natively
+        note("backend", "spark.sql verbatim (A4)")
+        return mk("exact_passthrough", "exact", sql=sql)
+
+    cte = _extract_ctes(sql)
+    if cte is not None:
+        ctes, final = cte
+        note("cte_names", ",".join(n for n, _ in ctes))
+        note("cte_bodies", ",".join(
+            "approx" if _AGG.search(_mask_literals(b)) else "exact" for _, b in ctes))
+        clash = next((n for n, _ in ctes if tables and n in tables), None)
+        if clash is not None:
+            # the dict is authoritative in every resolution path, so the CTE
+            # would be silently shadowed — estimates over the wrong relation
+            # with no error is the worst failure shape
+            return mk("cte", refusal=(
+                f"CTE name {clash!r} collides with a `tables` binding — the "
+                "dict is authoritative in table resolution, so the CTE would "
+                "be silently shadowed; rename the CTE"))
+        note("final_statement", "see nested properties below")
+        return mk("cte", "cte", m=tuple(ctes), nested=sub(final))
+
+    derived = _extract_subquery(sql)
+    if derived is not None:
+        # extracted BEFORE tail peeling, so an inner HAVING/ORDER BY/LIMIT
+        # stays inside the subquery
+        head, inner, tail = derived
+        if catalog_key is not None:
+            return mk("derived_table", refusal=(
+                "catalog_key cannot answer a derived-table statement — the "
+                "registered artifact was built over the BASE table, not the "
+                "subquery's filtered/derived rows; drop catalog_key to "
+                "compute over the derived table"))
+        setop = _setop_route(head, inner, tail)
+        if setop is not None:
+            op, sides, args, _alias, grouped = setop
+            if estimator == "subsample":
+                return mk("approx_setop", "setop", refusal=(
+                    "set operations are answered from sketch states, whose "
+                    "bounds are not sampling CIs — ERROR BY SUBSAMPLING applies "
+                    "to the sampling aggregates (single table or UNION ALL over "
+                    "persisted uniform samples)"))
+            picks = _side_states(_resolve_setop_states, op, sides, args, grouped,
+                                 tables, catalog, regs)
+            # without states a grouped UNION belongs to the UNION → UNION ALL
+            # rewrite below, and sides typed outside one numeric family to
+            # the generic path, where Spark SQL's own coercion applies
+            if picks is not None or (
+                not (grouped is not None and op == "union")
+                and _setop_scan_frames(spark, sides, grouped, tables, apply_where=False)
+                is not None
+            ):
+                note("set_operation", op)
+                note("n_sides", len(sides))
+                if grouped is not None:
+                    note("group_by", grouped[0])
+                note("sketches", "hll (state merge IS set union)" if op == "union"
+                     else "hll + minhash (J·|A ∪ B| composition)")
+                if picks is not None:
+                    note("artifacts", ", ".join(p["reg"] for p in picks))
+                    note("route", "ANSWERED FROM PERSISTED STATES — per-side "
+                         "registered sketch sets merged; the base tables are "
+                         "never scanned (A5 extended to set operations)")
+                else:
+                    note("route", ("per-(side × group) sketch build in one pass, "
+                                   "per-group state merge" if grouped is not None
+                                   else "per-side sketch build in one pass")
+                         + " — the sides are never distinct-shuffled or materialized")
+                return mk("approx_setop", "setop", m=setop, detail=picks)
+        merged = None if estimator == "subsample" else _unionall_merge_route(head, inner, tail)
+        mpicks = merged and _side_states(_resolve_merge_states, merged[0], merged[2],
+                                         merged[1], merged[4], tables, catalog, regs)
+        if mpicks:
+            mfn, _args, msides, _alias, mgrouped = merged
+            note("aggregate", mfn)
+            note("n_sides", len(msides))
+            if mgrouped is not None:
+                note("group_by", mgrouped[0])
+            note("sketches", mpicks[0]["spec"]["kind"])
+            note("artifacts", ", ".join(p["reg"] for p in mpicks))
+            note("route", "ANSWERED FROM PERSISTED STATES — the sides' registered "
+                 "sketches MERGE into the UNION ALL bag's sketch; the base "
+                 "tables are never scanned")
+            return mk("approx_unionall_merge", "unionall_merge", m=merged, detail=mpicks)
+        sroute = _unionall_sample_route(head, inner, tail)
+        spicks = sroute and _resolve_unionall_samples(
+            sroute[0], sroute[2], sroute[1], tables, catalog,
+            sample_rows=regs.samples() if catalog is not None else None,
+        )
+        if spicks and _unionall_sample_frames(
+            spark, sroute[0], spicks, sroute[2], tables, sroute[4], catalog, apply_where=False,
+        ) is not None:
+            sfn, _args, ssides, _alias, sgrouped = sroute
+            note("aggregate", sfn)
+            note("n_sides", len(ssides))
+            if sgrouped is not None:
+                note("group_by", sgrouped[0])
+            note("ratio", spicks[0]["ratio"])
+            note("artifacts", ", ".join(p["name"] for p in spicks))
+            note("route", "ANSWERED FROM PERSISTED SAMPLES — equal-ratio uniform "
+                 "scrambles of the sides concatenate into one "
+                 f"Bernoulli({spicks[0]['ratio']}) sample of the UNION ALL bag; "
+                 "only the p-fraction tables are scanned")
+            return mk("approx_unionall_sample", "unionall_sample", m=sroute, detail=spicks)
+        # the generic path: the derived table becomes a per-statement temp
+        # view the rewritten outer statement reads
+        note("inner_statement", "approx (inner error caveat/composition applies)"
+             if _AGG.search(_mask_literals(inner)) else "exact")
+        rewritten = _union_all_rewrite(head, inner)
+        if rewritten is not None:
+            inner = rewritten  # distinct shuffle elided; answer identical
+            note("union_rewrite", "UNION → UNION ALL (duplicate-insensitive "
+                 "aggregates; the distinct shuffle is elided)")
+        view = f"_approx_subquery_{next(_SUBQUERY_IDS)}"
+        return mk("derived_table", "derived", m=(head, inner, tail, view),
+                  nested=sub(f"{head} FROM {view}{tail}", key=None))
+
+    # accuracy contract — after the derived-table branch, so a derived-table
+    # WITHIN statement applies the contract over the view
+    wm = _WITHIN_TAIL.match(_mask_literals(sql)) and _WITHIN_TAIL.match(sql)
+    if wm:
+        kind = "accuracy_contract"
+        t = float(wm.group("pct")) / 100.0
+        conf = float(wm.group("conf") or 95.0) / 100.0
+        note("target_rel_error", t)
+        note("confidence", conf)
+        if estimator == "subsample":
+            return mk(kind, refusal=_WITHIN_SUBSAMPLE_MSG)
+        if not (0.0 < t < 1.0):
+            return mk(kind, refusal=(
+                f"WITHIN {wm.group('pct')}% ERROR is outside (0, 100) — state a "
+                "relative error target strictly between 0% and 100%"))
+        if not (0.5 <= conf < 1.0):
+            return mk(kind, refusal=(
+                f"AT CONFIDENCE {wm.group('conf')}% must be in [50, 100) — e.g. "
+                "AT CONFIDENCE 99%"))
+        body, tails = wm.group("body"), ""
+        while tm := _tail_match(body):
+            tails = body[len(tm[1].group("body")):].rstrip(";").rstrip() + tails
+            body = tm[1].group("body")
+        cm = _SKELETON.match(body)
+        if cm is None:
+            return mk(kind, refusal=(
+                "WITHIN ... ERROR needs the single-table approx skeleton — "
+                "'SELECT APPROX_X(...) FROM t [WHERE] [GROUP BY] [tails] "
+                "WITHIN 1% ERROR'; joins and set operations take explicit "
+                "accuracy arguments instead"))
+        z = NormalDist().inv_cdf(0.5 + conf / 2.0)
+        parsed = [(f.upper(), _split_args(a), al) for f, a, al in _AGG_ALIASED.findall(
+            cm.group("select"))]
+        # validate every aggregate (one accuracy spec each) and collect the
+        # sampling aggregates that share ONE pilot scan
+        sampling: list[tuple[str, list]] = []
+        for i, (fn, args, _al) in enumerate(parsed):
+            tag = what = None
+            if fn == "APPROX_COUNT_DISTINCT":
+                given, what = len(args) > 1, "rse"
+                how = (f"rewrite to explicit rse = target/z = {t / z:.6g} "
+                       "(1σ figure; routing honors it)")
+            elif fn == "APPROX_TOPK":
+                given, what = len(args) > 2, "eps"
+                how = (f"rewrite to explicit eps = {t!r} (CM overcount ≤ ε·N "
+                       "w.p. 1−δ, δ=0.01; routing honors it — only achieving "
+                       "CM states claim the route)")
+            elif fn == "APPROX_TOP_SUM":
+                given, what = len(args) > 3, "eps"
+                how = (f"rewrite to explicit eps = {t!r} (weighted CM overcount "
+                       "≤ ε·ΣW w.p. 1−δ, δ=0.01)")
+            elif fn == "APPROX_PERCENTILE":
+                # a weighted digest's bound is fixed at build — no contract
+                # can re-plan it
+                tag = "weight=" if _pct_weight(args) is not None else None
+                given = tag is not None or _percentile_args(args)[1:] != (None, None)
+                what = "rank_err/rel_err/weight"
+                how = (f"rank_err={t!r} → KLL k={max(200, kll_params(t)['k'])} "
+                       "on the fly; only achieving KLL states claim the route")
+            elif fn in _SAMPLING_FNS:
+                # APPROX_COUNT() and APPROX_COUNT(*) both mean "no explicit ratio"
+                given = (any(a.strip() != "*" for a in args) if fn == "APPROX_COUNT"
+                         else len(args) > (2 if fn in ("APPROX_COVAR", "APPROX_CORR") else 1))
+                what = "sampling ratio"
+                how = ("pilot Bernoulli scan (ratio 0.02, over the largest "
+                       "registered uniform scramble when one exists) estimates "
+                       "the data terms, the closed-form CLT"
+                       + ("/Fisher" if fn == "APPROX_CORR" else "")
+                       + " inversion plans the ratio (worst group under GROUP "
+                       "BY); a multi-aggregate contract pays the pilot once — "
+                       "EXPLAIN does not run it"
+                       + ("; the CORR target is ABSOLUTE (±t on r)"
+                          if fn == "APPROX_CORR" else ""))
+                if not given:
+                    sampling.append((fn, args))
+            else:
+                return mk(kind, refusal=(
+                    f"{fn} does not take a WITHIN ... ERROR contract — closed-form "
+                    "inversions cover COUNT/SUM/AVG/VARIANCE/STDDEV/COVAR/CORR "
+                    "(sampling ratio), COUNT_DISTINCT (rse), TOPK (eps), and "
+                    "PERCENTILE (rank_err)"))
+            if given:
+                return mk(kind, refusal=(
+                    f"give ONE accuracy spec — the statement has both an explicit "
+                    f"{what} argument and a WITHIN contract ({tag or what} + "
+                    f"WITHIN, {fn})"))
+            note(f"agg{i}.plan" if len(parsed) > 1 else "plan", how)
+        contract = (cm, parsed, tails, t, z, sampling)
+        if sampling:  # the planned ratios need the pilot's data
+            return mk(kind, "within_pilot", key=catalog_key, detail=contract)
+        note("rewritten_statement", "see nested properties below")
+        return mk(kind, "within", nested=sub(_within_rewrite(*contract[:5], ratios=())))
+
+    tm = _tail_match(sql)
+    if tm:
+        return mk("", tm[0], m=tm[1], nested=sub(tm[1].group("body")))
+
+    jr = _JOIN_ROWS_SKELETON.match(sql)
+    if jr:
+        kind, route = "approx_join_rows", "join_rows"
+        if estimator == "subsample":
+            return mk(kind, route, refusal=(
+                "APPROX_JOIN_ROWS is sketch-served (CM inner product) — its "
+                "bound is not a sampling CI; ERROR BY SUBSAMPLING applies to "
+                "the sampling aggregates"))
+        if catalog_key is not None:
+            return mk(kind, route, refusal=(
+                "APPROX_JOIN_ROWS resolves ONE registration PER SIDE — "
+                "catalog_key names a single artifact; drop it and let "
+                "auto-selection pick a geometry-compatible CM pair"))
+        req_eps = _num(jr.group("eps"))
+        if jr.group("eps") is not None and req_eps is None:
+            return mk(kind, route, refusal=(
+                f"APPROX_JOIN_ROWS third argument {jr.group('eps')!r} must be a "
+                "numeric eps (the CM overcount fraction, e.g. 1e-4)"))
+        try:
+            sides = _join_rows_sides(jr)
+        except ValueError as e:
+            return mk(kind, route, refusal=str(e))
+        picks = _resolve_join_rows_regs(sides, tables, catalog, req_eps)
+        if picks is not None:
+            note("route", "persisted sketch states (both sides; zero base scans)")
+            note("states_a", f"{picks[0][0]}.{picks[0][1]}")
+            note("states_b", f"{picks[1][0]}.{picks[1][1]}")
+        else:
+            note("route", "on-the-fly CM build (one scan per side; the join "
+                 "itself never runs)")
+            note("eps", req_eps if req_eps is not None else 1e-4)
+        return mk(kind, route, m=jr, detail=(sides, picks, req_eps))
+
+    jm = _JOIN3_SKELETON.match(sql) or _JOIN_SKELETON.match(sql)
+    if jm:
+        three = jm.re is _JOIN3_SKELETON
+        kind, route = ("approx_join3", "join3") if three else ("approx_join", "join")
+        if estimator == "subsample":
+            return mk(kind, route, refusal=(
+                "approx joins report closed-form CIs over the fact-side sample "
+                "— ERROR BY SUBSAMPLING supports single-table sampling "
+                "aggregates (and UNION ALL over persisted uniform samples)"))
+        key = catalog_key
+        try:
+            fn, _vc, ratio_arg = _join_agg(jm.group("select"))
+            note("aggregate", f"{fn}(..., {ratio_arg})" if ratio_arg else f"{fn}(...)")
+            if three:
+                toks = [(jm.group(f"t{i}"), jm.group(f"a{i}")) for i in (1, 2, 3)]
+            else:
+                lkey, rkey = _join_keys(jm)
+            _refuse_join_subquery_where(jm.group("where"))
+            if key is None and catalog is not None:
+                # auto-selection; an explicit ratio argument is a precision
+                # request only samples meeting it may serve
+                key = (_resolve_join3_key(toks, tables, catalog, _num(ratio_arg)) if three
+                       else _resolve_join_key(jm.group("ta"), jm.group("tb"), lkey, rkey,
+                                              tables, catalog, req_ratio=_num(ratio_arg)))
+        except ValueError as e:
+            return mk(kind, route, refusal=str(e))
+        if key is None:
+            note("route", "on_the_fly (Bernoulli-sample the fact side per statement)")
+        elif "," in key:
+            note("route", "universe_scramble_pair (p-composition)")
+            note("artifacts", key)
+        else:
+            note("route", "fact_sample_x_exact_dim (broadcast dim)" if not three
+                 else "uniform_fact_scramble_x_exact_dims")
+            note("artifact", key)
+        return mk(kind, route, key=key, m=jm)
+
+    m = _SKELETON.match(sql)
+    if not m:
+        return mk("unsupported", refusal=(
+            "unsupported statement — approx_sql accepts only "
+            "'SELECT APPROX_*(...) FROM t [WHERE expr] [GROUP BY col]'; "
+            "use the DataFrame API (sketchlib.spark) for anything richer"))
+    aggs = tuple((f.upper(), _split_args(a)) for f, a in _AGG.findall(m.group("select")))
+    aliased = _AGG_ALIASED.findall(m.group("select"))
+    where, table = m.group("where"), m.group("table")
+
+    rmu = _ROLLUP_GROUP.match(m.group("group") or "")
+    if rmu:
+        kind = "approx_rollup"
+        if len(aggs) != 1 or any(al for *_, al in aliased):
+            return mk(kind, refusal=(
+                "GROUP BY ROLLUP/CUBE takes exactly one un-aliased approx "
+                "aggregate — grouping sets multiply the result rows, so a "
+                "multi-aggregate or aliased head is ambiguous; issue one "
+                "statement per aggregate"))
+        fn, args = aggs[0]
+        note("aggregate", f"{fn}({', '.join(args)})")
+        try:
+            cols, sets_ = _rollup_sets(rmu)
+        except ValueError as e:
+            return mk(kind, refusal=str(e))
+        note("group_by", f"GROUPING SETS — {len(sets_)} explicit grouping sets"
+             if rmu.group("gsets") else
+             f"{rmu.group('mode').upper()}({', '.join(cols)}) — {len(sets_)} grouping sets")
+        route, spec = "rollup_levels", None
+        if fn in _CATALOG_KINDS:
+            if estimator == "subsample":
+                return mk(kind, refusal=(
+                    f"{fn} is sketch-served — its bound is not a sampling CI; "
+                    "ERROR BY SUBSAMPLING applies to the sampling aggregates"))
+            try:  # argument validation BEFORE routing: every route raises alike
+                _sketch_args(fn, args)
+            except ValueError as e:
+                return mk(kind, refusal=str(e))
+            if catalog_key is None:
+                route = "rollup_build"
+            elif not any(r["name"] == catalog_key for r in regs.samples()):
+                # a scramble key instead answers each level from the sample
+                route = "rollup_states"
+                try:
+                    spec = _rollup_states_spec(_registration(regs.regs(), catalog_key),
+                                               catalog_key, fn, args, cols, where)
+                except ValueError as e:
+                    return mk(kind, route, refusal=str(e))
+                note("route", "persisted_sketch_states (finest grain; base table never read, A5)")
+                note("artifact", catalog_key)
+            note("plan", "ONE build at the finest grain (persisted states when "
+                 "catalog_key names a set registered at exactly that grain, else "
+                 "one on-the-fly build); every coarser grouping set is a "
+                 "KB-sized state MERGE (on the driver for persisted states "
+                 "within the driver budgets, else regroup_states) — zero base "
+                 "rescans, per-set cost independent of corpus size")
+        else:
+            note("plan", "one statement per grouping set over the same "
+                 "seed-fixed sample (registered scramble reused level to level)")
+        note("output", "GROUP BY columns (rolled-up → NULL), grouping_lvl = SQL "
+             "GROUPING() bitmask, then the aggregate's estimate + bound columns")
+        return mk(kind, route, key=catalog_key, aggs=aggs, m=m, detail=(cols, sets_, spec))
+
+    kind = "approx_single" if len(aggs) == 1 else "approx_multi"
+    if any(al for *_, al in aliased):
+        # named estimate columns: the statement runs alias-free, then renames
+        given = [al for *_, al in aliased if al]
+        if len(set(given)) != len(given):
+            return mk(kind, refusal=f"duplicate alias in select list: {given!r}")
+        clean = f"SELECT {', '.join(f'{f}({a})' for f, a, _ in aliased)} FROM {table}"
+        if where:
+            clean += f" WHERE {where}"
+        if m.group("group"):
+            clean += f" GROUP BY {m.group('group')}"
+        return mk(kind, "aliased", aggs=aggs,
+                  detail=tuple(al or None for *_, al in aliased), nested=sub(clean))
+
+    group = _parse_group(m.group("group"))
+    common = {"aggs": aggs, "group": group, "m": m}
+    note("table", table)
+    if where:
+        note("where", "subquery predicate (routed via spark.sql)"
+             if re.search(r"\(\s*SELECT\b", _mask_literals(where), re.IGNORECASE)
+             else "plain predicate")
+    if group:
+        note("group_by", _canon_group(group))
+    fn, args = aggs[0]
+    if estimator == "subsample":
+        refusal = None
+        if len(aggs) > 1:
+            refusal = ("ERROR BY SUBSAMPLING takes one aggregate per statement — "
+                       "issue one statement per aggregate")
+        elif fn not in _SUBSAMPLE_FNS:
+            refusal = (f"{fn} is sketch-served — its bound is not a sampling CI a "
+                       "subsample spread could replace; ERROR BY SUBSAMPLING "
+                       f"applies to {'/'.join(_SUBSAMPLE_FNS)}")
+        elif fn == "APPROX_PERCENTILE" and (
+            _percentile_args(args)[1:] != (None, None) or _pct_weight(args) is not None
+        ):
+            refusal = ("give ONE estimator — rank_err/rel_err/weight are static "
+                       "sketch-route arguments (KLL / DDSketch / weighted tdigest) "
+                       "and ERROR BY SUBSAMPLING is a data-driven row estimator; "
+                       "they cannot combine")
+        elif fn == "APPROX_COUNT_DISTINCT" and len(args) > 1:
+            refusal = ("give ONE accuracy spec — an explicit rse is a static "
+                       "sketch-route guarantee a universe scramble cannot promise "
+                       "(its achieved rse depends on the unknown distinct count); "
+                       "drop the rse or drop ERROR BY SUBSAMPLING")
+        if refusal is not None:
+            return mk(kind, refusal=refusal, **common)
+
+    if len(aggs) > 1:
+        if catalog_key is not None:
+            return mk(kind, refusal=_MULTI_KEY_MSG, **common)
+        bad = next((f for f, _ in aggs if f not in _SCALAR_AGGS), None)
+        if bad is not None:
+            return mk(kind, refusal=(
+                f"{bad} returns multiple rows per group and cannot be combined "
+                "with other aggregates — issue it as its own statement"), **common)
+        keys = None
+        if catalog is not None:
+            keys = _multi_agg_keys(aggs, group, where, table, tables, regs)
+        samples = {r["name"]: r for r in regs.samples()} if keys else {}
+        for i, (f, a) in enumerate(aggs):
+            note(f"agg{i}.aggregate", f"{f}({', '.join(a)})")
+            if keys:
+                s = samples.get(keys[i])
+                note(f"agg{i}.route", f"persisted_sample ({s['kind']}, ratio={s['ratio']})"
+                     if s else "persisted_sketch_states (base table never read, A5)")
+                note(f"agg{i}.artifact", keys[i])
+        if not keys:
+            note("route", "on_the_fly (one scan of the base table builds every aggregate)")
+        return mk(kind, "multi_routed" if keys else "multi_build", detail=keys, **common)
+
+    note("aggregate", f"{fn}({', '.join(args)})")
+    key = catalog_key
+    if key is None and catalog is not None:
+        # Verdict's auto-selection: the best registered states/sample for
+        # this statement (None → the on-the-fly build)
+        key = _resolve_key(fn, args, group, bool(where), table, tables, regs,
+                           uniform_samples_only=(estimator == "subsample"))
+    if key is not None:
+        # a sketch set and a sample may share a name; the sample serves
+        if catalog.sample_exists(key):
+            meta = catalog.sample_meta(key)
+            refusal = _sample_refusal(fn, args, meta, group, estimator, key)
+            if refusal is None:
+                note("route", f"persisted_sample ({meta['kind']}, ratio={meta['ratio']})")
+                note("artifact", key)
+            return mk(kind, "sample", refusal, key=key, detail=meta, **common)
+        try:
+            spec = _keyed_states_spec(_registration(regs.regs(), key), key, fn, args,
+                                      group, where, estimator)
+        except ValueError as e:
+            return mk(kind, "states", str(e), key=key, **common)
+        note("route", "persisted_sketch_states (base table never read, A5)")
+        note("artifact", key)
+        return mk(kind, "states", key=key, detail=spec, **common)
+    if estimator == "subsample" and fn in ("APPROX_PERCENTILE", "APPROX_COUNT_DISTINCT"):
+        # these answer ONLY from registered scrambles — refused before the
+        # base table is resolved, so the refusal never depends on it existing
+        return mk(kind, "build", refusal=(
+            f"{fn} ERROR BY SUBSAMPLING answers from a registered "
+            + ("UNIVERSE scramble on the column" if fn == "APPROX_COUNT_DISTINCT"
+               else "UNIFORM scramble")
+            + " (pass catalog=... with one created) — the on-the-fly route "
+            + ("builds an HLL sketch, whose bound is deterministic,"
+               if fn == "APPROX_COUNT_DISTINCT" else
+               "builds KLL states, whose rank bound is deterministic,")
+            + " not a subsample CI"), **common)
+    if fn not in _CATALOG_KINDS and fn not in _SAMPLING_FNS:
+        return mk(kind, refusal=f"unknown approximate aggregate {fn!r}", **common)
+    if fn in _CATALOG_KINDS:
+        try:
+            _sketch_args(fn, args)
+        except ValueError as e:
+            return mk(kind, "build", str(e), **common)
+    note("route", "on_the_fly (scan the base table, build per statement)")
+    return mk(kind, "build", **common)
+
+
+_NESTED_PREFIX = {"cte": "final.", "derived": "outer.", "within": "rewritten."}
+
+
+def _render(p: Plan, prefix: str, rows: list, kind: bool = True) -> None:
+    """Append plan ``p``'s EXPLAIN rows: tail and alias nodes are
+    transparent (tails listed once as ``result_tails``), nested statements
+    carry a prefix, and a refusal shows as ``error`` — plus ``route = error``
+    when the route chosen refused."""
+    tails = []
+    while p.route in ("ORDER BY", "LIMIT", "HAVING"):
+        tails.append(p.route)
+        p = p.nested
+    if tails:
+        rows.append((f"{prefix}result_tails", ",".join(reversed(tails))))
+    if p.route in ("aliased", "explain") and p.refusal is None:
+        return _render(p.nested, prefix, rows, kind)
+    if kind:
+        rows.append((f"{prefix}statement_kind", p.kind))
+    rows.extend((prefix + k, v) for k, v in p.notes)
+    if p.refusal is not None:
+        if p.route:
+            rows.append((f"{prefix}route", "error — approx_sql would raise"))
+        rows.append((f"{prefix}error", f"{p.refusal} — approx_sql would raise"))
+    elif p.nested is not None:
+        # derived_table's own statement_kind stands for its outer statement
+        _render(p.nested, prefix + _NESTED_PREFIX[p.route], rows, kind=p.route != "derived")
 
 
 def explain_sql(
@@ -2036,531 +2635,27 @@ def explain_sql(
 ) -> DataFrame:
     """Routing EXPLAIN for the approx front door — ``approx_sql(spark,
     "EXPLAIN <statement>")`` lands here. Verdict's users could ask WHICH
-    sample served a query; this is that surface, statement-first: the
-    answer is (property, value) rows naming the statement kind, the route
-    (persisted states / persisted sample / on-the-fly build / join pair),
-    and the artifact that would serve it — WITHOUT executing anything.
-    Classification + registry lookups only; no scan, no build, no
-    temp-view side effects."""
-    rows: list[tuple[str, str]] = []
+    sample served a query; this is that surface, statement-first: (property,
+    value) rows naming the statement kind, the route (persisted states /
+    persisted sample / on-the-fly build / join pair) and the artifact that
+    would serve it — WITHOUT executing anything. The rows render the same
+    ``Plan`` ``approx_sql`` executes (``_plan``: classification and registry
+    lookups only — no scan, no build, no temp view), so EXPLAIN reports
+    what execution does. A statement execution refuses shows its message
+    in ``error``, followed by " — approx_sql would raise"."""
+    return _explain_frame(spark, _plan(spark, sql.strip(), tables, catalog, catalog_key,
+                                       estimator))
 
-    def emit(k, v) -> None:
-        rows.append((k, str(v)))
 
-    def done() -> DataFrame:
-        return local_frame(spark, rows, _EXPLAIN_SCHEMA)
-
-    stmt = sql.strip()
-    if _DDL_HEAD.match(stmt):
-        emit("statement_kind", "ddl")
-        emit("backend", "SketchCatalog registry")
-        return done()
-    # ERROR BY SUBSAMPLING tail — peeled exactly where execution peels it,
-    # so every route/raise below mirrors approx_sql's estimator-aware path
-    ssm = _SUBSAMPLE_TAIL.match(_mask_literals(stmt)) and _SUBSAMPLE_TAIL.match(stmt)
-    if ssm:
-        stmt, estimator = ssm.group("body"), "subsample"
-        if _WITHIN_STUB.search(_mask_literals(stmt)):
-            emit("statement_kind", "accuracy_contract")
-            emit("error", _WITHIN_SUBSAMPLE_MSG + " — approx_sql would raise")
-            return done()
-    if estimator == "subsample":
-        emit("error_estimator",
-             "variational subsampling (VerdictDB §3.2): b≈n^0.3 blocks, "
-             "half-width = max(q_conf, z·sd)(|√n_i·(ĝ_i−ĝ)|)/√n · √(1−p)")
-        if not _AGG.search(_mask_literals(stmt)):
-            emit("statement_kind", "exact_passthrough")
-            emit("error", "ERROR BY SUBSAMPLING on a statement with no "
-                 "APPROX_ aggregate — approx_sql would raise")
-            return done()
-    if not _AGG.search(_mask_literals(stmt)):
-        emit("statement_kind", "exact_passthrough")
-        emit("backend", "spark.sql verbatim (A4)")
-        return done()
-    cte = _extract_ctes(stmt)
-    if cte is not None:
-        ctes, final = cte
-        emit("statement_kind", "cte")
-        emit("cte_names", ",".join(n for n, _ in ctes))
-        emit(
-            "cte_bodies",
-            ",".join(
-                "approx" if _AGG.search(_mask_literals(b)) else "exact" for _, b in ctes
-            ),
-        )
-        emit("final_statement", "see nested properties below")
-        for k, v in explain_sql(spark, final, tables, catalog, catalog_key,
-                                estimator=estimator).collect():
-            emit(f"final.{k}", v)
-        return done()
-    sub = _extract_subquery(stmt)
-    if sub is not None:
-        head, inner, tail = sub
-        setop = _setop_route(head, inner, tail)  # the SAME decision execution makes
-        if setop is not None and estimator == "subsample":
-            emit("statement_kind", "approx_setop")
-            emit("route", "error — approx_sql would raise")
-            emit("error", "set operations are sketch-served — ERROR BY "
-                 "SUBSAMPLING does not apply")
-            return done()
-        if setop is not None:
-            op, parsed, _args, _alias, grouped = setop
-            if grouped is None:
-                picks = _resolve_setop_states(op, parsed, _args, tables, catalog)
-            else:
-                idents = _setop_side_idents(parsed, grouped)
-                picks = None if idents is None else _resolve_setop_states(
-                    op, parsed, _args, tables, catalog,
-                    cols=idents[0], group_cols=idents[1],
-                )
-            if picks is None and grouped is not None and op == "union":
-                setop = None  # execution declines too → the rewrite reports below
-            elif picks is None and _setop_scan_frames(
-                spark, parsed, grouped, tables, apply_where=False
-            ) is None:
-                # mixed non-numeric side types: execution declines the scan
-                # route to the generic derived-table path — report that
-                setop = None
-            else:
-                emit("statement_kind", "approx_setop")
-                emit("set_operation", op)
-                emit("n_sides", len(parsed))
-                if grouped is not None:
-                    emit("group_by", grouped[0])
-                emit("sketches", "hll (state merge IS set union)" if op == "union"
-                     else "hll + minhash (J·|A ∪ B| composition)")
-                if picks is not None:
-                    emit("artifacts", ", ".join(p["reg"] for p in picks))
-                    emit("route", "ANSWERED FROM PERSISTED STATES — per-side "
-                         "registered sketch sets merged; the base tables are "
-                         "never scanned (A5 extended to set operations)")
-                else:
-                    emit("route", ("per-(side × group) sketch build in one pass, "
-                                   "per-group state merge" if grouped is not None
-                                   else "per-side sketch build in one pass") +
-                         " — the sides are never distinct-shuffled or materialized")
-                return done()
-        merged = None if estimator == "subsample" else _unionall_merge_route(head, inner, tail)
-        if merged is not None:
-            mfn, margs, msides, _malias, mgrouped = merged
-            if mgrouped is None:
-                mpicks = _resolve_merge_states(mfn, msides, margs, tables, catalog)
-            else:
-                idents = _setop_side_idents(msides, mgrouped)
-                mpicks = None if idents is None else _resolve_merge_states(
-                    mfn, msides, margs, tables, catalog,
-                    cols=idents[0], group_cols=idents[1],
-                )
-            if mpicks is not None:  # the same resolution execution performs
-                emit("statement_kind", "approx_unionall_merge")
-                emit("aggregate", mfn)
-                emit("n_sides", len(msides))
-                if mgrouped is not None:
-                    emit("group_by", mgrouped[0])
-                emit("sketches", mpicks[0]["spec"]["kind"])
-                emit("artifacts", ", ".join(p["reg"] for p in mpicks))
-                emit("route", "ANSWERED FROM PERSISTED STATES — the sides' "
-                     "registered sketches MERGE into the UNION ALL bag's "
-                     "sketch; the base tables are never scanned")
-                return done()
-        sroute = _unionall_sample_route(head, inner, tail)
-        if sroute is not None:
-            sfn, sargs, ssides, _salias, sgrouped = sroute
-            spicks = _resolve_unionall_samples(sfn, ssides, sargs, tables, catalog)
-            if spicks is not None and _unionall_sample_frames(
-                spark, sfn, spicks, ssides, tables, sgrouped, catalog,
-                apply_where=False,
-            ) is not None:
-                emit("statement_kind", "approx_unionall_sample")
-                emit("aggregate", sfn)
-                emit("n_sides", len(ssides))
-                if sgrouped is not None:
-                    emit("group_by", sgrouped[0])
-                emit("ratio", picks_ratio := spicks[0]["ratio"])
-                emit("artifacts", ", ".join(p["name"] for p in spicks))
-                emit("route", "ANSWERED FROM PERSISTED SAMPLES — equal-ratio "
-                     "uniform scrambles of the sides concatenate into one "
-                     f"Bernoulli({picks_ratio}) sample of the UNION ALL bag; "
-                     "only the p-fraction tables are scanned")
-                return done()
-        inner_kind = "approx (inner error caveat/composition applies)" if _AGG.search(
-            _mask_literals(inner)
-        ) else "exact"
-        emit("statement_kind", "derived_table")
-        emit("inner_statement", inner_kind)
-        if _union_all_rewrite(head, inner) is not None:
-            emit("union_rewrite", "UNION → UNION ALL (duplicate-insensitive "
-                 "aggregates; the distinct shuffle is elided)")
-        for k, v in explain_sql(spark, f"{head} FROM _derived_{tail}", tables,
-                                catalog, None, estimator=estimator).collect():
-            if k != "statement_kind":
-                emit(f"outer.{k}", v)
-        return done()
-    wmx = _WITHIN_TAIL.match(_mask_literals(stmt)) and _WITHIN_TAIL.match(stmt)
-    if wmx and estimator == "subsample":
-        emit("statement_kind", "accuracy_contract")
-        emit("error", "WITHIN contracts invert the closed-form bounds — "
-             "ERROR BY SUBSAMPLING cannot combine; approx_sql would raise")
-        return done()
-    if wmx:
-        # accuracy contract — checked AFTER the subquery branch, mirroring
-        # execution order (a derived-table WITHIN statement extracts the
-        # subquery first and applies the contract over the view). Every
-        # validation _within_error enforces is replicated here as an error
-        # row, so EXPLAIN and execution cannot disagree on what raises.
-        # Sketch-family rewrites are pure arithmetic (nested EXPLAIN shows
-        # the route they'd take, the statement REBUILT structurally — a
-        # textual substitution could splice into unrelated text); the
-        # sampling families need the pilot scan, which EXPLAIN describes
-        # instead of running (zero data work).
-        from statistics import NormalDist
-
-        t = float(wmx.group("pct")) / 100.0
-        conf = float(wmx.group("conf") or 95.0) / 100.0
-        emit("statement_kind", "accuracy_contract")
-        emit("target_rel_error", t)
-        emit("confidence", conf)
-        if not (0.0 < t < 1.0):
-            emit("error", "target outside (0, 100)% — approx_sql would raise")
-            return done()
-        if not (0.5 <= conf < 1.0):
-            emit("error", "confidence outside [50, 100)% — approx_sql would raise")
-            return done()
-        cbody = wmx.group("body")
-        while True:
-            tmx = (_ORDER_TAIL.match(cbody) or _LIMIT_TAIL.match(cbody)
-                   or _HAVING_TAIL.match(cbody))
-            if not tmx:
-                break
-            cbody = tmx.group("body")
-        cm = _SKELETON.match(cbody)
-        caggs = [] if not cm else _AGG.findall(cm.group("select"))
-        if cm is None or not caggs:
-            emit("error", "WITHIN ... ERROR needs the single-table approx "
-                 "skeleton — approx_sql would raise")
-            return done()
-        z = NormalDist().inv_cdf(0.5 + conf / 2.0)
-        double_spec = "error — approx_sql would raise: give ONE accuracy spec"
-        sel_items: list[str] = []
-        needs_pilot = False
-        for i, (cfn_raw, cargstr) in enumerate(caggs):
-            cfn = cfn_raw.upper()
-            cargs = _split_args(cargstr)
-            prefix = f"agg{i}." if len(caggs) > 1 else ""
-            if cfn == "APPROX_COUNT_DISTINCT":
-                if len(cargs) > 1:
-                    emit("error", double_spec + f" (explicit rse + WITHIN, {cfn})")
-                    return done()
-                emit(f"{prefix}plan", f"rewrite to explicit rse = target/z = {t / z:.6g} "
-                     "(1σ figure; routing honors it)")
-                sel_items.append(f"{cfn}({cargs[0]}, {t / z!r})")
-            elif cfn == "APPROX_TOPK":
-                if len(cargs) > 2:
-                    emit("error", double_spec + f" (explicit eps + WITHIN, {cfn})")
-                    return done()
-                emit(f"{prefix}plan", f"rewrite to explicit eps = {t!r} (CM overcount "
-                     "≤ ε·N w.p. 1−δ, δ=0.01; routing honors it — only "
-                     "achieving CM states claim the route)")
-                sel_items.append(f"{cfn}({', '.join(cargs[:2])}, {t!r})")
-            elif cfn == "APPROX_TOP_SUM":
-                if len(cargs) > 3:
-                    emit("error", double_spec + f" (explicit eps + WITHIN, {cfn})")
-                    return done()
-                emit(f"{prefix}plan", f"rewrite to explicit eps = {t!r} (weighted CM "
-                     "overcount ≤ ε·ΣW w.p. 1−δ, δ=0.01)")
-                sel_items.append(f"{cfn}({', '.join(cargs[:3])}, {t!r})")
-            elif cfn == "APPROX_PERCENTILE":
-                if _pct_weight(cargs) is not None:
-                    # same refusal _within_error makes: a weighted digest's
-                    # bound is fixed at build — no contract can re-plan it
-                    emit("error", double_spec + f" (weight= + WITHIN, {cfn})")
-                    return done()
-                _, _wrank, _wrel = _percentile_args(cargs)
-                if _wrank is not None or _wrel is not None:
-                    emit("error", double_spec + f" (rank_err/rel_err + WITHIN, {cfn})")
-                    return done()
-                from sketchlib.planner import kll_params
-
-                emit(f"{prefix}plan", f"rank_err={t!r} → KLL "
-                     f"k={max(200, kll_params(t)['k'])} on the fly; only "
-                     "achieving KLL states claim the route")
-                sel_items.append(f"{cfn}({', '.join(cargs + [f'rank_err={t!r}'])})")
-            elif cfn in ("APPROX_COUNT", "APPROX_SUM", "APPROX_AVG",
-                         "APPROX_VARIANCE", "APPROX_STDDEV",
-                         "APPROX_COVAR", "APPROX_CORR"):
-                if cfn == "APPROX_COUNT":
-                    has_ratio = bool([a for a in cargs if a.strip() != "*"])
-                elif cfn in ("APPROX_COVAR", "APPROX_CORR"):
-                    has_ratio = len(cargs) > 2
-                else:
-                    has_ratio = len(cargs) > 1
-                if has_ratio:
-                    emit("error", double_spec + f" (explicit ratio + WITHIN, {cfn})")
-                    return done()
-                needs_pilot = True
-                emit(f"{prefix}plan", "pilot Bernoulli scan (ratio 0.02, over the "
-                     "largest registered uniform scramble when one exists) "
-                     "estimates the data terms, the closed-form CLT"
-                     + ("/Fisher" if cfn == "APPROX_CORR" else "")
-                     + " inversion plans the ratio (worst group under GROUP BY); "
-                     "a multi-aggregate contract pays the pilot once — "
-                     "EXPLAIN does not run it"
-                     + ("; the CORR target is ABSOLUTE (±t on r)" if cfn == "APPROX_CORR" else ""))
-            else:
-                emit("error", f"{cfn} does not take a WITHIN contract — "
-                     "approx_sql would raise")
-                return done()
-        if needs_pilot:
-            return done()  # the planned ratios need data — no nested route
-        rewritten = f"SELECT {', '.join(sel_items)} FROM {cm.group('table')}"
-        if cm.group("where"):
-            rewritten += f" WHERE {cm.group('where')}"
-        if cm.group("group"):
-            rewritten += f" GROUP BY {cm.group('group')}"
-        emit("rewritten_statement", "see nested properties below")
-        for k, v in explain_sql(spark, rewritten, tables, catalog, catalog_key).collect():
-            emit(f"rewritten.{k}", v)
-        return done()
-    body, tails = stmt, []
-    while True:
-        tm = _ORDER_TAIL.match(body) or _LIMIT_TAIL.match(body) or _HAVING_TAIL.match(body)
-        if not tm:
-            break
-        tails.append("HAVING" if "pred" in tm.groupdict() else
-                     ("ORDER BY" if "keys" in tm.groupdict() else "LIMIT"))
-        body = tm.group("body")
-    if tails:
-        emit("result_tails", ",".join(reversed(tails)))
-    jr = _JOIN_ROWS_SKELETON.match(body)
-    if jr:
-        # mirrors _approx_join_rows' gates exactly (EXPLAIN↔execution parity)
-        emit("statement_kind", "approx_join_rows")
-        if estimator == "subsample":
-            emit("route", "error — approx_sql would raise")
-            emit("error", "APPROX_JOIN_ROWS is sketch-served (CM inner "
-                 "product); ERROR BY SUBSAMPLING applies to the sampling "
-                 "aggregates")
-            return done()
-        if catalog_key is not None:
-            emit("route", "error — approx_sql would raise")
-            emit("error", "APPROX_JOIN_ROWS resolves ONE registration PER "
-                 "SIDE — drop catalog_key")
-            return done()
-        jr_eps = _num(jr.group("eps"))
-        if jr.group("eps") is not None and jr_eps is None:
-            emit("route", "error — approx_sql would raise")
-            emit("error", f"non-numeric eps argument {jr.group('eps')!r}")
-            return done()
-        try:
-            jr_sides = _join_rows_sides(jr)
-        except ValueError as e:
-            emit("route", "error — approx_sql would raise")
-            emit("error", str(e))
-            return done()
-        jr_picks = _resolve_join_rows_regs(jr_sides, tables, catalog, jr_eps)
-        if jr_picks is not None:
-            emit("route", "persisted sketch states (both sides; zero base scans)")
-            emit("states_a", f"{jr_picks[0][0]}.{jr_picks[0][1]}")
-            emit("states_b", f"{jr_picks[1][0]}.{jr_picks[1][1]}")
-        else:
-            emit("route", "on-the-fly CM build (one scan per side; the join "
-                 "itself never runs)")
-            emit("eps", str(jr_eps if jr_eps is not None else 1e-4))
-        return done()
-    jm = _JOIN3_SKELETON.match(body) or _JOIN_SKELETON.match(body)
-    if jm:
-        n_tables = 3 if "t3" in jm.groupdict() else 2
-        emit("statement_kind", f"approx_join{'' if n_tables == 2 else '3'}")
-        if estimator == "subsample":
-            emit("route", "error — approx_sql would raise")
-            emit("error", "approx joins report closed-form CIs — ERROR BY "
-                 "SUBSAMPLING does not apply")
-            return done()
-        # the SAME parse execution uses — so an unsupported aggregate or an
-        # explicit ratio argument changes EXPLAIN's answer exactly as it
-        # changes execution's (the first EXPLAIN cut re-implemented both
-        # and diverged: ratio ignored, bad qualifiers silently swapped)
-        try:
-            fn, _vc, ratio_arg = _join_agg(jm.group("select"))
-        except ValueError as e:
-            emit("route", "error — approx_sql would raise")
-            emit("error", str(e))
-            return done()
-        emit("aggregate", f"{fn}(...)" if not ratio_arg else f"{fn}(..., {ratio_arg})")
-        req_ratio = _num(ratio_arg)
-        key = catalog_key
-        if key is None and catalog is not None:
-            try:
-                if n_tables == 2:
-                    lk, rk = _join_keys(jm)
-                    key = _resolve_join_key(
-                        jm.group("ta"), jm.group("tb"), lk, rk, tables, catalog,
-                        req_ratio=req_ratio,
-                    )
-                else:
-                    toks = [(jm.group(f"t{i}"), jm.group(f"a{i}")) for i in (1, 2, 3)]
-                    key = _resolve_join3_key(toks, tables, catalog, req_ratio)
-            except ValueError as e:
-                emit("route", "error — approx_sql would raise")
-                emit("error", str(e))
-                return done()
-        if key is None:
-            emit("route", "on_the_fly (Bernoulli-sample the fact side per statement)")
-        elif "," in str(key):
-            emit("route", "universe_scramble_pair (p-composition)")
-            emit("artifacts", key)
-        else:
-            emit("route", "fact_sample_x_exact_dim (broadcast dim)"
-                 if n_tables == 2 else "uniform_fact_scramble_x_exact_dims")
-            emit("artifact", key)
-        return done()
-    m = _SKELETON.match(body)
-    if not m:
-        emit("statement_kind", "unsupported")
-        emit("error", "outside the approx statement skeleton — approx_sql would raise")
-        return done()
-    aggs = [(f.upper(), _split_args(a)) for f, a in _AGG.findall(m.group("select"))]
-    rmu = _ROLLUP_GROUP.match(m.group("group") or "")
-    if rmu:
-        emit("statement_kind", "approx_rollup")
-        if rmu.group("gsets"):
-            nsets = len(_GSET_ITEM.findall(rmu.group("sets")))
-            emit("group_by", f"GROUPING SETS — {nsets} explicit grouping sets")
-        else:
-            mode = rmu.group("mode").upper()
-            rcols = [c.strip() for c in rmu.group("cols").split(",")]
-            nsets = (2 ** len(rcols)) if mode == "CUBE" else len(rcols) + 1
-            emit("group_by", f"{mode}({', '.join(rcols)}) — {nsets} grouping sets")
-        if len(aggs) != 1:
-            emit("error", "ROLLUP/CUBE takes exactly one un-aliased approx "
-                 "aggregate — approx_sql would raise")
-            return done()
-        fn0, args0 = aggs[0]
-        emit("aggregate", f"{fn0}({', '.join(args0)})")
-        keyed = (
-            fn0 in _CATALOG_KINDS and catalog is not None and catalog_key is not None
-            and not any(r["name"] == catalog_key for r in catalog.list_sample_rows())
-        )
-        try:  # the same gates execution applies
-            cols, _ = _rollup_sets(rmu)
-            if keyed:
-                _rollup_states_spec(
-                    _registration(catalog, catalog_key), catalog_key, fn0, args0,
-                    cols, m.group("where"),
-                )
-        except ValueError as e:
-            emit("route", "error — approx_sql would raise")
-            emit("error", str(e))
-            return done()
-        if keyed:
-            emit("route", "persisted_sketch_states (finest grain; base table never read, A5)")
-            emit("artifact", catalog_key)
-        if fn0 in _CATALOG_KINDS:
-            emit("plan", "ONE build at the finest grain (persisted states "
-                 "when catalog_key names a set registered at exactly that "
-                 "grain, else one on-the-fly build); every coarser grouping "
-                 "set is a KB-sized state MERGE (on the driver for "
-                 "persisted states within the driver budgets, else "
-                 "regroup_states) — zero base rescans, per-set cost "
-                 "independent of corpus size")
-        else:
-            emit("plan", "one statement per grouping set over the same "
-                 "seed-fixed sample (registered scramble reused level to "
-                 "level)")
-        emit("output", "GROUP BY columns (rolled-up → NULL), grouping_lvl "
-             "= SQL GROUPING() bitmask, then the aggregate's estimate + "
-             "bound columns")
-        return done()
-    group = _parse_group(m.group("group"))
-    emit("statement_kind", "approx_single" if len(aggs) == 1 else "approx_multi")
-    if estimator == "subsample":
-        if len(aggs) > 1:
-            emit("error", "ERROR BY SUBSAMPLING takes one aggregate per "
-                 "statement — approx_sql would raise")
-            return done()
-        if aggs[0][0] not in _SUBSAMPLE_FNS:
-            emit("error", f"{aggs[0][0]} is sketch-served — ERROR BY "
-                 "SUBSAMPLING does not apply; approx_sql would raise")
-            return done()
-        if (aggs[0][0] == "APPROX_PERCENTILE"
-                and (_percentile_args(aggs[0][1])[1:] != (None, None)
-                     or _pct_weight(aggs[0][1]) is not None)):
-            emit("error", "rank_err/rel_err/weight + ERROR BY SUBSAMPLING is "
-                 "a double estimator spec — approx_sql would raise")
-            return done()
-        if aggs[0][0] == "APPROX_COUNT_DISTINCT" and len(aggs[0][1]) > 1:
-            emit("error", "explicit rse + ERROR BY SUBSAMPLING is a double "
-                 "accuracy spec — approx_sql would raise")
-            return done()
-    if len(aggs) > 1 and catalog is not None and catalog_key is not None:
-        emit("error", _MULTI_KEY_MSG + " — approx_sql would raise")
-        return done()
-    emit("table", m.group("table"))
-    if m.group("where"):
-        has_sub = bool(re.search(r"\(\s*SELECT\b", _mask_literals(m.group("where")), re.IGNORECASE))
-        emit("where", "subquery predicate (routed via spark.sql)" if has_sub else "plain predicate")
-    if group:
-        emit("group_by", _canon_group(group))
-    # registries collected ONCE per EXPLAIN (mirrors _multi_agg_routed's
-    # caching — k aggregates must not pay 2k registry collects)
-    reg_rows = sample_rows = None
-    if catalog is not None:
-        reg_rows = catalog.list_rows()
-        sample_rows = catalog.list_sample_rows()
-    for i, (fn, args) in enumerate(aggs):
-        prefix = f"agg{i}." if len(aggs) > 1 else ""
-        emit(f"{prefix}aggregate", f"{fn}({', '.join(args)})")
-        key = catalog_key
-        if key is None and catalog is not None:
-            key = _resolve_key(
-                fn, args, group, bool(m.group("where")), m.group("table"), tables,
-                catalog, reg_rows=reg_rows, sample_rows=sample_rows,
-                uniform_samples_only=(estimator == "subsample"),
-            )
-        if key is None and estimator == "subsample" and fn in (
-            "APPROX_PERCENTILE", "APPROX_COUNT_DISTINCT"
-        ):
-            emit(f"{prefix}route", "error — approx_sql would raise")
-            emit(f"{prefix}error", f"{fn} ERROR BY SUBSAMPLING needs a "
-                 "registered "
-                 + ("universe scramble on the column; the on-the-fly route "
-                    "is an HLL sketch" if fn == "APPROX_COUNT_DISTINCT" else
-                    "uniform scramble; the on-the-fly route is KLL states"))
-        elif key is None:
-            emit(f"{prefix}route", "on_the_fly (scan the base table, build per statement)")
-        elif catalog is None:
-            # catalog_key without a catalog: approx_sql refuses the pair —
-            # report that instead of crashing on a None catalog
-            emit(f"{prefix}route", "error — approx_sql would raise")
-            emit(f"{prefix}error", "catalog_key without catalog does nothing")
-        elif catalog.sample_exists(key):
-            # SAMPLE FIRST — execution's own priority (a sketch set and a
-            # sample may share a name across the two registries; the serving
-            # path checks sample_exists first, so EXPLAIN must too)
-            meta = catalog.sample_meta(key)
-            mismatch = _sample_serving_mismatch(fn, args, meta, estimator, key)
-            if mismatch:
-                emit(f"{prefix}route", "error — approx_sql would raise")
-                emit(f"{prefix}error", mismatch)
-            else:
-                emit(f"{prefix}route", f"persisted_sample ({meta['kind']}, ratio={meta['ratio']})")
-                emit(f"{prefix}artifact", key)
-        elif any(r["name"] == key for r in reg_rows):
-            try:  # the same gates execution applies
-                _keyed_states_spec(
-                    next(r for r in reg_rows if r["name"] == key), key, fn,
-                    args, group, m.group("where"), estimator,
-                )
-            except ValueError as e:
-                emit(f"{prefix}route", "error — approx_sql would raise")
-                emit(f"{prefix}error", str(e))
-            else:
-                emit(f"{prefix}route", "persisted_sketch_states (base table never read, A5)")
-                emit(f"{prefix}artifact", key)
-        else:
-            emit(f"{prefix}route", "error — approx_sql would raise")
-            emit(f"{prefix}error", f"catalog has no sketch set or sample {key!r}")
-    return done()
+def _explain_frame(spark, plan: Plan) -> DataFrame:
+    """The (property, value) frame EXPLAIN returns for ``plan``."""
+    rows = []
+    if plan.estimator == "subsample":
+        rows.append(("error_estimator",
+                     "variational subsampling (VerdictDB §3.2): b≈n^0.3 blocks, "
+                     "half-width = max(q_conf, z·sd)(|√n_i·(ĝ_i−ĝ)|)/√n · √(1−p)"))
+    _render(plan, "", rows)
+    return local_frame(spark, rows, _EXPLAIN_SCHEMA)
 
 
 from itertools import count as _count
@@ -2789,9 +2884,7 @@ def _union_all_rewrite(head: str, inner: str) -> str | None:
 
 
 def _setop_route(head: str, inner: str, tail: str):
-    """The ONE routing decision execution and EXPLAIN share (the same
-    fidelity rule as join-key resolution: a weaker re-implementation in
-    EXPLAIN would let the two answers diverge). Returns
+    """The set-operation shape of a derived-table statement. Returns
     (op, parsed_sides, agg_args, alias, grouped) when the sketch-merge
     route applies — grouped is None for global statements, or
     (group_name, value_pos, group_pos) when a ``GROUP BY g`` tail rides a
@@ -2820,9 +2913,7 @@ def _setop_route(head: str, inner: str, tail: str):
     args = _split_args(hm.group("args"))
     if not args or not _IDENT.match(args[0]):
         return None  # outer must reference the union's column by name
-    # validate the rse argument HERE, the decision point both doors share —
-    # were this left to execution, EXPLAIN would report a route for a
-    # statement whose execution raises
+    # validate the rse argument while classifying, so EXPLAIN raises too
     _rse_args(args)
     n_items = 2 if group else 1
     parsed = []
@@ -2850,7 +2941,7 @@ def _setop_route(head: str, inner: str, tail: str):
 
 
 def _resolve_setop_states(
-    op, sides, args, tables, catalog, reg_rows=None, cols=None, group_cols=None
+    op, sides, args, tables, catalog, reg_rows, cols=None, group_cols=None
 ):
     """Verdict's A5 substitution extended to SET OPERATIONS: when every
     side is a bare ``SELECT col FROM table`` (no WHERE, plain identifier)
@@ -2864,9 +2955,8 @@ def _resolve_setop_states(
     MinHash Jaccard across sides is only meaningful when both sides share
     (r, seed): different permutation constants would compare unrelated
     minima and return noise, not J. Any miss or mismatch returns None →
-    the one-pass scan route. Shared by execution and EXPLAIN (the same
-    fidelity rule as every other route). Returns one
-    {reg, hll_spec, mh_spec} per side.
+    the one-pass scan route. Returns one {reg, hll_spec, mh_spec} per
+    side.
 
     Cross-side compatibility is resolved by SEARCH, not newest-first-then-
     check: every candidate registration per side is kept, then side 0's
@@ -2893,8 +2983,6 @@ def _resolve_setop_states(
         return None
     need_mh = op in ("intersect", "except")
     req_rse = _num(args[1]) if len(args) > 1 else None
-    if reg_rows is None:
-        reg_rows = catalog.list_rows()
     regs = sorted(reg_rows, key=lambda r: (-r["built_unix"], r["name"]))
     cand: list[list] = []  # per side: [(signature, pick)], newest first
     for i, sm in enumerate(sides):
@@ -3132,10 +3220,9 @@ def _setop_scan_frames(spark, sides, grouped, tables, apply_where=True):
     None when the sides' projected types are neither identical nor all in
     the numeric family (where the union's widening is lossless and matches
     Spark SQL's set-operation coercion). Schema-only — no job runs — so
-    EXPLAIN shares this gate and cannot claim a route execution declines;
-    EXPLAIN passes apply_where=False (predicates don't change the inspected
-    schema, and subquery predicates would register temp views — a side
-    effect EXPLAIN's contract forbids). Mixed non-numeric sides decline
+    ``_plan`` checks this gate with apply_where=False (predicates don't
+    change the inspected schema, and subquery predicates would register
+    temp views, which planning never does). Mixed non-numeric sides decline
     rather than raise: the generic derived-table path materializes the set
     operation through spark.sql, whose own coercion rules then own the
     semantics."""
@@ -3290,7 +3377,7 @@ def _unionall_merge_route(head: str, inner: str, tail: str):
 
 
 def _resolve_merge_states(
-    fn, sides, args, tables, catalog, reg_rows=None, cols=None, group_cols=None
+    fn, sides, args, tables, catalog, reg_rows, cols=None, group_cols=None
 ):
     """Per-side registrations whose sketches can MERGE into the UNION ALL
     answer: one sketch kind across sides, IDENTICAL params (merge
@@ -3301,15 +3388,13 @@ def _resolve_merge_states(
     states is the whole-table sketch; grouped statements require each
     side's registration grouped exactly by its key column. A registration
     without a recorded dtype is unknowable → None (the scan is always
-    safe). Shared by execution and EXPLAIN."""
+    safe)."""
     import json as _json
     import os as _os
 
     if catalog is None:
         return None
     kinds = _MERGE_KINDS[fn]
-    if reg_rows is None:
-        reg_rows = catalog.list_rows()
     regs = sorted(reg_rows, key=lambda r: (-r["built_unix"], r["name"]))
     cand: list[list] = []  # per side: [(kind, params_json, vclass, gclass, pick)]
     for i, sm in enumerate(sides):
@@ -3484,7 +3569,7 @@ def _unionall_sample_route(head: str, inner: str, tail: str):
     return fn, args, parsed, hm.group("alias"), (group, pos_v, 1 - pos_v)
 
 
-def _resolve_unionall_samples(fn, sides, args, tables, catalog, sample_rows=None):
+def _resolve_unionall_samples(fn, sides, args, tables, catalog, sample_rows):
     """Per-side registered UNIFORM samples sharing ONE ratio ≥ the
     statement's requested ratio: equal p is what makes the union of the
     side samples a Bernoulli(p) sample of the concatenated bag (mixed
@@ -3496,8 +3581,6 @@ def _resolve_unionall_samples(fn, sides, args, tables, catalog, sample_rows=None
     if catalog is None:
         return None
     req = _num(args[0] if fn == "APPROX_COUNT" else args[1])
-    if sample_rows is None:
-        sample_rows = catalog.list_sample_rows()
     per_side = []
     for sm in sides:
         base = _table_dir(sm.group("table"), tables)
@@ -3533,10 +3616,9 @@ def _unionall_sample_frames(
     type gate as _setop_scan_frames. APPROX_COUNT never reads the value, so
     its _v is the literal 1.0 (row marker) and the sides' value types — even
     mixed non-numeric ones — cannot decline the route. Schema-only (no job);
-    shared by execution and EXPLAIN so the reported route cannot diverge —
-    EXPLAIN passes apply_where=False: predicates don't change the schema the
-    gate inspects, and subquery predicates would otherwise register temp
-    views (a side effect EXPLAIN's contract forbids)."""
+    ``_plan`` checks the gate with apply_where=False: predicates don't
+    change the schema it inspects, and subquery predicates would otherwise
+    register temp views, which planning never does."""
     frames = []
     for p, sm in zip(picks, sides):
         s = catalog.sample(p["name"])
@@ -3564,22 +3646,19 @@ def _unionall_sample_frames(
 def _unionall_from_samples(
     spark, fn, args, alias, picks, catalog, grouped, sides, tables,
     estimator: str = "clt",
-) -> DataFrame | None:
+) -> DataFrame:
     """Answer a UNION ALL statement from the sides' persisted uniform
     samples: project each sample to the side's (value[, key]) items, apply
     side-local WHERE to the SAMPLE rows (commutes with Bernoulli sampling),
     UNION ALL the projections (plan concatenation, no exchange) and run the
     single Horvitz-Thompson aggregation at the shared ratio. Scans
-    p-fraction tables only — the bases are never read. None when the sides'
-    projected types fall outside one numeric family (the generic path owns
-    Spark SQL's coercion semantics there)."""
+    p-fraction tables only — the bases are never read. The plan checked the
+    sides' projected types share one numeric family."""
     from pyspark.sql import functions as F
 
     from sketchlib.spark.sampling import approx_agg_from_uniform_sample
 
     frames = _unionall_sample_frames(spark, fn, picks, sides, tables, grouped, catalog)
-    if frames is None:
-        return None
     allf = frames[0]
     for f in frames[1:]:
         allf = allf.unionByName(f)
@@ -3622,9 +3701,7 @@ def _unionall_from_samples(
     return out
 
 
-def _approx_setop(
-    spark: SparkSession, route, tables: dict | None, catalog=None
-) -> DataFrame | None:
+def _approx_setop(spark: SparkSession, route, picks, tables: dict | None, catalog) -> DataFrame:
     """Execute the sketch-merge set-operation route: project each side to
     its column(s) (WHERE applied side-local, pushed to that side's scan),
     tag with a side label, UNION ALL the narrow projections (no shuffle —
@@ -3637,43 +3714,22 @@ def _approx_setop(
     projecting the key alongside the value) key the one-pass build by the
     composite (side, group) and merge per group — the set operation is
     still never materialized or distinct-shuffled; grouped_setop_df
-    documents the per-group presence semantics and routing."""
+    documents the per-group presence semantics and routing. ``picks`` are
+    the per-side registrations the plan resolved (None → the scan)."""
     from pyspark.sql import functions as F
 
     op, sides, args, alias, grouped = route
-    # the rse argument was validated by _setop_route (the shared decision
-    # point), so a second argument here is always a numeric in (0, 1)
+    # the rse argument was validated by _setop_route, so a second argument
+    # here is always a numeric in (0, 1)
     rse = _num(args[1]) if len(args) > 1 else 0.01
     out_name = alias or f"approx_count_distinct_{args[0]}"
-    if grouped is None:
-        picks = _resolve_setop_states(op, sides, args, tables, catalog)
-        if picks is not None:
-            return _setop_from_states(spark, op, picks, catalog, out_name)
-    else:
-        idents = _setop_side_idents(sides, grouped)
-        picks = None
-        if idents is not None:
-            picks = _resolve_setop_states(
-                op, sides, args, tables, catalog, cols=idents[0], group_cols=idents[1]
-            )
-        if picks is not None:
-            return _grouped_setop_from_states(
-                spark, op, picks, catalog, grouped[0], out_name
-            )
-        if op == "union":
-            # without states, grouped UNION belongs to the UNION → UNION ALL
-            # rewrite (same one-pass scan keyed by the group alone, no side
-            # tag) — decline and let the caller fall through to it
-            return None
+    if picks is not None and grouped is None:
+        return _setop_from_states(spark, op, picks, catalog, out_name)
+    if picks is not None:
+        return _grouped_setop_from_states(spark, op, picks, catalog, grouped[0], out_name)
     tags = [f"s{i}" for i in range(len(sides))]
-    base_frames = _setop_scan_frames(spark, sides, grouped, tables)
-    if base_frames is None:
-        # sides project types outside one numeric family — decline to the
-        # generic derived-table path, where Spark SQL's own set-operation
-        # coercion owns the semantics (the DataFrame union's coercion can
-        # silently null-cast e.g. string→bigint, corrupting the count)
-        return None
-    frames = [f.withColumn("_side", F.lit(tag)) for tag, f in zip(tags, base_frames)]
+    frames = [f.withColumn("_side", F.lit(tag))
+              for tag, f in zip(tags, _setop_scan_frames(spark, sides, grouped, tables))]
     allf = frames[0]
     for f in frames[1:]:
         allf = allf.unionByName(f)
@@ -3778,59 +3834,22 @@ def _exact_passthrough(spark: SparkSession, sql: str, tables: dict | None) -> Da
     return spark.sql(sql)
 
 
-def _multi_agg_routed(
-    spark: SparkSession, aggs: list, group, where, table_token: str, tables, catalog
-) -> DataFrame | None:
-    """Multi-aggregate statements through Verdict's auto-selection: each
-    scalar aggregate is answered from ITS best registered artifact (sketch
-    aggregates from persisted states, sampling aggregates from scrambles)
-    and the per-aggregate single-statement results are joined on the GROUP
-    BY key. Routes only when EVERY aggregate resolves — partial routing
-    would still scan the base table, forfeiting the latency win, so it
-    falls back to the single-scan on-the-fly build instead (return None).
+def _run_multi_routed(spark, p: Plan, tables, catalog) -> DataFrame:
+    """A multi-aggregate statement through Verdict's auto-selection: each
+    scalar aggregate is answered from the artifact the plan resolved for it
+    (``_multi_agg_keys``: sketch aggregates from persisted states, sampling
+    aggregates from scrambles) and the per-aggregate single-statement
+    results are joined on the GROUP BY key.
 
     Output columns match ``_multi_agg`` (``<fn>_<col>`` + ``_err``); group
     key columns come back STRING-typed (the states-schema convention — the
     base table is never read, so native types are unknown here)."""
-    scalar = {
-        "APPROX_COUNT_DISTINCT", "APPROX_COUNT", "APPROX_SUM", "APPROX_AVG",
-        "APPROX_VARIANCE", "APPROX_STDDEV", "APPROX_COVAR", "APPROX_CORR",
-    }
-    if any(fn not in scalar for fn, _ in aggs):
-        return None
-    reg_rows = catalog.list_rows()  # registries collected ONCE per statement
-    sample_rows = catalog.list_sample_rows()
-    keys = []
-    for fn, args in aggs:
-        k = _resolve_key(
-            fn, args, group, bool(where), table_token, tables, catalog,
-            reg_rows=reg_rows, sample_rows=sample_rows,
-        )
-        if k is None:
-            return None
-        keys.append(k)
-
-    # mixed sources join state-derived group keys (kernel Python str()) with
-    # sample-derived keys (Catalyst cast): the two stringifications agree for
-    # string/integer group columns but NOT for booleans, big doubles, or
-    # timestamps ('True' vs 'true', '1e+20' vs '1.0E20'). When mixing, check
-    # the group dtypes on a sample table's schema (footer read) and fall back
-    # to the single-scan build when any column is outside the safe set.
-    if group:
-        state_names = {r["name"] for r in reg_rows}
-        kinds_used = {k in state_names for k in keys}
-        if kinds_used == {True, False}:
-            safe = ("string", "int", "bigint", "smallint", "tinyint")
-            sample_key = next(k for k in keys if k not in state_names)
-            dtypes = dict(catalog.sample(sample_key).dtypes)
-            gcols_chk = list(group) if isinstance(group, (list, tuple)) else [group]
-            if any(dtypes.get(c) not in safe for c in gcols_chk):
-                return None
-
     from pyspark.sql import functions as F
 
     from sketchlib.spark.build import group_key_expr
 
+    aggs, keys, group = p.aggs, p.detail, p.group
+    table_token, where = p.m.group("table"), p.m.group("where")
     gcols = [] if not group else (list(group) if isinstance(group, (list, tuple)) else [group])
     wclause = f" WHERE {where}" if where else ""
     gclause = f" GROUP BY {', '.join(gcols)}" if gcols else ""
@@ -3852,26 +3871,9 @@ def _multi_agg_routed(
         seen[out_name] = n + 1
         if n:
             out_name = f"{out_name}_{n + 1}"
-        cols = set(out.columns)
-        if "estimate" in cols:  # states path reports a RELATIVE rse → absolute err
-            est, err = F.col("estimate"), F.col("rse_bound") * F.col("estimate")
-        elif "est_distinct" in cols:  # universe-scramble distinct
-            est, err = F.col("est_distinct"), F.col("distinct_err")
-        elif fn == "APPROX_COUNT":
-            est, err = F.col("est_count"), F.col("count_err")
-        elif fn == "APPROX_SUM":
-            est, err = F.col("est_sum"), F.col("sum_err")
-        elif fn == "APPROX_VARIANCE":
-            est, err = F.col("est_variance"), F.col("variance_err")
-        elif fn == "APPROX_STDDEV":
-            est, err = F.col("est_stddev"), F.col("stddev_err")
-        elif fn == "APPROX_COVAR":
-            est, err = F.col("est_covar"), F.col("covar_err")
-        elif fn == "APPROX_CORR":
-            est, err = F.col("est_corr"), F.col("corr_err")
-        else:
-            est, err = F.col("est_avg"), F.col("avg_err")
-        sel = [est.alias(out_name), err.alias(f"{out_name}_err")]
+        # the states path's RELATIVE rse becomes an absolute err here too
+        out = _alias_estimate(out, fn, out_name)
+        sel = [F.col(out_name), F.col(f"{out_name}_err")]
         if gcols:
             # states frames name a single-column group 'group'; sample
             # frames keep the user's column — normalize, then join on one
@@ -3903,20 +3905,10 @@ def _multi_agg(spark: SparkSession, df: DataFrame, aggs: list, group: str | None
     the sampling aggregates share one uniform-sample aggregation per ratio.
     Only scalar-shaped aggregates compose (COUNT_DISTINCT/COUNT/SUM/AVG) —
     TOPK/PERCENTILE return multi-row-per-group shapes and must be issued
-    alone. Output columns: <fn>_<col> and <fn>_<col>_err per aggregate.
+    alone (the plan refuses them). Output columns: <fn>_<col> and
+    <fn>_<col>_err per aggregate.
     """
     from pyspark.sql import functions as F
-
-    scalar = {
-        "APPROX_COUNT_DISTINCT", "APPROX_COUNT", "APPROX_SUM", "APPROX_AVG",
-        "APPROX_VARIANCE", "APPROX_STDDEV", "APPROX_COVAR", "APPROX_CORR",
-    }
-    bad = [f for f, _ in aggs if f not in scalar]
-    if bad:
-        raise ValueError(
-            f"{bad[0]} returns multiple rows per group and cannot be combined "
-            "with other aggregates — issue it as its own statement"
-        )
 
     # one JVM-derived key string serves BOTH the sketch build and the
     # sampling aggregation, so the full-outer join below always lines up:
@@ -4153,7 +4145,8 @@ def _alias_estimate(out: DataFrame, fn: str, alias: str,
     """A single aggregate's answer frame with its estimate column renamed
     to ``alias`` and the companion bound to ``alias`` + a suffix naming
     the bound's units (``_rank_err``, ``_rel_err``, ``_undercount``,
-    ``_err``) — shared by aliased statements and the UNION ALL merge."""
+    ``_err``) — shared by aliased statements, the UNION ALL merge and the
+    served multi-aggregate route."""
     from pyspark.sql import functions as F
 
     cols = set(out.columns)
@@ -4218,8 +4211,7 @@ def _alias_estimate(out: DataFrame, fn: str, alias: str,
                .withColumnRenamed(pairs[1], err_name))
 
 
-def _run_aliased(spark, m, aliased, tables, catalog, catalog_key,
-                 estimator: str = "clt") -> DataFrame:
+def _run_aliased(spark, p: Plan, tables, catalog) -> DataFrame:
     """Named estimate columns — ``SELECT APPROX_X(args) AS name`` (Verdict
     lets users name their estimate columns; the driver's oracle compare
     requires both sides to agree on names). The statement re-runs alias-free
@@ -4227,24 +4219,14 @@ def _run_aliased(spark, m, aliased, tables, catalog, catalog_key,
     ``name_err`` (``name_rank_err`` for percentiles — that bound is in RANK
     units, not value units). COUNT_DISTINCT's relative ``rse_bound`` is
     converted to an ABSOLUTE ``name_err`` (rse × estimate) — the same
-    normalization _multi_agg_routed applies, so a named column and its _err
+    normalization _run_multi_routed applies, so a named column and its _err
     always share units no matter which path answered."""
     from pyspark.sql import functions as F
 
-    names = [al or None for *_, al in aliased]
-    given = [al for al in names if al]
-    if len(set(given)) != len(given):
-        raise ValueError(f"duplicate alias in select list: {given!r}")
-    clean = ", ".join(f"{fn}({args})" for fn, args, _ in aliased)
-    stmt = f"SELECT {clean} FROM {m.group('table')}"
-    if m.group("where"):
-        stmt += f" WHERE {m.group('where')}"
-    if m.group("group"):
-        stmt += f" GROUP BY {m.group('group')}"
-    out = approx_sql(spark, stmt, tables, catalog, catalog_key, estimator=estimator)
-    aggs = [(fn.upper(), _split_args(args)) for fn, args, _ in aliased]
+    out = _run(spark, p.nested, tables, catalog)
+    aggs, names = list(p.aggs), p.detail
     if len(aggs) == 1:
-        return _alias_estimate(out, aggs[0][0], names[0], estimator)
+        return _alias_estimate(out, aggs[0][0], names[0], p.estimator)
     defaults = _default_out_names(aggs)
     mapping = {}
     for default, alias in zip(defaults, names):
@@ -4415,12 +4397,14 @@ def _pilot_ratios(
     return out
 
 
-def _within_error(spark, wm, tables, catalog, catalog_key) -> DataFrame:
+def _within_rewrite(m, parsed, tails, t, z, ratios) -> str:
     """Accuracy-contract statements — ``SELECT APPROX_X(...) FROM t [...]
     WITHIN <t>% ERROR [AT CONFIDENCE <c>%]`` (default 95%): the user states
     the target, the library plans the cheapest parameters meeting it
     (Verdict/BlinkDB's accuracy-first UX; our planner.py bound inversions
-    made statement-level). Translation per aggregate family:
+    made statement-level). This is the statement the contract rewrites to,
+    the skeleton ``m``'s aggregates (``parsed``: (fn, args, alias)) given
+    explicit accuracy arguments, per family:
 
     - COUNT_DISTINCT → explicit rse argument t/z (the HLL/KMV rse is a 1σ
       figure; z·rse ≤ t makes the contract hold at the stated confidence);
@@ -4432,105 +4416,22 @@ def _within_error(spark, wm, tables, catalog, catalog_key) -> DataFrame:
     - PERCENTILE → ``rank_err=t`` named argument: on-the-fly builds use the
       planner's k inversion; routing only claims KLL states achieving it.
       The contract is in RANK units (WITHIN 1% ERROR = ±0.01 rank).
-    - COUNT/SUM/AVG/VARIANCE/STDDEV/COVAR/CORR → pilot-planned sampling
-      ratio (_pilot_ratio), injected as the explicit ratio argument — so
-      auto-selection serves the statement from any registered uniform
-      scramble of ratio ≥ the plan, and the on-the-fly build samples at
-      exactly the planned ratio. A plan of 1.0 degenerates to the exact
-      scan (error 0 ≤ any target). CORR's target is ABSOLUTE (±t on the
-      correlation itself — a relative target on a near-zero r would demand
-      a full scan for no insight); every other family's is relative.
+    - COUNT/SUM/AVG/VARIANCE/STDDEV/COVAR/CORR → the pilot-planned sampling
+      ``ratios`` (_pilot_ratios, one shared pilot scan for all of them),
+      injected as the explicit ratio argument — so auto-selection serves
+      the statement from any registered uniform scramble of ratio ≥ the
+      plan, and the on-the-fly build samples at exactly the planned ratio.
+      A plan of 1.0 degenerates to the exact scan (error 0 ≤ any target).
+      CORR's target is ABSOLUTE (±t on the correlation itself — a relative
+      target on a near-zero r would demand a full scan for no insight);
+      every other family's is relative.
 
-    MULTI-AGGREGATE statements contract every member: sketch aggregates
-    translate arithmetically, and ALL sampling aggregates are planned from
-    ONE shared pilot scan (per-aggregate ratios — they need not agree).
-    The rewritten statement re-enters approx_sql whole, so tails, aliases,
-    GROUP BY shapes, multi-aggregate composition, and catalog routing all
-    behave exactly as if the user had typed the accuracy arguments by
-    hand."""
-    from statistics import NormalDist
-
-    t = float(wm.group("pct")) / 100.0
-    if not (0.0 < t < 1.0):
-        raise ValueError(
-            f"WITHIN {wm.group('pct')}% ERROR is outside (0, 100) — state a "
-            "relative error target strictly between 0% and 100%"
-        )
-    conf = float(wm.group("conf") or 95.0) / 100.0
-    if not (0.5 <= conf < 1.0):
-        raise ValueError(
-            f"AT CONFIDENCE {wm.group('conf')}% must be in [50, 100) — e.g. "
-            "AT CONFIDENCE 99%"
-        )
-    z = NormalDist().inv_cdf(0.5 + conf / 2.0)
-
-    body, tails = wm.group("body"), ""
-    while True:
-        tm = _ORDER_TAIL.match(body) or _LIMIT_TAIL.match(body) or _HAVING_TAIL.match(body)
-        if not tm:
-            break
-        tails = body[len(tm.group("body")):].rstrip(";").rstrip() + tails
-        body = tm.group("body")
-    m = _SKELETON.match(body)
-    if not m:
-        raise ValueError(
-            "WITHIN ... ERROR needs the single-table approx skeleton — "
-            "'SELECT APPROX_X(...) FROM t [WHERE] [GROUP BY] [tails] "
-            "WITHIN 1% ERROR'; joins and set operations take explicit "
-            "accuracy arguments instead"
-        )
-    aliased = _AGG_ALIASED.findall(m.group("select"))
-    parsed = [(fn.upper(), _split_args(argstr), alias) for fn, argstr, alias in aliased]
-    group = _parse_group(m.group("group"))
-    sampling_fns = ("APPROX_COUNT", "APPROX_SUM", "APPROX_AVG", "APPROX_VARIANCE",
-                    "APPROX_STDDEV", "APPROX_COVAR", "APPROX_CORR")
-
-    # first pass: validate every aggregate (one accuracy spec each) and
-    # collect the sampling aggregates that need the pilot — a
-    # multi-aggregate contract pays ONE pilot scan for all of them
-    sampling: list[tuple[str, list]] = []
-    for fn, args, _alias in parsed:
-        if fn == "APPROX_COUNT_DISTINCT":
-            spec_given = len(args) > 1
-            spec_name = "rse"
-        elif fn == "APPROX_TOPK":
-            spec_given = len(args) > 2
-            spec_name = "eps"
-        elif fn == "APPROX_TOP_SUM":
-            spec_given = len(args) > 3
-            spec_name = "eps"
-        elif fn == "APPROX_PERCENTILE":
-            spec_given = (_percentile_args(args)[1:] != (None, None)
-                          or _pct_weight(args) is not None)
-            spec_name = "rank_err/rel_err/weight"
-        elif fn in sampling_fns:
-            if fn == "APPROX_COUNT":
-                # APPROX_COUNT() and APPROX_COUNT(*) both mean "no explicit ratio"
-                spec_given = bool([a for a in args if a.strip() != "*"])
-            elif fn in ("APPROX_COVAR", "APPROX_CORR"):
-                spec_given = len(args) > 2
-            else:
-                spec_given = len(args) > 1
-            spec_name = "sampling ratio"
-            if not spec_given:
-                sampling.append((fn, args))
-        else:
-            raise ValueError(
-                f"{fn} does not take a WITHIN ... ERROR contract — closed-form "
-                "inversions cover COUNT/SUM/AVG/VARIANCE/STDDEV/COVAR/CORR "
-                "(sampling ratio), COUNT_DISTINCT (rse), TOPK (eps), and "
-                "PERCENTILE (rank_err)"
-            )
-        if spec_given:
-            raise ValueError(
-                f"give ONE accuracy spec — the statement has both an explicit "
-                f"{spec_name} argument and a WITHIN contract ({fn})"
-            )
-
-    ratios = iter(
-        _pilot_ratios(spark, m, sampling, group, tables, z, t, catalog=catalog)
-        if sampling else []
-    )
+    The rewritten statement (``tails`` re-appended) is planned whole, so
+    tails, aliases, GROUP BY shapes, multi-aggregate composition and catalog
+    routing all behave exactly as if the user had typed the accuracy
+    arguments by hand. The statement is rebuilt structurally — a textual
+    substitution could splice into unrelated text."""
+    ratios = iter(ratios)
     sel_items = []
     for fn, args, alias in parsed:
         if fn == "APPROX_COUNT_DISTINCT":
@@ -4558,7 +4459,7 @@ def _within_error(spark, wm, tables, catalog, catalog_key) -> DataFrame:
         stmt += f" WHERE {m.group('where')}"
     if m.group("group"):
         stmt += f" GROUP BY {m.group('group')}"
-    return approx_sql(spark, stmt + tails, tables, catalog, catalog_key)
+    return stmt + tails
 
 
 # ---------------------------------------------------------------------------
@@ -4607,9 +4508,8 @@ def _shape_rollup_level(out, keep: tuple[int, ...], cols: list[str],
 
 def _rollup_sets(rmu) -> tuple[list[str], list[tuple[int, ...]]]:
     """(key columns, grouping sets as kept-index tuples, finest first) of a
-    matched ROLLUP / CUBE / GROUPING SETS clause — shared by execution and
-    EXPLAIN; ValueError on a duplicate column, an empty GROUPING SETS or a
-    CUBE over more than 4 columns."""
+    matched ROLLUP / CUBE / GROUPING SETS clause; ValueError on a duplicate
+    column, an empty GROUPING SETS or a CUBE over more than 4 columns."""
     if rmu.group("gsets"):
         # explicit GROUPING SETS ((a, b), (a), ()): the key-column list is
         # the first-appearance UNION of the sets (GROUPING() bitmask order,
@@ -4651,8 +4551,7 @@ def _rollup_sets(rmu) -> tuple[list[str], list[tuple[int, ...]]]:
 def _rollup_states_spec(reg, key: str, fn: str, args: list, cols: list[str], where) -> dict:
     """The serving spec of sketch set ``reg`` named by an explicit
     ``catalog_key`` for a ROLLUP/CUBE statement over ``cols`` — the
-    refusals such a key can meet, shared by execution and EXPLAIN: states
-    take no WHERE, and they must be registered at exactly the finest grain
+    refusals such a key can meet: states take no WHERE, and they must be registered at exactly the finest grain
     (coarser sets are merged down from it)."""
     if where:
         raise ValueError(_STATES_WHERE_MSG)
@@ -4666,7 +4565,7 @@ def _rollup_states_spec(reg, key: str, fn: str, args: list, cols: list[str], whe
     return _serving_spec(reg, fn, args, key)
 
 
-def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
+def _run_rollup(spark, p: Plan, tables, catalog) -> DataFrame:
     """One approx aggregate ``GROUP BY ROLLUP(a, b)`` / ``CUBE(a, b)``.
 
     Sketch-served aggregates (COUNT_DISTINCT / PERCENTILE / TOPK / TOP_SUM)
@@ -4681,39 +4580,31 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
     ``grouping_lvl`` = the SQL GROUPING() bitmask (leftmost column = most
     significant bit; 0 = finest), then the aggregate's usual
     estimate/bound columns — matching ``GROUP BY ROLLUP`` + ``GROUPING()``
-    in ANSI SQL engines row for row.
+    in ANSI SQL engines row for row. The plan's route says which build
+    serves: ``rollup_states`` (the explicit key's finest-grain states),
+    ``rollup_build`` (one on-the-fly build) or ``rollup_levels`` (the
+    per-grouping-set recursion).
     """
     from pyspark.sql import functions as F
 
-    select = m.group("select")
-    aggs = [(f.upper(), _split_args(a)) for f, a in _AGG.findall(select)]
-    aliased = _AGG_ALIASED.findall(select)
-    if len(aggs) != 1 or (aliased and aliased[0][2]):
-        raise ValueError(
-            "GROUP BY ROLLUP/CUBE takes exactly one un-aliased approx "
-            "aggregate — grouping sets multiply the result rows, so a "
-            "multi-aggregate or aliased head is ambiguous; issue one "
-            "statement per aggregate"
-        )
-    fn, args = aggs[0]
-    cols, sets_ = _rollup_sets(rmu)
+    from sketchlib.spark.build import GROUP_SEP, regroup_states
+
+    m, (fn, args), (cols, sets_, spec) = p.m, p.aggs[0], p.detail
     k = len(cols)
 
     def _recurse() -> DataFrame:
         # one statement per grouping set over the same seed-fixed sample
         # (a registered scramble is reused level to level; the base is
         # never scanned more than the finest build would)
-        core = f"SELECT {select} FROM {m.group('table')}"
+        core = f"SELECT {m.group('select')} FROM {m.group('table')}"
         if m.group("where"):
             core += f" WHERE {m.group('where')}"
         results = []
         for keep in sets_:
             kept = [cols[i] for i in keep]
             stmt = core + (f" GROUP BY {', '.join(kept)}" if kept else "")
-            results.append(
-                approx_sql(spark, stmt, tables, catalog, catalog_key,
-                           estimator=estimator)
-            )
+            results.append(approx_sql(spark, stmt, tables, catalog, p.key,
+                                      estimator=p.estimator))
         # key-column dtypes from whichever result kept each column (with
         # explicit GROUPING SETS no single set need contain them all)
         ftypes: dict[str, str] = {}
@@ -4735,77 +4626,49 @@ def _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator):
             res = res.unionByName(f_)
         return res
 
-    if fn in _CATALOG_KINDS:
-        if estimator == "subsample":
-            raise ValueError(
-                f"{fn} is sketch-served — its bound is not a sampling CI; "
-                "ERROR BY SUBSAMPLING applies to the sampling aggregates"
-            )
-        from sketchlib.spark.build import regroup_states
+    if p.route == "rollup_levels":
+        return _recurse()
+    native: dict[str, str] = {}
+    if p.route == "rollup_states":
+        # finest-grain rows read on the driver: every grouping set is then a
+        # re-keying of these rows (the answerer merges each coarser key in
+        # regroup_states' canonical order), no Spark job
+        rows = catalog.state_rows(p.key, spec["name"])
+        states = catalog.states(p.key) if rows is None else None
+        name, kind = spec["name"], spec["kind"]
+    else:
+        df, sp = _sketch_spec(_base_frame(spark, m, tables), fn, args)
+        # persist the finest-grain states: every grouping set derives from
+        # this ONE frame — without it each level's action would re-run the
+        # base scan, which is exactly what rollup-by-merge exists to avoid
+        states = build_sketches(df, [sp], group_by=list(cols)).persist()
+        native = dict(df.dtypes)
+        name, kind, rows = sp.name, sp.kind, None
 
-        # argument validation BEFORE routing, so every route (states,
-        # on-the-fly, a scramble key's per-level statements) raises alike
-        _sketch_args(fn, args)
-        native: dict[str, str] = {}
-        if catalog is not None and catalog_key is not None:
-            if any(r["name"] == catalog_key
-                   for r in catalog.list_sample_rows()):
-                # a SCRAMBLE key: the per-level statements already know how
-                # to serve this fn from the sample (empirical quantiles /
-                # universe distinct) — recurse rather than refuse
-                return _recurse()
-            spec = _rollup_states_spec(
-                _registration(catalog, catalog_key), catalog_key, fn, args,
-                cols, m.group("where"),
-            )
-            # finest-grain rows read on the driver: every grouping set is
-            # then a re-keying of these rows (the answerer merges each
-            # coarser key in regroup_states' canonical order), no Spark job
-            rows = catalog.state_rows(catalog_key, spec["name"])
-            states = catalog.states(catalog_key) if rows is None else None
-            name, kind = spec["name"], spec["kind"]
-        else:
-            df = _resolve_table(spark, m.group("table"), tables)
-            if m.group("where"):
-                df = _apply_where(spark, df, m.group("where"), tables, m.group("table"))
-            df, sp = _sketch_spec(df, fn, args)
-            # persist the finest-grain states: every grouping set derives
-            # from this ONE frame — without it each level's action would
-            # re-run the base scan, which is exactly what rollup-by-merge
-            # exists to avoid
-            states = build_sketches(df, [sp], group_by=list(cols)).persist()
-            native = dict(df.dtypes)
-            name, kind, rows = sp.name, sp.kind, None
-
-        from sketchlib.spark.build import GROUP_SEP
-
-        frames = []
-        for keep in sets_:
-            st, lvl = states, rows
-            if len(keep) != k:
-                if rows is None:
-                    st = regroup_states(states, list(keep))
-                else:
-                    lvl = []
-                    for r in rows:
-                        parts = r["group"].split(GROUP_SEP)
-                        key = GROUP_SEP.join(parts[i] for i in keep if i < len(parts))
-                        lvl.append({**r, "group": key})
-            out = _sketch_answer(spark, fn, args, st, name, kind, rows=lvl)
-            frames.append(
-                _shape_rollup_level(out, keep, cols, native, _grouping_mask(keep, k))
-            )
-        res = frames[0]
-        for f_ in frames[1:]:
-            res = res.unionByName(f_)
-        if rows is not None:
-            # collecting a union of local relations runs a Spark job; the
-            # levels' rows (each collected without one) make one relation
-            res = local_frame(spark, [r for f_ in frames for r in f_.collect()], res.schema)
-        return res
-
-    # sampling aggregates: per-grouping-set recursion
-    return _recurse()
+    frames = []
+    for keep in sets_:
+        st, lvl = states, rows
+        if len(keep) != k:
+            if rows is None:
+                st = regroup_states(states, list(keep))
+            else:
+                lvl = []
+                for r in rows:
+                    parts = r["group"].split(GROUP_SEP)
+                    key = GROUP_SEP.join(parts[i] for i in keep if i < len(parts))
+                    lvl.append({**r, "group": key})
+        out = _sketch_answer(spark, fn, args, st, name, kind, rows=lvl)
+        frames.append(
+            _shape_rollup_level(out, keep, cols, native, _grouping_mask(keep, k))
+        )
+    res = frames[0]
+    for f_ in frames[1:]:
+        res = res.unionByName(f_)
+    if rows is not None:
+        # collecting a union of local relations runs a Spark job; the
+        # levels' rows (each collected without one) make one relation
+        res = local_frame(spark, [r for f_ in frames for r in f_.collect()], res.schema)
+    return res
 
 
 def approx_sql(
@@ -4854,714 +4717,302 @@ def approx_sql(
     aggregates (TOPK), sketch-states routes, joins, set operations over
     states, stratified scrambles, multi-aggregate lists and WITHIN
     contracts refuse the modifier loudly — their bounds are not sampling
-    CIs a subsample spread could replace."""
-    if catalog is None and catalog_key is not None:
-        raise ValueError(
-            "catalog_key without catalog does nothing — pass catalog=SketchCatalog(...)"
-        )
-    # EXPLAIN over OUR statements (any APPROX_ aggregate, or registry DDL)
-    # answers from the router without executing; an exact EXPLAIN is
-    # Spark's own statement and passes through verbatim (A4)
-    em = re.match(r"^\s*EXPLAIN\s+(?P<stmt>.*)$", sql, re.IGNORECASE | re.DOTALL)
-    if em and (_AGG.search(_mask_literals(em.group("stmt")))
-               or _DDL_HEAD.match(em.group("stmt"))
-               # an ERROR BY SUBSAMPLING tail is OUR grammar even when the
-               # statement has no APPROX_ aggregate — EXPLAIN must report
-               # the refusal, not hand Spark a statement it cannot parse
-               or _SUBSAMPLE_TAIL.match(_mask_literals(em.group("stmt")))):
-        return explain_sql(spark, em.group("stmt"), tables, catalog, catalog_key,
-                           estimator=estimator)
-    ddl = _ddl(spark, sql, tables, catalog)
-    if ddl is not None:
-        return ddl
-    if estimator not in ("clt", "subsample"):
-        raise ValueError(
-            f"estimator must be 'clt' or 'subsample', got {estimator!r}"
-        )
-    ssm = _SUBSAMPLE_TAIL.match(_mask_literals(sql)) and _SUBSAMPLE_TAIL.match(sql)
-    if ssm:
-        sql, estimator = ssm.group("body"), "subsample"
-        if _WITHIN_STUB.search(_mask_literals(sql)):
-            # 'WITHIN 1% ERROR BY SUBSAMPLING' — the tail ate the
-            # contract's ERROR keyword; refuse by name
-            raise ValueError(_WITHIN_SUBSAMPLE_MSG)
-    if estimator == "subsample" and not _AGG.search(_mask_literals(sql)):
-        raise ValueError(
-            "ERROR BY SUBSAMPLING selects the error estimator of an approx "
-            "statement — this statement has no APPROX_ aggregate (exact "
-            "pass-through carries no error columns)"
-        )
-    # classification ignores string literals: 'APPROX_X(1)' inside quotes
-    # must not drag an exact statement into the approx skeleton
-    if not _AGG.search(_mask_literals(sql)):
-        # no APPROX_ aggregate anywhere in the statement → Verdict's
-        # pass-through: exact SQL goes to the backend untouched (A4) —
-        # including plain WITH statements, which Spark SQL parses natively
-        return _exact_passthrough(spark, sql, tables)
-    cte = _extract_ctes(sql)
-    if cte is not None:
-        # WITH + approx: each CTE body runs as its own statement (exact
-        # bodies via pass-through — lazy; approx bodies via approx_sql,
-        # eagerly checkpointed so the groups-sized estimate frame computes
-        # once however often the final statement references it), registered
-        # as temp views, then the final statement recurses through every
-        # path below — so a later CTE can read an earlier one (chained
-        # CTEs), its body resolving the view the previous iteration
-        # registered. A CTE name colliding with a `tables` binding is
-        # REJECTED loudly: the dict is authoritative in every resolution
-        # path (_resolve_table checks it before views), so the CTE would
-        # be silently shadowed — estimates computed over the wrong
-        # relation with no error is the worst failure shape.
-        ctes, final = cte
-        views = []
-        try:
-            for name, body in ctes:
-                if tables and name in tables:
-                    raise ValueError(
-                        f"CTE name {name!r} collides with a `tables` binding — "
-                        "the dict is authoritative in table resolution, so the "
-                        "CTE would be silently shadowed; rename the CTE"
-                    )
-                if _AGG.search(_mask_literals(body)):
-                    df = approx_sql(spark, body, tables, catalog, None).localCheckpoint(eager=True)
-                else:
-                    df = _exact_passthrough(spark, body, tables)
-                df.createOrReplaceTempView(name)
-                views.append(name)
-            return approx_sql(spark, final, tables, catalog, catalog_key,
-                              estimator=estimator)
-        finally:
-            for v in views:
-                spark.catalog.dropTempView(v)
-    sub = _extract_subquery(sql)
-    if sub is not None:
-        # Verdict's A16 recursion: the DERIVED TABLE is computed first, the
-        # approx aggregate runs on top of it. Extracted BEFORE tail peeling
-        # so an inner HAVING/ORDER BY/LIMIT stays inside the subquery;
-        # registered as a per-call-unique temp view so the rewritten outer
-        # statement takes every path below (tails, routing, ...), then
-        # dropped (plans are resolved at DataFrame analysis — the view is
-        # not needed after).
-        if catalog_key is not None:
-            raise ValueError(
-                "catalog_key cannot answer a derived-table statement — the "
-                "registered artifact was built over the BASE table, not the "
-                "subquery's filtered/derived rows; drop catalog_key to "
-                "compute over the derived table"
-            )
-        head, inner, tail = sub
-        setop = _setop_route(head, inner, tail)
-        if setop is not None and estimator == "subsample":
-            raise ValueError(
-                "set operations are answered from sketch states, whose "
-                "bounds are not sampling CIs — ERROR BY SUBSAMPLING applies "
-                "to the sampling aggregates (single table or UNION ALL over "
-                "persisted uniform samples)"
-            )
-        if setop is not None:
-            res = _approx_setop(spark, setop, tables, catalog)
-            if res is not None:
-                return res  # None = grouped UNION without states → rewrite
-        merged = None if estimator == "subsample" else _unionall_merge_route(head, inner, tail)
-        if merged is not None:
-            mfn, margs, msides, malias, mgrouped = merged
-            if mgrouped is None:
-                mpicks = _resolve_merge_states(mfn, msides, margs, tables, catalog)
-            else:
-                idents = _setop_side_idents(msides, mgrouped)
-                mpicks = None if idents is None else _resolve_merge_states(
-                    mfn, msides, margs, tables, catalog,
-                    cols=idents[0], group_cols=idents[1],
-                )
-            if mpicks is not None:
-                return _unionall_from_states(
-                    spark, mfn, margs, malias, mpicks, catalog, mgrouped
-                )
-            # no compatible registrations → the generic derived-table path
-            # materializes the UNION ALL (plan concatenation) and builds
-        sroute = _unionall_sample_route(head, inner, tail)
-        if sroute is not None:
-            sfn, sargs, ssides, salias, sgrouped = sroute
-            spicks = _resolve_unionall_samples(sfn, ssides, sargs, tables, catalog)
-            if spicks is not None:
-                res = _unionall_from_samples(
-                    spark, sfn, sargs, salias, spicks, catalog, sgrouped,
-                    ssides, tables, estimator=estimator,
-                )
-                if res is not None:
-                    return res  # None = non-numeric type mix → generic path
-        rewritten = _union_all_rewrite(head, inner)
-        if rewritten is not None:
-            inner = rewritten  # distinct shuffle elided; answer identical
-        view = f"_approx_subquery_{next(_SUBQUERY_IDS)}"
-        if _AGG.search(_mask_literals(inner)):
-            # APPROX-OVER-APPROX (Verdict recursed approximation through
-            # nested relations): the inner statement is itself evaluated
-            # via approx_sql (auto-routing/catalog apply to it), eagerly
-            # checkpointed — the inner result is groups-sized, and the
-            # caveat stats below plus the outer aggregate must not each
-            # re-run the inner build — and the outer statement sketches on
-            # top of the ESTIMATE frame. The outer bound covers only the
-            # outer stage's error, so the inner stage's error is surfaced
-            # as an explicit caveat column: ``inner_rel_err_max`` = the
-            # largest relative half-width among the inner estimates (for
-            # rank-bounded inner results, the largest rank error). The
-            # composed uncertainty is NOT folded into the outer bound in
-            # general — the two stages' errors can be in different units
-            # (value vs rank) — EXCEPT where they provably share units:
-            # an outer SUM/AVG of an inner ESTIMATE column is linear in
-            # its inputs, so the inner stage shifts the outer answer by
-            # at most Σ|err_i| (SUM) / Σ|err_i|/n (AVG) — the perfectly-
-            # correlated worst case, hence a conservative first-order
-            # bound. That case additionally emits ``inner_abs_err`` (the
-            # propagated inner bound in the outer aggregate's units) and
-            # ``composed_err_bound`` (outer CI + propagated inner), so
-            # composition is not left to the reader. Grouped outer
-            # statements keep the caveat-only form (propagation would
-            # need the inner rows regrouped per outer key).
-            inner_df = approx_sql(spark, inner, tables, catalog, None).localCheckpoint(eager=True)
-            from pyspark.sql import functions as F
+    CIs a subsample spread could replace.
 
-            # VERDICT r5 "what's wrong" #2: the caveat stats are one-row
-            # aggregates — compute them with agg() over the checkpointed
-            # inner frame instead of materializing the whole frame on the
-            # driver (a b23-shaped inner statement has 10⁴–10⁵ groups).
-            # ONE small job collects: row count, every relative-error
-            # candidate (_rel_err_agg_exprs, pandas-parity NaN guards), the
-            # NULL-group-key count (a NULL key would silently UNDERSTATE
-            # the composed bound — Spark's equi-join never matches NULL —
-            # so NULL keys demote to caveat-only), and the global
-            # propagated term when the statement shape composes.
-            icols = inner_df.columns
-            idts = dict(inner_df.dtypes)
-            outer_aggs = [(f.upper(), _split_args(a)) for f, a in _AGG.findall(head)]
-            masked_tail = _mask_literals(tail)
-            # composition shapes: a bare tail (global reduce), or a tail of
-            # exactly [WHERE pred] GROUP BY <one column of the inner frame>
-            # (per-group reduce — the propagated term is then computed PER
-            # OUTER GROUP from the inner rows and joined back). ORDER
-            # BY/LIMIT tails are left caveat-only: the join-back would not
-            # preserve the requested ordering.
-            m_grp = re.fullmatch(
-                r"\s*(?:WHERE\s+.+?\s+)?GROUP\s+BY\s+(\w+)\s*;?\s*",
-                masked_tail, re.IGNORECASE | re.DOTALL,
-            )
-            gcol = m_grp.group(1) if (m_grp is not None and m_grp.group(1) in icols) else None
-            global_ok = not re.search(r"GROUP\s+BY", masked_tail, re.IGNORECASE)
+    The statement is classified once (``_plan``); a statement the plan
+    refuses raises its ValueError before anything is read, and ``EXPLAIN
+    <statement>`` renders the plan (``explain_sql``) instead of running it."""
+    plan = node = _plan(spark, sql, tables, catalog, catalog_key, estimator)
+    # every nested plan runs when its parent does, so a refusal anywhere in
+    # the chain raises before a CTE body or derived table is computed
+    while node.refusal is None and node.nested is not None and node.route != "explain":
+        node = node.nested
+    if node.refusal is not None:
+        raise ValueError(node.refusal)
+    return _run(spark, plan, tables, catalog)
 
-            rel_exprs = _rel_err_agg_exprs(icols)
-            stat_aggs = [F.count(F.lit(1)).alias("_n")] + [
-                e.alias(f"_r{i}") for i, e in enumerate(rel_exprs)
-            ]
-            if gcol is not None:
-                null_key = F.col(gcol).isNull()
-                if idts.get(gcol) in ("double", "float"):
-                    null_key = null_key | F.isnan(F.col(gcol))
-                stat_aggs.append(F.sum(null_key.cast("long")).alias("_gnull"))
-            compose_fn, err_expr = None, None
-            if len(outer_aggs) == 1:
-                ofn, oargs = outer_aggs[0]
-                # a WHERE tail restricts the outer aggregate to a SUBSET of
-                # inner rows. SUM stays conservative (Σ|err_i| over all ≥
-                # over any subset) but AVG does not — the filter can select
-                # exactly the rows with the largest errors, making the
-                # full-frame/per-group mean an UNDER-estimate — so AVG
-                # composition is skipped under WHERE (caveat-only, never a
-                # too-small bound)
-                if ofn == "APPROX_AVG" and re.search(r"\bWHERE\b", masked_tail, re.IGNORECASE):
-                    ofn = None
-                if ofn in ("APPROX_SUM", "APPROX_AVG") and oargs and _IDENT.match(oargs[0]):
-                    err_expr = _inner_abs_err_expr(icols, oargs[0])
-                    if err_expr is not None:
-                        compose_fn = ofn
-                        prop_agg = (
-                            F.sum(err_expr) if ofn == "APPROX_SUM" else F.avg(err_expr)
-                        )
-                        stat_aggs.append(prop_agg.alias("_prop"))
-            stats = inner_df.agg(*stat_aggs).collect()[0]
 
-            n_inner = int(stats["_n"])
-            if n_inner == 0:
-                caveat = 0.0
-            else:
-                rels = [stats[f"_r{i}"] for i in range(len(rel_exprs))]
-                rels = [float(v) for v in rels if v is not None]
-                caveat = max(rels) if rels else float("nan")
+def _run(spark, p: Plan, tables, catalog) -> DataFrame:
+    """Execute plan ``p`` (refusal-free: approx_sql raises first): the route
+    ``_plan`` chose, nothing re-decided."""
+    route = p.route
+    if route == "explain":
+        return _explain_frame(spark, p.nested)
+    if route == "ddl":
+        return _ddl(spark, p.sql, tables, catalog)
+    if route == "exact":
+        return _exact_passthrough(spark, p.sql, tables)
+    if route == "cte":
+        return _run_cte(spark, p, tables, catalog)
+    if route == "derived":
+        return _run_derived(spark, p, tables, catalog)
+    if route == "setop":
+        return _approx_setop(spark, p.m, p.detail, tables, catalog)
+    if route == "unionall_merge":
+        fn, args, _sides, alias, grouped = p.m
+        return _unionall_from_states(spark, fn, args, alias, p.detail, catalog, grouped)
+    if route == "unionall_sample":
+        fn, args, sides, alias, grouped = p.m
+        return _unionall_from_samples(spark, fn, args, alias, p.detail, catalog, grouped,
+                                      sides, tables, estimator=p.estimator)
+    if route == "within":
+        return _run(spark, p.nested, tables, catalog)
+    if route == "within_pilot":
+        cm, parsed, tails, t, z, sampling = p.detail
+        ratios = _pilot_ratios(spark, cm, sampling, _parse_group(cm.group("group")),
+                               tables, z, t, catalog=catalog)
+        return approx_sql(spark, _within_rewrite(cm, parsed, tails, t, z, ratios),
+                          tables, catalog, p.key)
+    if route in ("ORDER BY", "LIMIT", "HAVING"):
+        return _run_tail(spark, p, tables, catalog)
+    if route == "join_rows":
+        return _approx_join_rows(spark, p.m, tables, catalog, *p.detail)
+    if route == "join3":
+        return _alias_join_out(_approx_join3(spark, p.m, tables, catalog, p.key), p.m)
+    if route == "join":
+        return _alias_join_out(_approx_join(spark, p.m, tables, catalog, p.key), p.m)
+    if route.startswith("rollup"):
+        return _run_rollup(spark, p, tables, catalog)
+    if route == "aliased":
+        return _run_aliased(spark, p, tables, catalog)
+    if route == "multi_routed":
+        return _run_multi_routed(spark, p, tables, catalog)
+    if route == "multi_build":
+        return _multi_agg(spark, _base_frame(spark, p.m, tables), list(p.aggs), p.group)
+    return _run_single(spark, p, tables, catalog)
 
-            inner_df.createOrReplaceTempView(view)
-            try:
-                out = approx_sql(spark, f"{head} FROM {view}{tail}", tables,
-                                 catalog, None, estimator=estimator)
-            finally:
-                spark.catalog.dropTempView(view)
-            out = out.withColumn("inner_rel_err_max", F.lit(caveat))
-            grouped_ok = gcol is not None and int(stats["_gnull"] or 0) == 0
-            if compose_fn is not None and n_inner > 0 and (global_ok or grouped_ok):
-                ocol = "sum_err" if compose_fn == "APPROX_SUM" else "avg_err"
-                if global_ok:
-                    prop = stats["_prop"]
-                    if prop is None:  # all-NaN errs: pandas sum→0.0, mean→NaN
-                        prop = 0.0 if compose_fn == "APPROX_SUM" else float("nan")
-                    prop = float(prop)
-                    out = out.withColumn("inner_abs_err", F.lit(prop)).withColumn(
-                        "composed_err_bound", F.col(ocol) + F.lit(prop)
-                    )
-                else:
-                    # per-group propagated term: a KB-sized groupBy over the
-                    # checkpointed inner frame, broadcast-joined back — the
-                    # full inner frame never reaches the driver
-                    per_agg = (
-                        F.sum(err_expr) if compose_fn == "APPROX_SUM" else F.avg(err_expr)
-                    )
-                    prop_df = inner_df.groupBy(gcol).agg(per_agg.alias("_inner_abs"))
-                    if compose_fn == "APPROX_AVG":
-                        # group whose errs are ALL NaN: pandas mean is NaN —
-                        # keep NaN (never a silently-small composed bound)
-                        # and let the join-miss coalesce below cover only
-                        # truly absent groups with 0.0
-                        prop_df = prop_df.withColumn(
-                            "_inner_abs",
-                            F.coalesce(F.col("_inner_abs"), F.lit(float("nan"))),
-                        )
-                    out = (
-                        out.join(F.broadcast(prop_df), gcol, "left")
-                        .withColumn(
-                            "inner_abs_err",
-                            F.coalesce(F.col("_inner_abs"), F.lit(0.0)),
-                        )
-                        .drop("_inner_abs")
-                        .withColumn(
-                            "composed_err_bound", F.col(ocol) + F.col("inner_abs_err")
-                        )
-                    )
-            return out
-        _exact_passthrough(spark, inner, tables).createOrReplaceTempView(view)
-        try:
-            return approx_sql(spark, f"{head} FROM {view}{tail}", tables,
-                              catalog, None, estimator=estimator)
-        finally:
-            spark.catalog.dropTempView(view)
-    wm = _WITHIN_TAIL.match(_mask_literals(sql)) and _WITHIN_TAIL.match(sql)
-    if wm:
-        if estimator == "subsample":
-            raise ValueError(_WITHIN_SUBSAMPLE_MSG)
-        return _within_error(spark, wm, tables, catalog, catalog_key)
-    tm = _ORDER_TAIL.match(sql)
-    if tm:
-        inner = approx_sql(spark, tm.group("body"), tables, catalog, catalog_key,
-                           estimator=estimator)
-        # single-column sketch paths emit the generic 'group' column; let
-        # ORDER BY name the user's GROUP BY column anyway
-        rename = {}
-        gm = re.search(
-            r"GROUP\s+BY\s+(\w+)\s*(?:HAVING\b.*)?$",  # a HAVING tail may trail
-            tm.group("body"), re.IGNORECASE | re.DOTALL,
-        )
-        if gm and gm.group(1) not in inner.columns and "group" in inner.columns:
-            rename[gm.group(1).lower()] = "group"
-        inner = inner.orderBy(*_order_cols(tm.group("keys"), rename))
-        return inner.limit(int(tm.group("n"))) if tm.group("n") else inner
-    tm = _LIMIT_TAIL.match(sql)
-    if tm:
-        return approx_sql(
-            spark, tm.group("body"), tables, catalog, catalog_key,
-            estimator=estimator,
-        ).limit(int(tm.group("n")))
-    tm = _HAVING_TAIL.match(sql)
-    if tm:
-        return approx_sql(
-            spark, tm.group("body"), tables, catalog, catalog_key,
-            estimator=estimator,
-        ).filter(tm.group("pred"))
-    jr = _JOIN_ROWS_SKELETON.match(sql)
-    if jr:
-        if estimator == "subsample":
-            raise ValueError(
-                "APPROX_JOIN_ROWS is sketch-served (CM inner product) — its "
-                "bound is not a sampling CI; ERROR BY SUBSAMPLING applies "
-                "to the sampling aggregates"
-            )
-        return _approx_join_rows(spark, jr, tables, catalog, catalog_key)
-    jm3, jm2 = _JOIN3_SKELETON.match(sql), None
-    if jm3 is None:
-        jm2 = _JOIN_SKELETON.match(sql)
-    if (jm3 or jm2) and estimator == "subsample":
-        raise ValueError(
-            "approx joins report closed-form CIs over the fact-side sample "
-            "— ERROR BY SUBSAMPLING supports single-table sampling "
-            "aggregates (and UNION ALL over persisted uniform samples)"
-        )
-    if jm3:
-        return _alias_join_out(_approx_join3(spark, jm3, tables, catalog, catalog_key), jm3)
-    if jm2:
-        return _alias_join_out(_approx_join(spark, jm2, tables, catalog, catalog_key), jm2)
-    m = _SKELETON.match(sql)
-    if not m:
-        raise ValueError(
-            "unsupported statement — approx_sql accepts only "
-            "'SELECT APPROX_*(...) FROM t [WHERE expr] [GROUP BY col]'; "
-            "use the DataFrame API (sketchlib.spark) for anything richer"
-        )
-    rmu = _ROLLUP_GROUP.match(m.group("group") or "")
-    if rmu:
-        return _run_rollup(spark, m, rmu, tables, catalog, catalog_key, estimator)
-    aliased = _AGG_ALIASED.findall(m.group("select"))
-    if any(al for *_, al in aliased):
-        return _run_aliased(spark, m, aliased, tables, catalog, catalog_key,
-                            estimator=estimator)
-    aggs = [(f.upper(), _split_args(argstr)) for f, argstr in _AGG.findall(m.group("select"))]
-    group = _parse_group(m.group("group"))
 
-    if estimator == "subsample":
-        if len(aggs) > 1:
-            raise ValueError(
-                "ERROR BY SUBSAMPLING takes one aggregate per statement — "
-                "issue one statement per aggregate"
-            )
-        if aggs[0][0] not in _SUBSAMPLE_FNS:
-            raise ValueError(
-                f"{aggs[0][0]} is sketch-served — its bound is not a "
-                "sampling CI a subsample spread could replace; ERROR BY "
-                f"SUBSAMPLING applies to {'/'.join(_SUBSAMPLE_FNS)}"
-            )
-        if aggs[0][0] == "APPROX_PERCENTILE" and (
-            _percentile_args(aggs[0][1])[1:] != (None, None)
-            or _pct_weight(aggs[0][1]) is not None
-        ):
-            raise ValueError(
-                "give ONE estimator — rank_err/rel_err/weight are static "
-                "sketch-route arguments (KLL / DDSketch / weighted tdigest) "
-                "and ERROR BY SUBSAMPLING is a data-driven row estimator; "
-                "they cannot combine"
-            )
-        if aggs[0][0] == "APPROX_COUNT_DISTINCT" and len(aggs[0][1]) > 1:
-            raise ValueError(
-                "give ONE accuracy spec — an explicit rse is a static "
-                "sketch-route guarantee a universe scramble cannot promise "
-                "(its achieved rse depends on the unknown distinct count); "
-                "drop the rse or drop ERROR BY SUBSAMPLING"
-            )
-
-    if len(aggs) > 1:
-        if catalog is not None and catalog_key is not None:
-            raise ValueError(_MULTI_KEY_MSG)
-        if catalog is not None:
-            routed = _multi_agg_routed(
-                spark, aggs, group, m.group("where"), m.group("table"), tables, catalog
-            )
-            if routed is not None:
-                return routed
-        df = _resolve_table(spark, m.group("table"), tables)
-        if m.group("where"):
-            df = _apply_where(spark, df, m.group("where"), tables, m.group("table"))
-        return _multi_agg(spark, df, aggs, group)
-
-    fn, args = aggs[0]
-
-    if catalog is not None and catalog_key is None:
-        # Verdict's auto-selection: the user passed a catalog but named no
-        # artifact — pick the best registered states/sample for this
-        # statement (None → fall through to the on-the-fly build below)
-        catalog_key = _resolve_key(
-            fn, args, group, bool(m.group("where")), m.group("table"), tables, catalog,
-            uniform_samples_only=(estimator == "subsample"),
-        )
-
-    if catalog is not None and catalog_key is not None:
-        import json
-
-        # persisted SAMPLE tables serve the sampling aggregates (A5 for
-        # APPROX_COUNT/SUM/AVG and the universe COUNT DISTINCT path).
-        # WHERE is legal here — exactly Verdict's behavior of applying the
-        # predicate to the scramble scan: filtering COMMUTES with row/domain
-        # sampling (each surviving row/key was still included independently
-        # with the registered probability), so the same 1/p scale-up is
-        # unbiased for the filtered population. Sketch STATES (below) are
-        # pre-reduced and cannot take post-hoc predicates.
-        if catalog.sample_exists(catalog_key):
-            meta = catalog.sample_meta(catalog_key)
-            s = catalog.sample(catalog_key)
-            # subsample b-sizing policy, ONE place for every aggregate
-            # below: the registered row count sizes b only when the whole
-            # scramble is read — under WHERE a selective predicate can
-            # leave ~1 row per block (b sized for the unfiltered table),
-            # collapsing the subsample geometry, so the FILTERED sample is
-            # counted instead (one extra pass over the p-fraction
-            # scramble, never the corpus)
-            ss_n = None if m.group("where") else int(meta["rows_sampled"])
-            if m.group("where"):
-                s = _apply_where(spark, s, m.group("where"), tables, m.group("table"))
-            if fn in ("APPROX_COUNT", "APPROX_SUM", "APPROX_AVG"):
-                if meta["kind"] not in ("uniform", "stratified"):
-                    raise ValueError(
-                        f"{fn} needs a uniform or stratified sample; {catalog_key!r} is {meta['kind']}"
-                    )
-                from pyspark.sql import functions as F
-
-                from sketchlib.spark.sampling import (
-                    approx_agg_from_stratified_sample,
-                    approx_agg_from_uniform_sample,
-                )
-
-                if fn == "APPROX_COUNT":
-                    col, s = "_one", s.withColumn("_one", F.lit(1.0))
-                else:
-                    s, col = _materialize_expr(s, args[0])
-                keep = {
-                    "APPROX_COUNT": ["est_count", "count_err"],
-                    "APPROX_SUM": ["est_sum", "sum_err"],
-                    "APPROX_AVG": ["est_avg", "avg_err"],
-                }[fn]
-                if estimator == "subsample":
-                    if meta["kind"] != "uniform":
-                        raise ValueError(
-                            "ERROR BY SUBSAMPLING needs a UNIFORM scramble "
-                            "(one shared Bernoulli inclusion probability — "
-                            "a stratified sample's mixed fractions break the "
-                            f"subsample geometry); {catalog_key!r} is "
-                            f"{meta['kind']}"
-                        )
-                    from sketchlib.spark.subsample import (
-                        subsample_agg_from_uniform_sample,
-                    )
-
-                    def _uagg(frame, gname):
-                        return subsample_agg_from_uniform_sample(
-                            frame, gname, col, meta["ratio"],
-                            n_total=ss_n, seed=int(meta["seed"]),
-                        )
-                else:
-                    def _uagg(frame, gname):
-                        return approx_agg_from_uniform_sample(
-                            frame, gname, col, meta["ratio"]
-                        )
-                if meta["kind"] == "stratified":
-                    fractions = json.loads(meta["fractions_json"])
-                    if group is None:
-                        # global totals: per-stratum HT estimates summed, mean
-                        # via the cross-strata ratio estimator (delta-method CI)
-                        from sketchlib.spark.sampling import stratified_global_agg
-
-                        out = stratified_global_agg(s, meta["on_col"], col, fractions)
-                        return out.select(*keep)
-                    if group != meta["on_col"]:
-                        raise ValueError(
-                            f"stratified sample {catalog_key!r} is keyed by "
-                            f"{meta['on_col']!r}; GROUP BY must match"
-                        )
-                    out = approx_agg_from_stratified_sample(s, group, col, fractions)
-                elif isinstance(group, (list, tuple)):
-                    # composite key over a persisted scramble: aggregate on
-                    # the derived key string, split back into native columns
-                    s, gcol = _with_gkey(s, group)
-                    out = _uagg(s, gcol)
-                    out = out.withColumnRenamed(gcol, "group").select("group", *keep)
-                    return _finish_grouped(out, s, group)
-                else:
-                    out = _uagg(s, group)
-                return out.select(*([group] if group else []), *keep)
-            if fn in ("APPROX_VARIANCE", "APPROX_STDDEV", "APPROX_COVAR", "APPROX_CORR"):
-                if meta["kind"] != "uniform":
-                    raise ValueError(
-                        f"{fn} needs a UNIFORM sample (one shared inclusion "
-                        f"probability — mixed stratified fractions would bias the "
-                        f"pooled moments); {catalog_key!r} is {meta['kind']}"
-                    )
-                from sketchlib.spark.sampling import (
-                    approx_agg_from_uniform_sample,
-                    approx_bivariate_from_uniform_sample,
-                )
-
-                bivar = fn in ("APPROX_COVAR", "APPROX_CORR")
-                s, col = _materialize_expr(s, args[0])
-                if bivar:
-                    s, ycol = _materialize_expr(s, args[1])
-                keep = {
-                    "APPROX_VARIANCE": ["est_variance", "variance_err"],
-                    "APPROX_STDDEV": ["est_stddev", "stddev_err"],
-                    "APPROX_COVAR": ["est_covar", "covar_err"],
-                    "APPROX_CORR": ["est_corr", "corr_err"],
-                }[fn]
-
-                if estimator == "subsample":
-                    from sketchlib.spark.subsample import (
-                        subsample_agg_from_uniform_sample,
-                        subsample_bivariate_from_uniform_sample,
-                    )
-
-                    def _run(frame, gname):
-                        if bivar:
-                            return subsample_bivariate_from_uniform_sample(
-                                frame, gname, col, ycol, meta["ratio"],
-                                n_total=ss_n, seed=int(meta["seed"]),
-                            )
-                        return subsample_agg_from_uniform_sample(
-                            frame, gname, col, meta["ratio"], moments=True,
-                            n_total=ss_n, seed=int(meta["seed"]),
-                        )
-                else:
-                    def _run(frame, gname):
-                        if bivar:
-                            return approx_bivariate_from_uniform_sample(
-                                frame, gname, col, ycol, meta["ratio"]
-                            )
-                        return approx_agg_from_uniform_sample(
-                            frame, gname, col, meta["ratio"], moments=True
-                        )
-
-                if isinstance(group, (list, tuple)):
-                    s, gcol = _with_gkey(s, group)
-                    out = _run(s, gcol)
-                    out = out.withColumnRenamed(gcol, "group").select("group", *keep)
-                    return _finish_grouped(out, s, group)
-                out = _run(s, group)
-                return out.select(*([group] if group else []), *keep)
-            if fn == "APPROX_COUNT_DISTINCT":
-                col = args[0]
-                if meta["kind"] != "universe" or meta["on_col"] != col:
-                    raise ValueError(
-                        f"APPROX_COUNT_DISTINCT({col}) needs a universe sample on {col!r}; "
-                        f"{catalog_key!r} is {meta['kind']} on {meta['on_col']!r}"
-                    )
-                from sketchlib.spark.sampling import count_distinct_from_universe_sample
-
-                if estimator == "subsample":
-                    from sketchlib.spark.subsample import (
-                        subsample_count_distinct_from_universe_sample,
-                    )
-
-                    def _cd(frame, gname):
-                        return subsample_count_distinct_from_universe_sample(
-                            frame, gname, col, meta["ratio"], seed=int(meta["seed"])
-                        )
-                else:
-                    def _cd(frame, gname):
-                        return count_distinct_from_universe_sample(
-                            frame, col, meta["ratio"], group_by=gname
-                        )
-                if isinstance(group, (list, tuple)):
-                    s, gcol = _with_gkey(s, group)
-                    out = _cd(s, gcol).withColumnRenamed(gcol, "group")
-                    return _finish_grouped(out, s, group)
-                return _cd(s, group)
-            if fn == "APPROX_PERCENTILE":
-                # Verdict's A12 over the scramble: EXACT percentile of the
-                # persisted sample rows (the sampling is the approximation).
-                # Rank error of an empirical quantile from a Bernoulli(p)
-                # sample of n_s rows: se ≈ √(q(1−q)/n_s) in rank terms (CLT
-                # for the empirical process), reported at z=1.96.
-                from pyspark.sql import functions as F
-
-                if _pct_weight(args) is not None:
-                    raise ValueError(_PCT_WEIGHT_SAMPLE_MSG)
-                if meta["kind"] not in ("uniform", "stratified"):
-                    raise ValueError(
-                        f"APPROX_PERCENTILE needs a uniform or stratified sample; "
-                        f"{catalog_key!r} is {meta['kind']}"
-                    )
-                if meta["kind"] == "stratified" and group != meta["on_col"]:
-                    raise ValueError(
-                        f"stratified sample {catalog_key!r} is keyed by "
-                        f"{meta['on_col']!r}; GROUP BY must match (per-group "
-                        "quantiles across mixed-fraction strata would be biased)"
-                    )
-                s, col = _materialize_expr(s, args[0])
-                qs, req_rank, req_rel = _percentile_args(args)
-                if req_rank is not None or req_rel is not None:
-                    raise ValueError(
-                        "a rank_err/rel_err contract cannot be served from a "
-                        "scramble — the empirical quantile's error depends on "
-                        "the sample's row count, so no static guarantee "
-                        "exists; route to KLL/DDSketch states (drop "
-                        "catalog_key for auto-selection) or drop the contract"
-                    )
-                s, gcol = _with_gkey(s, group)
-                gsel = [gcol] if gcol else []
-                if estimator == "subsample":
-                    # value-unit quantile CIs — the subsample spread folds
-                    # the (closed-form-less) density at the quantile into
-                    # the per-block estimates; rank bounds stay the CLT
-                    # path's output shape
-                    if meta["kind"] != "uniform":
-                        raise ValueError(
-                            "ERROR BY SUBSAMPLING needs a UNIFORM scramble "
-                            f"for APPROX_PERCENTILE; {catalog_key!r} is "
-                            f"{meta['kind']}"
-                        )
-                    from sketchlib.spark.subsample import (
-                        subsample_percentile_from_uniform_sample,
-                    )
-
-                    out = subsample_percentile_from_uniform_sample(
-                        s, gcol, col, qs, meta["ratio"],
-                        n_total=ss_n, seed=int(meta["seed"]),
-                    )
-                    if isinstance(group, (list, tuple)):
-                        out = out.withColumnRenamed("_gkey_sql", "group")
-                        return _finish_grouped(out, s, group)
-                    return out
-                qs_sql = ", ".join(repr(float(q)) for q in qs)
-                agg = s.groupBy(*gsel).agg(
-                    F.expr(f"percentile({col}, array({qs_sql}))").alias("_vals"),
-                    F.count("*").alias("n_s"),
-                )
-                qlit = F.array(*[F.lit(float(q)) for q in qs])
-                out = (
-                    agg.select(*gsel, F.posexplode("_vals").alias("_i", "value"), "n_s")
-                    .withColumn("q", F.element_at(qlit, F.col("_i") + 1))
-                    .withColumn(
-                        "rank_err_bound",
-                        F.lit(1.96) * F.sqrt(F.col("q") * (1 - F.col("q")) / F.col("n_s")),
-                    )
-                    .select(*gsel, "q", "value", "rank_err_bound")
-                )
-                if isinstance(group, (list, tuple)):
-                    out = out.withColumnRenamed("_gkey_sql", "group")
-                    return _finish_grouped(out, s, group)
-                return out
-            raise ValueError(f"{fn} cannot be answered from a persisted sample table")
-
-        # checked BEFORE the estimator gate: a typo'd key must get the
-        # no-such-artifact message, not "is a sketch-states set"
-        spec = _keyed_states_spec(
-            _registration(catalog, catalog_key), catalog_key, fn, args, group,
-            m.group("where"), estimator,
-        )
-        # the set's state rows, read on the driver (no Spark job) unless
-        # they are over the driver budgets — then the Spark route
-        rows = catalog.state_rows(catalog_key, spec["name"])
-        states = catalog.states(catalog_key) if rows is None else None
-        out = _sketch_answer(spark, fn, args, states, spec["name"], spec["kind"], rows)
-        return _finish_grouped(out, None, group)
-
-    if estimator == "subsample" and fn in ("APPROX_PERCENTILE", "APPROX_COUNT_DISTINCT"):
-        # raised BEFORE the table is resolved: these routes answer ONLY
-        # from registered scrambles, so the refusal must not depend on the
-        # base path still existing (a base-free catalog with a missing
-        # registration would otherwise surface as an AnalysisException)
-        raise ValueError(
-            f"{fn} ERROR BY SUBSAMPLING answers from a registered "
-            + ("UNIVERSE scramble on the column" if fn == "APPROX_COUNT_DISTINCT"
-               else "UNIFORM scramble")
-            + " (pass catalog=... with one created) — the on-the-fly route "
-            + ("builds an HLL sketch, whose bound is deterministic,"
-               if fn == "APPROX_COUNT_DISTINCT" else
-               "builds KLL states, whose rank bound is deterministic,")
-            + " not a subsample CI"
-        )
-
+def _base_frame(spark, m, tables) -> DataFrame:
+    """The skeleton statement's FROM table with its WHERE applied."""
     df = _resolve_table(spark, m.group("table"), tables)
     if m.group("where"):
         df = _apply_where(spark, df, m.group("where"), tables, m.group("table"))
+    return df
 
+
+def _run_cte(spark, p: Plan, tables, catalog) -> DataFrame:
+    """WITH + approx: each CTE body runs as its own statement (exact bodies
+    via pass-through — lazy; approx bodies via approx_sql, eagerly
+    checkpointed so the groups-sized estimate frame computes once however
+    often the final statement references it), registered as temp views —
+    so a later CTE can read an earlier one — then the final statement runs
+    and the views are dropped."""
+    views = []
+    try:
+        for name, body in p.m:
+            if _AGG.search(_mask_literals(body)):
+                df = approx_sql(spark, body, tables, catalog, None).localCheckpoint(eager=True)
+            else:
+                df = _exact_passthrough(spark, body, tables)
+            df.createOrReplaceTempView(name)
+            views.append(name)
+        return _run(spark, p.nested, tables, catalog)
+    finally:
+        for v in views:
+            spark.catalog.dropTempView(v)
+
+
+def _run_derived(spark, p: Plan, tables, catalog) -> DataFrame:
+    """Verdict's A16 recursion: the DERIVED TABLE is computed first and
+    registered as the per-statement temp view the planned outer statement
+    reads, then dropped (plans are resolved at DataFrame analysis — the view
+    is not needed after).
+
+    APPROX-OVER-APPROX (Verdict recursed approximation through nested
+    relations): the inner statement is itself evaluated via approx_sql
+    (auto-routing/catalog apply to it), eagerly checkpointed — the inner
+    result is groups-sized, and the caveat stats below plus the outer
+    aggregate must not each re-run the inner build — and the outer
+    statement sketches on top of the ESTIMATE frame. The outer bound covers
+    only the outer stage's error, so the inner stage's error is surfaced as
+    an explicit caveat column: ``inner_rel_err_max`` = the largest relative
+    half-width among the inner estimates (for rank-bounded inner results,
+    the largest rank error). The composed uncertainty is NOT folded into
+    the outer bound in general — the two stages' errors can be in different
+    units (value vs rank) — EXCEPT where they provably share units: an
+    outer SUM/AVG of an inner ESTIMATE column is linear in its inputs, so
+    the inner stage shifts the outer answer by at most Σ|err_i| (SUM) /
+    Σ|err_i|/n (AVG) — the perfectly-correlated worst case, hence a
+    conservative first-order bound. That case additionally emits
+    ``inner_abs_err`` (the propagated inner bound in the outer aggregate's
+    units) and ``composed_err_bound`` (outer CI + propagated inner), so
+    composition is not left to the reader. Grouped outer statements keep
+    the caveat-only form (propagation would need the inner rows regrouped
+    per outer key)."""
+    head, inner, tail, view = p.m
+    if not _AGG.search(_mask_literals(inner)):
+        _exact_passthrough(spark, inner, tables).createOrReplaceTempView(view)
+        try:
+            return _run(spark, p.nested, tables, catalog)
+        finally:
+            spark.catalog.dropTempView(view)
+    inner_df = approx_sql(spark, inner, tables, catalog, None).localCheckpoint(eager=True)
+    from pyspark.sql import functions as F
+
+    # VERDICT r5 "what's wrong" #2: the caveat stats are one-row
+    # aggregates — compute them with agg() over the checkpointed
+    # inner frame instead of materializing the whole frame on the
+    # driver (a b23-shaped inner statement has 10⁴–10⁵ groups).
+    # ONE small job collects: row count, every relative-error
+    # candidate (_rel_err_agg_exprs, pandas-parity NaN guards), the
+    # NULL-group-key count (a NULL key would silently UNDERSTATE
+    # the composed bound — Spark's equi-join never matches NULL —
+    # so NULL keys demote to caveat-only), and the global
+    # propagated term when the statement shape composes.
+    icols = inner_df.columns
+    idts = dict(inner_df.dtypes)
+    outer_aggs = [(f.upper(), _split_args(a)) for f, a in _AGG.findall(head)]
+    masked_tail = _mask_literals(tail)
+    # composition shapes: a bare tail (global reduce), or a tail of
+    # exactly [WHERE pred] GROUP BY <one column of the inner frame>
+    # (per-group reduce — the propagated term is then computed PER
+    # OUTER GROUP from the inner rows and joined back). ORDER
+    # BY/LIMIT tails are left caveat-only: the join-back would not
+    # preserve the requested ordering.
+    m_grp = re.fullmatch(
+        r"\s*(?:WHERE\s+.+?\s+)?GROUP\s+BY\s+(\w+)\s*;?\s*",
+        masked_tail, re.IGNORECASE | re.DOTALL,
+    )
+    gcol = m_grp.group(1) if (m_grp is not None and m_grp.group(1) in icols) else None
+    global_ok = not re.search(r"GROUP\s+BY", masked_tail, re.IGNORECASE)
+
+    rel_exprs = _rel_err_agg_exprs(icols)
+    stat_aggs = [F.count(F.lit(1)).alias("_n")] + [
+        e.alias(f"_r{i}") for i, e in enumerate(rel_exprs)
+    ]
+    if gcol is not None:
+        null_key = F.col(gcol).isNull()
+        if idts.get(gcol) in ("double", "float"):
+            null_key = null_key | F.isnan(F.col(gcol))
+        stat_aggs.append(F.sum(null_key.cast("long")).alias("_gnull"))
+    compose_fn, err_expr = None, None
+    if len(outer_aggs) == 1:
+        ofn, oargs = outer_aggs[0]
+        # a WHERE tail restricts the outer aggregate to a SUBSET of
+        # inner rows. SUM stays conservative (Σ|err_i| over all ≥
+        # over any subset) but AVG does not — the filter can select
+        # exactly the rows with the largest errors, making the
+        # full-frame/per-group mean an UNDER-estimate — so AVG
+        # composition is skipped under WHERE (caveat-only, never a
+        # too-small bound)
+        if ofn == "APPROX_AVG" and re.search(r"\bWHERE\b", masked_tail, re.IGNORECASE):
+            ofn = None
+        if ofn in ("APPROX_SUM", "APPROX_AVG") and oargs and _IDENT.match(oargs[0]):
+            err_expr = _inner_abs_err_expr(icols, oargs[0])
+            if err_expr is not None:
+                compose_fn = ofn
+                prop_agg = (
+                    F.sum(err_expr) if ofn == "APPROX_SUM" else F.avg(err_expr)
+                )
+                stat_aggs.append(prop_agg.alias("_prop"))
+    stats = inner_df.agg(*stat_aggs).collect()[0]
+
+    n_inner = int(stats["_n"])
+    if n_inner == 0:
+        caveat = 0.0
+    else:
+        rels = [stats[f"_r{i}"] for i in range(len(rel_exprs))]
+        rels = [float(v) for v in rels if v is not None]
+        caveat = max(rels) if rels else float("nan")
+
+    inner_df.createOrReplaceTempView(view)
+    try:
+        out = _run(spark, p.nested, tables, catalog)
+    finally:
+        spark.catalog.dropTempView(view)
+    out = out.withColumn("inner_rel_err_max", F.lit(caveat))
+    grouped_ok = gcol is not None and int(stats["_gnull"] or 0) == 0
+    if compose_fn is not None and n_inner > 0 and (global_ok or grouped_ok):
+        ocol = "sum_err" if compose_fn == "APPROX_SUM" else "avg_err"
+        if global_ok:
+            prop = stats["_prop"]
+            if prop is None:  # all-NaN errs: pandas sum→0.0, mean→NaN
+                prop = 0.0 if compose_fn == "APPROX_SUM" else float("nan")
+            prop = float(prop)
+            out = out.withColumn("inner_abs_err", F.lit(prop)).withColumn(
+                "composed_err_bound", F.col(ocol) + F.lit(prop)
+            )
+        else:
+            # per-group propagated term: a KB-sized groupBy over the
+            # checkpointed inner frame, broadcast-joined back — the
+            # full inner frame never reaches the driver
+            per_agg = (
+                F.sum(err_expr) if compose_fn == "APPROX_SUM" else F.avg(err_expr)
+            )
+            prop_df = inner_df.groupBy(gcol).agg(per_agg.alias("_inner_abs"))
+            if compose_fn == "APPROX_AVG":
+                # group whose errs are ALL NaN: pandas mean is NaN —
+                # keep NaN (never a silently-small composed bound)
+                # and let the join-miss coalesce below cover only
+                # truly absent groups with 0.0
+                prop_df = prop_df.withColumn(
+                    "_inner_abs",
+                    F.coalesce(F.col("_inner_abs"), F.lit(float("nan"))),
+                )
+            out = (
+                out.join(F.broadcast(prop_df), gcol, "left")
+                .withColumn(
+                    "inner_abs_err",
+                    F.coalesce(F.col("_inner_abs"), F.lit(0.0)),
+                )
+                .drop("_inner_abs")
+                .withColumn(
+                    "composed_err_bound", F.col(ocol) + F.col("inner_abs_err")
+                )
+            )
+    return out
+
+
+def _run_tail(spark, p: Plan, tables, catalog) -> DataFrame:
+    """An ORDER BY / LIMIT / HAVING tail over its body statement's answer.
+    HAVING filters the ESTIMATE frame (post-aggregation, like Verdict
+    applying it after scale-up)."""
+    out = _run(spark, p.nested, tables, catalog)
+    if p.route == "LIMIT":
+        return out.limit(int(p.m.group("n")))
+    if p.route == "HAVING":
+        return out.filter(p.m.group("pred"))
+    # single-column sketch paths emit the generic 'group' column; let
+    # ORDER BY name the user's GROUP BY column anyway
+    rename = {}
+    gm = re.search(
+        r"GROUP\s+BY\s+(\w+)\s*(?:HAVING\b.*)?$",  # a HAVING tail may trail
+        p.m.group("body"), re.IGNORECASE | re.DOTALL,
+    )
+    if gm and gm.group(1) not in out.columns and "group" in out.columns:
+        rename[gm.group(1).lower()] = "group"
+    out = out.orderBy(*_order_cols(p.m.group("keys"), rename))
+    return out.limit(int(p.m.group("n"))) if p.m.group("n") else out
+
+
+def _run_single(spark, p: Plan, tables, catalog) -> DataFrame:
+    """One aggregate over one table: from the sketch set or persisted sample
+    the plan picked, else built on the fly over the base table."""
+    (fn, args), = p.aggs
+    group, where, estimator = p.group, p.m.group("where"), p.estimator
+    if p.route == "states":
+        # the set's state rows, read on the driver (no Spark job) unless
+        # they are over the driver budgets — then the Spark route
+        spec = p.detail
+        rows = catalog.state_rows(p.key, spec["name"])
+        states = catalog.states(p.key) if rows is None else None
+        out = _sketch_answer(spark, fn, args, states, spec["name"], spec["kind"], rows)
+        return _finish_grouped(out, None, group)
+    if p.route == "sample":
+        return _run_sample(spark, p, tables, catalog)
+
+    df = _base_frame(spark, p.m, tables)
     if fn in _CATALOG_KINDS:
         df, sp = _sketch_spec(df, fn, args)
         states = build_sketches(df, [sp], group_by=group)
         out = _sketch_answer(spark, fn, args, states, sp.name, sp.kind)
         return _finish_grouped(out, df, group)
 
+    from sketchlib.spark.build import group_key_expr
+    from sketchlib.spark.sampling import uniform_sample
+
     if fn in ("APPROX_COVAR", "APPROX_CORR"):
-        from sketchlib.spark.sampling import approx_bivariate_uniform, uniform_sample
+        from sketchlib.spark.sampling import approx_bivariate_uniform
 
         df, xcol = _materialize_expr(df, args[0])
         df, ycol = _materialize_expr(df, args[1])
@@ -5575,37 +5026,26 @@ def approx_sql(
                 subsample_bivariate_from_uniform_sample,
             )
 
-            def _biv(frame, gname):
+            def _agg(frame, gname):
                 return subsample_bivariate_from_uniform_sample(
                     uniform_sample(frame, ratio, 42), gname, xcol, ycol, ratio
                 )
         else:
-            def _biv(frame, gname):
+            def _agg(frame, gname):
                 return approx_bivariate_uniform(frame, gname, xcol, ycol, ratio)
-        if isinstance(group, (list, tuple)):
-            from sketchlib.spark.build import group_key_expr
+    else:  # COUNT / SUM / AVG / VARIANCE / STDDEV
+        from pyspark.sql import functions as F
 
-            df = df.withColumn("_gkey", group_key_expr(list(group)))
-            out = _biv(df, "_gkey")
-            out = out.withColumnRenamed("_gkey", "group").select("group", *keep)
-            return _finish_grouped(out, df, group)
-        out = _biv(df, group)
-        return out.select(*([group] if group else []), *keep)
-
-    if fn in ("APPROX_COUNT", "APPROX_SUM", "APPROX_AVG", "APPROX_VARIANCE", "APPROX_STDDEV"):
-        from sketchlib.spark.sampling import approx_agg_uniform, uniform_sample
+        from sketchlib.spark.sampling import approx_agg_uniform
 
         moments = fn in ("APPROX_VARIANCE", "APPROX_STDDEV")
         if fn == "APPROX_COUNT":
-            col, ratio = None, float(args[0])
+            # pure COUNT: synthesize a numeric column for the shared kernel
+            col, ratio = "_one", float(args[0])
+            df = df.withColumn("_one", F.lit(1.0))
         else:
             df, col = _materialize_expr(df, args[0])
             ratio = float(args[1])
-        if col is None:  # pure COUNT: synthesize a numeric column for the shared kernel
-            from pyspark.sql import functions as F
-
-            df = df.withColumn("_one", F.lit(1.0))
-            col = "_one"
         keep = {
             "APPROX_COUNT": ["est_count", "count_err"],
             "APPROX_SUM": ["est_sum", "sum_err"],
@@ -5616,24 +5056,173 @@ def approx_sql(
         if estimator == "subsample":
             from sketchlib.spark.subsample import subsample_agg_from_uniform_sample
 
-            def _uagg(frame, gname):
+            def _agg(frame, gname):
                 return subsample_agg_from_uniform_sample(
                     uniform_sample(frame, ratio, 42), gname, col, ratio,
                     moments=moments,
                 )
         else:
-            def _uagg(frame, gname):
+            def _agg(frame, gname):
                 return approx_agg_uniform(frame, gname, col, ratio, moments=moments)
+    if isinstance(group, (list, tuple)):
+        # composite key: aggregate on the kernel's joined string, then
+        # split back into the user's columns
+        df = df.withColumn("_gkey", group_key_expr(list(group)))
+        out = _agg(df, "_gkey")
+        out = out.withColumnRenamed("_gkey", "group").select("group", *keep)
+        return _finish_grouped(out, df, group)
+    out = _agg(df, group)
+    return out.select(*([group] if group else []), *keep)
+
+
+def _run_sample(spark, p: Plan, tables, catalog) -> DataFrame:
+    """A sampling aggregate answered from the persisted SAMPLE table the plan
+    picked (A5 for APPROX_COUNT/SUM/AVG, the moment aggregates, percentiles
+    and the universe COUNT DISTINCT path) — its compatibility already
+    checked by ``_sample_refusal``. WHERE is legal here — exactly Verdict's
+    behavior of applying the predicate to the scramble scan: filtering
+    COMMUTES with row/domain sampling (each surviving row/key was still
+    included independently with the registered probability), so the same
+    1/p scale-up is unbiased for the filtered population."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    (fn, args), = p.aggs
+    group, where, estimator, meta = p.group, p.m.group("where"), p.estimator, p.detail
+    s = catalog.sample(p.key)
+    # subsample b-sizing policy, ONE place for every aggregate below: the
+    # registered row count sizes b only when the whole scramble is read —
+    # under WHERE a selective predicate can leave ~1 row per block (b sized
+    # for the unfiltered table), collapsing the subsample geometry, so the
+    # FILTERED sample is counted instead (one extra pass over the p-fraction
+    # scramble, never the corpus)
+    ss_n = None if where else int(meta["rows_sampled"])
+    if where:
+        s = _apply_where(spark, s, where, tables, p.m.group("table"))
+    if fn == "APPROX_COUNT_DISTINCT":
+        col = args[0]
+        from sketchlib.spark.sampling import count_distinct_from_universe_sample
+
+        if estimator == "subsample":
+            from sketchlib.spark.subsample import (
+                subsample_count_distinct_from_universe_sample,
+            )
+
+            def _cd(frame, gname):
+                return subsample_count_distinct_from_universe_sample(
+                    frame, gname, col, meta["ratio"], seed=int(meta["seed"])
+                )
+        else:
+            def _cd(frame, gname):
+                return count_distinct_from_universe_sample(
+                    frame, col, meta["ratio"], group_by=gname
+                )
         if isinstance(group, (list, tuple)):
-            # composite key: aggregate on the kernel's joined string, then
-            # split back into the user's columns
-            from sketchlib.spark.build import group_key_expr
+            s, gcol = _with_gkey(s, group)
+            out = _cd(s, gcol).withColumnRenamed(gcol, "group")
+            return _finish_grouped(out, s, group)
+        return _cd(s, group)
+    if fn == "APPROX_PERCENTILE":
+        # Verdict's A12 over the scramble: EXACT percentile of the persisted
+        # sample rows (the sampling is the approximation). Rank error of an
+        # empirical quantile from a Bernoulli(p) sample of n_s rows:
+        # se ≈ √(q(1−q)/n_s) in rank terms (CLT for the empirical
+        # process), reported at z=1.96.
+        s, col = _materialize_expr(s, args[0])
+        qs = _percentile_args(args)[0]
+        s, gcol = _with_gkey(s, group)
+        gsel = [gcol] if gcol else []
+        if estimator == "subsample":
+            # value-unit quantile CIs — the subsample spread folds the
+            # (closed-form-less) density at the quantile into the per-block
+            # estimates; rank bounds stay the CLT path's output shape
+            from sketchlib.spark.subsample import subsample_percentile_from_uniform_sample
 
-            df = df.withColumn("_gkey", group_key_expr(list(group)))
-            out = _uagg(df, "_gkey")
-            out = out.withColumnRenamed("_gkey", "group").select("group", *keep)
-            return _finish_grouped(out, df, group)
-        out = _uagg(df, group)
-        return out.select(*([group] if group else []), *keep)
+            out = subsample_percentile_from_uniform_sample(
+                s, gcol, col, qs, meta["ratio"], n_total=ss_n, seed=int(meta["seed"]),
+            )
+        else:
+            qs_sql = ", ".join(repr(float(q)) for q in qs)
+            agg = s.groupBy(*gsel).agg(
+                F.expr(f"percentile({col}, array({qs_sql}))").alias("_vals"),
+                F.count("*").alias("n_s"),
+            )
+            qlit = F.array(*[F.lit(float(q)) for q in qs])
+            out = (
+                agg.select(*gsel, F.posexplode("_vals").alias("_i", "value"), "n_s")
+                .withColumn("q", F.element_at(qlit, F.col("_i") + 1))
+                .withColumn(
+                    "rank_err_bound",
+                    F.lit(1.96) * F.sqrt(F.col("q") * (1 - F.col("q")) / F.col("n_s")),
+                )
+                .select(*gsel, "q", "value", "rank_err_bound")
+            )
+        if isinstance(group, (list, tuple)):
+            out = out.withColumnRenamed("_gkey_sql", "group")
+            return _finish_grouped(out, s, group)
+        return out
 
-    raise ValueError(f"unknown approximate aggregate {fn!r}")
+    from sketchlib.spark.sampling import (
+        approx_agg_from_uniform_sample,
+        approx_bivariate_from_uniform_sample,
+    )
+    from sketchlib.spark.subsample import (
+        subsample_agg_from_uniform_sample,
+        subsample_bivariate_from_uniform_sample,
+    )
+
+    if fn == "APPROX_COUNT":
+        col, s = "_one", s.withColumn("_one", F.lit(1.0))
+    else:
+        s, col = _materialize_expr(s, args[0])
+    bivar = fn in ("APPROX_COVAR", "APPROX_CORR")
+    if bivar:
+        s, ycol = _materialize_expr(s, args[1])
+    moments = fn in ("APPROX_VARIANCE", "APPROX_STDDEV")
+    keep = {
+        "APPROX_COUNT": ["est_count", "count_err"],
+        "APPROX_SUM": ["est_sum", "sum_err"],
+        "APPROX_AVG": ["est_avg", "avg_err"],
+        "APPROX_VARIANCE": ["est_variance", "variance_err"],
+        "APPROX_STDDEV": ["est_stddev", "stddev_err"],
+        "APPROX_COVAR": ["est_covar", "covar_err"],
+        "APPROX_CORR": ["est_corr", "corr_err"],
+    }[fn]
+
+    def _agg(frame, gname):
+        if estimator == "subsample":
+            if bivar:
+                return subsample_bivariate_from_uniform_sample(
+                    frame, gname, col, ycol, meta["ratio"],
+                    n_total=ss_n, seed=int(meta["seed"]),
+                )
+            return subsample_agg_from_uniform_sample(
+                frame, gname, col, meta["ratio"], moments=moments,
+                n_total=ss_n, seed=int(meta["seed"]),
+            )
+        if bivar:
+            return approx_bivariate_from_uniform_sample(frame, gname, col, ycol, meta["ratio"])
+        return approx_agg_from_uniform_sample(frame, gname, col, meta["ratio"], moments=moments)
+
+    if meta["kind"] == "stratified":  # COUNT / SUM / AVG
+        from sketchlib.spark.sampling import (
+            approx_agg_from_stratified_sample,
+            stratified_global_agg,
+        )
+
+        fractions = json.loads(meta["fractions_json"])
+        if group is None:
+            # global totals: per-stratum HT estimates summed, mean via the
+            # cross-strata ratio estimator (delta-method CI)
+            return stratified_global_agg(s, meta["on_col"], col, fractions).select(*keep)
+        out = approx_agg_from_stratified_sample(s, group, col, fractions)
+    elif isinstance(group, (list, tuple)):
+        # composite key over a persisted scramble: aggregate on the derived
+        # key string, split back into native columns
+        s, gcol = _with_gkey(s, group)
+        out = _agg(s, gcol).withColumnRenamed(gcol, "group").select("group", *keep)
+        return _finish_grouped(out, s, group)
+    else:
+        out = _agg(s, group)
+    return out.select(*([group] if group else []), *keep)

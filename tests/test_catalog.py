@@ -1290,3 +1290,30 @@ def test_repeat_sample_and_signature_reads_launch_no_job(spark, tmp_path, seq_ti
         sh.copy(f, os.path.join(data, os.path.dirname(rel), "ap-" + os.path.basename(f)))
     assert cat.refresh_sample("u")["rows_added"] > 0
     assert cat.sample("u").count() == cat.sample_meta("u")["rows_sampled"] > n_before
+
+
+def test_signature_refresh_counts_rows_from_footers(spark, tmp_path):
+    """create_signatures and refresh_signatures register the table's row
+    count from parquet footers: a 400-row table plus a 200-row append
+    registers 600 rows, and the refresh launches only the delta read's
+    schema inference and the append's write (the count re-read the whole
+    table with three more jobs)."""
+    import glob
+    import os
+    import shutil as sh
+
+    from sketchlib.data.gen import write_sequences
+
+    data, extra = str(tmp_path / "data"), str(tmp_path / "extra")
+    write_sequences(data, 400, seed=21)
+    cat = SketchCatalog(spark, str(tmp_path / "cat"))
+    cat.create_signatures("g", data, r=32, n_bands=8, seed=3)
+    assert cat.sig_meta("g")["rows"] == 400
+    write_sequences(extra, 200, seed=22)
+    for f in glob.glob(extra + "/source=*/part-*.parquet"):
+        rel = os.path.relpath(f, extra)
+        sh.copy(f, os.path.join(data, os.path.dirname(rel), "ap-" + os.path.basename(f)))
+    out, jobs = _jobs_of(spark, lambda: cat.refresh_signatures("g"))
+    assert out["rows_added"] == 200
+    assert cat.sig_meta("g")["rows"] == 600 == cat.signatures("g").count()
+    assert len(jobs) == 2, jobs
