@@ -853,6 +853,23 @@ class SketchCatalog:
             raise ValueError(f"unknown sample {name!r}")
         return self._read_artifact("samples", name)
 
+    def sample_dtypes(self, name: str) -> dict:
+        """``dict(sample(name).dtypes)`` from the Spark schema stored in one
+        parquet footer — no DataFrame, no schema-inference job."""
+        import glob as _glob
+
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        files = sorted(_glob.glob(os.path.join(self.root, "samples", name, "**", "*.parquet"),
+                                  recursive=True))
+        meta = (pq.read_schema(files[0]).metadata or {}) if files else {}
+        stored = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+        if stored is None:
+            return dict(self.sample(name).dtypes)
+        return {f.name: f.dataType.simpleString()
+                for f in StructType.fromJson(json.loads(stored)).fields}
+
     def sample_meta(self, name: str):
         """Newest registration row for a persisted sample."""
         return self._registry_meta("_sample_catalog", _SAMPLE_SCHEMA, name, "sample")

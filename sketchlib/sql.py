@@ -210,6 +210,21 @@ _REL_ERR_ARG = re.compile(r"^rel_err\s*=\s*([0-9.eE+\-]+)$", re.IGNORECASE)
 _PCT_WEIGHT_ARG = re.compile(r"^weight\s*=\s*(\w+)$", re.IGNORECASE)
 
 
+def _sampling_ratio(fn: str, args: list) -> float:
+    """The sampling ratio argument an on-the-fly sampling aggregate draws
+    its Bernoulli sample at (COUNT's first argument, COVAR/CORR's third,
+    the others' second); ValueError naming it when missing or not numeric."""
+    i = 0 if fn == "APPROX_COUNT" else 2 if fn in ("APPROX_COVAR", "APPROX_CORR") else 1
+    r = _num(args[i]) if len(args) > i else None
+    if r is None:
+        example = {0: "APPROX_COUNT(0.1)", 1: f"{fn}(col, 0.1)", 2: f"{fn}(x, y, 0.1)"}[i]
+        raise ValueError(
+            f"{fn} built on the fly needs a numeric sampling ratio argument, e.g. "
+            f"{example} — or pass catalog=... with a registered sample to serve it"
+        )
+    return r
+
+
 def _pct_weight(args: list) -> str | None:
     """Weight column from ``APPROX_PERCENTILE(col, q..., weight=w)`` —
     routes to a WEIGHTED tdigest (weight-mass quantiles); None = plain."""
@@ -598,51 +613,48 @@ def _resolve_join3_key(toks, tables, catalog, req_ratio) -> str | None:
     return max(cands, key=lambda r: (float(r["ratio"] or 0.0), r["name"]))["name"]
 
 
-def _approx_join3(spark, m, tables, catalog, key) -> DataFrame:
-    """fact ⋈ dim ⋈ dim with a Bernoulli-sampled fact side: the sampled
-    row is the independent inclusion unit and brings every row the chained
-    joins attach to it, so the estimator clusters joined rows per sampled
-    row (``cluster_join_agg``) — exact CIs whatever the dims' key
-    multiplicity, reducing to plain Bernoulli HT when both dims are
-    key-unique. The fact is the table holding the registered uniform
-    scramble (catalog path) or the FIRST FROM table (on-the-fly path);
-    universe scrambles are refused here — per-key survival does not
-    compose across two chained keys (use the two-table pair path for
-    universe⋈universe). ``key`` is the sample the plan named or
-    auto-selected (only samples of ≥ an explicit ratio argument), None →
-    the on-the-fly draw at the requested ratio.
-    """
-    from pyspark.sql import functions as F
+def _sample_row(regs, name: str):
+    """The registry row of sample ``name``; ValueError when none is live."""
+    row = next((r for r in regs.list_sample_rows() if r["name"] == name), None)
+    if row is None:
+        raise ValueError(f"unknown sample {name!r}")
+    return row
 
-    fn, value_col, ratio_arg = _join_agg(m.group("select"))
 
-    def _base(t: str) -> str:
-        return t.rstrip("/").split("/")[-1].split(".")[0]
+def _table_base(t: str) -> str:
+    """A FROM token's bare table name (a path's last component, no suffix)
+    — what an ON qualifier may call it."""
+    return t.rstrip("/").split("/")[-1].split(".")[0]
+
+
+def _join3_plan(m, tables, regs, key) -> tuple:
+    """(fact sample row or None, fact index, chain steps) for a three-table
+    join. The fact is the FROM table holding the uniform scramble ``key``
+    names, else the FIRST FROM table (sampled on the fly). The steps join
+    the other tables to the fact in ON-clause order: (i, new_key, old_key)
+    attaches table i, (None, ka, kb) filters an already-joined pair.
+    ValueError for a sample that cannot serve, an ON qualifier naming no
+    FROM table, or ON clauses that leave a table unjoined."""
+    import os as _os
 
     toks = [(m.group(f"t{i}"), m.group(f"a{i}")) for i in (1, 2, 3)]
 
     def _which(q: str) -> int:
         for i, (t, a) in enumerate(toks):
-            if q == t or q == a or _base(t) == q:
+            if q == t or q == a or _table_base(t) == q:
                 return i
         raise ValueError(
             f"ON qualifier {q!r} names none of the FROM tables/aliases "
             f"{[t for t, _ in toks]} / {[a for _, a in toks]}"
         )
 
-    conds = [
+    remaining = [
         ((_which(m.group("q1")), m.group("k1")), (_which(m.group("q2")), m.group("k2"))),
         ((_which(m.group("q3")), m.group("k3")), (_which(m.group("q4")), m.group("k4"))),
     ]
-    qnames = {n for t, a in toks for n in (t, a, _base(t)) if n}
-    where = _strip_qualifiers(m.group("where"), qnames) if m.group("where") else None
-    group = _parse_group(m.group("group"))
-
-    fact_i, ratio, fact_df = 0, None, None
+    meta, fact_i = None, 0
     if key is not None:
-        import os as _os
-
-        meta = catalog.sample_meta(key)
+        meta = _sample_row(regs, key)
         if meta["kind"] != "uniform":
             raise ValueError(
                 "three-table approx joins take a UNIFORM fact scramble — "
@@ -660,42 +672,18 @@ def _approx_join3(spark, m, tables, catalog, key) -> DataFrame:
                 f"sample {key!r} was built over {meta['input_dir']!r}, which is "
                 f"none of the FROM tables {[t for t, _ in toks]}"
             )
-        fact_df, ratio = catalog.sample(key), float(meta["ratio"])
-    if fact_df is None:
-        # on-the-fly: the FIRST FROM table is the fact (the conventional
-        # statement order), Bernoulli-sampled at the aggregate's ratio arg
-        from sketchlib.spark.sampling import uniform_sample
-
-        fact_i, ratio = 0, _ratio_or_default(fn, ratio_arg)
-        fact_df = uniform_sample(_resolve_table(spark, toks[0][0], tables), ratio)
-
-    # the sampled row is the independent inclusion unit: it brings every
-    # row the chained joins attach to it, so the estimator clusters by a
-    # per-sampled-row fingerprint (deterministic — see row_fingerprint:
-    # a nondeterministic id would block predicate pushdown to the scan)
-    from sketchlib.spark.sampling import row_fingerprint
-
-    fact_df = fact_df.withColumn("_cluster", row_fingerprint(fact_df))
-    frames = {
-        i: (fact_df if i == fact_i else _resolve_table(spark, toks[i][0], tables))
-        for i in range(3)
-    }
-    joined, in_join = frames[fact_i], {fact_i}
-    remaining = list(conds)
+    steps, in_join = [], {fact_i}
     while remaining:
         for c in remaining:
             (ia, ka), (ib, kb) = c
             if (ia in in_join) != (ib in in_join):
                 new_i, new_k, old_k = (ib, kb, ka) if ia in in_join else (ia, ka, kb)
-                # no forced broadcast: the planner auto-broadcasts small
-                # dims; a big exact side must be allowed to shuffle-join
-                bdim = frames[new_i]
-                joined = joined.join(bdim, joined[old_k] == bdim[new_k])
+                steps.append((new_i, new_k, old_k))
                 in_join.add(new_i)
                 remaining.remove(c)
                 break
             if ia in in_join and ib in in_join:
-                joined = joined.filter(F.col(ka) == F.col(kb))
+                steps.append((None, ka, kb))
                 remaining.remove(c)
                 break
         else:
@@ -708,6 +696,55 @@ def _approx_join3(spark, m, tables, catalog, key) -> DataFrame:
             "two already-joined tables leaves the third as a cross join, which "
             "the approximate path refuses rather than silently mis-estimating)"
         )
+    return meta, fact_i, steps
+
+
+def _approx_join3(spark, m, tables, catalog, meta, fact_i, steps) -> DataFrame:
+    """fact ⋈ dim ⋈ dim with a Bernoulli-sampled fact side: the sampled
+    row is the independent inclusion unit and brings every row the chained
+    joins attach to it, so the estimator clusters joined rows per sampled
+    row (``cluster_join_agg``) — exact CIs whatever the dims' key
+    multiplicity, reducing to plain Bernoulli HT when both dims are
+    key-unique. ``meta``, ``fact_i`` and ``steps`` are the plan's
+    ``_join3_plan``: the registered uniform fact scramble (universe
+    scrambles are refused there — per-key survival does not compose across
+    two chained keys; use the two-table pair path for universe⋈universe),
+    or None → the FIRST FROM table drawn on the fly at the requested ratio.
+    """
+    from pyspark.sql import functions as F
+
+    fn, value_col, ratio_arg = _join_agg(m.group("select"))
+
+    toks = [(m.group(f"t{i}"), m.group(f"a{i}")) for i in (1, 2, 3)]
+    qnames = {n for t, a in toks for n in (t, a, _table_base(t)) if n}
+    where = _strip_qualifiers(m.group("where"), qnames) if m.group("where") else None
+    group = _parse_group(m.group("group"))
+
+    if meta is not None:
+        fact_df, ratio = catalog.sample(meta["name"]), float(meta["ratio"])
+    else:
+        # on-the-fly: the FIRST FROM table is the fact (the conventional
+        # statement order), Bernoulli-sampled at the aggregate's ratio arg
+        from sketchlib.spark.sampling import uniform_sample
+
+        ratio = _ratio_or_default(fn, ratio_arg)
+        fact_df = uniform_sample(_resolve_table(spark, toks[0][0], tables), ratio)
+
+    # the sampled row is the independent inclusion unit: it brings every
+    # row the chained joins attach to it, so the estimator clusters by a
+    # per-sampled-row fingerprint (deterministic — see row_fingerprint:
+    # a nondeterministic id would block predicate pushdown to the scan)
+    from sketchlib.spark.sampling import row_fingerprint
+
+    joined = fact_df.withColumn("_cluster", row_fingerprint(fact_df))
+    for i, new_k, old_k in steps:
+        if i is None:
+            joined = joined.filter(F.col(new_k) == F.col(old_k))
+            continue
+        # no forced broadcast: the planner auto-broadcasts small dims; a
+        # big exact side must be allowed to shuffle-join
+        bdim = _resolve_table(spark, toks[i][0], tables)
+        joined = joined.join(bdim, joined[old_k] == bdim[new_k])
     if where:
         joined = joined.filter(where)
     from sketchlib.spark.sampling import cluster_join_agg
@@ -777,11 +814,8 @@ def _join_keys(m) -> tuple[str, str]:
     aa, ab = m.group("aa"), m.group("ab")
     qa, qb, ka, kb = m.group("qa"), m.group("qb"), m.group("ka"), m.group("kb")
 
-    def _base(t: str) -> str:
-        return t.rstrip("/").split("/")[-1].split(".")[0]
-
     def _owns(q: str, t: str, alias: str | None) -> bool:
-        return q == t or q == alias or _base(t) == q
+        return q == t or q == alias or _table_base(t) == q
 
     if _owns(qa, ta, aa) and _owns(qb, tb, ab):
         return ka, kb
@@ -793,80 +827,92 @@ def _join_keys(m) -> tuple[str, str]:
     )
 
 
-def _approx_join(spark, m, tables, catalog, catalog_key) -> DataFrame:
-    """A two-table approx join from the sample(s) ``catalog_key`` names (the
-    plan's explicit or auto-selected key: a universe scramble pair, or one
-    fact-side sample joined to the exact other side), else both sides
+def _join_samples(key, m, left_key, right_key, tables, regs) -> tuple | None:
+    """How a two-table join reads the sample(s) ``key`` names (None → both
+    sides sampled on the fly): ("mixed", row, fact_key, dim_key, dim_token)
+    — one fact-side scramble, the other side read exact — or ("pair",
+    row_a, row_b) — two universe scrambles keyed on their join columns and
+    sharing ratio and seed (survival probabilities compose only through a
+    SHARED hash). ValueError when the samples cannot serve the join."""
+    import os as _os
+
+    if key is None:
+        return None
+    names = [s.strip() for s in str(key).split(",")]
+    if len(names) not in (1, 2):
+        raise ValueError(
+            "join statements take catalog_key='left_sample,right_sample' "
+            "(two universe scrambles) or one fact-side sample name"
+        )
+    metas = [_sample_row(regs, n) for n in names]
+    ta, tb = m.group("ta"), m.group("tb")
+    if len(metas) == 1:
+        # fact×dimension (A8's common shape): the single named scramble
+        # covers ONE side; the other side is read exact and broadcast
+        meta = metas[0]
+        sdir = _os.path.normpath(meta["input_dir"])
+        da, db = _table_dir(ta, tables), _table_dir(tb, tables)
+        if da is not None and _os.path.normpath(da) == sdir:
+            fact_key, dim_key, dim_token = left_key, right_key, tb
+        elif db is not None and _os.path.normpath(db) == sdir:
+            fact_key, dim_key, dim_token = right_key, left_key, ta
+        else:
+            raise ValueError(
+                f"sample {names[0]!r} was built over {meta['input_dir']!r}, "
+                f"which is neither join side ({ta!r}, {tb!r})"
+            )
+        if meta["kind"] == "universe" and meta["on_col"] != fact_key:
+            raise ValueError(
+                f"universe sample {names[0]!r} is keyed on {meta['on_col']!r}, "
+                f"not the join key {fact_key!r} — key survival would not "
+                "compose through the join"
+            )
+        return "mixed", meta, fact_key, dim_key, dim_token
+    ma, mb = metas
+    for meta, k in ((ma, left_key), (mb, right_key)):
+        if meta["kind"] != "universe" or meta["on_col"] != k:
+            raise ValueError(
+                f"sample {meta['name']!r} must be a universe sample on {k!r}; "
+                f"got {meta['kind']} on {meta['on_col']!r}"
+            )
+    if (ma["ratio"], ma["seed"]) != (mb["ratio"], mb["seed"]):
+        raise ValueError(
+            "join samples must share ratio and seed (survival probabilities "
+            f"compose only through the same hash): {names[0]}=({ma['ratio']}, "
+            f"{ma['seed']}) vs {names[1]}=({mb['ratio']}, {mb['seed']})"
+        )
+    return "pair", ma, mb
+
+
+def _approx_join(spark, m, tables, catalog, pick) -> DataFrame:
+    """A two-table approx join from the sample(s) of the plan's
+    ``_join_samples`` pick (a universe scramble pair — A5 for joins — or
+    one fact-side sample joined to the exact other side), else both sides
     sampled on the fly."""
     fn, value_col, ratio_arg = _join_agg(m.group("select"))
     ta, tb = m.group("ta"), m.group("tb")
     aa, ab = m.group("aa"), m.group("ab")
     left_key, right_key = _join_keys(m)
 
-    def _base(t: str) -> str:
-        return t.rstrip("/").split("/")[-1].split(".")[0]
-
     group = _parse_group(m.group("group"))
-    qnames = {n for n in (ta, tb, aa, ab, _base(ta), _base(tb)) if n}
+    qnames = {n for n in (ta, tb, aa, ab, _table_base(ta), _table_base(tb)) if n}
     where = _strip_qualifiers(m.group("where"), qnames) if m.group("where") else None
 
-    if catalog_key is not None:
-        names = [s.strip() for s in str(catalog_key).split(",")]
-        if len(names) == 1:
-            # fact×dimension (A8's common shape): the single named scramble
-            # covers ONE side; the other side is read exact and broadcast
-            meta = catalog.sample_meta(names[0])
-            import os as _os
+    if pick is not None and pick[0] == "mixed":
+        from sketchlib.spark.sampling import approx_join_agg_mixed
 
-            sdir = _os.path.normpath(meta["input_dir"])
-            da, db = _table_dir(ta, tables), _table_dir(tb, tables)
-            if da is not None and _os.path.normpath(da) == sdir:
-                fact_key, dim_key, dim_token = left_key, right_key, tb
-            elif db is not None and _os.path.normpath(db) == sdir:
-                fact_key, dim_key, dim_token = right_key, left_key, ta
-            else:
-                raise ValueError(
-                    f"sample {names[0]!r} was built over {meta['input_dir']!r}, "
-                    f"which is neither join side ({ta!r}, {tb!r})"
-                )
-            if meta["kind"] == "universe" and meta["on_col"] != fact_key:
-                raise ValueError(
-                    f"universe sample {names[0]!r} is keyed on {meta['on_col']!r}, "
-                    f"not the join key {fact_key!r} — key survival would not "
-                    "compose through the join"
-                )
-            from sketchlib.spark.sampling import approx_join_agg_mixed
-
-            return approx_join_agg_mixed(
-                catalog.sample(names[0]), _resolve_table(spark, dim_token, tables),
-                fact_key, dim_key, meta["kind"], meta["ratio"],
-                value_col=value_col, group_by=group, where=where,
-            )
-        if len(names) != 2:
-            raise ValueError(
-                "join statements take catalog_key='left_sample,right_sample' "
-                "(two universe scrambles) or one fact-side sample name"
-            )
-        # A5 for joins: answer from TWO persisted universe scrambles —
-        # same seed+ratio required (p-composition only holds through a
-        # SHARED hash)
-        ma, mb = catalog.sample_meta(names[0]), catalog.sample_meta(names[1])
-        for meta, key in ((ma, left_key), (mb, right_key)):
-            if meta["kind"] != "universe" or meta["on_col"] != key:
-                raise ValueError(
-                    f"sample {meta['name']!r} must be a universe sample on {key!r}; "
-                    f"got {meta['kind']} on {meta['on_col']!r}"
-                )
-        if (ma["ratio"], ma["seed"]) != (mb["ratio"], mb["seed"]):
-            raise ValueError(
-                "join samples must share ratio and seed (survival probabilities "
-                f"compose only through the same hash): {names[0]}=({ma['ratio']}, "
-                f"{ma['seed']}) vs {names[1]}=({mb['ratio']}, {mb['seed']})"
-            )
+        _, meta, fact_key, dim_key, dim_token = pick
+        return approx_join_agg_mixed(
+            catalog.sample(meta["name"]), _resolve_table(spark, dim_token, tables),
+            fact_key, dim_key, meta["kind"], meta["ratio"],
+            value_col=value_col, group_by=group, where=where,
+        )
+    if pick is not None:
         from sketchlib.spark.sampling import approx_join_agg_from_samples
 
+        _, ma, mb = pick
         return approx_join_agg_from_samples(
-            catalog.sample(names[0]), catalog.sample(names[1]),
+            catalog.sample(ma["name"]), catalog.sample(mb["name"]),
             left_key, right_key, ma["ratio"], value_col=value_col, group_by=group,
             where=where,
         )
@@ -1852,7 +1898,7 @@ def _resolve_key(
         want_group = _canon_group(group)
         # newest registration first, name as tie-break — deterministic when
         # several sets hold the same sketch
-        for reg in sorted(regs.regs(), key=lambda r: (-r["built_unix"], r["name"])):
+        for reg in sorted(regs.list_rows(), key=lambda r: (-r["built_unix"], r["name"])):
             if os.path.normpath(reg["input_dir"]) != base_n or reg["group_by"] != want_group:
                 continue
             if any(
@@ -1893,7 +1939,7 @@ def _resolve_key(
             return k == "uniform" or (k == "stratified" and group == r["on_col"])
         return False
 
-    ok = [r for r in regs.samples()
+    ok = [r for r in regs.list_sample_rows()
           if os.path.normpath(r["input_dir"]) == base_n and eligible(r)]
     if not ok:
         return None
@@ -1930,8 +1976,17 @@ _PCT_WEIGHT_SAMPLE_MSG = (
 )
 
 # the sampling aggregates: a Bernoulli sample at a ratio argument, or a scramble
-_SAMPLING_FNS = ("APPROX_COUNT", "APPROX_SUM", "APPROX_AVG", "APPROX_VARIANCE",
-                 "APPROX_STDDEV", "APPROX_COVAR", "APPROX_CORR")
+# the sampling aggregates and their kernels' (estimate, bound) columns
+_SAMPLING_COLS = {
+    "APPROX_COUNT": ("est_count", "count_err"),
+    "APPROX_SUM": ("est_sum", "sum_err"),
+    "APPROX_AVG": ("est_avg", "avg_err"),
+    "APPROX_VARIANCE": ("est_variance", "variance_err"),
+    "APPROX_STDDEV": ("est_stddev", "stddev_err"),
+    "APPROX_COVAR": ("est_covar", "covar_err"),
+    "APPROX_CORR": ("est_corr", "corr_err"),
+}
+_SAMPLING_FNS = tuple(_SAMPLING_COLS)
 # aggregates that compose in one multi-aggregate statement (one output
 # column pair each); the rest return several rows per group
 _SCALAR_AGGS = ("APPROX_COUNT_DISTINCT",) + _SAMPLING_FNS
@@ -1999,8 +2054,9 @@ def _sample_refusal(fn, args, meta, group, estimator, key) -> str | None:
 class Plan:
     """One approx statement, classified once by ``_plan``: ``approx_sql``
     executes the route it names and ``explain_sql`` renders it, so the two
-    cannot disagree. A plan holds no data — building one scans nothing,
-    builds nothing and registers no temp view."""
+    cannot disagree. Building a plan builds nothing and registers no temp
+    view; the only frames it holds are a set operation's lazily resolved
+    sides (or their samples), which execution reuses."""
 
     kind: str                       # EXPLAIN's statement_kind
     route: str = ""                 # what execution runs; "" = refused before routing
@@ -2018,7 +2074,9 @@ class Plan:
 
 class _Registries:
     """The catalog registry rows one statement's plan consults, each list
-    read at most once however many aggregates or nested statements ask."""
+    read at most once however many aggregates or nested statements ask.
+    It answers the catalog's own ``list_rows``/``list_sample_rows``, so the
+    resolvers that take a catalog take it too."""
 
     def __init__(self, catalog):
         self.catalog, self._rows = catalog, {}
@@ -2028,10 +2086,10 @@ class _Registries:
             self._rows[which] = [] if self.catalog is None else getattr(self.catalog, which)()
         return self._rows[which]
 
-    def regs(self) -> list:
+    def list_rows(self) -> list:
         return self._read("list_rows")
 
-    def samples(self) -> list:
+    def list_sample_rows(self) -> list:
         return self._read("list_sample_rows")
 
 
@@ -2043,7 +2101,7 @@ def _side_states(resolve, head_fn, sides, args, grouped, tables, catalog, regs):
         return None
     idents = (None, None) if grouped is None else _setop_side_idents(sides, grouped)
     return None if idents is None else resolve(
-        head_fn, sides, args, tables, catalog, reg_rows=regs.regs(),
+        head_fn, sides, args, tables, catalog, reg_rows=regs.list_rows(),
         cols=idents[0], group_cols=idents[1],
     )
 
@@ -2057,17 +2115,17 @@ def _multi_agg_keys(aggs, group, where, table_token, tables, regs) -> list | Non
     sample-derived keys (Catalyst cast); the two agree for string/integer
     group columns but NOT for booleans, big doubles or timestamps ('True'
     vs 'true', '1e+20' vs '1.0E20'), so a mix over any other group dtype
-    (read from a sample table's cached schema) builds on the fly instead."""
+    (read from the sample table's parquet footer) builds on the fly instead."""
     keys = []
     for fn, args in aggs:
         k = _resolve_key(fn, args, group, bool(where), table_token, tables, regs)
         if k is None:
             return None
         keys.append(k)
-    state_names = {r["name"] for r in regs.regs()} if group else set()
+    state_names = {r["name"] for r in regs.list_rows()} if group else set()
     if {k in state_names for k in keys} == {True, False}:
         sample_key = next(k for k in keys if k not in state_names)
-        dtypes = dict(regs.catalog.sample(sample_key).dtypes)
+        dtypes = regs.catalog.sample_dtypes(sample_key)
         gcols = list(group) if isinstance(group, (list, tuple)) else [group]
         if any(dtypes.get(c) not in ("string", "int", "bigint", "smallint", "tinyint")
                for c in gcols):
@@ -2075,7 +2133,8 @@ def _multi_agg_keys(aggs, group, where, table_token, tables, regs) -> list | Non
     return keys
 
 
-def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Plan:
+def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None,
+          ctes=frozenset()) -> Plan:
     """Classify one statement into the Plan ``approx_sql`` executes and
     ``explain_sql`` renders — the statement's only classifier. Checks run
     in execution's order. A statement execution refuses gets a plan whose
@@ -2084,7 +2143,8 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
     statement's shape or arguments did. Sub-statements — CTE final,
     derived-table outer, WITHIN rewrite, tail and alias bodies — are
     nested plans sharing one registry read. ``spark`` only resolves
-    schemas for the set-operation type gates; nothing runs."""
+    schemas for the set-operation type gates; nothing runs. ``ctes``: the
+    lower-cased names of the enclosing CTEs, whose views do not exist yet."""
     from statistics import NormalDist
 
     regs = regs or _Registries(catalog)
@@ -2096,8 +2156,8 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
     def mk(kind, route="", refusal=None, **kw) -> Plan:
         return Plan(kind, route, estimator, notes=tuple(notes), refusal=refusal, **kw)
 
-    def sub(stmt, key=catalog_key) -> Plan:
-        return _plan(spark, stmt, tables, catalog, key, estimator, regs)
+    def sub(stmt, key=catalog_key, ctes=ctes) -> Plan:
+        return _plan(spark, stmt, tables, catalog, key, estimator, regs, ctes)
 
     # EXPLAIN over OUR statements (any APPROX_ aggregate, registry DDL, or
     # an ERROR BY SUBSAMPLING tail, whose refusal EXPLAIN must report);
@@ -2138,11 +2198,11 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
 
     cte = _extract_ctes(sql)
     if cte is not None:
-        ctes, final = cte
-        note("cte_names", ",".join(n for n, _ in ctes))
+        defs, final = cte
+        note("cte_names", ",".join(n for n, _ in defs))
         note("cte_bodies", ",".join(
-            "approx" if _AGG.search(_mask_literals(b)) else "exact" for _, b in ctes))
-        clash = next((n for n, _ in ctes if tables and n in tables), None)
+            "approx" if _AGG.search(_mask_literals(b)) else "exact" for _, b in defs))
+        clash = next((n for n, _ in defs if tables and n in tables), None)
         if clash is not None:
             # the dict is authoritative in every resolution path, so the CTE
             # would be silently shadowed — estimates over the wrong relation
@@ -2152,7 +2212,8 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
                 "dict is authoritative in table resolution, so the CTE would "
                 "be silently shadowed; rename the CTE"))
         note("final_statement", "see nested properties below")
-        return mk("cte", "cte", m=tuple(ctes), nested=sub(final))
+        return mk("cte", "cte", key=catalog_key, m=(tuple(defs), final), detail=regs,
+                  nested=sub(final, ctes=ctes | {n.lower() for n, _ in defs}))
 
     derived = _extract_subquery(sql)
     if derived is not None:
@@ -2178,10 +2239,18 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
                                  tables, catalog, regs)
             # without states a grouped UNION belongs to the UNION → UNION ALL
             # rewrite below, and sides typed outside one numeric family to
-            # the generic path, where Spark SQL's own coercion applies
-            if picks is not None or (
-                not (grouped is not None and op == "union")
-                and _setop_scan_frames(spark, sides, grouped, tables, apply_where=False)
+            # the generic path, where Spark SQL's own coercion applies. A
+            # side reading a CTE has no schema until the CTE's view exists:
+            # its gate runs when the CTE re-plans this statement (_run_cte)
+            bases = cte_side = None
+            if picks is None and not (grouped is not None and op == "union"):
+                cte_side = next((sm.group("table") for sm in sides
+                                 if sm.group("table").lower() in ctes), None)
+                if cte_side is None:
+                    bases = [_resolve_table(spark, sm.group("table"), tables) for sm in sides]
+            if picks is not None or cte_side is not None or (
+                bases is not None
+                and _side_frames(spark, bases, sides, grouped, tables, apply_where=False)
                 is not None
             ):
                 note("set_operation", op)
@@ -2200,12 +2269,17 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
                                    "per-group state merge" if grouped is not None
                                    else "per-side sketch build in one pass")
                          + " — the sides are never distinct-shuffled or materialized")
-                return mk("approx_setop", "setop", m=setop, detail=picks)
+                if cte_side is not None:
+                    note("type_gate", f"at execution over CTE {cte_side!r} — sides typed "
+                         "outside one numeric family take the derived-table path")
+                return mk("approx_setop", "setop", m=setop, detail=(picks, bases))
         merged = None if estimator == "subsample" else _unionall_merge_route(head, inner, tail)
         mpicks = merged and _side_states(_resolve_merge_states, merged[0], merged[2],
                                          merged[1], merged[4], tables, catalog, regs)
         if mpicks:
-            mfn, _args, msides, _alias, mgrouped = merged
+            mfn, _args, msides, malias, mgrouped = merged
+            if malias and mfn == "APPROX_HISTOGRAM":
+                return mk("approx_unionall_merge", refusal=_HIST_ALIAS_MSG)
             note("aggregate", mfn)
             note("n_sides", len(msides))
             if mgrouped is not None:
@@ -2219,10 +2293,12 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
         sroute = _unionall_sample_route(head, inner, tail)
         spicks = sroute and _resolve_unionall_samples(
             sroute[0], sroute[2], sroute[1], tables, catalog,
-            sample_rows=regs.samples() if catalog is not None else None,
+            sample_rows=regs.list_sample_rows() if catalog is not None else None,
         )
-        if spicks and _unionall_sample_frames(
-            spark, sroute[0], spicks, sroute[2], tables, sroute[4], catalog, apply_where=False,
+        samples = spicks and [catalog.sample(p["name"]) for p in spicks]
+        if spicks and _side_frames(
+            spark, samples, sroute[2], sroute[4], tables, apply_where=False,
+            count=sroute[0] == "APPROX_COUNT",
         ) is not None:
             sfn, _args, ssides, _alias, sgrouped = sroute
             note("aggregate", sfn)
@@ -2235,7 +2311,8 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
                  "scrambles of the sides concatenate into one "
                  f"Bernoulli({spicks[0]['ratio']}) sample of the UNION ALL bag; "
                  "only the p-fraction tables are scanned")
-            return mk("approx_unionall_sample", "unionall_sample", m=sroute, detail=spicks)
+            return mk("approx_unionall_sample", "unionall_sample", m=sroute,
+                      detail=(spicks, samples))
         # the generic path: the derived table becomes a per-statement temp
         # view the rewritten outer statement reads
         note("inner_statement", "approx (inner error caveat/composition applies)"
@@ -2368,7 +2445,8 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
             sides = _join_rows_sides(jr)
         except ValueError as e:
             return mk(kind, route, refusal=str(e))
-        picks = _resolve_join_rows_regs(sides, tables, catalog, req_eps)
+        picks = _resolve_join_rows_regs(sides, tables, regs if catalog is not None else None,
+                                    req_eps)
         if picks is not None:
             note("route", "persisted sketch states (both sides; zero base scans)")
             note("states_a", f"{picks[0][0]}.{picks[0][1]}")
@@ -2400,9 +2478,11 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
             if key is None and catalog is not None:
                 # auto-selection; an explicit ratio argument is a precision
                 # request only samples meeting it may serve
-                key = (_resolve_join3_key(toks, tables, catalog, _num(ratio_arg)) if three
+                key = (_resolve_join3_key(toks, tables, regs, _num(ratio_arg)) if three
                        else _resolve_join_key(jm.group("ta"), jm.group("tb"), lkey, rkey,
-                                              tables, catalog, req_ratio=_num(ratio_arg)))
+                                              tables, regs, req_ratio=_num(ratio_arg)))
+            detail = (_join3_plan(jm, tables, regs, key) if three
+                      else _join_samples(key, jm, lkey, rkey, tables, regs))
         except ValueError as e:
             return mk(kind, route, refusal=str(e))
         if key is None:
@@ -2414,7 +2494,7 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
             note("route", "fact_sample_x_exact_dim (broadcast dim)" if not three
                  else "uniform_fact_scramble_x_exact_dims")
             note("artifact", key)
-        return mk(kind, route, key=key, m=jm)
+        return mk(kind, route, key=key, m=jm, detail=detail)
 
     m = _SKELETON.match(sql)
     if not m:
@@ -2456,11 +2536,11 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
                 return mk(kind, refusal=str(e))
             if catalog_key is None:
                 route = "rollup_build"
-            elif not any(r["name"] == catalog_key for r in regs.samples()):
+            elif not any(r["name"] == catalog_key for r in regs.list_sample_rows()):
                 # a scramble key instead answers each level from the sample
                 route = "rollup_states"
                 try:
-                    spec = _rollup_states_spec(_registration(regs.regs(), catalog_key),
+                    spec = _rollup_states_spec(_registration(regs.list_rows(), catalog_key),
                                                catalog_key, fn, args, cols, where)
                 except ValueError as e:
                     return mk(kind, route, refusal=str(e))
@@ -2485,6 +2565,8 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
         given = [al for *_, al in aliased if al]
         if len(set(given)) != len(given):
             return mk(kind, refusal=f"duplicate alias in select list: {given!r}")
+        if len(aggs) == 1 and aggs[0][0] == "APPROX_HISTOGRAM":
+            return mk(kind, refusal=_HIST_ALIAS_MSG)
         clean = f"SELECT {', '.join(f'{f}({a})' for f, a, _ in aliased)} FROM {table}"
         if where:
             clean += f" WHERE {where}"
@@ -2538,7 +2620,7 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
         keys = None
         if catalog is not None:
             keys = _multi_agg_keys(aggs, group, where, table, tables, regs)
-        samples = {r["name"]: r for r in regs.samples()} if keys else {}
+        samples = {r["name"]: r for r in regs.list_sample_rows()} if keys else {}
         for i, (f, a) in enumerate(aggs):
             note(f"agg{i}.aggregate", f"{f}({', '.join(a)})")
             if keys:
@@ -2547,6 +2629,12 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
                      if s else "persisted_sketch_states (base table never read, A5)")
                 note(f"agg{i}.artifact", keys[i])
         if not keys:
+            try:
+                for f, a in aggs:
+                    if f in _SAMPLING_FNS:
+                        _sampling_ratio(f, a)
+            except ValueError as e:
+                return mk(kind, "multi_build", str(e), **common)
             note("route", "on_the_fly (one scan of the base table builds every aggregate)")
         return mk(kind, "multi_routed" if keys else "multi_build", detail=keys, **common)
 
@@ -2567,7 +2655,7 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
                 note("artifact", key)
             return mk(kind, "sample", refusal, key=key, detail=meta, **common)
         try:
-            spec = _keyed_states_spec(_registration(regs.regs(), key), key, fn, args,
+            spec = _keyed_states_spec(_registration(regs.list_rows(), key), key, fn, args,
                                       group, where, estimator)
         except ValueError as e:
             return mk(kind, "states", str(e), key=key, **common)
@@ -2588,14 +2676,20 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None) -> Pla
             + " not a subsample CI"), **common)
     if fn not in _CATALOG_KINDS and fn not in _SAMPLING_FNS:
         return mk(kind, refusal=f"unknown approximate aggregate {fn!r}", **common)
-    if fn in _CATALOG_KINDS:
-        try:
+    try:  # the build's argument checks, refused here so EXPLAIN shows them
+        if fn in _CATALOG_KINDS:
             _sketch_args(fn, args)
-        except ValueError as e:
-            return mk(kind, "build", str(e), **common)
+        else:
+            _sampling_ratio(fn, args)
+    except ValueError as e:
+        return mk(kind, "build", str(e), **common)
     note("route", "on_the_fly (scan the base table, build per statement)")
     return mk(kind, "build", **common)
 
+
+_HIST_ALIAS_MSG = (
+    "APPROX_HISTOGRAM returns a multi-column bin frame (bin, lo, hi, "
+    "target_frac) — an AS alias is ambiguous; drop the alias")
 
 _NESTED_PREFIX = {"cte": "final.", "derived": "outer.", "within": "rewritten."}
 
@@ -2639,10 +2733,11 @@ def explain_sql(
     value) rows naming the statement kind, the route (persisted states /
     persisted sample / on-the-fly build / join pair) and the artifact that
     would serve it — WITHOUT executing anything. The rows render the same
-    ``Plan`` ``approx_sql`` executes (``_plan``: classification and registry
-    lookups only — no scan, no build, no temp view), so EXPLAIN reports
-    what execution does. A statement execution refuses shows its message
-    in ``error``, followed by " — approx_sql would raise"."""
+    ``Plan`` ``approx_sql`` executes (``_plan``: classification, registry
+    lookups and a set operation's schema gate — no build, no temp view), so
+    EXPLAIN reports what execution does. A statement execution refuses
+    shows its message in ``error``, followed by " — approx_sql would
+    raise"."""
     return _explain_frame(spark, _plan(spark, sql.strip(), tables, catalog, catalog_key,
                                        estimator))
 
@@ -3215,31 +3310,30 @@ def _hash_class(dtype: str | None) -> str | None:
     return dtype
 
 
-def _setop_scan_frames(spark, sides, grouped, tables, apply_where=True):
-    """Per-side (_v[, _g]) projections for the sketch-merge SCAN route, or
-    None when the sides' projected types are neither identical nor all in
-    the numeric family (where the union's widening is lossless and matches
-    Spark SQL's set-operation coercion). Schema-only — no job runs — so
-    ``_plan`` checks this gate with apply_where=False (predicates don't
-    change the inspected schema, and subquery predicates would register
-    temp views, which planning never does). Mixed non-numeric sides decline
-    rather than raise: the generic derived-table path materializes the set
-    operation through spark.sql, whose own coercion rules then own the
-    semantics."""
+def _side_frames(spark, bases, sides, grouped, tables, apply_where=True, count=False):
+    """Per-side (_v[, _g]) projections of ``bases`` — each side's FROM
+    table (set-operation scan) or picked uniform sample (UNION ALL over
+    samples), resolved once by the plan — with the side-local WHERE
+    applied, or None when the sides' projected types are neither identical
+    nor all in the numeric family (where the union's widening is lossless
+    and matches Spark SQL's set-operation coercion). APPROX_COUNT
+    (``count``) never reads the value, so its _v is the literal 1.0 (row
+    marker) and mixed value types cannot decline the route. Schema-only —
+    no job runs — so ``_plan`` checks this gate with apply_where=False
+    (predicates don't change the inspected schema, and subquery predicates
+    would register temp views, which planning never does). Mixed
+    non-numeric sides decline rather than raise: the generic derived-table
+    path materializes the statement through spark.sql, whose own coercion
+    rules then own the semantics."""
     frames = []
-    for sm in sides:
-        df = _resolve_table(spark, sm.group("table"), tables)
+    for df, sm in zip(bases, sides):
         if apply_where and sm.group("where"):
             df = _apply_where(spark, df, sm.group("where"), tables, sm.group("table"))
         items = _split_args(sm.group("col"))
-        if grouped is None:
-            sel = [f"({_side_out_name(items[0])[0]}) AS _v"]
-        else:
-            _, pos_v, pos_g = grouped
-            sel = [
-                f"({_side_out_name(items[pos_v])[0]}) AS _v",
-                f"({_side_out_name(items[pos_g])[0]}) AS _g",
-            ]
+        vexpr = _side_out_name(items[0 if grouped is None else grouped[1]])[0]
+        sel = ["(CAST(1.0 AS DOUBLE)) AS _v" if count else f"({vexpr}) AS _v"]
+        if grouped is not None:
+            sel.append(f"({_side_out_name(items[grouped[2]])[0]}) AS _g")
         frames.append(df.selectExpr(*sel))
     for c in ["_v"] + (["_g"] if grouped else []):
         types = {f.schema[c].dataType.simpleString() for f in frames}
@@ -3608,57 +3702,23 @@ def _resolve_unionall_samples(fn, sides, args, tables, catalog, sample_rows):
     return picks
 
 
-def _unionall_sample_frames(
-    spark, fn, picks, sides, tables, grouped, catalog, apply_where=True
-):
-    """Per-side (_v[, _g]) projections of the picked SAMPLE tables, with the
-    side-local WHERE applied to the sample rows and the same numeric-family
-    type gate as _setop_scan_frames. APPROX_COUNT never reads the value, so
-    its _v is the literal 1.0 (row marker) and the sides' value types — even
-    mixed non-numeric ones — cannot decline the route. Schema-only (no job);
-    ``_plan`` checks the gate with apply_where=False: predicates don't
-    change the schema it inspects, and subquery predicates would otherwise
-    register temp views, which planning never does."""
-    frames = []
-    for p, sm in zip(picks, sides):
-        s = catalog.sample(p["name"])
-        if apply_where and sm.group("where"):
-            s = _apply_where(spark, s, sm.group("where"), tables, sm.group("table"))
-        items = _split_args(sm.group("col"))
-        if grouped is None:
-            vexpr = _side_out_name(items[0])[0]
-        else:
-            _, pos_v, pos_g = grouped
-            vexpr = _side_out_name(items[pos_v])[0]
-        if fn == "APPROX_COUNT":
-            vexpr = "CAST(1.0 AS DOUBLE)"
-        sel = [f"({vexpr}) AS _v"]
-        if grouped is not None:
-            sel.append(f"({_side_out_name(items[grouped[2]])[0]}) AS _g")
-        frames.append(s.selectExpr(*sel))
-    for c in ["_v"] + (["_g"] if grouped else []):
-        types = {f.schema[c].dataType.simpleString() for f in frames}
-        if len(types) > 1 and not types <= _SETOP_NUMERIC:
-            return None
-    return frames
-
-
 def _unionall_from_samples(
-    spark, fn, args, alias, picks, catalog, grouped, sides, tables,
+    spark, fn, args, alias, picks, samples, catalog, grouped, sides, tables,
     estimator: str = "clt",
 ) -> DataFrame:
     """Answer a UNION ALL statement from the sides' persisted uniform
-    samples: project each sample to the side's (value[, key]) items, apply
-    side-local WHERE to the SAMPLE rows (commutes with Bernoulli sampling),
-    UNION ALL the projections (plan concatenation, no exchange) and run the
-    single Horvitz-Thompson aggregation at the shared ratio. Scans
-    p-fraction tables only — the bases are never read. The plan checked the
-    sides' projected types share one numeric family."""
+    samples (``samples``: the picked tables the plan read): project each
+    sample to the side's (value[, key]) items, apply side-local WHERE to
+    the SAMPLE rows (commutes with Bernoulli sampling), UNION ALL the
+    projections (plan concatenation, no exchange) and run the single
+    Horvitz-Thompson aggregation at the shared ratio. Scans p-fraction
+    tables only — the bases are never read. The plan checked the sides'
+    projected types share one numeric family."""
     from pyspark.sql import functions as F
 
     from sketchlib.spark.sampling import approx_agg_from_uniform_sample
 
-    frames = _unionall_sample_frames(spark, fn, picks, sides, tables, grouped, catalog)
+    frames = _side_frames(spark, samples, sides, grouped, tables, count=fn == "APPROX_COUNT")
     allf = frames[0]
     for f in frames[1:]:
         allf = allf.unionByName(f)
@@ -3686,13 +3746,7 @@ def _unionall_from_samples(
             allf, "_g" if grouped else None, "_v", picks[0]["ratio"],
             moments=fn in ("APPROX_VARIANCE", "APPROX_STDDEV"),
         )
-    keep = {
-        "APPROX_COUNT": ["est_count", "count_err"],
-        "APPROX_SUM": ["est_sum", "sum_err"],
-        "APPROX_AVG": ["est_avg", "avg_err"],
-        "APPROX_VARIANCE": ["est_variance", "variance_err"],
-        "APPROX_STDDEV": ["est_stddev", "stddev_err"],
-    }[fn]
+    keep = _SAMPLING_COLS[fn]
     sel = ([F.col("_g").alias(grouped[0])] if grouped else []) + [F.col(k) for k in keep]
     out = out.select(*sel)
     if alias:
@@ -3701,7 +3755,8 @@ def _unionall_from_samples(
     return out
 
 
-def _approx_setop(spark: SparkSession, route, picks, tables: dict | None, catalog) -> DataFrame:
+def _approx_setop(spark: SparkSession, route, picks, bases, tables: dict | None,
+                  catalog) -> DataFrame:
     """Execute the sketch-merge set-operation route: project each side to
     its column(s) (WHERE applied side-local, pushed to that side's scan),
     tag with a side label, UNION ALL the narrow projections (no shuffle —
@@ -3715,7 +3770,8 @@ def _approx_setop(spark: SparkSession, route, picks, tables: dict | None, catalo
     composite (side, group) and merge per group — the set operation is
     still never materialized or distinct-shuffled; grouped_setop_df
     documents the per-group presence semantics and routing. ``picks`` are
-    the per-side registrations the plan resolved (None → the scan)."""
+    the per-side registrations the plan resolved (None → the scan of
+    ``bases``, the sides' FROM tables the plan resolved)."""
     from pyspark.sql import functions as F
 
     op, sides, args, alias, grouped = route
@@ -3729,7 +3785,7 @@ def _approx_setop(spark: SparkSession, route, picks, tables: dict | None, catalo
         return _grouped_setop_from_states(spark, op, picks, catalog, grouped[0], out_name)
     tags = [f"s{i}" for i in range(len(sides))]
     frames = [f.withColumn("_side", F.lit(tag))
-              for tag, f in zip(tags, _setop_scan_frames(spark, sides, grouped, tables))]
+              for tag, f in zip(tags, _side_frames(spark, bases, sides, grouped, tables))]
     allf = frames[0]
     for f in frames[1:]:
         allf = allf.unionByName(f)
@@ -3853,24 +3909,10 @@ def _run_multi_routed(spark, p: Plan, tables, catalog) -> DataFrame:
     gcols = [] if not group else (list(group) if isinstance(group, (list, tuple)) else [group])
     wclause = f" WHERE {where}" if where else ""
     gclause = f" GROUP BY {', '.join(gcols)}" if gcols else ""
-    seen: dict[str, int] = {}
     frames = []
-    for (fn, args), key in zip(aggs, keys):
+    for (fn, args), key, out_name in zip(aggs, keys, _default_out_names(aggs)):
         stmt = f"SELECT {fn}({', '.join(args)}) FROM {table_token}{wclause}{gclause}"
         out = approx_sql(spark, stmt, tables, catalog, key)
-        if fn == "APPROX_COUNT":
-            out_name = "approx_count_star"
-        elif fn in ("APPROX_COVAR", "APPROX_CORR"):
-            dx = args[0] if _IDENT.match(args[0]) else _expr_slug(args[0])
-            dy = args[1] if _IDENT.match(args[1]) else _expr_slug(args[1])
-            out_name = f"{fn.lower()}_{dx}_{dy}"
-        else:
-            disp = args[0] if _IDENT.match(args[0]) else _expr_slug(args[0])
-            out_name = f"{fn.lower()}_{disp}"
-        n = seen.get(out_name, 0)
-        seen[out_name] = n + 1
-        if n:
-            out_name = f"{out_name}_{n + 1}"
         # the states path's RELATIVE rse becomes an absolute err here too
         out = _alias_estimate(out, fn, out_name)
         sel = [F.col(out_name), F.col(f"{out_name}_err")]
@@ -3925,51 +3967,29 @@ def _multi_agg(spark: SparkSession, df: DataFrame, aggs: list, group: str | None
     specs, spec_slots = [], []  # spec_slots: (out_name, spec_name)
     sample_slots: dict[tuple, list] = {}  # (ratio, value_col) -> [(fn, out_name)]
     biv_slots: dict[tuple, list] = {}  # (ratio, x_col, y_col) -> [(fn, out_name)]
-    for i, (fn, args) in enumerate(aggs):
+    # every name is final (duplicates suffixed) before any frame is built: a
+    # rename post-pass cannot do this, because withColumnRenamed renames
+    # EVERY column with that name
+    for i, ((fn, args), nm) in enumerate(zip(aggs, _default_out_names(aggs))):
         if fn == "APPROX_COUNT_DISTINCT":
             df, col = _materialize_expr(df, args[0])
-            disp = args[0] if _IDENT.match(args[0]) else _expr_slug(args[0])
-            name = f"_q{i}"
             p = hll_params(_rse_args(args) or 0.01)["p"]
-            specs.append(SketchSpec(name, "hll", col, {"p": p}))
-            spec_slots.append((f"approx_count_distinct_{disp}", name))
+            specs.append(SketchSpec(f"_q{i}", "hll", col, {"p": p}))
+            spec_slots.append((nm, f"_q{i}"))
         elif fn in ("APPROX_COVAR", "APPROX_CORR"):
             df, xcol = _materialize_expr(df, args[0])
             df, ycol = _materialize_expr(df, args[1])
-            dx = args[0] if _IDENT.match(args[0]) else _expr_slug(args[0])
-            dy = args[1] if _IDENT.match(args[1]) else _expr_slug(args[1])
-            biv_slots.setdefault((float(args[2]), xcol, ycol), []).append(
-                (fn, f"{fn.lower()}_{dx}_{dy}")
-            )
+            biv_slots.setdefault((_sampling_ratio(fn, args), xcol, ycol), []).append((fn, nm))
         else:
-            if fn == "APPROX_COUNT":
-                col, ratio = "_one", float(args[0])
-                out_name = "approx_count_star"
-            else:
+            col = "_one"
+            if fn != "APPROX_COUNT":
                 df, col = _materialize_expr(df, args[0])
-                disp = args[0] if _IDENT.match(args[0]) else _expr_slug(args[0])
-                ratio = float(args[1])
-                out_name = f"{fn.lower()}_{disp}"
-            sample_slots.setdefault((ratio, col), []).append((fn, out_name))
-
-    # duplicate aggregates (e.g. the same SUM at two ratios, or twice in one
-    # list) would collide in the joined output — disambiguate with a suffix
-    # AT CONSTRUCTION TIME, in output order. A rename post-pass cannot do
-    # this: withColumnRenamed renames EVERY column with that name, so a slot
-    # list carrying the same aggregate twice (one frame, duplicate names)
-    # would have both copies renamed together and the plain name lost.
-    seen: dict[str, int] = {}
-
-    def _final_name(base: str) -> str:
-        n = seen.get(base, 0)
-        seen[base] = n + 1
-        return f"{base}_{n + 1}" if n else base
+            sample_slots.setdefault((_sampling_ratio(fn, args), col), []).append((fn, nm))
 
     outs = []
     if specs:
         states = build_sketches(df, specs, group_by=gkey)
-        for out_name, spec_name in spec_slots:
-            nm = _final_name(out_name)
+        for nm, spec_name in spec_slots:
             e = estimates_df(spark, states, spec_name)
             e = e.select(
                 "group",
@@ -3986,13 +4006,8 @@ def _multi_agg(spark: SparkSession, df: DataFrame, aggs: list, group: str | None
         moments = any(fn in ("APPROX_VARIANCE", "APPROX_STDDEV") for fn, _ in slots)
         est = approx_agg_uniform(base, gkey, value_col, ratio, moments=moments)
         cols = [F.col(gkey).alias("group")] if gkey else []
-        for fn, out_name in slots:
-            nm = _final_name(out_name)
-            src = {"APPROX_COUNT": ("est_count", "count_err"),
-                   "APPROX_SUM": ("est_sum", "sum_err"),
-                   "APPROX_AVG": ("est_avg", "avg_err"),
-                   "APPROX_VARIANCE": ("est_variance", "variance_err"),
-                   "APPROX_STDDEV": ("est_stddev", "stddev_err")}[fn]
+        for fn, nm in slots:
+            src = _SAMPLING_COLS[fn]
             cols += [F.col(src[0]).alias(nm), F.col(src[1]).alias(f"{nm}_err")]
         outs.append(est.select(*cols))
     for (ratio, xcol, ycol), slots in biv_slots.items():
@@ -4000,10 +4015,8 @@ def _multi_agg(spark: SparkSession, df: DataFrame, aggs: list, group: str | None
 
         est = approx_bivariate_uniform(df, gkey, xcol, ycol, ratio)
         cols = [F.col(gkey).alias("group")] if gkey else []
-        for fn, out_name in slots:
-            nm = _final_name(out_name)
-            src = {"APPROX_COVAR": ("est_covar", "covar_err"),
-                   "APPROX_CORR": ("est_corr", "corr_err")}[fn]
+        for fn, nm in slots:
+            src = _SAMPLING_COLS[fn]
             cols += [F.col(src[0]).alias(nm), F.col(src[1]).alias(f"{nm}_err")]
         outs.append(est.select(*cols))
 
@@ -4102,32 +4115,35 @@ def _alias_join_out(out: DataFrame, jm) -> DataFrame:
 
 
 def _default_out_names(aggs: list) -> list[str]:
-    """_multi_agg's output naming, replicated (incl. the duplicate-name
-    suffix pass, which runs in OUTPUT-frame order: sketch aggregates first,
-    then sampling aggregates grouped by (ratio, column)) so alias renames
-    always target the column that actually exists in the joined frame."""
+    """The output column of each aggregate of a multi-aggregate statement,
+    in statement order — the one naming ``_multi_agg``, the served route
+    and alias renames share. A duplicate name is suffixed (_2, _3, …) in
+    ``_multi_agg``'s OUTPUT-frame order: sketch aggregates first, then the
+    sampling aggregates grouped by (ratio, column), then the bivariate
+    ones."""
+    def disp(a: str) -> str:
+        return a if _IDENT.match(a) else _expr_slug(a)
+
+    def ratio(fn, args):  # the slot's ratio; absent when a sample serves it
+        i = 0 if fn == "APPROX_COUNT" else 2 if fn in ("APPROX_COVAR", "APPROX_CORR") else 1
+        return _num(args[i]) if len(args) > i else None
+
     sketch, samples, biv = [], {}, {}
     for i, (fn, args) in enumerate(aggs):
         if fn == "APPROX_COUNT_DISTINCT":
-            disp = args[0] if _IDENT.match(args[0]) else _expr_slug(args[0])
-            sketch.append((i, f"approx_count_distinct_{disp}"))
+            sketch.append((i, f"approx_count_distinct_{disp(args[0])}"))
         elif fn == "APPROX_COUNT":
-            samples.setdefault((float(args[0]), "_one"), []).append(
+            samples.setdefault((ratio(fn, args), "_one"), []).append(
                 (i, "approx_count_star"))
         elif fn in ("APPROX_COVAR", "APPROX_CORR"):
-            dx = args[0] if _IDENT.match(args[0]) else _expr_slug(args[0])
-            dy = args[1] if _IDENT.match(args[1]) else _expr_slug(args[1])
-            biv.setdefault((float(args[2]), args[0].strip(), args[1].strip()), []).append(
-                (i, f"{fn.lower()}_{dx}_{dy}"))
+            biv.setdefault((ratio(fn, args), args[0].strip(), args[1].strip()), []).append(
+                (i, f"{fn.lower()}_{disp(args[0])}_{disp(args[1])}"))
         else:
-            disp = args[0] if _IDENT.match(args[0]) else _expr_slug(args[0])
             # slot key = (ratio, EXACT expression text) — the same identity
             # _materialize_expr keys derived columns on. Keying on the slug
-            # would merge distinct expressions that slug alike (a+b vs a-b),
-            # partitioning the slots differently from _multi_agg and renaming
-            # aliases onto the wrong columns.
-            samples.setdefault((float(args[1]), args[0].strip()), []).append(
-                (i, f"{fn.lower()}_{disp}"))
+            # would merge distinct expressions that slug alike (a+b vs a-b).
+            samples.setdefault((ratio(fn, args), args[0].strip()), []).append(
+                (i, f"{fn.lower()}_{disp(args[0])}"))
     order = (sketch
              + [slot for slots in samples.values() for slot in slots]
              + [slot for slots in biv.values() for slot in slots])
@@ -4158,14 +4174,8 @@ def _alias_estimate(out: DataFrame, fn: str, alias: str,
             (F.col("rse_bound") * F.col("estimate")).alias(f"{alias}_err"),
         )
     pairs = {
+        **_SAMPLING_COLS,
         "APPROX_COUNT_DISTINCT": ("est_distinct", "distinct_err"),
-        "APPROX_COUNT": ("est_count", "count_err"),
-        "APPROX_SUM": ("est_sum", "sum_err"),
-        "APPROX_AVG": ("est_avg", "avg_err"),
-        "APPROX_VARIANCE": ("est_variance", "variance_err"),
-        "APPROX_STDDEV": ("est_stddev", "stddev_err"),
-        "APPROX_COVAR": ("est_covar", "covar_err"),
-        "APPROX_CORR": ("est_corr", "corr_err"),
         "APPROX_TOPK": ("est_count", "err_bound"),
         "APPROX_TOP_SUM": ("est_sum", "err_bound"),
         "APPROX_PERCENTILE": ("value", "rank_err_bound"),
@@ -4174,12 +4184,6 @@ def _alias_estimate(out: DataFrame, fn: str, alias: str,
         "APPROX_TRIMMED_MEAN": ("trimmed_mean", "rank_err_bound"),
         "APPROX_FREQUENT": ("est_count", "undercount_bound"),
     }.get(fn)
-    if fn == "APPROX_HISTOGRAM":
-        raise ValueError(
-            "APPROX_HISTOGRAM returns a multi-column bin frame "
-            "(bin, lo, hi, target_frac) — an AS alias is ambiguous; "
-            "drop the alias"
-        )
     if fn == "APPROX_PERCENTILE" and estimator == "subsample":
         # the subsample percentile's bound is in VALUE units, not rank
         pairs = ("value", "value_err")
@@ -4722,14 +4726,20 @@ def approx_sql(
     The statement is classified once (``_plan``); a statement the plan
     refuses raises its ValueError before anything is read, and ``EXPLAIN
     <statement>`` renders the plan (``explain_sql``) instead of running it."""
-    plan = node = _plan(spark, sql, tables, catalog, catalog_key, estimator)
-    # every nested plan runs when its parent does, so a refusal anywhere in
-    # the chain raises before a CTE body or derived table is computed
+    return _run(spark, _checked(_plan(spark, sql, tables, catalog, catalog_key, estimator)),
+                tables, catalog)
+
+
+def _checked(plan: Plan) -> Plan:
+    """``plan``, or ValueError with the first refusal along its nested
+    chain: every nested plan runs when its parent does, so a refusal
+    anywhere raises before a CTE body or derived table is computed."""
+    node = plan
     while node.refusal is None and node.nested is not None and node.route != "explain":
         node = node.nested
     if node.refusal is not None:
         raise ValueError(node.refusal)
-    return _run(spark, plan, tables, catalog)
+    return plan
 
 
 def _run(spark, p: Plan, tables, catalog) -> DataFrame:
@@ -4747,13 +4757,13 @@ def _run(spark, p: Plan, tables, catalog) -> DataFrame:
     if route == "derived":
         return _run_derived(spark, p, tables, catalog)
     if route == "setop":
-        return _approx_setop(spark, p.m, p.detail, tables, catalog)
+        return _approx_setop(spark, p.m, *p.detail, tables, catalog)
     if route == "unionall_merge":
         fn, args, _sides, alias, grouped = p.m
         return _unionall_from_states(spark, fn, args, alias, p.detail, catalog, grouped)
     if route == "unionall_sample":
         fn, args, sides, alias, grouped = p.m
-        return _unionall_from_samples(spark, fn, args, alias, p.detail, catalog, grouped,
+        return _unionall_from_samples(spark, fn, args, alias, *p.detail, catalog, grouped,
                                       sides, tables, estimator=p.estimator)
     if route == "within":
         return _run(spark, p.nested, tables, catalog)
@@ -4768,9 +4778,9 @@ def _run(spark, p: Plan, tables, catalog) -> DataFrame:
     if route == "join_rows":
         return _approx_join_rows(spark, p.m, tables, catalog, *p.detail)
     if route == "join3":
-        return _alias_join_out(_approx_join3(spark, p.m, tables, catalog, p.key), p.m)
+        return _alias_join_out(_approx_join3(spark, p.m, tables, catalog, *p.detail), p.m)
     if route == "join":
-        return _alias_join_out(_approx_join(spark, p.m, tables, catalog, p.key), p.m)
+        return _alias_join_out(_approx_join(spark, p.m, tables, catalog, p.detail), p.m)
     if route.startswith("rollup"):
         return _run_rollup(spark, p, tables, catalog)
     if route == "aliased":
@@ -4795,18 +4805,22 @@ def _run_cte(spark, p: Plan, tables, catalog) -> DataFrame:
     via pass-through — lazy; approx bodies via approx_sql, eagerly
     checkpointed so the groups-sized estimate frame computes once however
     often the final statement references it), registered as temp views —
-    so a later CTE can read an earlier one — then the final statement runs
-    and the views are dropped."""
+    so a later CTE can read an earlier one — then the final statement is
+    planned again, now that the views exist (a set operation's type gate
+    reads a CTE side's schema; nothing else in the plan depends on the
+    views), runs, and the views are dropped."""
+    defs, final = p.m
     views = []
     try:
-        for name, body in p.m:
+        for name, body in defs:
             if _AGG.search(_mask_literals(body)):
                 df = approx_sql(spark, body, tables, catalog, None).localCheckpoint(eager=True)
             else:
                 df = _exact_passthrough(spark, body, tables)
             df.createOrReplaceTempView(name)
             views.append(name)
-        return _run(spark, p.nested, tables, catalog)
+        final_plan = _plan(spark, final, tables, catalog, p.key, p.estimator, p.detail)
+        return _run(spark, _checked(final_plan), tables, catalog)
     finally:
         for v in views:
             spark.catalog.dropTempView(v)
@@ -5011,16 +5025,12 @@ def _run_single(spark, p: Plan, tables, catalog) -> DataFrame:
     from sketchlib.spark.build import group_key_expr
     from sketchlib.spark.sampling import uniform_sample
 
+    ratio, keep = _sampling_ratio(fn, args), _SAMPLING_COLS[fn]
     if fn in ("APPROX_COVAR", "APPROX_CORR"):
         from sketchlib.spark.sampling import approx_bivariate_uniform
 
         df, xcol = _materialize_expr(df, args[0])
         df, ycol = _materialize_expr(df, args[1])
-        ratio = float(args[2])
-        keep = {
-            "APPROX_COVAR": ["est_covar", "covar_err"],
-            "APPROX_CORR": ["est_corr", "corr_err"],
-        }[fn]
         if estimator == "subsample":
             from sketchlib.spark.subsample import (
                 subsample_bivariate_from_uniform_sample,
@@ -5041,18 +5051,10 @@ def _run_single(spark, p: Plan, tables, catalog) -> DataFrame:
         moments = fn in ("APPROX_VARIANCE", "APPROX_STDDEV")
         if fn == "APPROX_COUNT":
             # pure COUNT: synthesize a numeric column for the shared kernel
-            col, ratio = "_one", float(args[0])
+            col = "_one"
             df = df.withColumn("_one", F.lit(1.0))
         else:
             df, col = _materialize_expr(df, args[0])
-            ratio = float(args[1])
-        keep = {
-            "APPROX_COUNT": ["est_count", "count_err"],
-            "APPROX_SUM": ["est_sum", "sum_err"],
-            "APPROX_AVG": ["est_avg", "avg_err"],
-            "APPROX_VARIANCE": ["est_variance", "variance_err"],
-            "APPROX_STDDEV": ["est_stddev", "stddev_err"],
-        }[fn]
         if estimator == "subsample":
             from sketchlib.spark.subsample import subsample_agg_from_uniform_sample
 
@@ -5180,15 +5182,7 @@ def _run_sample(spark, p: Plan, tables, catalog) -> DataFrame:
     if bivar:
         s, ycol = _materialize_expr(s, args[1])
     moments = fn in ("APPROX_VARIANCE", "APPROX_STDDEV")
-    keep = {
-        "APPROX_COUNT": ["est_count", "count_err"],
-        "APPROX_SUM": ["est_sum", "sum_err"],
-        "APPROX_AVG": ["est_avg", "avg_err"],
-        "APPROX_VARIANCE": ["est_variance", "variance_err"],
-        "APPROX_STDDEV": ["est_stddev", "stddev_err"],
-        "APPROX_COVAR": ["est_covar", "covar_err"],
-        "APPROX_CORR": ["est_corr", "corr_err"],
-    }[fn]
+    keep = _SAMPLING_COLS[fn]
 
     def _agg(frame, gname):
         if estimator == "subsample":
