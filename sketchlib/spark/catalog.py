@@ -24,7 +24,7 @@ from collections import Counter, OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sketchlib.spark.build import STATE_FIELDS, SketchSpec
+from sketchlib.spark.build import _ARROW_STATE_SCHEMA, STATE_FIELDS, SketchSpec
 from sketchlib.spark.query import ddl_arrow_schema, local_frame
 from sketchlib.spark.scan import build_sketches_from_parquet
 
@@ -32,6 +32,11 @@ _CATALOG_SCHEMA = (
     "name string, input_dir string, group_by string, specs_json string, "
     "n_states long, rows long, tokens long, built_unix double, files_json string"
 )
+
+
+# a cached state row: a tuple in STATE_FIELDS order
+_STATE_COLS = tuple(_ARROW_STATE_SCHEMA.names)
+_STATE_IDX = _STATE_COLS.index("state")
 
 
 def _dir_num_rows(d: str) -> int:
@@ -78,6 +83,10 @@ class SketchCatalog:
         # rel_dir -> (fingerprint, value, held state bytes), LRU order.
         self._cache: OrderedDict = OrderedDict()
         self._cache_lock = threading.Lock()
+        # registry dir -> {log file's (name, size, mtime_ns, inode): its
+        # parsed rows} — a log lookup after an append parses only the
+        # appended file (_log_rows)
+        self._log_files: dict = {}
         os.makedirs(os.path.join(root, "_sketch_catalog"), exist_ok=True)
         os.makedirs(os.path.join(root, "states"), exist_ok=True)
         os.makedirs(os.path.join(root, "_sample_catalog"), exist_ok=True)
@@ -107,13 +116,8 @@ class SketchCatalog:
         pq.write_table(table, out)
 
     @staticmethod
-    def _states_stats_local(sdir: str) -> tuple[int, int, int]:
-        """(n_state_rows, sum(rows), sum(tokens)) of a persisted state table,
-        read driver-side with pyarrow — the table is KB-to-MB scale (one row
-        per group × sketch), so a Spark aggregate job is pure overhead."""
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(sdir, columns=["rows", "tokens"])
+    def _states_stats(t) -> tuple[int, int, int]:
+        """(n_state_rows, sum(rows), sum(tokens)) of a state table."""
         import pyarrow.compute as pc
 
         return (
@@ -121,6 +125,15 @@ class SketchCatalog:
             int(pc.sum(t["rows"]).as_py() or 0),
             int(pc.sum(t["tokens"]).as_py() or 0),
         )
+
+    @classmethod
+    def _states_stats_local(cls, sdir: str) -> tuple[int, int, int]:
+        """``_states_stats`` of a persisted state table, read driver-side
+        with pyarrow — the table is KB-to-MB scale (one row per group ×
+        sketch), so a Spark aggregate job is pure overhead."""
+        import pyarrow.parquet as pq
+
+        return cls._states_stats(pq.read_table(sdir, columns=["rows", "tokens"]))
 
     # --- A2: CREATE SAMPLE analog -----------------------------------------
     def create(
@@ -261,7 +274,8 @@ class SketchCatalog:
         known driver-side) fits the byte budget, get the delta partials —
         sketched on the driver (no job) when the ``delta`` chunks total at
         most ``_DRIVER_DELTA_BYTES``, else collected from the kernel job —
-        read the old table with pyarrow, and merge in exactly
+        take the old rows from the state cache (``_states_cached``; a
+        miss reads the table with pyarrow), and merge in exactly
         ``_merge_pdf``'s canonical (part_id, state bytes) order.
         Both ways of getting the partials emit the same rows, so the
         states are byte-identical to the pipeline path (old rows carry
@@ -271,7 +285,6 @@ class SketchCatalog:
         import pyarrow.parquet as pq
 
         from sketchlib.sketches import deserialize
-        from sketchlib.spark.build import _ARROW_STATE_SCHEMA
         from sketchlib.spark.scan import _chunk_partials, _driver_partials
 
         try:
@@ -296,8 +309,13 @@ class SketchCatalog:
                 {**r.asDict(), "state": bytes(r["state"])}
                 for r in _chunk_partials(self.spark, delta, specs, group_by, n_tasks).collect()
             ]
+        cached = self._states_cached(reg["name"])
+        old_rows = (
+            [dict(zip(_STATE_COLS, r)) for r in cached[2]] if cached is not None
+            else pq.read_table(sdir).to_pylist()
+        )
         by_key: dict = {}
-        for r in pq.read_table(sdir).to_pylist() + delta_rows:
+        for r in old_rows + delta_rows:
             by_key.setdefault((r["group"], r["sketch"]), []).append(r)
         out = []
         for (g, name_), rs in sorted(by_key.items()):
@@ -334,6 +352,15 @@ class SketchCatalog:
         on the driver; a state table over the driver budget keeps the
         distributed merge. Every route gives byte-identical states.
 
+        What a refresh reads and writes is the delta's size, not the
+        table's: it lists the input dir (a glob) and reads the footers of
+        the NEW files only; on the driver routes the old state rows come
+        from the state cache when it holds the set's current listing, the
+        driver route sketches the delta's bins concurrently (one thread
+        per bin), and the merged table it writes seeds the cache — so the
+        next catalog-served statement reads no state file. Only the new
+        registration row is read back, by the next registry lookup.
+
         What equals a fresh build: order-free merges give the same state —
         HLL registers and Bloom bits byte for byte, the Count-Min counter
         table and total exactly. Order-sensitive parts differ in bytes
@@ -348,7 +375,7 @@ class SketchCatalog:
         the input dir raises; rebuild with ``create(overwrite=True)``.
         Returns {new_files, rows_added, tokens_added}."""
         from sketchlib.spark.build import merge_states
-        from sketchlib.spark.scan import _chunk_partials, _select_files, plan_chunks
+        from sketchlib.spark.scan import _chunk_partials
 
         reg = self._registry_meta("_sketch_catalog", _CATALOG_SCHEMA, name, "sketch set")
         if reg["files_json"] is None:
@@ -358,11 +385,8 @@ class SketchCatalog:
                 "snapshot (that IS its refresh); a file-backed set built "
                 "before lineage existed needs one create(overwrite=True)"
             )
-        # the grown directory is planned ONCE: the lineage check and the
-        # delta scan share the footer reads
-        chunks = plan_chunks(reg["input_dir"])
-        new, current = self._lineage_new_files(
-            reg, "sketch state", "rebuild with create(overwrite=True)", chunks
+        new, current, delta = self._lineage_new_files(
+            reg, "sketch state", "rebuild with create(overwrite=True)"
         )
         if not new:
             return {"new_files": 0, "rows_added": 0, "tokens_added": 0}
@@ -375,11 +399,11 @@ class SketchCatalog:
         gb = reg["group_by"] or None
         if gb and "," in gb:
             gb = gb.split(",")
-        delta = _select_files(chunks, new, reg["input_dir"])
         n_tasks = min(len(delta), self.spark.sparkContext.defaultParallelism)
         # prior totals come from the registration row — no extra Spark job
         before_rows, before_tokens = int(reg["rows"]), int(reg["tokens"])
-        sdir = os.path.join(self.root, "states", name)
+        rel = os.path.join("states", name)
+        sdir = os.path.join(self.root, rel)
         tmp, bak = sdir + "._refresh_tmp", sdir + "._refresh_old"
         # a stale backup from a crashed refresh would wedge the rename
         shutil.rmtree(bak, ignore_errors=True)
@@ -390,6 +414,9 @@ class SketchCatalog:
             shutil.rmtree(tmp, ignore_errors=True)
             os.makedirs(tmp)
             pq.write_table(local, os.path.join(tmp, "part-00000.parquet"))
+            # the renames below keep every entry's name, size, mtime and
+            # inode: this is the listing the swapped-in dir will have
+            written = self._dir_fingerprint(rel + "._refresh_tmp")
         else:
             newpart = _chunk_partials(self.spark, delta, specs, gb, n_tasks)
             refreshed = merge_states(self.states(name).unionByName(newpart))
@@ -413,8 +440,16 @@ class SketchCatalog:
             else:
                 raise
         shutil.rmtree(bak, ignore_errors=True)
-        # stats + registration row driver-side (KB/MB-scale reads, no jobs)
-        n_rows, r_sum, t_sum = self._states_stats_local(sdir)
+        if local is not None:
+            # seed the cache with what was written, under the listing the
+            # write produced: if another writer swapped in its own dir since,
+            # the listings differ and the next read misses
+            self._cache_put(rel, written, self._state_entry(written, lambda _part: local),
+                            self._state_weight)
+            n_rows, r_sum, t_sum = self._states_stats(local)
+        else:
+            # stats driver-side (a KB/MB-scale read, no job)
+            n_rows, r_sum, t_sum = self._states_stats_local(sdir)
         n_specs = max(len(specs), 1)
         rows_total = r_sum // n_specs
         tokens_total = t_sum // n_specs
@@ -441,30 +476,34 @@ class SketchCatalog:
 
     # --- shared registry machinery (append-only parquet log per registry) ---
 
-    def _lineage_new_files(self, reg, kind_label: str, rebuild_hint: str, chunks=None):
-        """(new_files_sorted, current_set) from a registration row's file
-        lineage — the refresh preamble all four registries share: rows
-        registered without lineage refuse refresh, and every covered file
-        must still exist (sketch states / samples / indexes / signatures
-        cannot subtract). Raises with the registry's own rebuild hint.
-        ``chunks``: the input dir's plan, when the caller already has it."""
-        from sketchlib.spark.scan import plan_chunks
+    def _lineage_new_files(self, reg, kind_label: str, rebuild_hint: str):
+        """(new_files_sorted, current_set, chunks of the new files) from a
+        registration row's file lineage — the refresh preamble all four
+        registries share: rows registered without lineage refuse refresh,
+        and every covered file must still exist (sketch states / samples /
+        indexes / signatures cannot subtract). Raises with the registry's
+        own rebuild hint. The input dir is listed (no footer read) and only
+        the files not in the lineage are planned, so the cost is the
+        delta's; a new file without row groups plans to no chunk and is
+        neither new nor recorded. The chunks are numbered from 0, as a
+        scan of exactly the new files numbers them."""
+        from sketchlib.spark.scan import list_files, plan_files
 
         if reg["files_json"] is None:
             raise ValueError(
                 f"{kind_label} {reg['name']!r} has no file lineage — {rebuild_hint}"
             )
         covered = set(json.loads(reg["files_json"]))
-        if chunks is None:
-            chunks = plan_chunks(reg["input_dir"])
-        current = {c.file for c in chunks}
-        gone = sorted(covered - current)
+        listed = list_files(reg["input_dir"])
+        gone = sorted(covered - set(listed))
         if gone:
             raise ValueError(
                 f"{len(gone)} covered file(s) no longer in {reg['input_dir']!r} "
                 f"(e.g. {gone[0]!r}) — {kind_label}s cannot subtract; {rebuild_hint}"
             )
-        return sorted(current - covered), current
+        chunks = plan_files(reg["input_dir"], [f for f in listed if f not in covered])
+        new = sorted({c.file for c in chunks})
+        return new, covered | set(new), chunks
 
     def _restore_crashed(self, live_dir: str) -> None:
         """Restore any '<name>._refresh_old' left by a crash between
@@ -537,12 +576,14 @@ class SketchCatalog:
         is taken again after a miss's load and the value is stored only if
         it still matches, so a refresh or swap landing mid-load is never
         cached under the stale key; a None value is not stored either.
+        The cache is seeded by these misses and by a driver-route refresh
+        (``_cache_put`` of the state table it wrote, under the listing its
+        write produced); any change of the listing — by this instance,
+        another one or another process — invalidates an entry.
         ``weigh(value)``: the state bytes the entry holds — the total held
         is kept within ``query._PARTIAL_PROBE_BYTES`` (read per call) by
         evicting the least recently used entries. The load runs outside
         the lock; two threads missing at once both load."""
-        from sketchlib.spark.query import _PARTIAL_PROBE_BYTES
-
         fp = self._dir_fingerprint(rel_dir)
         with self._cache_lock:
             hit = self._cache.get(rel_dir)
@@ -550,37 +591,65 @@ class SketchCatalog:
                 self._cache.move_to_end(rel_dir)
                 return hit[1]
         value = load(fp)
-        keep = value is not None and fp is not None and self._dir_fingerprint(rel_dir) == fp
+        keep = fp is not None and self._dir_fingerprint(rel_dir) == fp
+        self._cache_put(rel_dir, fp if keep else None, value, weigh)
+        return value
+
+    def _cache_put(self, rel_dir: str, fp, value, weigh=None) -> None:
+        """Hold ``value`` for ``rel_dir`` under listing ``fp`` — or drop the
+        entry when either is None — evicting least recently used weighed
+        entries past the byte bound (``_listing_cached``)."""
+        from sketchlib.spark.query import _PARTIAL_PROBE_BYTES
+
         with self._cache_lock:
             self._cache.pop(rel_dir, None)
-            if keep:
-                self._cache[rel_dir] = (fp, value, weigh(value) if weigh else 0)
-                held = sum(e[2] for e in self._cache.values())
-                for key in [k for k, e in self._cache.items() if e[2]]:
-                    if held <= _PARTIAL_PROBE_BYTES:
-                        break
-                    held -= self._cache.pop(key)[2]
-        return value
+            if fp is None or value is None:
+                return
+            self._cache[rel_dir] = (fp, value, weigh(value) if weigh else 0)
+            held = sum(e[2] for e in self._cache.values())
+            for key in [k for k, e in self._cache.items() if e[2]]:
+                if held <= _PARTIAL_PROBE_BYTES:
+                    break
+                held -= self._cache.pop(key)[2]
 
     def _log_rows(self, cat_dir: str, schema: str) -> list:
         """ALL registration rows of one registry log, served from the
         listing-keyed cache. The logs are KBs — a handful of rows per
-        registered artifact — so holding them driver-side is free. A miss
-        reads the log with pyarrow under the registry's own schema (files
+        registered artifact — so holding them driver-side is free. Rows
+        are read with pyarrow under the registry's own schema (files
         missing a later-added column read it as NULL, as Spark's
-        schema-given read does) and returns ``Row``s in schema order, equal
-        to ``spark.read.schema(schema).parquet(dir).collect()`` without its
-        Spark job (~0.14 s, paid on the first lookup after every append)."""
+        schema-given read does) and returned as ``Row``s in schema order,
+        equal to ``spark.read.schema(schema).parquet(dir).collect()``
+        without its Spark job.
+
+        Each log file's parsed rows are kept too, keyed by that file's
+        (name, size, mtime_ns, inode): a miss — any append, drop or
+        rewrite changes the listing — parses only the files whose key is
+        new, so a lookup after an append reads the appended file alone,
+        whichever instance or process appended it, and a file rewritten
+        under its old name is read again."""
         import pyarrow.dataset as ds
         from pyspark.sql import Row
 
-        def load(_fp):
-            pa_schema = ddl_arrow_schema(schema)
-            table = ds.dataset(
-                os.path.join(self.root, cat_dir), schema=pa_schema, format="parquet"
-            ).to_table()
-            make = Row(*pa_schema.names)
-            return [make(*r.values()) for r in table.to_pylist()]
+        pa_schema = ddl_arrow_schema(schema)
+        make = Row(*pa_schema.names)
+
+        def load(fp):
+            held = self._log_files.get(cat_dir, {})
+            parsed = {}
+            for e in fp or ():
+                if e[0].startswith((".", "_")):
+                    continue  # what a dataset read skips: .crc, _SUCCESS
+                rows = held.get(e)
+                if rows is None:
+                    table = ds.dataset(
+                        os.path.join(self.root, cat_dir, e[0]), schema=pa_schema,
+                        format="parquet",
+                    ).to_table()
+                    rows = [make(*r.values()) for r in table.to_pylist()]
+                parsed[e] = rows
+            self._log_files[cat_dir] = parsed
+            return [r for rows in parsed.values() for r in rows]
 
         return self._listing_cached(cat_dir, load)
 
@@ -638,12 +707,15 @@ class SketchCatalog:
         for the answerers' ``rows=`` argument. ``sketch`` (a name or a
         collection of names) keeps only those sketches' rows.
 
-        The set's rows are cached (``_listing_cached``, keyed by the
+        The set's rows are cached (``_states_cached``, keyed by the
         ``states/<name>`` listing, so a refresh, drop or re-create by any
         instance or process invalidates them): a repeat call opens no
-        state file. The cache holds immutable ``(group, sketch, state
-        bytes)`` tuples and every call hands out fresh dicts, which callers
-        may relabel in place.
+        state file. A miss seeds the entry, and so does a driver-route
+        refresh with the table it wrote — the first call after it opens
+        no state file either. The cache holds immutable tuples of every
+        ``STATE_FIELDS`` column (the refresh merge reads them all) and
+        every call hands out fresh ``(group, sketch, state)`` dicts, which
+        callers may relabel in place.
 
         Returns None when the set is over the query layer's driver budgets,
         so the caller answers from ``states(name)`` on the Spark route
@@ -652,37 +724,12 @@ class SketchCatalog:
         disk. Both are checked on every call, a cached one too: the byte
         budget from the listing before any state bytes are read, the group
         budget from the per-sketch row counts kept with the rows."""
-        import pyarrow.parquet as pq
-
         from sketchlib.spark import query
 
         if not self.exists(name):
             raise ValueError(f"unknown sketch set {name!r}")
-        rel = os.path.join("states", name)
-
-        def load(fp):
-            if fp is None:
-                return None
-            parts = [e for e in fp if e[0].endswith(".parquet")
-                     and not e[0].startswith((".", "_"))]
-            disk_bytes = sum(e[1] for e in parts)
-            if disk_bytes > query._PARTIAL_PROBE_BYTES:
-                return None
-            rows = []
-            for e in parts:
-                t = pq.ParquetFile(os.path.join(self.root, rel, e[0])).read(
-                    columns=["group", "sketch", "state"]
-                )
-                rows.extend(zip(*(t.column(c).to_pylist() for c in t.column_names)))
-            return disk_bytes, Counter(r[1] for r in rows), tuple(rows)
-
-        try:
-            entry = self._listing_cached(
-                rel, load, weigh=lambda v: sum(len(r[2]) for r in v[2])
-            )
-        except FileNotFoundError:
-            return None  # a refresh swapped the directory under this read
-        if entry is None or entry[0] > query._PARTIAL_PROBE_BYTES:
+        entry = self._states_cached(name)
+        if entry is None:
             return None
         _, counts, rows = entry
         want = None
@@ -692,10 +739,63 @@ class SketchCatalog:
         if max(groups, default=0) > query._DISTRIBUTED_THRESHOLD:
             return None
         return [
-            {"group": g, "sketch": s, "state": b}
-            for g, s, b in rows
-            if want is None or s in want
+            {"group": r[0], "sketch": r[1], "state": r[_STATE_IDX]}
+            for r in rows
+            if want is None or r[1] in want
         ]
+
+    @staticmethod
+    def _state_weight(entry) -> int:
+        return sum(len(r[_STATE_IDX]) for r in entry[2])
+
+    def _state_entry(self, fp, read):
+        """The cached value of a state dir whose listing is ``fp``: (bytes
+        of its part files, state rows per sketch, every row as a tuple in
+        ``STATE_FIELDS`` order, part files in listing order) — or None when
+        the dir is gone or its parts exceed ``query._PARTIAL_PROBE_BYTES``.
+        ``read(part file name)`` gives a part's table: the file read back,
+        or the table a refresh just wrote there."""
+        from sketchlib.spark import query
+
+        if fp is None:
+            return None
+        parts = [e for e in fp if e[0].endswith(".parquet")
+                 and not e[0].startswith((".", "_"))]
+        disk_bytes = sum(e[1] for e in parts)
+        if disk_bytes > query._PARTIAL_PROBE_BYTES:
+            return None
+        rows = []
+        for e in parts:
+            t = read(e[0])
+            rows.extend(zip(*(
+                t.column(c).to_pylist() if c in t.column_names else [None] * t.num_rows
+                for c in _STATE_COLS
+            )))
+        return disk_bytes, Counter(r[1] for r in rows), tuple(rows)
+
+    def _states_cached(self, name: str):
+        """``_state_entry`` of ``states/<name>`` from the listing-keyed
+        cache (a miss reads the part files and seeds it), or None over the
+        byte budget or when a refresh swaps the dir under the read."""
+        import pyarrow.parquet as pq
+
+        from sketchlib.spark import query
+
+        rel = os.path.join("states", name)
+
+        def read(part):
+            pf = pq.ParquetFile(os.path.join(self.root, rel, part))
+            return pf.read(columns=[c for c in _STATE_COLS if c in pf.schema_arrow.names])
+
+        try:
+            entry = self._listing_cached(
+                rel, lambda fp: self._state_entry(fp, read), weigh=self._state_weight
+            )
+        except FileNotFoundError:
+            return None  # a refresh swapped the directory under this read
+        if entry is None or entry[0] > query._PARTIAL_PROBE_BYTES:
+            return None
+        return entry
 
     def states(self, name: str) -> DataFrame:
         if not self.exists(name):
@@ -822,7 +922,7 @@ class SketchCatalog:
                 f"sample {name!r} was registered without file lineage — "
                 "rebuild once with create_sample(overwrite=True) to enable refresh"
             )
-        new, current = self._lineage_new_files(
+        new, current, _ = self._lineage_new_files(
             reg, "sample", "rebuild with create_sample(overwrite=True)"
         )
         if not new:
@@ -973,7 +1073,7 @@ class SketchCatalog:
                 f"ANN index {name!r} was registered without file lineage — "
                 "rebuild once with create_ann_index(overwrite=True) to enable refresh"
             )
-        new, current = self._lineage_new_files(
+        new, current, _ = self._lineage_new_files(
             reg, "index", "rebuild with create_ann_index(overwrite=True)"
         )
         if not new:
@@ -1085,7 +1185,7 @@ class SketchCatalog:
         from sketchlib.spark.dedup import minhash_signatures
 
         reg = self._live_sig_meta(name)
-        new, current = self._lineage_new_files(
+        new, current, _ = self._lineage_new_files(
             reg, "signature table", "rebuild with create_signatures(overwrite=True)"
         )
         if not new:

@@ -85,18 +85,32 @@ def _hive_values(root: str, path: str) -> dict:
     return vals
 
 
-def plan_chunks(input_dir: str, target_bytes: int = 8 << 20) -> list[Chunk]:
-    """Split every parquet file into row-group ranges of ~target_bytes.
-
-    Planning reads only parquet footers (driver-side; at real scale this list
-    comes from the table manifest instead). Deterministic: files sorted.
-    """
+def list_files(input_dir: str) -> list[str]:
+    """The parquet files a plan of ``input_dir`` covers, sorted — a glob,
+    no footer read. Raises when there are none."""
     if os.path.isfile(input_dir):
         files = [input_dir]
     else:
         files = sorted(glob.glob(os.path.join(input_dir, "**", "*.parquet"), recursive=True))
     if not files:
         raise FileNotFoundError(f"no parquet files under {input_dir}")
+    return files
+
+
+def plan_chunks(input_dir: str, target_bytes: int = 8 << 20) -> list[Chunk]:
+    """Split every parquet file into row-group ranges of ~target_bytes.
+
+    Planning reads only parquet footers (driver-side; at real scale this list
+    comes from the table manifest instead). Deterministic: files sorted.
+    """
+    return plan_files(input_dir, list_files(input_dir), target_bytes)
+
+
+def plan_files(input_dir: str, files: list[str], target_bytes: int = 8 << 20) -> list[Chunk]:
+    """``plan_chunks`` over just ``files`` (sorted, under ``input_dir``):
+    one footer read per file, chunk ids numbered from 0 in plan order —
+    the whole dir's chunks of those files, renumbered. A file without row
+    groups gets no chunk."""
     chunks: list[Chunk] = []
     for f in files:
         md = pq.read_metadata(f)
@@ -211,18 +225,6 @@ def _make_chunk_reader(specs: list[SketchSpec], group_by: str | None, per_chunk:
     return reader
 
 
-def _select_files(chunks: list[Chunk], files: list[str], input_dir: str) -> list[Chunk]:
-    """The chunks of ``files`` out of ``input_dir``'s plan, renumbered from
-    0 in plan order — the chunk ids a scan of exactly those files gets."""
-    from dataclasses import replace
-
-    fset = set(files)
-    out = [replace(c, chunk_id=i) for i, c in enumerate(c for c in chunks if c.file in fset)]
-    if not out:
-        raise ValueError(f"none of the {len(fset)} requested files found under {input_dir}")
-    return out
-
-
 def _chunk_partials(
     spark: SparkSession,
     chunks: list[Chunk],
@@ -242,17 +244,27 @@ def _driver_partials(
     """The state rows ``_chunk_partials`` emits, sketched in THIS process
     without a Spark job: each bin goes through the same chunk reader, fed
     its rows in the same order, with the same part_id (the bin's least
-    chunk_id) — so the state bytes are identical. For deltas small enough
-    that a job's fixed cost dwarfs the sketching (catalog refresh)."""
+    chunk_id) — so the state bytes are identical. The bins are sketched
+    concurrently, on one thread each, and their rows come back in bin
+    order (``collect()``'s partition order). For deltas small enough that
+    a job's fixed cost dwarfs the sketching (catalog refresh)."""
+    from concurrent.futures import ThreadPoolExecutor
+
     reader = _make_chunk_reader(specs, group_by)
-    out: list[dict] = []
-    for rows in _bin_rows(chunks, n_tasks):
+
+    def sketch(rows: list[tuple]) -> list[dict]:
         batch = pa.RecordBatch.from_pylist(
             [dict(zip(_CHUNK_ARROW.names, r)) for r in rows], schema=_CHUNK_ARROW
         )
-        for states in reader(iter([batch])):
-            out.extend(states.to_pylist())
-    return out
+        return [r for states in reader(iter([batch])) for r in states.to_pylist()]
+
+    bins = _bin_rows(chunks, n_tasks)
+    # one thread per bin, as the job would run one task per bin: pyarrow's
+    # reads and the numpy kernels release the GIL. Each bin owns its
+    # accumulator; map() hands the rows back in bin order and re-raises a
+    # bin's error
+    with ThreadPoolExecutor(max_workers=max(len(bins), 1)) as pool:
+        return [r for rows in pool.map(sketch, bins) for r in rows]
 
 
 def partial_states_from_parquet(
@@ -268,9 +280,13 @@ def partial_states_from_parquet(
     """``files``: restrict the scan to these parquet files (must live under
     ``input_dir``) — sketches only the files named, e.g. those appended
     since a registered set's last build."""
-    chunks = plan_chunks(input_dir, target_bytes=target_bytes)
-    if files is not None:
-        chunks = _select_files(chunks, files, input_dir)
+    if files is None:
+        chunks = plan_chunks(input_dir, target_bytes=target_bytes)
+    else:
+        fset = set(files)
+        chunks = plan_files(input_dir, [f for f in list_files(input_dir) if f in fset], target_bytes)
+        if not chunks:
+            raise ValueError(f"none of the {len(fset)} requested files found under {input_dir}")
     cores = spark.sparkContext.defaultParallelism
     # one wave of tasks: more waves only multiply per-task state emission
     # (CM states are ~1 MB each) without improving balance — chunks are

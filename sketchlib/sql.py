@@ -2567,13 +2567,18 @@ def _plan(spark, sql, tables, catalog, catalog_key, estimator, regs=None,
             return mk(kind, refusal=f"duplicate alias in select list: {given!r}")
         if len(aggs) == 1 and aggs[0][0] == "APPROX_HISTOGRAM":
             return mk(kind, refusal=_HIST_ALIAS_MSG)
+        names = tuple(al or None for *_, al in aliased)
+        group = _parse_group(m.group("group"))
+        if len(aggs) > 1:
+            clash = _alias_renames(aggs, names, group)[1]
+            if clash:
+                return mk(kind, refusal=clash)
         clean = f"SELECT {', '.join(f'{f}({a})' for f, a, _ in aliased)} FROM {table}"
         if where:
             clean += f" WHERE {where}"
         if m.group("group"):
             clean += f" GROUP BY {m.group('group')}"
-        return mk(kind, "aliased", aggs=aggs,
-                  detail=tuple(al or None for *_, al in aliased), nested=sub(clean))
+        return mk(kind, "aliased", aggs=aggs, group=group, detail=names, nested=sub(clean))
 
     group = _parse_group(m.group("group"))
     common = {"aggs": aggs, "group": group, "m": m}
@@ -4231,30 +4236,39 @@ def _run_aliased(spark, p: Plan, tables, catalog) -> DataFrame:
     aggs, names = list(p.aggs), p.detail
     if len(aggs) == 1:
         return _alias_estimate(out, aggs[0][0], names[0], p.estimator)
-    defaults = _default_out_names(aggs)
-    mapping = {}
-    for default, alias in zip(defaults, names):
-        if not alias:
-            continue
-        if default not in out.columns:
-            raise ValueError(
-                f"cannot alias {default!r} — not in result columns {out.columns}"
-            )
-        mapping[default] = alias
-        mapping[f"{default}_err"] = f"{alias}_err"
+    mapping = _alias_renames(aggs, names, p.group)[0]
+    missing = [c for c in mapping if c not in out.columns]
+    if missing:
+        raise ValueError(
+            f"cannot alias {missing[0]!r} — not in result columns {out.columns}"
+        )
     # ONE projection, not sequential withColumnRenamed calls: an alias equal
     # to a later slot's default would otherwise duplicate a name mid-sequence
     # and the later rename would grab both columns
-    final_cols = [mapping.get(c, c) for c in out.columns]
-    clash = next((n for n in final_cols if final_cols.count(n) > 1), None)
-    if clash:
-        # an alias equal to another slot's (default) name, or to a group
-        # column, would leave two identically-named columns — refuse
-        raise ValueError(
-            f"output name {clash!r} appears more than once in the result "
-            f"({final_cols}) — every output column must have a unique name"
-        )
     return out.select(*[F.col(c).alias(mapping.get(c, c)) for c in out.columns])
+
+
+def _alias_renames(aggs: list, names, group) -> tuple[dict, str | None]:
+    """The renames an aliased multi-aggregate statement applies to its
+    answer (each aliased slot's default output name and its ``_err``
+    bound), and the refusal when a final output name would repeat — an
+    alias equal to another slot's default name or to a GROUP BY column.
+    The answer's columns are the GROUP BY columns plus each slot's
+    ``_default_out_names`` name and bound, so the plan knows them before
+    any scan."""
+    defaults = _default_out_names(aggs)
+    mapping = {}
+    for default, alias in zip(defaults, names):
+        if alias:
+            mapping[default] = alias
+            mapping[f"{default}_err"] = f"{alias}_err"
+    gcols = [] if not group else list(group) if isinstance(group, (list, tuple)) else [group]
+    final = [mapping.get(c, c) for c in gcols + [n for d in defaults for n in (d, f"{d}_err")]]
+    clash = next((n for n in final if final.count(n) > 1), None)
+    if clash is None:
+        return mapping, None
+    return mapping, (f"output name {clash!r} appears more than once in the result "
+                     f"({final}) — every output column must have a unique name")
 
 
 def _pilot_ratios(

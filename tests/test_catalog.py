@@ -1317,3 +1317,255 @@ def test_signature_refresh_counts_rows_from_footers(spark, tmp_path):
     assert out["rows_added"] == 200
     assert cat.sig_meta("g")["rows"] == 600 == cat.signatures("g").count()
     assert len(jobs) == 2, jobs
+
+
+# --- a refresh costs what its delta costs, and leaves the catalog warm ------
+
+def _append_delta(data, delta, files=None):
+    """Copy the delta's files (all, or ``files``) into ``data``; their paths there."""
+    import glob
+    import os
+    import shutil as sh
+
+    out = []
+    for f in files or sorted(glob.glob(delta + "/source=*/part-*.parquet")):
+        dst = os.path.join(data, os.path.dirname(os.path.relpath(f, delta)),
+                           "ap-" + os.path.basename(f))
+        sh.copy(f, dst)
+        out.append(dst)
+    return out
+
+
+def _set_over_copy(spark, tmp_path, refresh_tables):
+    """(catalog, data dir) of a set ``s`` created over a copy of the base."""
+    import shutil as sh
+
+    data = str(tmp_path / "data")
+    sh.copytree(refresh_tables[0], data)
+    cat = SketchCatalog(spark, str(tmp_path / "cat"))
+    cat.create("s", data, _REFRESH_SPECS, group_by="source")
+    return cat, data
+
+
+def _served(spark, cat, data):
+    from sketchlib.sql import approx_sql
+
+    return approx_sql(spark, _HLL_Q, {"seq": data}, catalog=cat, catalog_key="s").collect()
+
+
+def test_refresh_and_next_statement_read_no_state_file(spark, tmp_path, monkeypatch, refresh_tables):
+    """A driver-route refresh merges the old rows held by the state cache and
+    seeds the cache with the table it wrote: neither the refresh nor the
+    next served statement opens a file under states/, and that statement
+    answers as a cold catalog does."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    cat, data = _set_over_copy(spark, tmp_path, refresh_tables)
+    before = _served(spark, cat, data)  # warms the cache
+    _append_delta(data, refresh_tables[1])
+    states = os.path.join(cat.root, "states")
+    opened = []
+    real_file, real_table = pq.ParquetFile, pq.read_table
+
+    def spy(real):
+        def wrapped(src, *a, **kw):
+            if str(src).startswith(states):
+                opened.append((real.__name__, str(src)))
+            return real(src, *a, **kw)
+        return wrapped
+
+    monkeypatch.setattr(pq, "ParquetFile", spy(real_file))
+    monkeypatch.setattr(pq, "read_table", spy(real_table))
+    assert cat.refresh("s")["new_files"] > 0
+    after, jobs = _jobs_of(spark, lambda: _served(spark, cat, data))
+    assert opened == [] and jobs == []
+    monkeypatch.undo()
+    assert after == _served(spark, SketchCatalog(spark, cat.root), data)
+    assert after != before
+
+
+def test_refresh_reads_footers_of_new_files_only(spark, tmp_path, monkeypatch, refresh_tables):
+    """The refresh lists the input dir and reads one footer per NEW file;
+    the new files' chunks and bins are those the whole dir's plan gives
+    them, renumbered from 0."""
+    from dataclasses import replace
+
+    import pyarrow.parquet as pq
+
+    from sketchlib.spark.catalog import _CATALOG_SCHEMA
+    from sketchlib.spark.scan import _bin_rows, plan_chunks
+
+    cat, data = _set_over_copy(spark, tmp_path, refresh_tables)
+    added = _append_delta(data, refresh_tables[1])
+    reg = cat._registry_meta("_sketch_catalog", _CATALOG_SCHEMA, "s", "sketch set")
+    new, current, chunks = cat._lineage_new_files(reg, "sketch state", "")
+    assert new == sorted(added)
+    want = [replace(c, chunk_id=i)
+            for i, c in enumerate(c for c in plan_chunks(data) if c.file in set(new))]
+    assert chunks == want
+    n_tasks = spark.sparkContext.defaultParallelism
+    assert _bin_rows(chunks, n_tasks) == _bin_rows(want, n_tasks)
+    assert current == {c.file for c in plan_chunks(data)}
+
+    read, real = [], pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata", lambda f, *a, **kw: read.append(f) or real(f, *a, **kw))
+    assert cat.refresh("s")["new_files"] == len(added)
+    assert sorted(read) == sorted(added)
+
+
+def test_refresh_leaves_out_a_new_file_without_row_groups(spark, tmp_path, refresh_tables):
+    """A new file with no row groups is neither new nor recorded: alone it
+    refreshes nothing, and a later refresh records only the real files."""
+    import glob
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from sketchlib.spark.catalog import _CATALOG_SCHEMA
+
+    cat, data = _set_over_copy(spark, tmp_path, refresh_tables)
+    some = sorted(glob.glob(data + "/source=*/*.parquet"))[0]
+    empty = os.path.join(os.path.dirname(some), "empty.parquet")
+    pq.ParquetWriter(empty, pq.read_schema(some)).close()
+    assert pq.read_metadata(empty).num_row_groups == 0
+    assert cat.refresh("s") == {"new_files": 0, "rows_added": 0, "tokens_added": 0}
+    added = _append_delta(data, refresh_tables[1])
+    assert cat.refresh("s")["new_files"] == len(added)
+    reg = cat._registry_meta("_sketch_catalog", _CATALOG_SCHEMA, "s", "sketch set")
+    lineage = set(json.loads(reg["files_json"]))
+    assert empty not in lineage and set(added) <= lineage
+
+
+def test_registry_lookup_after_append_reads_one_log_file(spark, tmp_path, monkeypatch, refresh_tables):
+    """After another catalog instance appends a registration row, a lookup
+    reads the appended log file alone and sees the row; a log file
+    rewritten under its own name is read again."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    cat, data = _set_over_copy(spark, tmp_path, refresh_tables)
+    other = SketchCatalog(spark, cat.root)
+    log = os.path.join(cat.root, "_sketch_catalog")
+    rows_before = cat.list_rows()[0]["rows"]
+    _append_delta(data, refresh_tables[1])
+    other.refresh("s")
+    read, real = [], ds.dataset
+    monkeypatch.setattr(ds, "dataset", lambda src, *a, **kw: read.append(src) or real(src, *a, **kw))
+    [row] = cat.list_rows()
+    assert row["rows"] == rows_before + 900
+    newest = max(os.listdir(log))
+    assert read == [os.path.join(log, newest)]
+    monkeypatch.undo()
+    assert [r.asDict() for r in cat.list().collect()] == [row.asDict()]
+
+    # rewrite the newest log file under its own name with another count
+    path = os.path.join(log, newest)
+    t = pq.read_table(path)
+    t = t.set_column(t.schema.get_field_index("rows"), "rows", pc.add(t["rows"], 1))
+    pq.write_table(t, path + ".tmp")
+    os.replace(path + ".tmp", path)
+    assert cat.list_rows()[0]["rows"] == rows_before + 901
+
+
+def test_driver_partials_keep_bin_order(spark, monkeypatch, refresh_tables):
+    """The driver route sketches its bins on threads and returns their rows
+    in bin order — the kernel job's collect() order — even when the first
+    bin finishes last; the rows equal the job's except ``wall_ms``."""
+    import time
+
+    import sketchlib.spark.scan as scan
+
+    chunks, _ = _delta_chunks(refresh_tables)
+    n_tasks = spark.sparkContext.defaultParallelism
+
+    def key(r):
+        return tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                     for k, v in r.items() if k != "wall_ms")
+
+    want = [key(r.asDict()) for r in scan._chunk_partials(
+        spark, chunks, _REFRESH_SPECS, "source", n_tasks).collect()]
+    bins = scan._bin_rows(chunks, n_tasks)
+    slow = {r[1] for r in bins[0]} - {r[1] for b in bins[1:] for r in b}
+    real = scan._read_chunk_batches
+
+    def read(file, *a, **kw):
+        if file in slow:
+            time.sleep(0.3)
+        return real(file, *a, **kw)
+
+    monkeypatch.setattr(scan, "_read_chunk_batches", read)
+    got = [key(r) for r in scan._driver_partials(chunks, _REFRESH_SPECS, "source", n_tasks)]
+    assert got == want
+
+
+def test_concurrent_bin_error_propagates_and_keeps_old_states(
+    spark, tmp_path, monkeypatch, refresh_tables
+):
+    """The driver route sketches its bins on several threads; a bin that
+    raises fails the refresh with its error, and the pre-refresh states,
+    registration and served answers stay."""
+    import os
+    import threading
+    import time
+
+    import sketchlib.spark.scan as scan
+
+    cat, data = _set_over_copy(spark, tmp_path, refresh_tables)
+    before, rows_before = _served(spark, cat, data), cat.state_rows("s")
+    reg_before = cat.list_rows()
+    bad = _append_delta(data, refresh_tables[1])[-1]
+    threads, real = set(), scan._read_chunk_batches
+
+    def read(file, *a, **kw):
+        threads.add(threading.get_ident())
+        time.sleep(0.05)
+        if file == bad:
+            raise RuntimeError("unreadable delta file")
+        return real(file, *a, **kw)
+
+    monkeypatch.setattr(scan, "_read_chunk_batches", read)
+    with pytest.raises(RuntimeError, match="unreadable delta file"):
+        cat.refresh("s")
+    assert len(threads) > 1 and threading.get_ident() not in threads
+    assert sorted(os.listdir(os.path.join(cat.root, "states"))) == ["s"]
+    assert cat.list_rows() == reg_before
+    assert cat.state_rows("s") == rows_before
+    assert _served(spark, cat, data) == before
+    assert _served(spark, SketchCatalog(spark, cat.root), data) == before
+
+
+def test_refresh_seeds_cache_under_the_listing_it_wrote(spark, tmp_path, monkeypatch, refresh_tables):
+    """The refresh seeds the cache under the listing of the dir it wrote;
+    when another writer swaps in its own dir right after the refresh's
+    swap, the next read serves what is on disk, not the refresh's rows."""
+    import os
+    import shutil as sh
+
+    import pyarrow.parquet as pq
+
+    cat, data = _set_over_copy(spark, tmp_path, refresh_tables)
+    sdir = os.path.join(cat.root, "states", "s")
+    theirs = str(tmp_path / "theirs")
+    sh.copytree(sdir, theirs)  # the other writer's table: the pre-refresh states
+    _append_delta(data, refresh_tables[1])
+    real = os.rename
+
+    def rename(src, dst, *a, **kw):
+        real(src, dst, *a, **kw)
+        if str(src).endswith("._refresh_tmp"):
+            sh.rmtree(dst)
+            sh.copytree(theirs, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    cat.refresh("s")
+    monkeypatch.undo()
+    on_disk = pq.read_table(sdir, columns=["group", "sketch", "state"]).to_pylist()
+    key = lambda r: (r["group"], r["sketch"])  # noqa: E731
+    assert sorted(cat.state_rows("s"), key=key) == sorted(on_disk, key=key)
+    assert _served(spark, cat, data) == _served(spark, SketchCatalog(spark, cat.root), data)

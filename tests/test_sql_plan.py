@@ -80,6 +80,12 @@ _CASES = [
     ("multi_missing_ratio",
      "SELECT APPROX_COUNT_DISTINCT(x), APPROX_AVG(v) FROM t",
      False, None, "clt", "raise"),
+    ("alias_is_group_column",
+     "SELECT APPROX_COUNT_DISTINCT(x) AS g, APPROX_SUM(v, 0.5) FROM t GROUP BY g",
+     False, None, "clt", "raise"),
+    ("alias_is_other_default",
+     "SELECT APPROX_COUNT_DISTINCT(x) AS approx_sum_v, APPROX_SUM(v, 0.5) FROM t",
+     False, None, "clt", "raise"),
 ]
 
 
