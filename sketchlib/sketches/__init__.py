@@ -3,7 +3,7 @@ this package must be importable inside executor Python workers with zero
 JVM context.
 """
 
-from sketchlib.sketches.base import SketchBase, deserialize, merge_serialized  # noqa: F401
+from sketchlib.sketches.base import SketchBase, deserialize  # noqa: F401
 from sketchlib.sketches.bloom import Bloom  # noqa: F401
 from sketchlib.sketches.cm import CountMin  # noqa: F401
 from sketchlib.sketches.dd import DDSketch  # noqa: F401

@@ -95,21 +95,6 @@ def deserialize(buf: bytes | bytearray | memoryview) -> SketchBase:
     return cls._from_parts(params, mv[off:])
 
 
-def merge_serialized(blobs) -> bytes:
-    """Merge an iterable of serialized states of one kind; returns bytes.
-
-    Canonical order: blobs are consumed in the order given; callers that need
-    byte-identical output under regrouping must either use an
-    order-independent sketch (HLL/CM/Bloom are) or canonical-sort inputs
-    first (the Spark merge layer sorts by state bytes for t-digest/KLL).
-    """
-    it = iter(blobs)
-    first = deserialize(next(it))
-    for b in it:
-        first.merge(deserialize(b))
-    return first.to_bytes()
-
-
 def np_tobytes(*arrays: np.ndarray) -> bytes:
     """Length-prefixed concatenation of numpy arrays (dtype fixed by caller)."""
     out = []

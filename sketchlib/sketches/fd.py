@@ -26,7 +26,7 @@ O(d·ℓ) per row. Merge concatenates the other state's live rows (each a
 valid FD row stream) and re-shrinks; Δ adds because Frobenius masses do.
 Merges are commutative and associative IN BOUND (the certificate always
 holds); like KLL/t-digest the exact bytes depend on merge order, which the
-build's canonical (part_id, state) merge ordering makes reproducible.
+one canonical state merge (``spark.build._merge_by_key``) makes reproducible.
 
 The update consumes the kernel's per-group FLATTENED float64 element stream
 (array columns arrive flat); ``d`` is a declared parameter and every call

@@ -20,8 +20,9 @@ strategies, both ending in the same tiny merge:
 
 Merging uses one or two `groupBy` levels (``fanout``): with F partial states
 per group, a single reduce task merging all F can bottleneck; two-level
-merge caps any task at ``fanout`` states. States are canonically ordered by
-(part_id, state bytes) before merging so clean and resumed runs produce
+merge caps any task at ``fanout`` states. Every merge of states — here, in
+the catalog's refresh and in the query layer's loader — runs
+``_merge_by_key``'s one canonical order, so clean and resumed runs produce
 byte-identical results (SURVEY.md §7 hard-part 1).
 
 Checkpoint/resume (B10) lives in checkpoint.py and wraps this module.
@@ -702,35 +703,62 @@ def _make_update_fn(specs: list[SketchSpec], group_by: str | None):
     return update
 
 
-def _merge_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Merge all states of one (group, sketch) into a single row.
+def _merge_by_key(rows) -> dict[tuple[str, str], tuple[object, list]]:
+    """{(group, sketch): (merged sketch, that key's rows in merge order)},
+    keys sorted — THE canonical state merge every route runs (the build's
+    and the UNION ALL route's ``merge_states``, the refresh's driver merge,
+    the serving loader ``query._rows_to_states``).
 
-    Canonical order (part_id, state bytes) → deterministic merge tree, so a
-    resumed run byte-matches a clean one even for order-sensitive sketches.
-    """
-    pdf = pdf.sort_values(["part_id", "state"], kind="stable")
-    it = iter(pdf.itertuples(index=False))
-    first = next(it)
-    acc = deserialize(first.state)
-    for row in it:
-        acc.merge(deserialize(row.state))
-    return pd.DataFrame(
+    Each key's rows are sorted by (part_id, state bytes) and folded left to
+    right, so the merge tree is a function of the inputs alone: a resumed
+    run byte-matches a clean one, and every route byte-matches every other,
+    even for order-sensitive sketches (KLL/t-digest compactions, the capped
+    Count-Min candidate list). A row without ``part_id`` sorts as -1, as a
+    merged row does. Accepts dict rows or pyspark Rows."""
+    by_key: dict[tuple[str, str], list] = {}
+    for r in rows:
+        by_key.setdefault((r["group"], r["sketch"]), []).append(r)
+
+    def order(r):
+        fields = getattr(r, "__fields__", r)
+        return (r["part_id"] if "part_id" in fields else -1, bytes(r["state"]))
+
+    out = {}
+    for key in sorted(by_key):
+        rs = sorted(by_key[key], key=order)
+        acc = deserialize(rs[0]["state"])
+        for r in rs[1:]:
+            acc.merge(deserialize(r["state"]))
+        out[key] = (acc, rs)
+    return out
+
+
+def merge_rows(rows) -> list[dict]:
+    """One STATE_FIELDS dict per (group, sketch) of ``rows`` (keys sorted):
+    the ``_merge_by_key`` state, part_id -1, and the rows' summed
+    rows/tokens/wall_ms. Columns outside STATE_FIELDS (the fanout's
+    ``bucket``) are ignored."""
+    return [
         {
-            "group": [first.group],
-            "sketch": [first.sketch],
-            "kind": [first.kind],
-            "state": [acc.to_bytes()],
-            "n_items": [int(acc.n_items)],
-            "part_id": [-1],
-            "rows": [int(pdf["rows"].sum())],
-            "tokens": [int(pdf["tokens"].sum())],
-            "wall_ms": [float(pdf["wall_ms"].sum())],
+            "group": g,
+            "sketch": name,
+            "kind": rs[0]["kind"],
+            "state": acc.to_bytes(),
+            "n_items": int(acc.n_items),
+            "part_id": -1,
+            "rows": int(sum(r["rows"] for r in rs)),
+            "tokens": int(sum(r["tokens"] for r in rs)),
+            "wall_ms": float(sum(r["wall_ms"] for r in rs)),
         }
-    )
+        for (g, name), (acc, rs) in _merge_by_key(rows).items()
+    ]
 
 
 def merge_states(states: DataFrame, fanout: int | None = None) -> DataFrame:
-    """Reduce partial states to one row per (group, sketch).
+    """Reduce partial states to one row per (group, sketch): ``merge_rows``
+    (canonical order: ``_merge_by_key``) over each key's rows, as an Arrow
+    grouped UDF — the binary states cross the Python boundary once, with
+    no pandas round trip.
 
     ``fanout``: optional two-level merge — level 1 on (group, sketch,
     part_id % fanout) caps any merge task at ~fanout inputs; level 2 merges
@@ -750,29 +778,22 @@ def merge_states(states: DataFrame, fanout: int | None = None) -> DataFrame:
     """
     snap = _plugin_snapshot()
 
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_fn(table: pa.Table) -> pa.Table:
         _install_plugins(snap)
-        if "bucket" in pdf.columns:
-            pdf = pdf.drop(columns=["bucket"])
-        return _merge_pdf(pdf)
+        return pa.Table.from_pylist(merge_rows(table.to_pylist()), schema=_ARROW_STATE_SCHEMA)
 
     n = states.sparkSession.sparkContext.defaultParallelism
     if fanout and fanout > 1:
-        lvl1 = (
+        states = (
             states.withColumn("bucket", F.pmod(F.col("part_id"), F.lit(fanout)))
             .repartition(n, "group", "sketch", "bucket")
             .groupBy("group", "sketch", "bucket")
-            .applyInPandas(merge_fn, STATE_FIELDS)
-        )
-        return (
-            lvl1.repartition(n, "group", "sketch")
-            .groupBy("group", "sketch")
-            .applyInPandas(merge_fn, STATE_FIELDS)
+            .applyInArrow(merge_fn, STATE_FIELDS)
         )
     return (
         states.repartition(n, "group", "sketch")
         .groupBy("group", "sketch")
-        .applyInPandas(merge_fn, STATE_FIELDS)
+        .applyInArrow(merge_fn, STATE_FIELDS)
     )
 
 

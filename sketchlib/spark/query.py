@@ -184,8 +184,8 @@ def _route(states: DataFrame, sketch: str, distributed: bool | None, partial_spe
     UNMERGED per-task partial states (build.partial_states output): the
     probe pulls them directly — skipping the merge Exchange AND the second
     Python stage — and ``_rows_to_states`` performs the canonical
-    driver-side merge (byte-identical to ``merge_states``: same
-    (part_id, state) order). The answer path then runs as ONE job
+    driver-side merge (byte-identical to ``merge_states``: both run
+    ``build._merge_by_key``). The answer path then runs as ONE job
     (scan → mapInArrow → limit-collect) instead of three stages plus a
     second state pull. If the partial row count exceeds the byte-aware cap
     (many tasks × groups — the cluster-scale case), fall back to
@@ -223,28 +223,14 @@ def _rows_to_states(rows) -> dict[tuple[str, str], object]:
     """{(group, sketch_name): sketch object} from collected state rows.
 
     Rows may be PARTIAL states (several per (group, sketch), from the
-    merge-free probe path): duplicates are merged driver-side in the same
-    canonical (part_id, state bytes) order as ``_merge_pdf``, so the result
-    is byte-identical to collecting ``merge_states`` output (tested in
+    merge-free probe path): ``build._merge_by_key`` merges them — the
+    canonical merge ``merge_states`` runs — so the result is byte-identical
+    to collecting ``merge_states`` output (tested in
     tests/test_query_partials.py). Accepts the dict rows of ``_pull_rows``
     or pyspark Rows."""
-    by_key: dict[tuple[str, str], list] = {}
-    for r in rows:
-        by_key.setdefault((r["group"], r["sketch"]), []).append(r)
+    from sketchlib.spark.build import _merge_by_key
 
-    def _pid(r):
-        fields = getattr(r, "__fields__", r)
-        return r["part_id"] if "part_id" in fields else -1
-
-    out: dict[tuple[str, str], object] = {}
-    for key, rs in by_key.items():
-        if len(rs) > 1:
-            rs.sort(key=lambda r: (_pid(r), bytes(r["state"])))
-        acc = deserialize(rs[0]["state"])
-        for r in rs[1:]:
-            acc.merge(deserialize(r["state"]))
-        out[key] = acc
-    return out
+    return {key: sk for key, (sk, _) in _merge_by_key(rows).items()}
 
 
 def _finish_dist(out: DataFrame, sub: DataFrame, persisted: bool) -> DataFrame:

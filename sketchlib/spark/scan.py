@@ -275,18 +275,13 @@ def partial_states_from_parquet(
     n_tasks: int | None = None,
     target_bytes: int = 8 << 20,
     per_chunk: bool = False,
-    files: list[str] | None = None,
+    chunks: list[Chunk] | None = None,
 ) -> DataFrame:
-    """``files``: restrict the scan to these parquet files (must live under
-    ``input_dir``) — sketches only the files named, e.g. those appended
-    since a registered set's last build."""
-    if files is None:
+    """``chunks``: an already planned list (``plan_chunks``) to sketch
+    instead of planning ``input_dir`` again — e.g. the plan a catalog
+    registration records as its lineage."""
+    if chunks is None:
         chunks = plan_chunks(input_dir, target_bytes=target_bytes)
-    else:
-        fset = set(files)
-        chunks = plan_files(input_dir, [f for f in list_files(input_dir) if f in fset], target_bytes)
-        if not chunks:
-            raise ValueError(f"none of the {len(fset)} requested files found under {input_dir}")
     cores = spark.sparkContext.defaultParallelism
     # one wave of tasks: more waves only multiply per-task state emission
     # (CM states are ~1 MB each) without improving balance — chunks are
@@ -303,10 +298,10 @@ def build_sketches_from_parquet(
     fanout: int | None = None,
     n_tasks: int | None = None,
     target_bytes: int = 8 << 20,
-    files: list[str] | None = None,
+    chunks: list[Chunk] | None = None,
 ) -> DataFrame:
     """Fast-path build: pyarrow-direct scan + the standard tiny state merge."""
     partial = partial_states_from_parquet(
-        spark, input_dir, specs, group_by, n_tasks=n_tasks, target_bytes=target_bytes, files=files
+        spark, input_dir, specs, group_by, n_tasks=n_tasks, target_bytes=target_bytes, chunks=chunks
     )
     return merge_states(partial, fanout=fanout)

@@ -3581,11 +3581,11 @@ def _unionall_from_states(spark, fn, args, alias, picks, catalog, grouped) -> Da
     align on the kernel's canonical group string."""
     from pyspark.sql import functions as F
 
-    from sketchlib.spark.build import STATE_FIELDS, _merge_pdf
+    from sketchlib.spark.build import merge_states
 
     # driver route: every side's rows, relabelled to one sketch (and the
-    # ungrouped key) — the answerer merges each key's rows in _merge_pdf's
-    # canonical order, so no Spark job runs
+    # ungrouped key) — the answerer's loader merges each key's rows in the
+    # canonical order merge_states runs, so no Spark job runs
     rows, states = [], None
     for p in picks:
         side = catalog.state_rows(p["reg"], p["spec"]["name"])
@@ -3608,7 +3608,7 @@ def _unionall_from_states(spark, fn, args, alias, picks, catalog, grouped) -> Da
         allf = frames[0]
         for f in frames[1:]:
             allf = allf.unionByName(f)
-        states = allf.groupBy("group", "sketch").applyInPandas(_merge_pdf, STATE_FIELDS)
+        states = merge_states(allf)
     out = _sketch_answer(spark, fn, args, states, "_q", picks[0]["spec"]["kind"], rows)
     out = _finish_grouped(out, None, grouped[0] if grouped else None)
     return _alias_estimate(out, fn, alias) if alias else out

@@ -42,3 +42,27 @@ def seq_small_dir(tmp_path_factory):
 @pytest.fixture(scope="session")
 def rng():
     return np.random.default_rng(42)
+
+
+@pytest.fixture(scope="session")
+def canonical_fold():
+    """{(group, sketch): state bytes} of state rows, each key's rows folded
+    in the documented canonical order — (part_id, state bytes), a row
+    without part_id as -1 — written out apart from the library's merge, so
+    a test can pin that order on any route."""
+    from sketchlib.sketches import deserialize
+
+    def fold(rows):
+        by_key = {}
+        for r in rows:
+            by_key.setdefault((r["group"], r["sketch"]), []).append(r)
+        out = {}
+        for key, rs in by_key.items():
+            rs = sorted(rs, key=lambda r: (r.get("part_id", -1), bytes(r["state"])))
+            acc = deserialize(rs[0]["state"])
+            for r in rs[1:]:
+                acc.merge(deserialize(r["state"]))
+            out[key] = acc.to_bytes()
+        return out
+
+    return fold

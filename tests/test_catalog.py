@@ -1415,6 +1415,54 @@ def test_refresh_reads_footers_of_new_files_only(spark, tmp_path, monkeypatch, r
     assert sorted(read) == sorted(added)
 
 
+def test_create_reads_each_footer_once(spark, tmp_path, monkeypatch, refresh_tables):
+    """One create plans the input dir once — one footer read per file — and
+    builds that plan's chunks: its states are byte-identical to
+    build_sketches_from_parquet over the dir."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from sketchlib.spark.scan import build_sketches_from_parquet
+
+    data = refresh_tables[0]
+    read, real = [], pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata", lambda f, *a, **kw: read.append(f) or real(f, *a, **kw))
+    cat = SketchCatalog(spark, str(tmp_path / "cat"))
+    cat.create("s", data, _REFRESH_SPECS, group_by="source")
+    monkeypatch.undo()
+    assert sorted(read) == sorted(glob.glob(data + "/**/*.parquet", recursive=True))
+
+    def states(df):
+        return {(r["group"], r["sketch"]): bytes(r["state"]) for r in df.collect()}
+
+    want = build_sketches_from_parquet(spark, data, _REFRESH_SPECS, group_by="source")
+    assert states(cat.states("s")) == states(want)
+
+
+def test_refresh_folds_old_and_delta_states_in_canonical_order(
+    spark, tmp_path, refresh_tables, canonical_fold
+):
+    """A refresh's state for each key is its old merged row (part_id -1)
+    and the delta's partials folded in the canonical (part_id, state bytes)
+    order — KLL, t-digest and the capped Count-Min make the order visible."""
+    from sketchlib.spark.catalog import _CATALOG_SCHEMA
+    from sketchlib.spark.scan import partial_states_from_parquet
+
+    cat, data = _set_over_copy(spark, tmp_path, refresh_tables)
+    old = [r.asDict() for r in cat.states("s").collect()]
+    _append_delta(data, refresh_tables[1])
+    reg = cat._registry_meta("_sketch_catalog", _CATALOG_SCHEMA, "s", "sketch set")
+    _, _, delta = cat._lineage_new_files(reg, "sketch state", "")
+    n_tasks = min(len(delta), spark.sparkContext.defaultParallelism)
+    partials = partial_states_from_parquet(
+        spark, data, _REFRESH_SPECS, "source", n_tasks=n_tasks, chunks=delta
+    )
+    want = canonical_fold(old + [r.asDict() for r in partials.collect()])
+    cat.refresh("s")
+    assert {(r["group"], r["sketch"]): bytes(r["state"]) for r in cat.states("s").collect()} == want
+
+
 def test_refresh_leaves_out_a_new_file_without_row_groups(spark, tmp_path, refresh_tables):
     """A new file with no row groups is neither new nor recorded: alone it
     refreshes nothing, and a later refresh records only the real files."""
